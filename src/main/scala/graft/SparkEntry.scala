@@ -2,12 +2,13 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators.{Backup, Curation, Dedup, Multimodal, Relational, Similarity, Streaming, TextAnalysis}
+import graft.operators.{Backup, Curation, Dedup, Multimodal, QuerySpec, Relational, Similarity, Streaming, TextAnalysis}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Query entry points — see SURVEY.md §7.
   *
-  * Aggregates every operator module's query map; `oracleSql` carries
-  * the DuckDB-equivalent SQL the driver hash-compares against at
+  * Aggregates every operator module's [[QuerySpec]] records; `queries`
+  * and `oracleSql` are views of them. `oracleSql` carries the
+  * DuckDB-equivalent SQL the oracle gate hash-compares against at
   * sf0.01.
   */
 object SparkEntry {
@@ -16,16 +17,24 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.queries("q01_agg")(spark, "/root/testdata/sf0.001")
 
+  /** Every query record, one per implemented operator from SURVEY.md §2. */
+  lazy val specs: Seq[QuerySpec] = unique(
+    Relational.specs ++ Backup.specs ++ Dedup.specs ++ TextAnalysis.specs ++
+      Similarity.specs ++ Multimodal.specs ++ Streaming.specs ++ Curation.specs)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ Backup.queries ++ Dedup.queries ++
-      TextAnalysis.queries ++ Similarity.queries ++ Multimodal.queries ++
-      Streaming.queries ++ Curation.queries
+    specs.map(q => q.id -> q.plan).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    Relational.oracle ++ Backup.oracle ++ Dedup.oracle ++
-      TextAnalysis.oracle ++ Similarity.oracle ++ Multimodal.oracle ++
-      Streaming.oracle ++ Curation.oracle
+    * the same parquet tables. */
+  def oracleSql: Map[String, String] = specs.map(q => q.id -> q.oracleSql).toMap
+
+  /** `specs`, unless two records share an id — a map keyed by id would
+    * silently keep only the last of them. */
+  private[graft] def unique(specs: Seq[QuerySpec]): Seq[QuerySpec] = {
+    val dup = specs.groupBy(_.id).collect { case (id, g) if g.size > 1 => id }
+    require(dup.isEmpty, s"duplicate query id(s): ${dup.toSeq.sorted.mkString(", ")}")
+    specs
+  }
 }

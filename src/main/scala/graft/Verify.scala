@@ -1,8 +1,9 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each query's result → parquet, in its
+  * presentation order (the plan followed by the record's `present`
+  * sort), plus oracle_sql.json, for the DuckDB oracle compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -18,17 +19,15 @@ object Verify {
       SparkSession.builder().master(s"local[$cpus]"), cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    SparkEntry.specs.filter(q => only.isEmpty || only(q.id)).foreach { q =>
       // Caller-owned cache lifecycle: operators may persist() internal
       // multi-consumer subtrees (d15/d35); release them between queries so
       // corpus-sized blocks don't accumulate across the ~100-query run.
       spark.catalog.clearCache()
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try q.presented(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.id}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.id} failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

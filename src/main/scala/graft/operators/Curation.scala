@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions._
 import graft.model.Corpus
+import graft.operators.QuerySpec.by
 
 /** §2.C d22–d25 — corpus CURATION: the decisions a training-data
   * pipeline makes on top of the raw analysis/dedup passes (which docs
@@ -34,7 +35,7 @@ import graft.model.Corpus
   *     the operator under test is the detect/redact pipeline, and its
   *     inputs then provably contain every pattern class.
   */
-object Curation {
+object Curation extends QueryModule {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
@@ -518,25 +519,44 @@ object Curation {
         "target_frac", "weight", "epochs")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
+  val specs: Seq[QuerySpec] = Seq(
     // Benchmark decontamination ([[decontaminate]]) against the
     // BOUNDED held-out fixture (≤100 docs at any corpus size — the
     // external-benchmark stand-in; see [[benchIdCap]]).
-    "d22_decontaminate" -> { (s, dir) =>
+    QuerySpec("d22_decontaminate", by("doc_id"),
+      Corpus.docsCte +
+      s""", bench AS (SELECT DISTINCT gram FROM grams WHERE $benchCond),
+         |hits AS (
+         |  SELECT g.doc_id, count(1) AS n FROM grams g JOIN bench USING (gram)
+         |  WHERE NOT (${benchCondOn("g")}) GROUP BY g.doc_id)
+         |SELECT d.doc_id, CAST(COALESCE(h.n, 0) AS BIGINT) AS n_hit_grams,
+         |       COALESCE(h.n, 0) > 0 AS contaminated
+         |FROM docs d LEFT JOIN hits h USING (doc_id)
+         |WHERE NOT (${benchCondOn("d")})
+         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val g = Corpus.grams(s, dir)
       decontaminate(
         Corpus.docs(s, dir).filter(not(expr(benchCond))),
         g.filter(not(expr(benchCond))),
         g.filter(expr(benchCond)))
-        .orderBy("doc_id")
     },
 
     // Corpus mixing: deterministic stratified downsampling. The keep
     // decision is pmod(hash32("mix#" || doc_id), 100) < rate(lang) —
     // reproducible (same doc always kept/dropped at a given rate,
     // raising a rate only ADDS docs), per-row, zero shuffles.
-    "d23_corpus_mix" -> { (s, dir) =>
+    QuerySpec("d23_corpus_mix", by("doc_id"),
+      {
+      val rateSql = mixRates.map { case (l, r) => s"WHEN lang = '$l' THEN $r" }
+        .mkString("CASE ", " ", " ELSE 100 END")
+      s"""WITH m AS (
+         |  SELECT doc_id, lang, source,
+         |    ${Corpus.hash32Sql("'mix#' || CAST(doc_id AS VARCHAR)")} % 100 AS bucket,
+         |    CAST($rateSql AS BIGINT) AS rate
+         |  FROM documents)
+         |SELECT doc_id, lang, source, bucket, rate
+         |FROM m WHERE bucket < rate ORDER BY doc_id""".stripMargin
+    }) { (s, dir) =>
       val rate = mixRates.foldLeft(lit(100)) { case (c, (lang, r)) =>
         when(col("lang") === lang, r).otherwise(c)
       }
@@ -546,7 +566,6 @@ object Curation {
         .withColumn("rate", rate.cast("long"))
         .filter(col("bucket") < col("rate"))
         .select("doc_id", "lang", "source", "bucket", "rate")
-        .orderBy("doc_id")
     },
 
     // TEMPERATURE-smoothed multilingual sampling weights (Conneau &
@@ -563,7 +582,28 @@ object Curation {
     // so the float denominators are bit-identical cross-engine. ONE
     // corpus scan, map-side partial to a lang-bounded aggregate; the
     // α explode happens on the one packed row, never the corpus.
-    "d94_lang_temperature" -> { (s, dir) =>
+    QuerySpec("d94_lang_temperature", by("alpha", "lang"),
+      // the α-law over lang counts: w per (alpha, lang), denominators as
+      // an ORDERED sequential list_reduce (≡ Spark's left fold over the
+      // sorted struct array — bit-identical float sums), boost left-assoc
+      """WITH counts AS (SELECT lang, count(1) AS n_docs FROM documents GROUP BY lang),
+        |tot AS (SELECT CAST(sum(n_docs) AS BIGINT) AS n_total FROM counts),
+        |al AS (SELECT unnest([CAST(0.5 AS DOUBLE), CAST(1.0 AS DOUBLE), CAST(2.0 AS DOUBLE)]) AS alpha),
+        |w AS (
+        |  SELECT a.alpha, c.lang, c.n_docs,
+        |    CASE WHEN a.alpha = 0.5 THEN sqrt(CAST(c.n_docs AS DOUBLE))
+        |         WHEN a.alpha = 1.0 THEN CAST(c.n_docs AS DOUBLE)
+        |         ELSE CAST(c.n_docs AS DOUBLE) * CAST(c.n_docs AS DOUBLE) END AS w
+        |  FROM al a CROSS JOIN counts c),
+        |den AS (
+        |  SELECT alpha,
+        |    CAST(list_reduce(list(w ORDER BY lang), (x, y) -> x + y) AS DOUBLE) AS denom
+        |  FROM w GROUP BY alpha)
+        |SELECT w.alpha, w.lang, w.n_docs,
+        |  w.w / den.denom AS share,
+        |  w.w / den.denom * CAST(t.n_total AS DOUBLE) / CAST(w.n_docs AS DOUBLE) AS boost
+        |FROM w JOIN den USING (alpha) CROSS JOIN tot t
+        |ORDER BY alpha, lang""".stripMargin) { (s, dir) =>
       graft.sources.Tables.documents(s, dir)
         .groupBy("lang").agg(count(lit(1)).as("n_docs"))
         .agg(expr("array_sort(collect_list(struct(lang, n_docs)))").as("ls"))
@@ -585,18 +625,29 @@ object Curation {
           (col("r.w") / col("r.denom")).as("share"),
           (col("r.w") / col("r.denom") * col("r.n_total").cast("double")
             / col("r.n_docs").cast("double")).as("boost"))
-        .orderBy("alpha", "lang")
     },
 
     // Near-dup clusters: connected components over the d04 LSH pairs —
     // pairwise near-dup hits become transitive KEEP-one groups.
-    "d24_dup_clusters" -> { (s, dir) =>
+    QuerySpec("d24_dup_clusters", by("doc_id"),
+      Dedup.lshPairsCte.replaceFirst("WITH ", "WITH RECURSIVE ") +
+      """, sym AS (
+        |  SELECT a_id AS src, b_id AS dst FROM pairs
+        |  UNION ALL SELECT b_id, a_id FROM pairs),
+        |nodes AS (SELECT DISTINCT src AS id FROM sym),
+        |reach(id, r) AS (
+        |  SELECT id, id FROM nodes
+        |  UNION
+        |  SELECT s.src, reach.r FROM sym s JOIN reach ON reach.id = s.dst),
+        |lbl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
+        |sz AS (SELECT cluster_id, count(1) AS cluster_size FROM lbl GROUP BY 1)
+        |SELECT l.id AS doc_id, l.cluster_id, s.cluster_size
+        |FROM lbl l JOIN sz s USING (cluster_id) ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val labels =
         connectedComponents(s, Dedup.lshPairs(s, dir).select("a_id", "b_id"))
       labels
         .join(labels.groupBy(col("lbl")).agg(count(lit(1)).as("cluster_size")), Seq("lbl"))
         .select(col("id").as("doc_id"), col("lbl").as("cluster_id"), col("cluster_size"))
-        .orderBy("doc_id")
     },
 
     // Dup-cluster SIZE histogram — the release-report rollup of d24
@@ -612,7 +663,33 @@ object Curation {
     // corpus count is one column-pruned scan folded in as a broadcast
     // singleton. Same CC loop as d24 (star contraction, pinned
     // rounds), so the scan pin rides countsDuring like d24's.
-    "d106_cluster_size_hist" -> { (s, dir) =>
+    QuerySpec("d106_cluster_size_hist", by("cluster_size"),
+      Dedup.lshPairsCte.replaceFirst("WITH ", "WITH RECURSIVE ") +
+      """, sym AS (
+        |  SELECT a_id AS src, b_id AS dst FROM pairs
+        |  UNION ALL SELECT b_id, a_id FROM pairs),
+        |nodes AS (SELECT DISTINCT src AS id FROM sym),
+        |reach(id, r) AS (
+        |  SELECT id, id FROM nodes
+        |  UNION
+        |  SELECT s.src, reach.r FROM sym s JOIN reach ON reach.id = s.dst),
+        |lbl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
+        |sz AS (SELECT cluster_id, count(1) AS cluster_size FROM lbl GROUP BY 1),
+        |hist AS (SELECT cluster_size, count(1) AS n_clusters FROM sz GROUP BY 1),
+        |tot AS (SELECT count(1) AS n_corpus FROM documents),
+        |clustered AS (
+        |  SELECT CAST(coalesce(sum(cluster_size * n_clusters), 0) AS BIGINT) AS n_in
+        |  FROM hist),
+        |allrows AS (
+        |  SELECT cluster_size, n_clusters FROM hist
+        |  UNION ALL
+        |  SELECT CAST(1 AS BIGINT),
+        |         (SELECT n_corpus FROM tot) - (SELECT n_in FROM clustered))
+        |SELECT cluster_size, n_clusters,
+        |  CAST(cluster_size * n_clusters AS BIGINT) AS n_docs,
+        |  CAST(cluster_size * n_clusters AS DOUBLE)
+        |    / CAST((SELECT n_corpus FROM tot) AS DOUBLE) AS doc_frac
+        |FROM allrows ORDER BY cluster_size""".stripMargin) { (s, dir) =>
       val labels =
         connectedComponents(s, Dedup.lshPairs(s, dir).select("a_id", "b_id"))
       val hist = labels.groupBy(col("lbl"))
@@ -633,7 +710,6 @@ object Curation {
           (col("cluster_size") * col("n_clusters")).as("n_docs"),
           ((col("cluster_size") * col("n_clusters")).cast("double")
             / col("n_corpus").cast("double")).as("doc_frac"))
-        .orderBy("cluster_size")
     },
 
     // PII scrub: count each pattern class, then redact in one
@@ -641,7 +717,22 @@ object Curation {
     // class containing other classes' alphabets). Output carries the
     // counts + md5 of the redacted text (narrow result, full-text
     // equality check across engines).
-    "d25_pii_scrub" -> { (s, dir) =>
+    QuerySpec("d25_pii_scrub", by("doc_id"),
+      {
+      s"""WITH raws AS (
+         |  SELECT doc_id, $piiRawSql AS raw FROM documents)
+         |SELECT doc_id,
+         |  CAST(len(regexp_extract_all(raw, '$emailRe')) AS BIGINT) AS n_emails,
+         |  CAST(len(regexp_extract_all(raw, '$ipRe')) AS BIGINT) AS n_ips,
+         |  CAST(len(regexp_extract_all(raw, '$phoneRe')) AS BIGINT) AS n_phones,
+         |  len(regexp_extract_all(raw, '$emailRe'))
+         |    + len(regexp_extract_all(raw, '$ipRe'))
+         |    + len(regexp_extract_all(raw, '$phoneRe')) > 0 AS has_pii,
+         |  md5(regexp_replace(regexp_replace(regexp_replace(raw,
+         |    '$emailRe', '<EMAIL>', 'g'), '$ipRe', '<IP>', 'g'),
+         |    '$phoneRe', '<PHONE>', 'g')) AS redacted_hash
+         |FROM raws ORDER BY doc_id""".stripMargin
+    }) { (s, dir) =>
       withPii(graft.sources.Tables.documents(s, dir))
         .withColumn("n_emails",
           size(regexp_extract_all(col("raw"), lit(emailRe), lit(0))).cast("long"))
@@ -658,7 +749,6 @@ object Curation {
         .withColumn("has_pii", col("n_emails") + col("n_ips") + col("n_phones") > 0)
         .select(col("doc_id"), col("n_emails"), col("n_ips"), col("n_phones"),
           col("has_pii"), md5(col("redacted")).as("redacted_hash"))
-        .orderBy("doc_id")
     },
 
     // Consistent stratified sampling: the per-stratum QA sample every
@@ -670,14 +760,19 @@ object Curation {
     // oracle at all. Runs on the x04 TopKPerGroup operator in
     // production: map-side bounded heaps mean the exchange carries ≤k
     // rows per language, not the corpus.
-    "d38_corpus_sample" -> { (s, dir) =>
+    QuerySpec("d38_corpus_sample", by("lang", "rank"),
+      """SELECT lang, rank, doc_id, h FROM (
+        |  SELECT lang, doc_id, md5('smp' || CAST(doc_id AS VARCHAR)) AS h,
+        |    ROW_NUMBER() OVER (PARTITION BY lang
+        |      ORDER BY md5('smp' || CAST(doc_id AS VARCHAR)) ASC, doc_id ASC) AS rank
+        |  FROM documents) t
+        |WHERE rank <= 5 ORDER BY lang, rank""".stripMargin) { (s, dir) =>
       val keyed = graft.sources.Tables.documents(s, dir)
         .select(col("doc_id"), col("lang"),
           md5(concat(lit("smp"), col("doc_id").cast("string"))).as("h"))
       graft.plans.TopK.perGroup(keyed,
           Seq("lang"), Seq(("h", false), ("doc_id", false)), k = 5, rankName = "rank")
         .select("lang", "rank", "doc_id", "h")
-        .orderBy("lang", "rank")
     },
 
     // END-TO-END curation composition — the production path a corpus
@@ -706,11 +801,53 @@ object Curation {
     // stage's survivors — the conditional mins restrict to them) and
     // every train doc gets a verdict attributing its first failing
     // stage. Shuffles at any corpus size: content-hash window + band
-    // window + per-doc regroup + presentation sort — four narrow
-    // exchanges for a four-stage pipeline, zero self-joins, corpus
+    // window + per-doc regroup — three narrow exchanges for a
+    // four-stage pipeline, zero self-joins, corpus
     // text read ONCE (the second documents scan is the ≤100-doc bench
     // fixture slice, filter-pruned at the scan).
-    "d43_curation_pipeline" -> { (s, dir) =>
+    QuerySpec("d43_curation_pipeline", by("doc_id"),
+      Corpus.docsCte +
+      s""", bench AS (SELECT DISTINCT gram FROM grams WHERE $benchCond),
+         |grams_t AS (SELECT doc_id, gram FROM grams WHERE NOT ($benchCond)),
+         |hits AS (
+         |  SELECT g.doc_id, count(1) AS n FROM grams_t g JOIN bench USING (gram)
+         |  GROUP BY 1),
+         |${Dedup.minhashSqlOver("grams_t")},
+         |sig AS (
+         |  SELECT doc_id, seed // 4 AS band,
+         |         string_agg(CAST(minh AS VARCHAR), ',' ORDER BY seed) AS sig
+         |  FROM mh GROUP BY doc_id, band),
+         |q AS (
+         |  SELECT d.doc_id, md5(d.norm) AS content_hash,
+         |    CAST(len(d.ws) AS BIGINT) AS n_words,
+         |    CAST(len(list_filter(d.ws, w -> list_contains(${TextAnalysis.enStopSqlList}, w))) AS DOUBLE)
+         |      / greatest(len(d.ws), 1) AS stop_ratio,
+         |    CAST(COALESCE(h.n, 0) AS BIGINT) AS n_hit_grams
+         |  FROM docs d LEFT JOIN hits h USING (doc_id)
+         |  WHERE NOT (${benchCondOn("d")})),
+         |q2 AS (SELECT *, (stop_ratio >= 0.05 AND n_words BETWEEN 5 AND 500) AS quality_ok FROM q),
+         |w1 AS (SELECT *, min(CASE WHEN quality_ok THEN doc_id END)
+         |         OVER (PARTITION BY content_hash) AS keeper FROM q2),
+         |w1b AS (SELECT *, (quality_ok AND doc_id = keeper) AS survives_exact FROM w1),
+         |sb AS (
+         |  SELECT s.doc_id,
+         |    min(CASE WHEN w.survives_exact THEN s.doc_id END)
+         |      OVER (PARTITION BY s.band, s.sig) AS bmin
+         |  FROM sig s JOIN w1b w USING (doc_id)),
+         |ndup AS (
+         |  SELECT doc_id, bool_or(bmin IS NOT NULL AND bmin < doc_id) AS hit
+         |  FROM sb GROUP BY doc_id)
+         |SELECT w.doc_id, w.n_words, w.stop_ratio, w.quality_ok,
+         |  COALESCE(w.keeper, -1) AS keeper,
+         |  (w.survives_exact AND COALESCE(n.hit, false)) AS near_dup,
+         |  w.n_hit_grams,
+         |  CASE WHEN NOT w.quality_ok THEN 'drop_quality'
+         |       WHEN w.doc_id <> w.keeper THEN 'drop_exact_dup'
+         |       WHEN w.survives_exact AND COALESCE(n.hit, false) THEN 'drop_near_dup'
+         |       WHEN w.n_hit_grams > 0 THEN 'drop_contaminated'
+         |       ELSE 'keep' END AS verdict
+         |FROM w1b w LEFT JOIN ndup n USING (doc_id)
+         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val train = Corpus.docs(s, dir).filter(not(expr(benchCond)))
       // sorted for SortedHitCount's binary search (array_sort = the
@@ -770,7 +907,6 @@ object Curation {
         .select(col("doc_id"), col("n_words"), col("stop_ratio"), col("quality_ok"),
           coalesce(col("keeper"), lit(-1L)).as("keeper"),
           col("near_dup"), col("n_hit_grams"), col("verdict"))
-        .orderBy("doc_id")
     },
 
     // Context-window chunking — the dual of d39's packing: each LONG
@@ -782,8 +918,18 @@ object Curation {
     // shuffles, output linear in corpus bytes — and each chunk carries
     // a content hash, the downstream equi-join key for chunk-level
     // dedup/ANN, so the wide text column never re-materializes.
-    "d48_doc_chunk" -> { (s, dir) =>
-      chunkDocs(graft.sources.Tables.documents(s, dir)).orderBy("doc_id", "chunk_idx")
+    QuerySpec("d48_doc_chunk", by("doc_id", "chunk_idx"),
+      // chunk starts mirror Spark's inclusive sequence(1, max(len,1),
+      // stride) via DuckDB's exclusive-stop range(1, max(len,1)+1,
+      // stride); the corpus is ASCII so substr/length agree cross-engine
+      s"""SELECT doc_id,
+         |  CAST((start - 1) // $chunkStride AS BIGINT) AS chunk_idx,
+         |  CAST(length(substr(text, start, $chunkChars)) AS BIGINT) AS n_chars,
+         |  ${Corpus.hash32Sql(s"substr(text, start, $chunkChars)")} AS chunk_hash
+         |FROM documents, UNNEST(range(1, greatest(length(text), 1) + 1, $chunkStride)) t(start)
+         |WHERE text IS NOT NULL
+         |ORDER BY doc_id, chunk_idx""".stripMargin) { (s, dir) =>
+      chunkDocs(graft.sources.Tables.documents(s, dir))
     },
 
     // Content-addressed incremental ingest — esop's freshen/skip
@@ -795,9 +941,20 @@ object Curation {
     // body is skipped even under a new id. The anti-join shuffles both
     // sides on the uniformly-distributed fingerprint; at 100 TB
     // neither side broadcasts and neither needs to.
-    "d49_incremental_ingest" -> { (s, dir) =>
+    QuerySpec("d49_incremental_ingest", by("doc_id"),
+      // the ledger CTE mirrors the Scratch-materialized previous
+      // snapshot (deciles ≠ 3 plus the ≡3 mod 50 "known body, new id"
+      // overlap, distinct md5 fingerprints) verbatim
+      """WITH ledger AS (
+        |  SELECT DISTINCT md5(text) AS fp
+        |  FROM documents
+        |  WHERE text IS NOT NULL AND (doc_id % 10 <> 3 OR doc_id % 50 = 3))
+        |SELECT doc_id, md5(text) AS fp
+        |FROM documents d
+        |WHERE text IS NOT NULL
+        |  AND NOT EXISTS (SELECT 1 FROM ledger l WHERE l.fp = md5(d.text))
+        |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       incrementalIngest(graft.sources.Tables.documents(s, dir), ingestLedger(s, dir))
-        .orderBy("doc_id")
     },
 
     // Training-sequence packing — the last step before tokens hit the
@@ -810,7 +967,23 @@ object Curation {
     // every partition is bounded by construction (≤500 docs) and the
     // whole pass is embarrassingly parallel at any corpus size — no
     // global sort, no unbounded window partition.
-    "d39_seq_pack" -> { (s, dir) =>
+    QuerySpec("d39_seq_pack", by("shard", "seq_id"),
+      Corpus.docsCte +
+      """, toks AS (
+        |  SELECT doc_id, doc_id // 500 AS shard,
+        |         CAST(len(ws) AS BIGINT) AS n_tokens
+        |  FROM docs),
+        |cums AS (
+        |  SELECT doc_id, shard, n_tokens,
+        |    sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+        |  FROM toks)
+        |SELECT shard, CAST((cum - n_tokens) // 512 AS BIGINT) AS seq_id,
+        |  count(1) AS n_docs,
+        |  CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
+        |  min(doc_id) AS first_doc, max(doc_id) AS last_doc
+        |FROM cums GROUP BY 1, 2
+        |ORDER BY shard, seq_id""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val toks = Corpus.docs(s, dir).select(col("doc_id"),
         expr("doc_id div 500").as("shard"),
@@ -824,7 +997,6 @@ object Curation {
           sum(col("n_tokens")).as("n_tokens"),
           min(col("doc_id")).as("first_doc"),
           max(col("doc_id")).as("last_doc"))
-        .orderBy("shard", "seq_id")
     },
 
     // Mix PLANNING — the aggregate-level dual of d23's per-doc
@@ -840,8 +1012,25 @@ object Curation {
     // divides and their ratio, IEEE-identical cross-engine; the
     // planner's output is the config a weighted sampler (d23's shape)
     // consumes at 100 TB.
-    "d51_mix_plan" -> { (s, dir) =>
-      mixPlanFrame(s, dir).orderBy("source")
+    QuerySpec("d51_mix_plan", by("source"),
+      Corpus.docsCte +
+      s""", per AS (
+         |  SELECT source, count(1) AS n_docs,
+         |    CAST(sum(len(ws)) AS BIGINT) AS n_tokens,
+         |    (${Corpus.hash32Sql("'mixplan#' || source")} % 1000) + 1 AS w_raw
+         |  FROM docs GROUP BY source),
+         |tot AS (
+         |  SELECT CAST(sum(n_tokens) AS BIGINT) AS tot_tokens,
+         |    CAST(sum(w_raw) AS BIGINT) AS tot_w FROM per)
+         |SELECT source, n_docs, n_tokens,
+         |  CAST(n_tokens AS DOUBLE) / CAST(tot_tokens AS DOUBLE) AS actual_frac,
+         |  CAST(w_raw AS DOUBLE) / CAST(tot_w AS DOUBLE) AS target_frac,
+         |  (CAST(w_raw AS DOUBLE) / CAST(tot_w AS DOUBLE))
+         |    / (CAST(n_tokens AS DOUBLE) / CAST(tot_tokens AS DOUBLE)) AS weight,
+         |  CAST(ceil((CAST(w_raw AS DOUBLE) / CAST(tot_w AS DOUBLE))
+         |    / (CAST(n_tokens AS DOUBLE) / CAST(tot_tokens AS DOUBLE))) AS BIGINT) AS epochs
+         |FROM per CROSS JOIN tot ORDER BY source""".stripMargin) { (s, dir) =>
+      mixPlanFrame(s, dir)
     },
 
     // Right-to-be-forgotten deletion PLAN — the data-governance sweep
@@ -856,7 +1045,19 @@ object Curation {
     // PERSISTED external input (Scratch round-trip, like d55's
     // deny-list) broadcast-semi-joined against each artifact — the
     // artifact sides never shuffle. What a purge executor consumes.
-    "d59_forget_plan" -> { (s, dir) =>
+    QuerySpec("d59_forget_plan", by("doc_id", "artifact"),
+      """WITH tex AS (
+        |  SELECT doc_id, 'corpus' AS artifact, CAST(1 AS BIGINT) AS n_rows
+        |  FROM documents WHERE text IS NOT NULL AND doc_id % 23 = 1
+        |  UNION ALL
+        |  SELECT doc_id, 'chunks',
+        |    CAST((greatest(length(text), 1) - 1) // 160 + 1 AS BIGINT)
+        |  FROM documents WHERE text IS NOT NULL AND doc_id % 23 = 1),
+        |posts AS (
+        |  SELECT vec_id AS doc_id, 'postings' AS artifact, CAST(1 AS BIGINT) AS n_rows
+        |  FROM embeddings WHERE vec_id % 23 = 1)
+        |SELECT * FROM tex UNION ALL SELECT * FROM posts
+        |ORDER BY doc_id, artifact""".stripMargin) { (s, dir) =>
       val del = forgetList(s, dir)
       val textual = graft.sources.Tables.documents(s, dir)
         .filter(col("text").isNotNull)
@@ -872,7 +1073,7 @@ object Curation {
         .select(col("vec_id").as("doc_id"))
         .join(broadcast(del), Seq("doc_id"), "left_semi")
         .select(col("doc_id"), lit("postings").as("artifact"), lit(1L).as("n_rows"))
-      textual.unionByName(postings).orderBy("doc_id", "artifact")
+      textual.unionByName(postings)
     },
 
     // Deterministic train/val/test split — keyed on the CONTENT
@@ -885,8 +1086,19 @@ object Curation {
     // shuffles, reproducible under re-runs and corpus growth (a doc's
     // split never changes when neighbors arrive, unlike rand() or
     // rank-based splits). The same md5-bucket family as d23/d38.
-    "d57_data_split" -> { (s, dir) =>
-      splitAssign(graft.sources.Tables.documents(s, dir)).orderBy("doc_id")
+    QuerySpec("d57_data_split", by("doc_id"),
+      s"""WITH fps AS (
+         |  SELECT doc_id, md5(text) AS fp FROM documents WHERE text IS NOT NULL),
+         |b AS (
+         |  SELECT doc_id,
+         |    ${Corpus.hash32Sql("concat('split#', fp)")} % 100 AS bucket
+         |  FROM fps)
+         |SELECT doc_id, bucket,
+         |  CASE WHEN bucket < 80 THEN 'train'
+         |       WHEN bucket < 90 THEN 'val'
+         |       ELSE 'test' END AS split
+         |FROM b ORDER BY doc_id""".stripMargin) { (s, dir) =>
+      splitAssign(graft.sources.Tables.documents(s, dir))
     },
 
     // Two-stage Bloom deny-list gate — how a 100 TB ingest enforces a
@@ -898,10 +1110,30 @@ object Curation {
     // with the deny-list (next pow2 ≥ 16n → stable FPR at any size);
     // the no-false-negative soundness and the FPR budget are
     // spec-pinned, and the oracle recomputes both stages in SQL.
-    "d55_blocklist_bloom" -> { (s, dir) =>
+    QuerySpec("d55_blocklist_bloom", by("doc_id"),
+      {
+      def pos(i: Int) =
+        s"(${Corpus.hash32Sql(s"'bloom$i#' || fp")} % (SELECT m FROM mm))"
+      s"""WITH fps AS (
+         |  SELECT doc_id, md5(text) AS fp FROM documents WHERE text IS NOT NULL),
+         |deny AS (SELECT DISTINCT fp FROM fps WHERE doc_id % 17 = 0),
+         |mm AS (SELECT CAST(POWER(2, length(to_base(16 * count(1) - 1, 2))) AS BIGINT) AS m FROM deny),
+         |bits AS (
+         |  SELECT DISTINCT ${Corpus.hash32Sql("'bloom' || CAST(i AS VARCHAR) || '#' || fp")}
+         |      % (SELECT m FROM mm) AS pos
+         |  FROM deny, UNNEST([0, 1, 2]) t(i)),
+         |suspects AS (
+         |  SELECT doc_id, fp FROM fps
+         |  WHERE ${pos(0)} IN (SELECT pos FROM bits)
+         |    AND ${pos(1)} IN (SELECT pos FROM bits)
+         |    AND ${pos(2)} IN (SELECT pos FROM bits))
+         |SELECT doc_id,
+         |  fp IN (SELECT fp FROM deny) AS exact_hit,
+         |  fp NOT IN (SELECT fp FROM deny) AS false_positive
+         |FROM suspects ORDER BY doc_id""".stripMargin
+    }) { (s, dir) =>
       blocklistGate(graft.sources.Tables.documents(s, dir),
           denyList(s, dir), denyBits(s, dir))
-        .orderBy("doc_id")
     },
 
     // Snapshot-over-snapshot DRIFT monitor — the regression gate a
@@ -918,7 +1150,27 @@ object Curation {
     // over the bounded stratum space (langs × 6 buckets); the totals
     // come from a global window over that BOUNDED aggregate, never a
     // second pass over the data.
-    "d54_corpus_drift" -> { (s, dir) =>
+    QuerySpec("d54_corpus_drift", by("lang", "len_bucket"),
+      """WITH tagged AS (
+        |  SELECT lang, least(n_chars // 100, 5) AS len_bucket,
+        |    CASE WHEN doc_id % 10 < 8 THEN 'prev'
+        |         WHEN n_chars >= 300 THEN 'curr' END AS snap
+        |  FROM documents
+        |  WHERE doc_id % 10 < 8 OR n_chars >= 300),
+        |strata AS (
+        |  SELECT lang, len_bucket,
+        |    count(CASE WHEN snap = 'prev' THEN 1 END) AS n_prev,
+        |    count(CASE WHEN snap = 'curr' THEN 1 END) AS n_curr
+        |  FROM tagged GROUP BY 1, 2),
+        |wide AS (
+        |  SELECT *, SUM(n_prev) OVER () AS tot_prev,
+        |            SUM(n_curr) OVER () AS tot_curr
+        |  FROM strata)
+        |SELECT lang, len_bucket, n_prev, n_curr,
+        |  CAST(n_prev AS DOUBLE) / CAST(tot_prev AS DOUBLE) AS share_prev,
+        |  CAST(n_curr AS DOUBLE) / CAST(tot_curr AS DOUBLE) AS share_curr,
+        |  CAST(abs(n_prev * tot_curr - n_curr * tot_prev) AS BIGINT) AS drift_num
+        |FROM wide ORDER BY lang, len_bucket""".stripMargin) { (s, dir) =>
       val wAll = org.apache.spark.sql.expressions.Window.partitionBy()
       graft.sources.Tables.documents(s, dir)
         .withColumn("snap",
@@ -939,7 +1191,6 @@ object Curation {
           abs(col("n_prev") * col("tot_curr") - col("n_curr") * col("tot_prev")))
         .select("lang", "len_bucket", "n_prev", "n_curr",
           "share_prev", "share_curr", "drift_num")
-        .orderBy("lang", "len_bucket")
     },
 
     // Token-balanced shard assignment — the writer-side plan that
@@ -956,7 +1207,26 @@ object Curation {
     // corpus in one place. B scales with the cluster at 100 TB; the
     // totals agg is a second pinned scan (corpus-sized intermediates
     // are not persisted — two cheap scans beat caching 100 TB).
-    "d65_shard_plan" -> { (s, dir) =>
+    QuerySpec("d65_shard_plan", by("doc_id"),
+      // one flat window over the global (bucket, ord, doc_id) order —
+      // DuckDB needs no bucket staging, the ORDER is what must match
+      Corpus.docsCte + {
+      val ord = Corpus.hash32Sql("concat('shard', CAST(doc_id AS VARCHAR))")
+      s""", d AS (
+        |  SELECT doc_id,
+        |    CAST(len(list_filter(ws, x -> x <> '')) AS BIGINT) AS n_tokens,
+        |    $ord AS ord, $ord % 32 AS bucket
+        |  FROM docs),
+        |cum AS (
+        |  SELECT doc_id, bucket, n_tokens,
+        |    CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY bucket, ord, doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
+        |      AS cum_before
+        |  FROM d)
+        |SELECT doc_id, bucket, n_tokens, cum_before,
+        |  cum_before // 4096 AS shard
+        |FROM cum ORDER BY doc_id""".stripMargin
+    }) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val shardTokens = 4096L
       val d = Corpus.docs(s, dir).select(
@@ -978,7 +1248,6 @@ object Curation {
         .withColumn("cum_before", col("offset") + col("local_before"))
         .withColumn("shard", expr(s"cum_before div $shardTokens"))
         .select("doc_id", "bucket", "n_tokens", "cum_before", "shard")
-        .orderBy("doc_id")
     },
 
     // Token-budget curriculum selection — the per-source QUOTA cut a
@@ -996,392 +1265,8 @@ object Curation {
     // exchange on source, windows parallel across sources (a
     // pathological mega-source would take d65's two-stage prefix
     // within the source). Pin documents=1.
-    "d66_quota_select" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val quota = 600L
-      val w = Window.partitionBy("source")
-        .orderBy(col("score").desc, col("doc_id"))
-      val wCum = w.rowsBetween(Window.unboundedPreceding, -1)
-      Corpus.docs(s, dir)
-        .withColumn("n_tokens", TextAnalysis.nonEmptyCount(col("ws")))
-        .withColumn("n_stop", TextAnalysis.wordHits(col("ws"), TextAnalysis.enStop))
-        .withColumn("score", expr("(n_stop * 1000) div greatest(n_tokens, 1)"))
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .withColumn("cum_before", coalesce(sum(col("n_tokens")).over(wCum), lit(0L)))
-        .filter(col("cum_before") + col("n_tokens") <= quota)
-        .select("source", "doc_id", "score", "n_tokens", "rk", "cum_before")
-        .orderBy("source", "rk")
-    },
-
-    // Quality-aware canonical selection within near-dup clusters — the
-    // step production dedup actually wants after d24's connected
-    // components: keep the BEST copy of each duplicated page (argmax
-    // quality, not min doc_id — the min-id keeper d01/d60 use is the
-    // right call only when copies are byte-identical; near-dups differ
-    // and you keep the cleanest). Labels come from the same pointer-
-    // jumping components over the d04 LSH pairs; the keeper is
-    // first_value over a per-cluster (score desc, doc_id) window —
-    // clusters are small by construction (near-dup groups), so the
-    // windows are bounded and parallel across clusters; the score is
-    // d66's exact-integer quality proxy (bit-identical cross-engine,
-    // which is what lets an ARGMAX survive a hash compare). Output is
-    // the purge worklist: every clustered doc, its keeper, and the
-    // purge flag. Corpus passes: the LSH pipeline's one documents scan
-    // (inside the checkpoint loop, counted with countsDuring as d24)
-    // plus the score join's one — pin documents=2 during.
-    "d67_cluster_keep_best" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val labels =
-        connectedComponents(s, Dedup.lshPairs(s, dir).select("a_id", "b_id"))
-      val scored = Corpus.docs(s, dir)
-        .withColumn("n_tokens", TextAnalysis.nonEmptyCount(col("ws")))
-        .withColumn("n_stop", TextAnalysis.wordHits(col("ws"), TextAnalysis.enStop))
-        .withColumn("score", expr("(n_stop * 1000) div greatest(n_tokens, 1)"))
-        .select(col("doc_id"), col("score"))
-      val wOrd = Window.partitionBy("cluster_id")
-        .orderBy(col("score").desc, col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      labels.select(col("id").as("doc_id"), col("lbl").as("cluster_id"))
-        .join(scored, Seq("doc_id"))
-        .withColumn("keeper_id", first(col("doc_id")).over(wOrd))
-        .withColumn("cluster_size",
-          count(lit(1)).over(Window.partitionBy("cluster_id")))
-        .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
-          col("score"), col("keeper_id"),
-          (col("doc_id") =!= col("keeper_id")).as("purge"))
-        .orderBy("doc_id")
-    },
-
-    // Mix-plan EXECUTION — the replay manifest that turns d51's
-    // per-source epoch counts into the actual training stream: every
-    // doc replicated `epochs(source)` times with a deterministic
-    // replica index (the oversampling half of the DoReMi loop; d23 is
-    // the undersampling half). The plan is a bounded per-source frame
-    // joined BROADCAST, and the explode multiplies rows AFTER the
-    // join — the corpus is scanned once for the stream and once
-    // (reduced map-side) for the plan (pin documents=2); no shuffle
-    // anywhere, the manifest inherits the scan's partitioning. A
-    // dataloader consumes (doc_id, replica) as its sample list;
-    // replica is in the key so shuffling the manifest never collides
-    // copies.
-    "d69_mix_execute" -> { (s, dir) =>
-      val plan = mixPlanFrame(s, dir).select("source", "epochs")
-      Corpus.docs(s, dir).select("doc_id", "source")
-        .join(broadcast(plan), Seq("source"))
-        .withColumn("replica", explode(expr("sequence(1, epochs)")))
-        .select("doc_id", "source", "replica", "epochs")
-        .orderBy("doc_id", "replica")
-    }
-  )
-
-  val oracle: Map[String, String] = Map(
-    "d22_decontaminate" -> (Corpus.docsCte +
-      s""", bench AS (SELECT DISTINCT gram FROM grams WHERE $benchCond),
-         |hits AS (
-         |  SELECT g.doc_id, count(1) AS n FROM grams g JOIN bench USING (gram)
-         |  WHERE NOT (${benchCondOn("g")}) GROUP BY g.doc_id)
-         |SELECT d.doc_id, CAST(COALESCE(h.n, 0) AS BIGINT) AS n_hit_grams,
-         |       COALESCE(h.n, 0) > 0 AS contaminated
-         |FROM docs d LEFT JOIN hits h USING (doc_id)
-         |WHERE NOT (${benchCondOn("d")})
-         |ORDER BY doc_id""".stripMargin),
-
-    // the α-law over lang counts: w per (alpha, lang), denominators as
-    // an ORDERED sequential list_reduce (≡ Spark's left fold over the
-    // sorted struct array — bit-identical float sums), boost left-assoc
-    "d94_lang_temperature" ->
-      """WITH counts AS (SELECT lang, count(1) AS n_docs FROM documents GROUP BY lang),
-        |tot AS (SELECT CAST(sum(n_docs) AS BIGINT) AS n_total FROM counts),
-        |al AS (SELECT unnest([CAST(0.5 AS DOUBLE), CAST(1.0 AS DOUBLE), CAST(2.0 AS DOUBLE)]) AS alpha),
-        |w AS (
-        |  SELECT a.alpha, c.lang, c.n_docs,
-        |    CASE WHEN a.alpha = 0.5 THEN sqrt(CAST(c.n_docs AS DOUBLE))
-        |         WHEN a.alpha = 1.0 THEN CAST(c.n_docs AS DOUBLE)
-        |         ELSE CAST(c.n_docs AS DOUBLE) * CAST(c.n_docs AS DOUBLE) END AS w
-        |  FROM al a CROSS JOIN counts c),
-        |den AS (
-        |  SELECT alpha,
-        |    CAST(list_reduce(list(w ORDER BY lang), (x, y) -> x + y) AS DOUBLE) AS denom
-        |  FROM w GROUP BY alpha)
-        |SELECT w.alpha, w.lang, w.n_docs,
-        |  w.w / den.denom AS share,
-        |  w.w / den.denom * CAST(t.n_total AS DOUBLE) / CAST(w.n_docs AS DOUBLE) AS boost
-        |FROM w JOIN den USING (alpha) CROSS JOIN tot t
-        |ORDER BY alpha, lang""".stripMargin,
-
-    "d23_corpus_mix" -> {
-      val rateSql = mixRates.map { case (l, r) => s"WHEN lang = '$l' THEN $r" }
-        .mkString("CASE ", " ", " ELSE 100 END")
-      s"""WITH m AS (
-         |  SELECT doc_id, lang, source,
-         |    ${Corpus.hash32Sql("'mix#' || CAST(doc_id AS VARCHAR)")} % 100 AS bucket,
-         |    CAST($rateSql AS BIGINT) AS rate
-         |  FROM documents)
-         |SELECT doc_id, lang, source, bucket, rate
-         |FROM m WHERE bucket < rate ORDER BY doc_id""".stripMargin
-    },
-
-    "d24_dup_clusters" -> (Dedup.lshPairsCte.replaceFirst("WITH ", "WITH RECURSIVE ") +
-      """, sym AS (
-        |  SELECT a_id AS src, b_id AS dst FROM pairs
-        |  UNION ALL SELECT b_id, a_id FROM pairs),
-        |nodes AS (SELECT DISTINCT src AS id FROM sym),
-        |reach(id, r) AS (
-        |  SELECT id, id FROM nodes
-        |  UNION
-        |  SELECT s.src, reach.r FROM sym s JOIN reach ON reach.id = s.dst),
-        |lbl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
-        |sz AS (SELECT cluster_id, count(1) AS cluster_size FROM lbl GROUP BY 1)
-        |SELECT l.id AS doc_id, l.cluster_id, s.cluster_size
-        |FROM lbl l JOIN sz s USING (cluster_id) ORDER BY doc_id""".stripMargin),
-
-    "d106_cluster_size_hist" -> (Dedup.lshPairsCte.replaceFirst("WITH ", "WITH RECURSIVE ") +
-      """, sym AS (
-        |  SELECT a_id AS src, b_id AS dst FROM pairs
-        |  UNION ALL SELECT b_id, a_id FROM pairs),
-        |nodes AS (SELECT DISTINCT src AS id FROM sym),
-        |reach(id, r) AS (
-        |  SELECT id, id FROM nodes
-        |  UNION
-        |  SELECT s.src, reach.r FROM sym s JOIN reach ON reach.id = s.dst),
-        |lbl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
-        |sz AS (SELECT cluster_id, count(1) AS cluster_size FROM lbl GROUP BY 1),
-        |hist AS (SELECT cluster_size, count(1) AS n_clusters FROM sz GROUP BY 1),
-        |tot AS (SELECT count(1) AS n_corpus FROM documents),
-        |clustered AS (
-        |  SELECT CAST(coalesce(sum(cluster_size * n_clusters), 0) AS BIGINT) AS n_in
-        |  FROM hist),
-        |allrows AS (
-        |  SELECT cluster_size, n_clusters FROM hist
-        |  UNION ALL
-        |  SELECT CAST(1 AS BIGINT),
-        |         (SELECT n_corpus FROM tot) - (SELECT n_in FROM clustered))
-        |SELECT cluster_size, n_clusters,
-        |  CAST(cluster_size * n_clusters AS BIGINT) AS n_docs,
-        |  CAST(cluster_size * n_clusters AS DOUBLE)
-        |    / CAST((SELECT n_corpus FROM tot) AS DOUBLE) AS doc_frac
-        |FROM allrows ORDER BY cluster_size""".stripMargin),
-
-    "d25_pii_scrub" -> {
-      s"""WITH raws AS (
-         |  SELECT doc_id, $piiRawSql AS raw FROM documents)
-         |SELECT doc_id,
-         |  CAST(len(regexp_extract_all(raw, '$emailRe')) AS BIGINT) AS n_emails,
-         |  CAST(len(regexp_extract_all(raw, '$ipRe')) AS BIGINT) AS n_ips,
-         |  CAST(len(regexp_extract_all(raw, '$phoneRe')) AS BIGINT) AS n_phones,
-         |  len(regexp_extract_all(raw, '$emailRe'))
-         |    + len(regexp_extract_all(raw, '$ipRe'))
-         |    + len(regexp_extract_all(raw, '$phoneRe')) > 0 AS has_pii,
-         |  md5(regexp_replace(regexp_replace(regexp_replace(raw,
-         |    '$emailRe', '<EMAIL>', 'g'), '$ipRe', '<IP>', 'g'),
-         |    '$phoneRe', '<PHONE>', 'g')) AS redacted_hash
-         |FROM raws ORDER BY doc_id""".stripMargin
-    },
-
-    "d43_curation_pipeline" -> (Corpus.docsCte +
-      s""", bench AS (SELECT DISTINCT gram FROM grams WHERE $benchCond),
-         |grams_t AS (SELECT doc_id, gram FROM grams WHERE NOT ($benchCond)),
-         |hits AS (
-         |  SELECT g.doc_id, count(1) AS n FROM grams_t g JOIN bench USING (gram)
-         |  GROUP BY 1),
-         |${Dedup.minhashSqlOver("grams_t")},
-         |sig AS (
-         |  SELECT doc_id, seed // 4 AS band,
-         |         string_agg(CAST(minh AS VARCHAR), ',' ORDER BY seed) AS sig
-         |  FROM mh GROUP BY doc_id, band),
-         |q AS (
-         |  SELECT d.doc_id, md5(d.norm) AS content_hash,
-         |    CAST(len(d.ws) AS BIGINT) AS n_words,
-         |    CAST(len(list_filter(d.ws, w -> list_contains(${TextAnalysis.enStopSqlList}, w))) AS DOUBLE)
-         |      / greatest(len(d.ws), 1) AS stop_ratio,
-         |    CAST(COALESCE(h.n, 0) AS BIGINT) AS n_hit_grams
-         |  FROM docs d LEFT JOIN hits h USING (doc_id)
-         |  WHERE NOT (${benchCondOn("d")})),
-         |q2 AS (SELECT *, (stop_ratio >= 0.05 AND n_words BETWEEN 5 AND 500) AS quality_ok FROM q),
-         |w1 AS (SELECT *, min(CASE WHEN quality_ok THEN doc_id END)
-         |         OVER (PARTITION BY content_hash) AS keeper FROM q2),
-         |w1b AS (SELECT *, (quality_ok AND doc_id = keeper) AS survives_exact FROM w1),
-         |sb AS (
-         |  SELECT s.doc_id,
-         |    min(CASE WHEN w.survives_exact THEN s.doc_id END)
-         |      OVER (PARTITION BY s.band, s.sig) AS bmin
-         |  FROM sig s JOIN w1b w USING (doc_id)),
-         |ndup AS (
-         |  SELECT doc_id, bool_or(bmin IS NOT NULL AND bmin < doc_id) AS hit
-         |  FROM sb GROUP BY doc_id)
-         |SELECT w.doc_id, w.n_words, w.stop_ratio, w.quality_ok,
-         |  COALESCE(w.keeper, -1) AS keeper,
-         |  (w.survives_exact AND COALESCE(n.hit, false)) AS near_dup,
-         |  w.n_hit_grams,
-         |  CASE WHEN NOT w.quality_ok THEN 'drop_quality'
-         |       WHEN w.doc_id <> w.keeper THEN 'drop_exact_dup'
-         |       WHEN w.survives_exact AND COALESCE(n.hit, false) THEN 'drop_near_dup'
-         |       WHEN w.n_hit_grams > 0 THEN 'drop_contaminated'
-         |       ELSE 'keep' END AS verdict
-         |FROM w1b w LEFT JOIN ndup n USING (doc_id)
-         |ORDER BY doc_id""".stripMargin),
-
-    "d38_corpus_sample" ->
-      """SELECT lang, rank, doc_id, h FROM (
-        |  SELECT lang, doc_id, md5('smp' || CAST(doc_id AS VARCHAR)) AS h,
-        |    ROW_NUMBER() OVER (PARTITION BY lang
-        |      ORDER BY md5('smp' || CAST(doc_id AS VARCHAR)) ASC, doc_id ASC) AS rank
-        |  FROM documents) t
-        |WHERE rank <= 5 ORDER BY lang, rank""".stripMargin,
-
-    // chunk starts mirror Spark's inclusive sequence(1, max(len,1),
-    // stride) via DuckDB's exclusive-stop range(1, max(len,1)+1,
-    // stride); the corpus is ASCII so substr/length agree cross-engine
-    "d48_doc_chunk" ->
-      s"""SELECT doc_id,
-         |  CAST((start - 1) // $chunkStride AS BIGINT) AS chunk_idx,
-         |  CAST(length(substr(text, start, $chunkChars)) AS BIGINT) AS n_chars,
-         |  ${Corpus.hash32Sql(s"substr(text, start, $chunkChars)")} AS chunk_hash
-         |FROM documents, UNNEST(range(1, greatest(length(text), 1) + 1, $chunkStride)) t(start)
-         |WHERE text IS NOT NULL
-         |ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    // the ledger CTE mirrors the Scratch-materialized previous
-    // snapshot (deciles ≠ 3 plus the ≡3 mod 50 "known body, new id"
-    // overlap, distinct md5 fingerprints) verbatim
-    "d49_incremental_ingest" ->
-      """WITH ledger AS (
-        |  SELECT DISTINCT md5(text) AS fp
-        |  FROM documents
-        |  WHERE text IS NOT NULL AND (doc_id % 10 <> 3 OR doc_id % 50 = 3))
-        |SELECT doc_id, md5(text) AS fp
-        |FROM documents d
-        |WHERE text IS NOT NULL
-        |  AND NOT EXISTS (SELECT 1 FROM ledger l WHERE l.fp = md5(d.text))
-        |ORDER BY doc_id""".stripMargin,
-
-    "d39_seq_pack" -> (Corpus.docsCte +
-      """, toks AS (
-        |  SELECT doc_id, doc_id // 500 AS shard,
-        |         CAST(len(ws) AS BIGINT) AS n_tokens
-        |  FROM docs),
-        |cums AS (
-        |  SELECT doc_id, shard, n_tokens,
-        |    sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM toks)
-        |SELECT shard, CAST((cum - n_tokens) // 512 AS BIGINT) AS seq_id,
-        |  count(1) AS n_docs,
-        |  CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-        |  min(doc_id) AS first_doc, max(doc_id) AS last_doc
-        |FROM cums GROUP BY 1, 2
-        |ORDER BY shard, seq_id""".stripMargin),
-
-    "d51_mix_plan" -> (Corpus.docsCte +
-      s""", per AS (
-         |  SELECT source, count(1) AS n_docs,
-         |    CAST(sum(len(ws)) AS BIGINT) AS n_tokens,
-         |    (${Corpus.hash32Sql("'mixplan#' || source")} % 1000) + 1 AS w_raw
-         |  FROM docs GROUP BY source),
-         |tot AS (
-         |  SELECT CAST(sum(n_tokens) AS BIGINT) AS tot_tokens,
-         |    CAST(sum(w_raw) AS BIGINT) AS tot_w FROM per)
-         |SELECT source, n_docs, n_tokens,
-         |  CAST(n_tokens AS DOUBLE) / CAST(tot_tokens AS DOUBLE) AS actual_frac,
-         |  CAST(w_raw AS DOUBLE) / CAST(tot_w AS DOUBLE) AS target_frac,
-         |  (CAST(w_raw AS DOUBLE) / CAST(tot_w AS DOUBLE))
-         |    / (CAST(n_tokens AS DOUBLE) / CAST(tot_tokens AS DOUBLE)) AS weight,
-         |  CAST(ceil((CAST(w_raw AS DOUBLE) / CAST(tot_w AS DOUBLE))
-         |    / (CAST(n_tokens AS DOUBLE) / CAST(tot_tokens AS DOUBLE))) AS BIGINT) AS epochs
-         |FROM per CROSS JOIN tot ORDER BY source""".stripMargin),
-
-    "d59_forget_plan" ->
-      """WITH tex AS (
-        |  SELECT doc_id, 'corpus' AS artifact, CAST(1 AS BIGINT) AS n_rows
-        |  FROM documents WHERE text IS NOT NULL AND doc_id % 23 = 1
-        |  UNION ALL
-        |  SELECT doc_id, 'chunks',
-        |    CAST((greatest(length(text), 1) - 1) // 160 + 1 AS BIGINT)
-        |  FROM documents WHERE text IS NOT NULL AND doc_id % 23 = 1),
-        |posts AS (
-        |  SELECT vec_id AS doc_id, 'postings' AS artifact, CAST(1 AS BIGINT) AS n_rows
-        |  FROM embeddings WHERE vec_id % 23 = 1)
-        |SELECT * FROM tex UNION ALL SELECT * FROM posts
-        |ORDER BY doc_id, artifact""".stripMargin,
-
-    "d57_data_split" ->
-      s"""WITH fps AS (
-         |  SELECT doc_id, md5(text) AS fp FROM documents WHERE text IS NOT NULL),
-         |b AS (
-         |  SELECT doc_id,
-         |    ${Corpus.hash32Sql("concat('split#', fp)")} % 100 AS bucket
-         |  FROM fps)
-         |SELECT doc_id, bucket,
-         |  CASE WHEN bucket < 80 THEN 'train'
-         |       WHEN bucket < 90 THEN 'val'
-         |       ELSE 'test' END AS split
-         |FROM b ORDER BY doc_id""".stripMargin,
-
-    "d55_blocklist_bloom" -> {
-      def pos(i: Int) =
-        s"(${Corpus.hash32Sql(s"'bloom$i#' || fp")} % (SELECT m FROM mm))"
-      s"""WITH fps AS (
-         |  SELECT doc_id, md5(text) AS fp FROM documents WHERE text IS NOT NULL),
-         |deny AS (SELECT DISTINCT fp FROM fps WHERE doc_id % 17 = 0),
-         |mm AS (SELECT CAST(POWER(2, length(to_base(16 * count(1) - 1, 2))) AS BIGINT) AS m FROM deny),
-         |bits AS (
-         |  SELECT DISTINCT ${Corpus.hash32Sql("'bloom' || CAST(i AS VARCHAR) || '#' || fp")}
-         |      % (SELECT m FROM mm) AS pos
-         |  FROM deny, UNNEST([0, 1, 2]) t(i)),
-         |suspects AS (
-         |  SELECT doc_id, fp FROM fps
-         |  WHERE ${pos(0)} IN (SELECT pos FROM bits)
-         |    AND ${pos(1)} IN (SELECT pos FROM bits)
-         |    AND ${pos(2)} IN (SELECT pos FROM bits))
-         |SELECT doc_id,
-         |  fp IN (SELECT fp FROM deny) AS exact_hit,
-         |  fp NOT IN (SELECT fp FROM deny) AS false_positive
-         |FROM suspects ORDER BY doc_id""".stripMargin
-    },
-
-    "d54_corpus_drift" ->
-      """WITH tagged AS (
-        |  SELECT lang, least(n_chars // 100, 5) AS len_bucket,
-        |    CASE WHEN doc_id % 10 < 8 THEN 'prev'
-        |         WHEN n_chars >= 300 THEN 'curr' END AS snap
-        |  FROM documents
-        |  WHERE doc_id % 10 < 8 OR n_chars >= 300),
-        |strata AS (
-        |  SELECT lang, len_bucket,
-        |    count(CASE WHEN snap = 'prev' THEN 1 END) AS n_prev,
-        |    count(CASE WHEN snap = 'curr' THEN 1 END) AS n_curr
-        |  FROM tagged GROUP BY 1, 2),
-        |wide AS (
-        |  SELECT *, SUM(n_prev) OVER () AS tot_prev,
-        |            SUM(n_curr) OVER () AS tot_curr
-        |  FROM strata)
-        |SELECT lang, len_bucket, n_prev, n_curr,
-        |  CAST(n_prev AS DOUBLE) / CAST(tot_prev AS DOUBLE) AS share_prev,
-        |  CAST(n_curr AS DOUBLE) / CAST(tot_curr AS DOUBLE) AS share_curr,
-        |  CAST(abs(n_prev * tot_curr - n_curr * tot_prev) AS BIGINT) AS drift_num
-        |FROM wide ORDER BY lang, len_bucket""".stripMargin,
-
-    // one flat window over the global (bucket, ord, doc_id) order —
-    // DuckDB needs no bucket staging, the ORDER is what must match
-    "d65_shard_plan" -> (Corpus.docsCte + {
-      val ord = Corpus.hash32Sql("concat('shard', CAST(doc_id AS VARCHAR))")
-      s""", d AS (
-        |  SELECT doc_id,
-        |    CAST(len(list_filter(ws, x -> x <> '')) AS BIGINT) AS n_tokens,
-        |    $ord AS ord, $ord % 32 AS bucket
-        |  FROM docs),
-        |cum AS (
-        |  SELECT doc_id, bucket, n_tokens,
-        |    CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY bucket, ord, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-        |      AS cum_before
-        |  FROM d)
-        |SELECT doc_id, bucket, n_tokens, cum_before,
-        |  cum_before // 4096 AS shard
-        |FROM cum ORDER BY doc_id""".stripMargin
-    }),
-
-    "d66_quota_select" -> (Corpus.docsCte +
+    QuerySpec("d66_quota_select", by("source", "rk"),
+      Corpus.docsCte +
       s""", scored AS (
          |  SELECT source, doc_id,
          |    CAST(len(list_filter(ws, x -> x <> '')) AS BIGINT) AS n_tokens,
@@ -1402,9 +1287,40 @@ object Curation {
          |  FROM r)
          |SELECT source, doc_id, score, n_tokens, rk, cum_before
          |FROM cum WHERE cum_before + n_tokens <= 600
-         |ORDER BY source, rk""".stripMargin),
+         |ORDER BY source, rk""".stripMargin) { (s, dir) =>
+      import org.apache.spark.sql.expressions.Window
+      val quota = 600L
+      val w = Window.partitionBy("source")
+        .orderBy(col("score").desc, col("doc_id"))
+      val wCum = w.rowsBetween(Window.unboundedPreceding, -1)
+      Corpus.docs(s, dir)
+        .withColumn("n_tokens", TextAnalysis.nonEmptyCount(col("ws")))
+        .withColumn("n_stop", TextAnalysis.wordHits(col("ws"), TextAnalysis.enStop))
+        .withColumn("score", expr("(n_stop * 1000) div greatest(n_tokens, 1)"))
+        .withColumn("rk", row_number().over(w).cast("long"))
+        .withColumn("cum_before", coalesce(sum(col("n_tokens")).over(wCum), lit(0L)))
+        .filter(col("cum_before") + col("n_tokens") <= quota)
+        .select("source", "doc_id", "score", "n_tokens", "rk", "cum_before")
+    },
 
-    "d67_cluster_keep_best" -> (Dedup.lshPairsCte.replaceFirst("WITH ", "WITH RECURSIVE ") +
+    // Quality-aware canonical selection within near-dup clusters — the
+    // step production dedup actually wants after d24's connected
+    // components: keep the BEST copy of each duplicated page (argmax
+    // quality, not min doc_id — the min-id keeper d01/d60 use is the
+    // right call only when copies are byte-identical; near-dups differ
+    // and you keep the cleanest). Labels come from the same pointer-
+    // jumping components over the d04 LSH pairs; the keeper is
+    // first_value over a per-cluster (score desc, doc_id) window —
+    // clusters are small by construction (near-dup groups), so the
+    // windows are bounded and parallel across clusters; the score is
+    // d66's exact-integer quality proxy (bit-identical cross-engine,
+    // which is what lets an ARGMAX survive a hash compare). Output is
+    // the purge worklist: every clustered doc, its keeper, and the
+    // purge flag. Corpus passes: the LSH pipeline's one documents scan
+    // (inside the checkpoint loop, counted with countsDuring as d24)
+    // plus the score join's one — pin documents=2 during.
+    QuerySpec("d67_cluster_keep_best", by("doc_id"),
+      Dedup.lshPairsCte.replaceFirst("WITH ", "WITH RECURSIVE ") +
       s""", sym AS (
          |  SELECT a_id AS src, b_id AS dst FROM pairs
          |  UNION ALL SELECT b_id, a_id FROM pairs),
@@ -1432,9 +1348,42 @@ object Curation {
          |  FROM j)
          |SELECT doc_id, cluster_id, cluster_size, score, keeper_id,
          |  doc_id <> keeper_id AS purge
-         |FROM k ORDER BY doc_id""".stripMargin),
+         |FROM k ORDER BY doc_id""".stripMargin) { (s, dir) =>
+      import org.apache.spark.sql.expressions.Window
+      val labels =
+        connectedComponents(s, Dedup.lshPairs(s, dir).select("a_id", "b_id"))
+      val scored = Corpus.docs(s, dir)
+        .withColumn("n_tokens", TextAnalysis.nonEmptyCount(col("ws")))
+        .withColumn("n_stop", TextAnalysis.wordHits(col("ws"), TextAnalysis.enStop))
+        .withColumn("score", expr("(n_stop * 1000) div greatest(n_tokens, 1)"))
+        .select(col("doc_id"), col("score"))
+      val wOrd = Window.partitionBy("cluster_id")
+        .orderBy(col("score").desc, col("doc_id"))
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+      labels.select(col("id").as("doc_id"), col("lbl").as("cluster_id"))
+        .join(scored, Seq("doc_id"))
+        .withColumn("keeper_id", first(col("doc_id")).over(wOrd))
+        .withColumn("cluster_size",
+          count(lit(1)).over(Window.partitionBy("cluster_id")))
+        .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
+          col("score"), col("keeper_id"),
+          (col("doc_id") =!= col("keeper_id")).as("purge"))
+    },
 
-    "d69_mix_execute" -> (Corpus.docsCte +
+    // Mix-plan EXECUTION — the replay manifest that turns d51's
+    // per-source epoch counts into the actual training stream: every
+    // doc replicated `epochs(source)` times with a deterministic
+    // replica index (the oversampling half of the DoReMi loop; d23 is
+    // the undersampling half). The plan is a bounded per-source frame
+    // joined BROADCAST, and the explode multiplies rows AFTER the
+    // join — the corpus is scanned once for the stream and once
+    // (reduced map-side) for the plan (pin documents=2); no shuffle
+    // anywhere, the manifest inherits the scan's partitioning. A
+    // dataloader consumes (doc_id, replica) as its sample list;
+    // replica is in the key so shuffling the manifest never collides
+    // copies.
+    QuerySpec("d69_mix_execute", by("doc_id", "replica"),
+      Corpus.docsCte +
       s""", per AS (
          |  SELECT source, CAST(sum(len(ws)) AS BIGINT) AS n_tokens,
          |    (${Corpus.hash32Sql("'mixplan#' || source")} % 1000) + 1 AS w_raw
@@ -1449,6 +1398,12 @@ object Curation {
          |  FROM per CROSS JOIN tot)
          |SELECT d.doc_id, d.source, CAST(t.r AS BIGINT) AS replica, p.epochs
          |FROM docs d JOIN plan p USING (source), UNNEST(range(1, p.epochs + 1)) t(r)
-         |ORDER BY doc_id, replica""".stripMargin)
+         |ORDER BY doc_id, replica""".stripMargin) { (s, dir) =>
+      val plan = mixPlanFrame(s, dir).select("source", "epochs")
+      Corpus.docs(s, dir).select("doc_id", "source")
+        .join(broadcast(plan), Seq("source"))
+        .withColumn("replica", explode(expr("sequence(1, epochs)")))
+        .select("doc_id", "source", "replica", "epochs")
+    }
   )
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions._
 import graft.model.Corpus
+import graft.operators.QuerySpec.by
 
 /** §2.C d01–d05 — deduplication for large text corpora.
   *
@@ -22,7 +23,7 @@ import graft.model.Corpus
   *     compared with xor/bit_count, cheap enough to run on candidate
   *     streams.
   */
-object Dedup {
+object Dedup extends QueryModule {
 
   private val seedsSql = "(SELECT unnest(range(0, 16)) AS seed)"
 
@@ -206,8 +207,8 @@ object Dedup {
         min(col("nb")).as("nb"))
   }
 
-  /** LSH candidate pairs (a_id < b_id, n_shared_bands) — d04's output
-    * without the presentation sort, shared with d24's clustering.
+  /** LSH candidate pairs (a_id < b_id, n_shared_bands) — d04's output,
+    * shared with d24's clustering.
     * Same combination-explode shape as [[gramPairStats]]: one
     * groupBy(band, sig) over the persisted signatures replaces the
     * signature self-join (one exchange fewer, no join build). */
@@ -255,8 +256,7 @@ object Dedup {
         |)""".stripMargin
 
   /** Exact Jaccard near-dup pairs (a_id, b_id, inter, jaccard ≥ 0.5) —
-    * d02's output without the presentation sort, shared with the d34
-    * recall evaluation.
+    * d02's output, shared with the d34 recall evaluation.
     *
     * Pair generation rides [[gramPairStats]] (one scan, two
     * exchanges); the Jaccard is the one-shot divide of its exact
@@ -319,8 +319,7 @@ object Dedup {
       |  FROM docs WHERE len(ws) >= 8
       |)""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
+  val specs: Seq[QuerySpec] = Seq(
     // TEMPLATE-PREFIX clusters — boilerplate/template page detection
     // by shared document HEAD (the "same page skeleton, different
     // fill" shape crawled corpora are full of: listing pages, error
@@ -337,7 +336,14 @@ object Dedup {
     // is d01-skew-shaped (one hot key possible — the empty-ish
     // template); AQE skew handling is pinned for this family in
     // SkewSpec.
-    "d85_template_prefix" -> { (s, dir) =>
+    QuerySpec("d85_template_prefix", Seq(col("n_docs").desc, col("prefix")),
+      Corpus.docsCte + prefixKeysCte +
+      """SELECT prefix, count(1) AS n_docs,
+        |  count(DISTINCT source) AS n_sources,
+        |  count(DISTINCT lang) AS n_langs,
+        |  min(doc_id) AS keep_doc
+        |FROM pref GROUP BY prefix HAVING count(1) > 1
+        |ORDER BY n_docs DESC, prefix""".stripMargin) { (s, dir) =>
       prefixKeys(Corpus.docs(s, dir))
         .groupBy("prefix")
         .agg(count(lit(1)).as("n_docs"),
@@ -345,7 +351,6 @@ object Dedup {
           countDistinct(col("lang")).as("n_langs"),
           min(col("doc_id")).as("keep_doc"))
         .filter(col("n_docs") > 1)
-        .orderBy(col("n_docs").desc, col("prefix"))
     },
 
     // Dedup-yield THRESHOLD CURVE — the tuning sweep run before fixing
@@ -362,7 +367,25 @@ object Dedup {
     // exact integer counts, so the ≥t comparisons are bit-identical
     // cross-engine. This is what turns "0.8 feels right" into a
     // measured pairs/docs trade at each candidate cutoff.
-    "d71_dedup_curve" -> { (s, dir) =>
+    QuerySpec("d71_dedup_curve", by("t"),
+      Corpus.docsCte +
+      """, sizes AS (SELECT doc_id, count(1) AS n FROM grams GROUP BY 1),
+        |pj AS (
+        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+        |    CAST(count(1) AS DOUBLE)
+        |      / (any_value(sa.n) + any_value(sb.n) - count(1)) AS j
+        |  FROM grams a JOIN grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
+        |  JOIN sizes sa ON sa.doc_id = a.doc_id
+        |  JOIN sizes sb ON sb.doc_id = b.doc_id
+        |  GROUP BY a.doc_id, b.doc_id
+        |  HAVING CAST(count(1) AS DOUBLE)
+        |    / (any_value(sa.n) + any_value(sb.n) - count(1)) >= 0.5),
+        |th AS (SELECT unnest(CAST([0.5, 0.95, 0.98] AS DOUBLE[])) AS t),
+        |ex AS (SELECT th.t, pj.a_id, pj.b_id FROM pj JOIN th ON pj.j >= th.t),
+        |docstream AS (
+        |  SELECT t, unnest([a_id, b_id]) AS doc FROM ex)
+        |SELECT t, count(1) // 2 AS n_pairs, count(DISTINCT doc) AS n_docs
+        |FROM docstream GROUP BY t ORDER BY t""".stripMargin) { (s, dir) =>
       val p = jaccardPairs(s, dir)
         .select("a_id", "b_id", "jaccard")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -373,31 +396,47 @@ object Dedup {
         .groupBy("t")
         .agg(expr("count(1) div 2").as("n_pairs"),
           countDistinct(col("doc")).as("n_docs"))
-        .orderBy("t")
     },
 
     // Exact dedup: md5 over normalized text; min doc_id is the keeper.
-    "d01_dedup_exact" -> { (s, dir) =>
-      exactDedupOver(Corpus.docs(s, dir)).orderBy("content_hash")
+    QuerySpec("d01_dedup_exact", by("content_hash"),
+      Corpus.docsCte +
+      """SELECT md5(norm) AS content_hash, min(doc_id) AS keep_doc, count(1) AS n_docs
+        |FROM docs GROUP BY 1 ORDER BY content_hash""".stripMargin) { (s, dir) =>
+      exactDedupOver(Corpus.docs(s, dir))
     },
 
     // Word-3-gram Jaccard near-dup pairs (|∩|/|∪| ≥ 0.5).
-    "d02_dedup_ngram" -> { (s, dir) =>
+    QuerySpec("d02_dedup_ngram", by("a_id", "b_id"),
+      Corpus.docsCte +
+      """, sizes AS (SELECT doc_id, count(1) AS n FROM grams GROUP BY 1)
+        |SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(1) AS inter,
+        |  CAST(count(1) AS DOUBLE) / (any_value(sa.n) + any_value(sb.n) - count(1)) AS jaccard
+        |FROM grams a
+        |JOIN grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
+        |JOIN sizes sa ON sa.doc_id = a.doc_id
+        |JOIN sizes sb ON sb.doc_id = b.doc_id
+        |GROUP BY a.doc_id, b.doc_id
+        |HAVING CAST(count(1) AS DOUBLE) / (any_value(sa.n) + any_value(sb.n) - count(1)) >= 0.5
+        |ORDER BY a_id, b_id""".stripMargin) { (s, dir) =>
       jaccardPairs(s, dir)
         .select("a_id", "b_id", "inter", "jaccard")
-        .orderBy("a_id", "b_id")
     },
 
     // MinHash signatures (k=16, md5-derived hash family).
-    "d03_minhash" -> { (s, dir) =>
-      minhash(s, dir).orderBy("doc_id", "seed")
+    QuerySpec("d03_minhash", by("doc_id", "seed"),
+      Corpus.docsCte + ", " + minhashSql +
+      "\nSELECT doc_id, seed, minh FROM mh ORDER BY doc_id, seed") { (s, dir) =>
+      minhash(s, dir)
     },
 
     // LSH banding (4 bands × 4 rows): candidate pairs share ≥1 band.
     // Band signatures come straight off the wide per-doc signature row
     // (concat of 4 members) — no second shuffle to regroup by band.
-    "d04_minhash_lsh" -> { (s, dir) =>
-      lshPairs(s, dir).orderBy("a_id", "b_id")
+    QuerySpec("d04_minhash_lsh", by("a_id", "b_id"),
+      lshPairsCte +
+      "\nSELECT a_id, b_id, n_shared_bands FROM pairs ORDER BY a_id, b_id") { (s, dir) =>
+      lshPairs(s, dir)
     },
 
     // INCREMENTAL near-dup probe — the production shape of d04: a
@@ -412,7 +451,23 @@ object Dedup {
     // partner shares a band). At 100 TB: |shard| ≪ |corpus| makes
     // this the only affordable continuous-dedup shape — cost scales
     // with the shard, not the corpus².
-    "d76_incremental_neardup" -> { (s, dir) =>
+    QuerySpec("d76_incremental_neardup", by("new_id"),
+      bandSigsCte +
+      """, cand AS (
+        |  SELECT a.doc_id AS new_id, b.doc_id AS dup_of, count(1) AS nb
+        |  FROM sig a JOIN sig b ON a.band = b.band AND a.sig = b.sig
+        |  WHERE a.doc_id % 3 = 0 AND b.doc_id % 3 <> 0
+        |  GROUP BY 1, 2),
+        |st AS (
+        |  SELECT new_id, count(1) AS n_partners, max(nb) AS max_bands,
+        |         min(dup_of) AS first_dup
+        |  FROM cand GROUP BY 1),
+        |arrv AS (SELECT DISTINCT doc_id AS new_id FROM sig WHERE doc_id % 3 = 0)
+        |SELECT a.new_id, COALESCE(st.n_partners, 0) AS n_partners,
+        |  COALESCE(st.max_bands, 0) AS max_bands, st.first_dup,
+        |  COALESCE(st.n_partners, 0) > 0 AS suspect
+        |FROM arrv a LEFT JOIN st ON a.new_id = st.new_id
+        |ORDER BY a.new_id""".stripMargin) { (s, dir) =>
       val sig = bandSigsPersisted(s, dir)
       val idx = sig.filter(col("doc_id") % 3 =!= 0).toDF("dup_of", "band", "sig")
       val arr = sig.filter(col("doc_id") % 3 === 0).toDF("new_id", "band", "sig")
@@ -428,11 +483,28 @@ object Dedup {
           coalesce(col("max_bands"), lit(0L)).as("max_bands"),
           col("first_dup"),
           (coalesce(col("n_partners"), lit(0L)) > 0).as("suspect"))
-        .orderBy("new_id")
     },
 
     // 32-bit SimHash fingerprints + hamming-near pairs (≤ 2 bits apart).
-    "d05_simhash" -> { (s, dir) =>
+    QuerySpec("d05_simhash", by("a_id", "b_id"),
+      Corpus.docsCte +
+      s""", wd AS (SELECT DISTINCT doc_id, w FROM (SELECT doc_id, unnest(ws) AS w FROM docs) t),
+         |sgns AS (
+         |  SELECT doc_id, b,
+         |    sum(CASE WHEN (${Corpus.hash32Sql("w")} >> b) & 1 = 1 THEN 1 ELSE -1 END) AS sgn
+         |  FROM wd, UNNEST(range(0, 32)) t(b)
+         |  GROUP BY doc_id, b
+         |),
+         |fp AS (
+         |  SELECT doc_id,
+         |    CAST(sum(CASE WHEN sgn > 0 THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS fp
+         |  FROM sgns GROUP BY doc_id
+         |)
+         |SELECT a.doc_id AS a_id, b.doc_id AS b_id, a.fp AS fp_a, b.fp AS fp_b,
+         |  bit_count(xor(a.fp, b.fp)) AS hamming
+         |FROM fp a JOIN fp b ON a.doc_id < b.doc_id
+         |WHERE bit_count(xor(a.fp, b.fp)) <= 2
+         |ORDER BY a_id, b_id""".stripMargin) { (s, dir) =>
       // Fingerprints are a pure per-row projection via the SimHash32
       // kernel (one pass over the row's distinct words) — the
       // explode→distinct→32-sign-sums formulation the oracle mirrors
@@ -464,7 +536,6 @@ object Dedup {
         .filter(col("hamming") <= 2)
         .select("a_id", "b_id", "fp_a", "fp_b", "hamming")
         .distinct() // a pair may collide in 2-3 bands
-        .orderBy("a_id", "b_id")
     },
 
     // CONTAINMENT near-dup pairs: |A∩B| / min(|A|,|B|) — the asymmetric
@@ -490,7 +561,33 @@ object Dedup {
     // point being evaluated). n_match/16 is a power-of-two divide —
     // exact in binary, so every float here is bit-identical
     // cross-engine.
-    "d104_containment_est" -> { (s, dir) =>
+    QuerySpec("d104_containment_est", by("a_id", "b_id"),
+      lshPairsCte +
+      """, cand AS (SELECT a_id, b_id FROM pairs),
+        |mm AS (
+        |  SELECT c.a_id, c.b_id,
+        |    CAST(count(CASE WHEN ma.minh = mb.minh THEN 1 END) AS BIGINT) AS n_match
+        |  FROM cand c
+        |  JOIN mh ma ON ma.doc_id = c.a_id
+        |  JOIN mh mb ON mb.doc_id = c.b_id AND mb.seed = ma.seed
+        |  GROUP BY 1, 2),
+        |sizes2 AS (SELECT doc_id, count(1) AS n FROM grams GROUP BY 1),
+        |ints AS (
+        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id, CAST(count(1) AS BIGINT) AS inter
+        |  FROM grams a JOIN grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
+        |  JOIN cand c ON c.a_id = a.doc_id AND c.b_id = b.doc_id
+        |  GROUP BY 1, 2)
+        |SELECT m.a_id, m.b_id, m.n_match,
+        |  CAST(m.n_match AS DOUBLE) / 16.0 AS j_est,
+        |  (CAST(m.n_match AS DOUBLE) / 16.0) * CAST(sa.n + sb.n AS DOUBLE)
+        |    / ((1.0 + CAST(m.n_match AS DOUBLE) / 16.0) * CAST(least(sa.n, sb.n) AS DOUBLE)) AS c_est,
+        |  COALESCE(i.inter, 0) AS inter,
+        |  CAST(COALESCE(i.inter, 0) AS DOUBLE) / CAST(least(sa.n, sb.n) AS DOUBLE) AS c_exact
+        |FROM mm m
+        |LEFT JOIN ints i ON i.a_id = m.a_id AND i.b_id = m.b_id
+        |JOIN sizes2 sa ON sa.doc_id = m.a_id
+        |JOIN sizes2 sb ON sb.doc_id = m.b_id
+        |ORDER BY m.a_id, m.b_id""".stripMargin) { (s, dir) =>
       // ONE wide-signature build off the CACHED gram stream (shared
       // with the exact-intersection core below), persisted because it
       // feeds the band-sig candidate generation AND both endpoint
@@ -548,7 +645,6 @@ object Dedup {
         .withColumn("c_exact",
           col("inter").cast("double") / least(col("na"), col("nb")).cast("double"))
         .select("a_id", "b_id", "n_match", "j_est", "c_est", "inter", "c_exact")
-        .orderBy("a_id", "b_id")
     },
 
     // DUPLICATION PROVENANCE — which sources copy from which: d02's
@@ -562,7 +658,17 @@ object Dedup {
     // matrix aggregate are bounded by it; the (doc_id, source) lookup
     // is ONE pruned corpus scan persisted for its two join sides
     // (pin documents=4: d02's three-pass gram pipeline + this one).
-    "d103_dup_provenance" -> { (s, dir) =>
+    QuerySpec("d103_dup_provenance", by("source_a", "source_b"),
+      Corpus.docsCte + ", " + exactPairsCte +
+      """SELECT source_a, source_b, count(1) AS n_pairs,
+        |  source_a <> source_b AS cross_source
+        |FROM (
+        |  SELECT least(da.source, db.source) AS source_a,
+        |    greatest(da.source, db.source) AS source_b
+        |  FROM exact e
+        |  JOIN docs da ON da.doc_id = e.a_id
+        |  JOIN docs db ON db.doc_id = e.b_id) t
+        |GROUP BY 1, 2 ORDER BY source_a, source_b""".stripMargin) { (s, dir) =>
       val pairs = jaccardPairs(s, dir).select("a_id", "b_id")
       val src = Corpus.docs(s, dir).select(col("doc_id"), col("source"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -574,10 +680,21 @@ object Dedup {
         .groupBy("source_a", "source_b")
         .agg(count(lit(1)).as("n_pairs"))
         .withColumn("cross_source", col("source_a") =!= col("source_b"))
-        .orderBy("source_a", "source_b")
     },
 
-    "d30_containment" -> { (s, dir) =>
+    QuerySpec("d30_containment", by("a_id", "b_id"),
+      Corpus.docsCte +
+      """, sizes AS (SELECT doc_id, count(1) AS n FROM grams GROUP BY 1)
+        |SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(1) AS inter,
+        |  any_value(sa.n) AS na, any_value(sb.n) AS nb,
+        |  CAST(count(1) AS DOUBLE) / least(any_value(sa.n), any_value(sb.n)) AS containment
+        |FROM grams a
+        |JOIN grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
+        |JOIN sizes sa ON sa.doc_id = a.doc_id
+        |JOIN sizes sb ON sb.doc_id = b.doc_id
+        |GROUP BY a.doc_id, b.doc_id
+        |HAVING CAST(count(1) AS DOUBLE) / least(any_value(sa.n), any_value(sb.n)) >= 0.8
+        |ORDER BY a_id, b_id""".stripMargin) { (s, dir) =>
       // same one-scan/two-exchange pair core as d02 ([[gramPairStats]]);
       // only the metric differs (min-denominator instead of union)
       gramPairStats(s, dir)
@@ -585,7 +702,6 @@ object Dedup {
           col("inter").cast("double") / least(col("na"), col("nb")))
         .filter(col("containment") >= 0.8)
         .select("a_id", "b_id", "inter", "na", "nb", "containment")
-        .orderBy("a_id", "b_id")
     },
 
     // Sketch-quality evaluation — measure, don't guess: what fraction
@@ -596,7 +712,16 @@ object Dedup {
     // the sketch path at full corpus scale. Both inputs are the shared
     // bucketed plans (exact pairs df=1-pruned, candidates band-joined);
     // the comparison itself is one tiny pair-key join.
-    "d34_lsh_recall" -> { (s, dir) =>
+    QuerySpec("d34_lsh_recall", Nil,
+      lshPairsCte + ", " + exactPairsCte +
+      """SELECT
+        |  (SELECT count(1) FROM exact) AS n_exact,
+        |  (SELECT count(1) FROM pairs) AS n_candidates,
+        |  (SELECT count(1) FROM exact e JOIN pairs p
+        |     ON e.a_id = p.a_id AND e.b_id = p.b_id) AS n_hit,
+        |  CAST((SELECT count(1) FROM exact e JOIN pairs p
+        |     ON e.a_id = p.a_id AND e.b_id = p.b_id) AS DOUBLE)
+        |    / greatest((SELECT count(1) FROM exact), 1) AS recall""".stripMargin) { (s, dir) =>
       val exact = jaccardPairs(s, dir).select("a_id", "b_id")
       // candidates from the gram stream the exact side already
       // persists (bit-identical signatures, one corpus scan for the
@@ -626,7 +751,25 @@ object Dedup {
     // "which b do I need at my recall target" table that sizes the
     // production d04 config. persist on the pair rollup: the hits
     // join and the cost aggregate both consume it (d72's convention).
-    "d105_lsh_band_curve" -> { (s, dir) =>
+    QuerySpec("d105_lsh_band_curve", by("n_bands"),
+      bandSigsCte + ", " + exactPairsCte +
+      """, fb AS (
+        |  SELECT x.doc_id AS a_id, y.doc_id AS b_id, min(x.band) AS first_band
+        |  FROM sig x JOIN sig y
+        |    ON x.band = y.band AND x.sig = y.sig AND x.doc_id < y.doc_id
+        |  GROUP BY 1, 2)
+        |SELECT CAST(nb AS INTEGER) AS n_bands,
+        |  (SELECT count(1) FROM exact) AS n_exact,
+        |  (SELECT count(1) FROM fb WHERE first_band < nb) AS n_candidates,
+        |  (SELECT count(1) FROM exact e JOIN fb f
+        |     ON e.a_id = f.a_id AND e.b_id = f.b_id
+        |   WHERE f.first_band < nb) AS n_hit,
+        |  CAST((SELECT count(1) FROM exact e JOIN fb f
+        |     ON e.a_id = f.a_id AND e.b_id = f.b_id
+        |   WHERE f.first_band < nb) AS DOUBLE)
+        |    / greatest((SELECT count(1) FROM exact), 1) AS recall
+        |FROM (SELECT unnest(range(1, 5)) AS nb) t
+        |ORDER BY n_bands""".stripMargin) { (s, dir) =>
       // signatures from the gram stream the exact side already
       // persists (bit-identical, one corpus scan for the whole query)
       val sig = bandSigsFromGrams(s, dir)
@@ -654,7 +797,6 @@ object Dedup {
         .withColumn("recall",
           col("n_hit").cast("double") / greatest(col("n_exact"), lit(1L)))
         .select("n_bands", "n_exact", "n_candidates", "n_hit", "recall")
-        .orderBy("n_bands")
     },
 
     // SAMPLE-MEASUREMENT BIAS curve — the methodology check behind
@@ -672,7 +814,39 @@ object Dedup {
     // d105 monotone-gate collapse); the bucket lookup is one pruned
     // corpus scan PERSISTED for its two join sides (d103's
     // convention; pin documents=2 with the cached signatures).
-    "d110_sample_dedup_bias" -> { (s, dir) =>
+    QuerySpec("d110_sample_dedup_bias", by("rate"),
+      lshPairsCte +
+      """, bk AS (
+        |  SELECT doc_id,
+        |    CAST(concat('0x', substr(md5(concat('smp2', CAST(doc_id AS VARCHAR))), 1, 2)) AS INT) AS b
+        |  FROM documents),
+        |pb AS (
+        |  SELECT greatest(ba.b, bb.b) AS bmax
+        |  FROM pairs p JOIN bk ba ON ba.doc_id = p.a_id
+        |               JOIN bk bb ON bb.doc_id = p.b_id),
+        |pa AS (
+        |  SELECT count(CASE WHEN bmax < 64 THEN 1 END) AS p64,
+        |    count(CASE WHEN bmax < 128 THEN 1 END) AS p128,
+        |    count(CASE WHEN bmax < 192 THEN 1 END) AS p192,
+        |    count(1) AS p256
+        |  FROM pb),
+        |da AS (
+        |  SELECT count(CASE WHEN b < 64 THEN 1 END) AS d64,
+        |    count(CASE WHEN b < 128 THEN 1 END) AS d128,
+        |    count(CASE WHEN b < 192 THEN 1 END) AS d192,
+        |    count(1) AS d256
+        |  FROM bk),
+        |rows4 AS (
+        |  SELECT CAST(0.25 AS DOUBLE) AS rate, d64 AS n_docs, p64 AS n_pairs, d256, p256 FROM pa, da
+        |  UNION ALL SELECT CAST(0.5 AS DOUBLE), d128, p128, d256, p256 FROM pa, da
+        |  UNION ALL SELECT CAST(0.75 AS DOUBLE), d192, p192, d256, p256 FROM pa, da
+        |  UNION ALL SELECT CAST(1.0 AS DOUBLE), d256, p256, d256, p256 FROM pa, da)
+        |SELECT rate, n_docs, n_pairs,
+        |  CAST(n_docs AS DOUBLE) / CAST(d256 AS DOUBLE) AS doc_frac,
+        |  CAST(n_pairs AS DOUBLE) / CAST(n_docs AS DOUBLE) AS dup_rate,
+        |  (CAST(n_pairs AS DOUBLE) / CAST(n_docs AS DOUBLE))
+        |    / (CAST(p256 AS DOUBLE) / CAST(d256 AS DOUBLE)) AS bias_vs_full
+        |FROM rows4 ORDER BY rate""".stripMargin) { (s, dir) =>
       val bkExpr =
         "CAST(conv(substr(md5(concat('smp2', CAST(doc_id AS STRING))), 1, 2), 16, 10) AS INT)"
       val bk = graft.sources.Tables.documents(s, dir)
@@ -704,7 +878,6 @@ object Dedup {
           ((col("n_pairs").cast("double") / col("n_docs").cast("double"))
             / (col("p256").cast("double") / col("d256").cast("double")))
             .as("bias_vs_full"))
-        .orderBy("rate")
     },
 
     // Duplicated-SPAN detection (the tile analogue of suffix-array
@@ -720,7 +893,16 @@ object Dedup {
     // tile hash, and the join back probes the same hash-partitioned
     // key — co-partitioned with the agg output, no extra exchange. No
     // broadcast hint: the tile vocabulary grows with the corpus.
-    "d36_tile_dedup" -> { (s, dir) =>
+    QuerySpec("d36_tile_dedup", by("doc_id"),
+      Corpus.docsCte + Corpus.tilesCte +
+      """, dfreq AS (SELECT tile, count(1) AS df FROM tiles GROUP BY tile)
+        |SELECT t.doc_id, count(1) AS n_tiles,
+        |  CAST(sum(CASE WHEN d.df >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_tiles,
+        |  CAST(sum(CASE WHEN d.df >= 2 THEN 1 ELSE 0 END) AS DOUBLE) / count(1) AS dup_frac,
+        |  CAST(sum(CASE WHEN d.df >= 2 THEN 1 ELSE 0 END) AS DOUBLE) / count(1) >= 0.5 AS flagged
+        |FROM tiles t JOIN dfreq d ON t.tile = d.tile
+        |GROUP BY t.doc_id
+        |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val tiles = Corpus.tiles(graft.sources.Tables.documents(s, dir))
         .select("doc_id", "tile")
       val dfreq = tiles.groupBy("tile").agg(count(lit(1)).as("df"))
@@ -731,7 +913,6 @@ object Dedup {
         .withColumn("dup_frac",
           col("n_dup_tiles").cast("double") / col("n_tiles"))
         .withColumn("flagged", col("dup_frac") >= 0.5)
-        .orderBy("doc_id")
     },
 
     // Duplicated-span EXTENTS (the positional completion of d36's
@@ -750,7 +931,29 @@ object Dedup {
     // pass, no df join); the flagged stream persists once and feeds
     // the per-doc rollup AND the island windows (both repartition by
     // doc_id, co-partitioned with each other).
-    "d90_dup_spans" -> { (s, dir) =>
+    QuerySpec("d90_dup_spans", by("doc_id"),
+      Corpus.docsCte + Corpus.posTilesCte +
+      """, flag AS (
+        |  SELECT doc_id, i,
+        |    min(doc_id) OVER (PARTITION BY tile)
+        |      <> max(doc_id) OVER (PARTITION BY tile) AS is_dup
+        |  FROM ptiles),
+        |agg AS (
+        |  SELECT doc_id, count(1) AS n_tiles,
+        |    CAST(sum(CASE WHEN is_dup THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_tiles
+        |  FROM flag GROUP BY doc_id),
+        |druns AS (
+        |  SELECT doc_id, count(1) AS run_len
+        |  FROM (SELECT doc_id, i,
+        |          i - ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY i) AS grp
+        |        FROM flag WHERE is_dup) r
+        |  GROUP BY doc_id, grp),
+        |best AS (SELECT doc_id, max(run_len) AS max_dup_run FROM druns GROUP BY doc_id)
+        |SELECT a.doc_id, a.n_tiles, a.n_dup_tiles,
+        |  COALESCE(b.max_dup_run, 0) AS max_dup_run,
+        |  COALESCE(b.max_dup_run, 0) >= 2 AS has_dup_span
+        |FROM agg a LEFT JOIN best b USING (doc_id)
+        |ORDER BY a.doc_id""".stripMargin) { (s, dir) =>
       val byTile = org.apache.spark.sql.expressions.Window.partitionBy("tile")
       val flagged = graft.model.Corpus
         .posTiles(graft.sources.Tables.documents(s, dir))
@@ -769,7 +972,6 @@ object Dedup {
         .na.fill(0L, Seq("max_dup_run"))
         .select(col("doc_id"), col("n_tiles"), col("n_dup_tiles"),
           col("max_dup_run"), (col("max_dup_run") >= 2).as("has_dup_span"))
-        .orderBy("doc_id")
     },
 
     // OFFSET-ROBUST duplicated-span detection — closes the one gap in
@@ -792,296 +994,8 @@ object Dedup {
     // selection window BEFORE the fingerprint exchange; the flagged
     // stream persists once and feeds the rollup AND the island windows
     // (both keyed on doc_id, co-partitioned).
-    "d111_winnow_spans" -> { (s, dir) =>
-      val byTile = org.apache.spark.sql.expressions.Window.partitionBy("tile")
-      val bySeq = org.apache.spark.sql.expressions.Window
-        .partitionBy("doc_id").orderBy("pos")
-      val flagged = graft.model.Corpus
-        .winnowTiles(graft.sources.Tables.documents(s, dir))
-        .withColumn("is_dup",
-          min(col("doc_id")).over(byTile) =!= max(col("doc_id")).over(byTile))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val agg = flagged.groupBy("doc_id")
-        .agg(count(lit(1)).as("n_sel"),
-          sum(when(col("is_dup"), 1L).otherwise(0L)).as("n_dup_sel"))
-      val runs = flagged
-        .withColumn("seq", row_number().over(bySeq))
-        .filter(col("is_dup"))
-        .withColumn("grp", col("seq") - row_number().over(bySeq))
-        .groupBy("doc_id", "grp").agg(count(lit(1)).as("run_len"))
-        .groupBy("doc_id").agg(max(col("run_len")).as("max_dup_run"))
-      agg.join(runs, Seq("doc_id"), "left")
-        .na.fill(0L, Seq("max_dup_run"))
-        .select(col("doc_id"), col("n_sel"), col("n_dup_sel"),
-          col("max_dup_run"), (col("max_dup_run") >= 2).as("has_dup_span"))
-        .orderBy("doc_id")
-    },
-
-    // Text↔embedding dedup CONSENSUS — do the two independent near-dup
-    // signals (d04's MinHash-LSH over shingles, d17's cosine-LSH over
-    // embeddings) agree? A production pipeline runs this before
-    // trusting either alone: high agreement validates both, divergence
-    // localizes which modality's threshold drifted. Text pairs are
-    // restricted to ids that HAVE embeddings (at full scale the
-    // embedded subset is a projection of the corpus), then the
-    // comparison is one pair-key join over two already-bucketed pair
-    // sets — nothing quadratic is introduced by the comparison itself.
-    "d41_dedup_consensus" -> { (s, dir) =>
-      val vecIds = graft.sources.Tables.embeddings(s, dir).select(col("vec_id"))
-      val tp = lshPairs(s, dir).select("a_id", "b_id")
-        .join(vecIds.toDF("a_id"), Seq("a_id"), "left_semi")
-        .join(vecIds.toDF("b_id"), Seq("b_id"), "left_semi")
-        .withColumn("t", lit(1))
-      val ep = Similarity.embedDupPairs(s, dir).select("a_id", "b_id")
-        .withColumn("e", lit(1))
-      // ONE full-outer pass computes all three counts — separate
-      // count branches cross-joined together would re-evaluate the
-      // expensive LSH subtrees once per branch (Spark has no
-      // cross-branch subtree sharing)
-      tp.join(ep, Seq("a_id", "b_id"), "full_outer")
-        .agg(count(col("t")).as("n_text_pairs"),
-          count(col("e")).as("n_embed_pairs"),
-          count(when(col("t").isNotNull && col("e").isNotNull, 1)).as("n_both"))
-        .withColumn("agreement",
-          col("n_both").cast("double")
-            / greatest(col("n_text_pairs") + col("n_embed_pairs") - col("n_both"), lit(1L)))
-        .select("n_text_pairs", "n_embed_pairs", "n_both", "agreement")
-    }
-  )
-
-  val oracle: Map[String, String] = Map(
-    "d85_template_prefix" -> (Corpus.docsCte + prefixKeysCte +
-      """SELECT prefix, count(1) AS n_docs,
-        |  count(DISTINCT source) AS n_sources,
-        |  count(DISTINCT lang) AS n_langs,
-        |  min(doc_id) AS keep_doc
-        |FROM pref GROUP BY prefix HAVING count(1) > 1
-        |ORDER BY n_docs DESC, prefix""".stripMargin),
-
-    "d71_dedup_curve" -> (Corpus.docsCte +
-      """, sizes AS (SELECT doc_id, count(1) AS n FROM grams GROUP BY 1),
-        |pj AS (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |    CAST(count(1) AS DOUBLE)
-        |      / (any_value(sa.n) + any_value(sb.n) - count(1)) AS j
-        |  FROM grams a JOIN grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        |  JOIN sizes sa ON sa.doc_id = a.doc_id
-        |  JOIN sizes sb ON sb.doc_id = b.doc_id
-        |  GROUP BY a.doc_id, b.doc_id
-        |  HAVING CAST(count(1) AS DOUBLE)
-        |    / (any_value(sa.n) + any_value(sb.n) - count(1)) >= 0.5),
-        |th AS (SELECT unnest(CAST([0.5, 0.95, 0.98] AS DOUBLE[])) AS t),
-        |ex AS (SELECT th.t, pj.a_id, pj.b_id FROM pj JOIN th ON pj.j >= th.t),
-        |docstream AS (
-        |  SELECT t, unnest([a_id, b_id]) AS doc FROM ex)
-        |SELECT t, count(1) // 2 AS n_pairs, count(DISTINCT doc) AS n_docs
-        |FROM docstream GROUP BY t ORDER BY t""".stripMargin),
-
-    "d01_dedup_exact" -> (Corpus.docsCte +
-      """SELECT md5(norm) AS content_hash, min(doc_id) AS keep_doc, count(1) AS n_docs
-        |FROM docs GROUP BY 1 ORDER BY content_hash""".stripMargin),
-
-    "d02_dedup_ngram" -> (Corpus.docsCte +
-      """, sizes AS (SELECT doc_id, count(1) AS n FROM grams GROUP BY 1)
-        |SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(1) AS inter,
-        |  CAST(count(1) AS DOUBLE) / (any_value(sa.n) + any_value(sb.n) - count(1)) AS jaccard
-        |FROM grams a
-        |JOIN grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        |JOIN sizes sa ON sa.doc_id = a.doc_id
-        |JOIN sizes sb ON sb.doc_id = b.doc_id
-        |GROUP BY a.doc_id, b.doc_id
-        |HAVING CAST(count(1) AS DOUBLE) / (any_value(sa.n) + any_value(sb.n) - count(1)) >= 0.5
-        |ORDER BY a_id, b_id""".stripMargin),
-
-    "d03_minhash" -> (Corpus.docsCte + ", " + minhashSql +
-      "\nSELECT doc_id, seed, minh FROM mh ORDER BY doc_id, seed"),
-
-    "d04_minhash_lsh" -> (lshPairsCte +
-      "\nSELECT a_id, b_id, n_shared_bands FROM pairs ORDER BY a_id, b_id"),
-
-    "d76_incremental_neardup" -> (bandSigsCte +
-      """, cand AS (
-        |  SELECT a.doc_id AS new_id, b.doc_id AS dup_of, count(1) AS nb
-        |  FROM sig a JOIN sig b ON a.band = b.band AND a.sig = b.sig
-        |  WHERE a.doc_id % 3 = 0 AND b.doc_id % 3 <> 0
-        |  GROUP BY 1, 2),
-        |st AS (
-        |  SELECT new_id, count(1) AS n_partners, max(nb) AS max_bands,
-        |         min(dup_of) AS first_dup
-        |  FROM cand GROUP BY 1),
-        |arrv AS (SELECT DISTINCT doc_id AS new_id FROM sig WHERE doc_id % 3 = 0)
-        |SELECT a.new_id, COALESCE(st.n_partners, 0) AS n_partners,
-        |  COALESCE(st.max_bands, 0) AS max_bands, st.first_dup,
-        |  COALESCE(st.n_partners, 0) > 0 AS suspect
-        |FROM arrv a LEFT JOIN st ON a.new_id = st.new_id
-        |ORDER BY a.new_id""".stripMargin),
-
-    "d05_simhash" -> (Corpus.docsCte +
-      s""", wd AS (SELECT DISTINCT doc_id, w FROM (SELECT doc_id, unnest(ws) AS w FROM docs) t),
-         |sgns AS (
-         |  SELECT doc_id, b,
-         |    sum(CASE WHEN (${Corpus.hash32Sql("w")} >> b) & 1 = 1 THEN 1 ELSE -1 END) AS sgn
-         |  FROM wd, UNNEST(range(0, 32)) t(b)
-         |  GROUP BY doc_id, b
-         |),
-         |fp AS (
-         |  SELECT doc_id,
-         |    CAST(sum(CASE WHEN sgn > 0 THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS fp
-         |  FROM sgns GROUP BY doc_id
-         |)
-         |SELECT a.doc_id AS a_id, b.doc_id AS b_id, a.fp AS fp_a, b.fp AS fp_b,
-         |  bit_count(xor(a.fp, b.fp)) AS hamming
-         |FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.fp, b.fp)) <= 2
-         |ORDER BY a_id, b_id""".stripMargin),
-
-    "d30_containment" -> (Corpus.docsCte +
-      """, sizes AS (SELECT doc_id, count(1) AS n FROM grams GROUP BY 1)
-        |SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(1) AS inter,
-        |  any_value(sa.n) AS na, any_value(sb.n) AS nb,
-        |  CAST(count(1) AS DOUBLE) / least(any_value(sa.n), any_value(sb.n)) AS containment
-        |FROM grams a
-        |JOIN grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        |JOIN sizes sa ON sa.doc_id = a.doc_id
-        |JOIN sizes sb ON sb.doc_id = b.doc_id
-        |GROUP BY a.doc_id, b.doc_id
-        |HAVING CAST(count(1) AS DOUBLE) / least(any_value(sa.n), any_value(sb.n)) >= 0.8
-        |ORDER BY a_id, b_id""".stripMargin),
-
-    "d104_containment_est" -> (lshPairsCte +
-      """, cand AS (SELECT a_id, b_id FROM pairs),
-        |mm AS (
-        |  SELECT c.a_id, c.b_id,
-        |    CAST(count(CASE WHEN ma.minh = mb.minh THEN 1 END) AS BIGINT) AS n_match
-        |  FROM cand c
-        |  JOIN mh ma ON ma.doc_id = c.a_id
-        |  JOIN mh mb ON mb.doc_id = c.b_id AND mb.seed = ma.seed
-        |  GROUP BY 1, 2),
-        |sizes2 AS (SELECT doc_id, count(1) AS n FROM grams GROUP BY 1),
-        |ints AS (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id, CAST(count(1) AS BIGINT) AS inter
-        |  FROM grams a JOIN grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        |  JOIN cand c ON c.a_id = a.doc_id AND c.b_id = b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT m.a_id, m.b_id, m.n_match,
-        |  CAST(m.n_match AS DOUBLE) / 16.0 AS j_est,
-        |  (CAST(m.n_match AS DOUBLE) / 16.0) * CAST(sa.n + sb.n AS DOUBLE)
-        |    / ((1.0 + CAST(m.n_match AS DOUBLE) / 16.0) * CAST(least(sa.n, sb.n) AS DOUBLE)) AS c_est,
-        |  COALESCE(i.inter, 0) AS inter,
-        |  CAST(COALESCE(i.inter, 0) AS DOUBLE) / CAST(least(sa.n, sb.n) AS DOUBLE) AS c_exact
-        |FROM mm m
-        |LEFT JOIN ints i ON i.a_id = m.a_id AND i.b_id = m.b_id
-        |JOIN sizes2 sa ON sa.doc_id = m.a_id
-        |JOIN sizes2 sb ON sb.doc_id = m.b_id
-        |ORDER BY m.a_id, m.b_id""".stripMargin),
-
-    "d103_dup_provenance" -> (Corpus.docsCte + ", " + exactPairsCte +
-      """SELECT source_a, source_b, count(1) AS n_pairs,
-        |  source_a <> source_b AS cross_source
-        |FROM (
-        |  SELECT least(da.source, db.source) AS source_a,
-        |    greatest(da.source, db.source) AS source_b
-        |  FROM exact e
-        |  JOIN docs da ON da.doc_id = e.a_id
-        |  JOIN docs db ON db.doc_id = e.b_id) t
-        |GROUP BY 1, 2 ORDER BY source_a, source_b""".stripMargin),
-
-    "d34_lsh_recall" -> (lshPairsCte + ", " + exactPairsCte +
-      """SELECT
-        |  (SELECT count(1) FROM exact) AS n_exact,
-        |  (SELECT count(1) FROM pairs) AS n_candidates,
-        |  (SELECT count(1) FROM exact e JOIN pairs p
-        |     ON e.a_id = p.a_id AND e.b_id = p.b_id) AS n_hit,
-        |  CAST((SELECT count(1) FROM exact e JOIN pairs p
-        |     ON e.a_id = p.a_id AND e.b_id = p.b_id) AS DOUBLE)
-        |    / greatest((SELECT count(1) FROM exact), 1) AS recall""".stripMargin),
-
-    "d105_lsh_band_curve" -> (bandSigsCte + ", " + exactPairsCte +
-      """, fb AS (
-        |  SELECT x.doc_id AS a_id, y.doc_id AS b_id, min(x.band) AS first_band
-        |  FROM sig x JOIN sig y
-        |    ON x.band = y.band AND x.sig = y.sig AND x.doc_id < y.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT CAST(nb AS INTEGER) AS n_bands,
-        |  (SELECT count(1) FROM exact) AS n_exact,
-        |  (SELECT count(1) FROM fb WHERE first_band < nb) AS n_candidates,
-        |  (SELECT count(1) FROM exact e JOIN fb f
-        |     ON e.a_id = f.a_id AND e.b_id = f.b_id
-        |   WHERE f.first_band < nb) AS n_hit,
-        |  CAST((SELECT count(1) FROM exact e JOIN fb f
-        |     ON e.a_id = f.a_id AND e.b_id = f.b_id
-        |   WHERE f.first_band < nb) AS DOUBLE)
-        |    / greatest((SELECT count(1) FROM exact), 1) AS recall
-        |FROM (SELECT unnest(range(1, 5)) AS nb) t
-        |ORDER BY n_bands""".stripMargin),
-
-    "d110_sample_dedup_bias" -> (lshPairsCte +
-      """, bk AS (
-        |  SELECT doc_id,
-        |    CAST(concat('0x', substr(md5(concat('smp2', CAST(doc_id AS VARCHAR))), 1, 2)) AS INT) AS b
-        |  FROM documents),
-        |pb AS (
-        |  SELECT greatest(ba.b, bb.b) AS bmax
-        |  FROM pairs p JOIN bk ba ON ba.doc_id = p.a_id
-        |               JOIN bk bb ON bb.doc_id = p.b_id),
-        |pa AS (
-        |  SELECT count(CASE WHEN bmax < 64 THEN 1 END) AS p64,
-        |    count(CASE WHEN bmax < 128 THEN 1 END) AS p128,
-        |    count(CASE WHEN bmax < 192 THEN 1 END) AS p192,
-        |    count(1) AS p256
-        |  FROM pb),
-        |da AS (
-        |  SELECT count(CASE WHEN b < 64 THEN 1 END) AS d64,
-        |    count(CASE WHEN b < 128 THEN 1 END) AS d128,
-        |    count(CASE WHEN b < 192 THEN 1 END) AS d192,
-        |    count(1) AS d256
-        |  FROM bk),
-        |rows4 AS (
-        |  SELECT CAST(0.25 AS DOUBLE) AS rate, d64 AS n_docs, p64 AS n_pairs, d256, p256 FROM pa, da
-        |  UNION ALL SELECT CAST(0.5 AS DOUBLE), d128, p128, d256, p256 FROM pa, da
-        |  UNION ALL SELECT CAST(0.75 AS DOUBLE), d192, p192, d256, p256 FROM pa, da
-        |  UNION ALL SELECT CAST(1.0 AS DOUBLE), d256, p256, d256, p256 FROM pa, da)
-        |SELECT rate, n_docs, n_pairs,
-        |  CAST(n_docs AS DOUBLE) / CAST(d256 AS DOUBLE) AS doc_frac,
-        |  CAST(n_pairs AS DOUBLE) / CAST(n_docs AS DOUBLE) AS dup_rate,
-        |  (CAST(n_pairs AS DOUBLE) / CAST(n_docs AS DOUBLE))
-        |    / (CAST(p256 AS DOUBLE) / CAST(d256 AS DOUBLE)) AS bias_vs_full
-        |FROM rows4 ORDER BY rate""".stripMargin),
-
-    "d36_tile_dedup" -> (Corpus.docsCte + Corpus.tilesCte +
-      """, dfreq AS (SELECT tile, count(1) AS df FROM tiles GROUP BY tile)
-        |SELECT t.doc_id, count(1) AS n_tiles,
-        |  CAST(sum(CASE WHEN d.df >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_tiles,
-        |  CAST(sum(CASE WHEN d.df >= 2 THEN 1 ELSE 0 END) AS DOUBLE) / count(1) AS dup_frac,
-        |  CAST(sum(CASE WHEN d.df >= 2 THEN 1 ELSE 0 END) AS DOUBLE) / count(1) >= 0.5 AS flagged
-        |FROM tiles t JOIN dfreq d ON t.tile = d.tile
-        |GROUP BY t.doc_id
-        |ORDER BY doc_id""".stripMargin),
-
-    "d90_dup_spans" -> (Corpus.docsCte + Corpus.posTilesCte +
-      """, flag AS (
-        |  SELECT doc_id, i,
-        |    min(doc_id) OVER (PARTITION BY tile)
-        |      <> max(doc_id) OVER (PARTITION BY tile) AS is_dup
-        |  FROM ptiles),
-        |agg AS (
-        |  SELECT doc_id, count(1) AS n_tiles,
-        |    CAST(sum(CASE WHEN is_dup THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_tiles
-        |  FROM flag GROUP BY doc_id),
-        |druns AS (
-        |  SELECT doc_id, count(1) AS run_len
-        |  FROM (SELECT doc_id, i,
-        |          i - ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY i) AS grp
-        |        FROM flag WHERE is_dup) r
-        |  GROUP BY doc_id, grp),
-        |best AS (SELECT doc_id, max(run_len) AS max_dup_run FROM druns GROUP BY doc_id)
-        |SELECT a.doc_id, a.n_tiles, a.n_dup_tiles,
-        |  COALESCE(b.max_dup_run, 0) AS max_dup_run,
-        |  COALESCE(b.max_dup_run, 0) >= 2 AS has_dup_span
-        |FROM agg a LEFT JOIN best b USING (doc_id)
-        |ORDER BY a.doc_id""".stripMargin),
-
-    "d111_winnow_spans" -> (Corpus.docsCte + Corpus.winnowTilesCte +
+    QuerySpec("d111_winnow_spans", by("doc_id"),
+      Corpus.docsCte + Corpus.winnowTilesCte +
       """, flag AS (
         |  SELECT doc_id, pos,
         |    min(doc_id) OVER (PARTITION BY tile)
@@ -1106,9 +1020,41 @@ object Dedup {
         |  COALESCE(b.max_dup_run, 0) AS max_dup_run,
         |  COALESCE(b.max_dup_run, 0) >= 2 AS has_dup_span
         |FROM agg a LEFT JOIN best b USING (doc_id)
-        |ORDER BY a.doc_id""".stripMargin),
+        |ORDER BY a.doc_id""".stripMargin) { (s, dir) =>
+      val byTile = org.apache.spark.sql.expressions.Window.partitionBy("tile")
+      val bySeq = org.apache.spark.sql.expressions.Window
+        .partitionBy("doc_id").orderBy("pos")
+      val flagged = graft.model.Corpus
+        .winnowTiles(graft.sources.Tables.documents(s, dir))
+        .withColumn("is_dup",
+          min(col("doc_id")).over(byTile) =!= max(col("doc_id")).over(byTile))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val agg = flagged.groupBy("doc_id")
+        .agg(count(lit(1)).as("n_sel"),
+          sum(when(col("is_dup"), 1L).otherwise(0L)).as("n_dup_sel"))
+      val runs = flagged
+        .withColumn("seq", row_number().over(bySeq))
+        .filter(col("is_dup"))
+        .withColumn("grp", col("seq") - row_number().over(bySeq))
+        .groupBy("doc_id", "grp").agg(count(lit(1)).as("run_len"))
+        .groupBy("doc_id").agg(max(col("run_len")).as("max_dup_run"))
+      agg.join(runs, Seq("doc_id"), "left")
+        .na.fill(0L, Seq("max_dup_run"))
+        .select(col("doc_id"), col("n_sel"), col("n_dup_sel"),
+          col("max_dup_run"), (col("max_dup_run") >= 2).as("has_dup_span"))
+    },
 
-    "d41_dedup_consensus" -> (lshPairsCte + Similarity.embedDupPairsCte +
+    // Text↔embedding dedup CONSENSUS — do the two independent near-dup
+    // signals (d04's MinHash-LSH over shingles, d17's cosine-LSH over
+    // embeddings) agree? A production pipeline runs this before
+    // trusting either alone: high agreement validates both, divergence
+    // localizes which modality's threshold drifted. Text pairs are
+    // restricted to ids that HAVE embeddings (at full scale the
+    // embedded subset is a projection of the corpus), then the
+    // comparison is one pair-key join over two already-bucketed pair
+    // sets — nothing quadratic is introduced by the comparison itself.
+    QuerySpec("d41_dedup_consensus", Nil,
+      lshPairsCte + Similarity.embedDupPairsCte +
       """, tpairs AS (
         |  SELECT p.a_id, p.b_id FROM pairs p
         |  WHERE p.a_id IN (SELECT vec_id FROM qtab)
@@ -1124,6 +1070,26 @@ object Dedup {
         |        + (SELECT count(1) FROM epairs)
         |        - (SELECT count(1) FROM tpairs t JOIN epairs e
         |             ON t.a_id = e.a_id AND t.b_id = e.b_id), 1) AS agreement
-        |FROM (SELECT 1) one""".stripMargin)
+        |FROM (SELECT 1) one""".stripMargin) { (s, dir) =>
+      val vecIds = graft.sources.Tables.embeddings(s, dir).select(col("vec_id"))
+      val tp = lshPairs(s, dir).select("a_id", "b_id")
+        .join(vecIds.toDF("a_id"), Seq("a_id"), "left_semi")
+        .join(vecIds.toDF("b_id"), Seq("b_id"), "left_semi")
+        .withColumn("t", lit(1))
+      val ep = Similarity.embedDupPairs(s, dir).select("a_id", "b_id")
+        .withColumn("e", lit(1))
+      // ONE full-outer pass computes all three counts — separate
+      // count branches cross-joined together would re-evaluate the
+      // expensive LSH subtrees once per branch (Spark has no
+      // cross-branch subtree sharing)
+      tp.join(ep, Seq("a_id", "b_id"), "full_outer")
+        .agg(count(col("t")).as("n_text_pairs"),
+          count(col("e")).as("n_embed_pairs"),
+          count(when(col("t").isNotNull && col("e").isNotNull, 1)).as("n_both"))
+        .withColumn("agreement",
+          col("n_both").cast("double")
+            / greatest(col("n_text_pairs") + col("n_embed_pairs") - col("n_both"), lit(1L)))
+        .select("n_text_pairs", "n_embed_pairs", "n_both", "agreement")
+    }
   )
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
+import graft.operators.QuerySpec.by
 import graft.sources.Tables
 
 /** §2.C d14 — multimodal column plumbing.
@@ -24,7 +25,7 @@ import graft.sources.Tables
   * one library init per partition instead of per row), and a
   * relational feature output that joins back on doc_id.
   */
-object Multimodal {
+object Multimodal extends QueryModule {
 
   /** Typed media record: id + raw container bytes + mime. */
   case class MediaBlob(doc_id: Long, blob: Array[Byte], mime: String)
@@ -224,8 +225,7 @@ object Multimodal {
         concat(col("doc_id").cast("string"), lit("#"), col("frame_idx").cast("string"))))
       .select("doc_id", "frame_idx", "ts_ms", "phash")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
+  val specs: Seq[QuerySpec] = Seq(
     // Frame sampling over video-shaped media: every 4th frame of an
     // n_frames clip (n_frames derived from blob length — the stand-in
     // for container metadata), one output row per sampled frame with a
@@ -233,9 +233,15 @@ object Multimodal {
     // real thing a 100 TB video pipeline needs: a BOUNDED explode
     // (≤ 10 rows/clip) inside codegen, per-row hashing, no shuffle —
     // the decode stub (md5) is where an FFmpeg frame grab would slot.
-    "d18_frame_sample" -> { (s, dir) =>
+    QuerySpec("d18_frame_sample", by("doc_id", "frame_idx"),
+      """SELECT doc_id, frame_idx, frame_idx * 40 AS ts_ms,
+        |  CAST(concat('0x', substr(md5(concat(CAST(doc_id AS VARCHAR), '#', CAST(frame_idx AS VARCHAR))), 1, 8)) AS BIGINT) AS phash
+        |FROM (
+        |  SELECT doc_id, unnest(range(0, n_frames, 4)) AS frame_idx
+        |  FROM (SELECT doc_id, least(greatest(length(text) // 50, 1), 40) AS n_frames
+        |        FROM documents) meta) t
+        |ORDER BY doc_id, frame_idx""".stripMargin) { (s, dir) =>
       frameSample(Tables.documents(s, dir))
-        .orderBy("doc_id", "frame_idx")
     },
 
     // pack → decode pipelines in ONE stage (both are mapPartitions over
@@ -248,9 +254,14 @@ object Multimodal {
     // exercises the quarantine machinery end to end. Null payloads are
     // excluded at the scan (pushdown-able IS NOT NULL, mirrored in the
     // oracle) — pack() requires a payload to digest.
-    "d14_multimodal" -> { (s, dir) =>
+    QuerySpec("d14_multimodal", by("doc_id"),
+      """SELECT doc_id,
+        |  CAST(strlen(text) AS BIGINT) AS n_bytes,
+        |  CAST(concat('0x', substr(md5(text), 1, 8)) AS BIGINT) AS checksum,
+        |  CAST(concat('0x', substr(md5(text), 1, 8)) AS BIGINT) % 640 AS width,
+        |  CAST(concat('0x', substr(md5(text), 1, 8)) AS BIGINT) % 480 AS height
+        |FROM documents WHERE text IS NOT NULL ORDER BY doc_id""".stripMargin) { (s, dir) =>
       decodeFeatures(textPayloads(Tables.documents(s, dir)))
-        .orderBy("doc_id")
     },
 
     // Ingest QUARANTINE audit — the d14 pipeline over a corpus where a
@@ -265,9 +276,13 @@ object Multimodal {
     // corpus scan at any SF. The audit API takes already-packed
     // containers (Dataset[MediaBlob]); the pack+damage stage here is
     // the oracle-predictable FIXTURE composed in front of it.
-    "d44_media_quarantine" -> { (s, dir) =>
+    QuerySpec("d44_media_quarantine", by("err_kind"),
+      """SELECT CASE WHEN doc_id % 50 = 7 THEN 'bad_version' ELSE 'null_blob' END AS err_kind,
+        |  count(1) AS n_quarantined
+        |FROM documents
+        |WHERE text IS NOT NULL AND (doc_id % 50 = 7 OR doc_id % 50 = 23)
+        |GROUP BY 1 ORDER BY err_kind""".stripMargin) { (s, dir) =>
       quarantineAudit(packDamagedFixture(Tables.documents(s, dir)))
-        .orderBy("err_kind")
     },
 
     // Row-level quarantine WORKLIST, PERSISTED: the d44 audit's per-row
@@ -282,8 +297,18 @@ object Multimodal {
     // blob is always 'no container bytes'). The build pass is one
     // shuffle-free corpus scan at construction; the measured plan is
     // the tiny worklist read (~2% of docs, pruned to 3 columns).
-    "d45_quarantine_worklist" -> { (s, dir) =>
-      graft.sources.IO.readParquet(s, worklistPath(s, dir)).orderBy("doc_id")
+    QuerySpec("d45_quarantine_worklist", by("doc_id"),
+      // the full err detail is predictable too: the version flip writes
+      // 1+1=2, and a dropped blob always classifies as null_blob with a
+      // constant message (exception text format: "<kind>: <detail>")
+      """SELECT doc_id,
+        |  CASE WHEN doc_id % 50 = 7 THEN 'bad_version' ELSE 'null_blob' END AS err_kind,
+        |  CASE WHEN doc_id % 50 = 7 THEN 'bad_version: unsupported GRFT version 2'
+        |       ELSE 'null_blob: no container bytes' END AS err
+        |FROM documents
+        |WHERE text IS NOT NULL AND (doc_id % 50 = 7 OR doc_id % 50 = 23)
+        |ORDER BY doc_id""".stripMargin) { (s, dir) =>
+      graft.sources.IO.readParquet(s, worklistPath(s, dir))
     },
 
     // RE-DRIVE: the consumer of d45's persisted worklist — the step
@@ -299,13 +324,22 @@ object Multimodal {
     // denied. Output ≡ d14 restricted to the damaged ids, which is
     // exactly what "the loop closes" means — and the spec pins that the
     // re-drive quarantines nothing.
-    "d46_quarantine_redrive" -> { (s, dir) =>
+    QuerySpec("d46_quarantine_redrive", by("doc_id"),
+      // the closed loop: a re-driven doc decodes to exactly the features
+      // the clean ingest (d14) would have produced for it
+      """SELECT doc_id,
+        |  CAST(strlen(text) AS BIGINT) AS n_bytes,
+        |  CAST(concat('0x', substr(md5(text), 1, 8)) AS BIGINT) AS checksum,
+        |  CAST(concat('0x', substr(md5(text), 1, 8)) AS BIGINT) % 640 AS width,
+        |  CAST(concat('0x', substr(md5(text), 1, 8)) AS BIGINT) % 480 AS height
+        |FROM documents
+        |WHERE text IS NOT NULL AND (doc_id % 50 = 7 OR doc_id % 50 = 23)
+        |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val worklist = graft.sources.IO.readParquet(s, worklistPath(s, dir))
         .select("doc_id")
       decodeFeatures(textPayloads(
           Tables.documents(s, dir)
             .join(broadcast(worklist), Seq("doc_id"), "left_semi")))
-        .orderBy("doc_id")
     },
 
     // Metadata-only media sweep: per-container dims + declared frame
@@ -317,8 +351,15 @@ object Multimodal {
     // on every clean container; on the clean corpus every peek is ok,
     // so the ok-filter keeps the oracle exact while exercising the
     // tolerant path.
-    "d47_media_dims" -> { (s, dir) =>
-      dimsSweep(Tables.documents(s, dir)).orderBy("doc_id")
+    QuerySpec("d47_media_dims", by("doc_id"),
+      // header fields are payload-derived at pack time: dims from the
+      // md5 head (like d14), frame count = ceil(bytes / 64)
+      """SELECT doc_id,
+        |  CAST(concat('0x', substr(md5(text), 1, 8)) AS BIGINT) % 640 AS width,
+        |  CAST(concat('0x', substr(md5(text), 1, 8)) AS BIGINT) % 480 AS height,
+        |  CAST((strlen(text) + 63) // 64 AS BIGINT) AS n_frames
+        |FROM documents WHERE text IS NOT NULL ORDER BY doc_id""".stripMargin) { (s, dir) =>
+      dimsSweep(Tables.documents(s, dir))
     },
 
     // RESIZE planning — the thumbnail stage of an image pipeline as a
@@ -333,107 +374,8 @@ object Multimodal {
     // (tw·h ≤ 128·h, th = ⌊h·128/w⌋ — bit-stable cross-engine);
     // zero-dim containers are planned invalid (ok=false, zeroed
     // targets) instead of dividing by zero.
-    "d93_resize_plan" -> { (s, dir) =>
-      dimsSweep(Tables.documents(s, dir))
-        .withColumn("valid", col("width") > 0 && col("height") > 0)
-        .withColumn("no_op",
-          col("valid") && greatest(col("width"), col("height")) <= 128)
-        .withColumn("tw", when(!col("valid"), 0L)
-          .when(col("no_op"), col("width"))
-          .when(col("width") >= col("height"), lit(128L))
-          .otherwise(expr("CAST(width * 128 DIV height AS LONG)")))
-        .withColumn("th", when(!col("valid"), 0L)
-          .when(col("no_op"), col("height"))
-          .when(col("width") >= col("height"),
-            expr("CAST(height * 128 DIV width AS LONG)"))
-          .otherwise(lit(128L)))
-        .withColumn("est_bytes", col("tw") * col("th") * lit(3L))
-        .select("doc_id", "width", "height", "valid", "no_op",
-          "tw", "th", "est_bytes")
-        .orderBy("doc_id")
-    },
-
-    // Clip-level near-dup via shared frame fingerprints — the video
-    // twin of shingle dedup: each clip contributes one fingerprint per
-    // fixed-stride frame (50-char windows standing in for decoded
-    // frames, hashed like d18's phash), and two clips pair iff they
-    // share ≥ 3 fingerprints. The pairing is an EQUI-join on the
-    // fingerprint (shuffle-partitioned by hash — the reused-shot
-    // minority, never all clip pairs), with df=1 fingerprints pruned
-    // exactly first (a frame seen in ONE clip cannot contribute to any
-    // pair — same argument as d02's gram pruning), so at 100 TB the
-    // join input is the duplicated-content fraction of the corpus.
-    "d27_clip_dedup" -> { (s, dir) =>
-      val frames = graft.model.Corpus.docs(s, dir)
-        .filter(length(col("norm")) >= 50)
-        .select(col("doc_id"), col("norm"),
-          explode(expr("sequence(1, length(norm) - 49, 50)")).as("i"))
-        .select(col("doc_id"),
-          graft.functions.hash32(expr("substring(norm, i, 50)")).as("ph"))
-        .distinct()
-      val shareable = frames.groupBy("ph")
-        .agg(count(lit(1)).as("c")).filter(col("c") > 1)
-        .select("ph")
-      val f = frames.join(shareable, Seq("ph"))
-      val a = f.select(col("ph"), col("doc_id").as("a_id"))
-      val b = f.select(col("ph"), col("doc_id").as("b_id"))
-      a.join(b, Seq("ph"))
-        .filter(col("a_id") < col("b_id"))
-        .groupBy("a_id", "b_id")
-        .agg(count(lit(1)).as("n_shared_frames"))
-        .filter(col("n_shared_frames") >= 3)
-        .orderBy("a_id", "b_id")
-    }
-  )
-
-  val oracle: Map[String, String] = Map(
-    "d18_frame_sample" ->
-      """SELECT doc_id, frame_idx, frame_idx * 40 AS ts_ms,
-        |  CAST(concat('0x', substr(md5(concat(CAST(doc_id AS VARCHAR), '#', CAST(frame_idx AS VARCHAR))), 1, 8)) AS BIGINT) AS phash
-        |FROM (
-        |  SELECT doc_id, unnest(range(0, n_frames, 4)) AS frame_idx
-        |  FROM (SELECT doc_id, least(greatest(length(text) // 50, 1), 40) AS n_frames
-        |        FROM documents) meta) t
-        |ORDER BY doc_id, frame_idx""".stripMargin,
-
-    "d14_multimodal" ->
-      """SELECT doc_id,
-        |  CAST(strlen(text) AS BIGINT) AS n_bytes,
-        |  CAST(concat('0x', substr(md5(text), 1, 8)) AS BIGINT) AS checksum,
-        |  CAST(concat('0x', substr(md5(text), 1, 8)) AS BIGINT) % 640 AS width,
-        |  CAST(concat('0x', substr(md5(text), 1, 8)) AS BIGINT) % 480 AS height
-        |FROM documents WHERE text IS NOT NULL ORDER BY doc_id""".stripMargin,
-
-    "d44_media_quarantine" ->
-      """SELECT CASE WHEN doc_id % 50 = 7 THEN 'bad_version' ELSE 'null_blob' END AS err_kind,
-        |  count(1) AS n_quarantined
-        |FROM documents
-        |WHERE text IS NOT NULL AND (doc_id % 50 = 7 OR doc_id % 50 = 23)
-        |GROUP BY 1 ORDER BY err_kind""".stripMargin,
-
-    // the full err detail is predictable too: the version flip writes
-    // 1+1=2, and a dropped blob always classifies as null_blob with a
-    // constant message (exception text format: "<kind>: <detail>")
-    "d45_quarantine_worklist" ->
-      """SELECT doc_id,
-        |  CASE WHEN doc_id % 50 = 7 THEN 'bad_version' ELSE 'null_blob' END AS err_kind,
-        |  CASE WHEN doc_id % 50 = 7 THEN 'bad_version: unsupported GRFT version 2'
-        |       ELSE 'null_blob: no container bytes' END AS err
-        |FROM documents
-        |WHERE text IS NOT NULL AND (doc_id % 50 = 7 OR doc_id % 50 = 23)
-        |ORDER BY doc_id""".stripMargin,
-
-    // header fields are payload-derived at pack time: dims from the
-    // md5 head (like d14), frame count = ceil(bytes / 64)
-    "d47_media_dims" ->
-      """SELECT doc_id,
-        |  CAST(concat('0x', substr(md5(text), 1, 8)) AS BIGINT) % 640 AS width,
-        |  CAST(concat('0x', substr(md5(text), 1, 8)) AS BIGINT) % 480 AS height,
-        |  CAST((strlen(text) + 63) // 64 AS BIGINT) AS n_frames
-        |FROM documents WHERE text IS NOT NULL ORDER BY doc_id""".stripMargin,
-
-    // the thumb math over the same header-derived dims d47 reads
-    "d93_resize_plan" ->
+    QuerySpec("d93_resize_plan", by("doc_id"),
+      // the thumb math over the same header-derived dims d47 reads
       """WITH dims AS (
         |  SELECT doc_id,
         |    CAST(concat('0x', substr(md5(text), 1, 8)) AS BIGINT) % 640 AS width,
@@ -461,27 +403,62 @@ object Multimodal {
         |       WHEN no_op THEN height
         |       WHEN width >= height THEN height * 128 // width
         |       ELSE 128 END) * 3 AS est_bytes
-        |FROM plan ORDER BY doc_id""".stripMargin,
+        |FROM plan ORDER BY doc_id""".stripMargin) { (s, dir) =>
+      dimsSweep(Tables.documents(s, dir))
+        .withColumn("valid", col("width") > 0 && col("height") > 0)
+        .withColumn("no_op",
+          col("valid") && greatest(col("width"), col("height")) <= 128)
+        .withColumn("tw", when(!col("valid"), 0L)
+          .when(col("no_op"), col("width"))
+          .when(col("width") >= col("height"), lit(128L))
+          .otherwise(expr("CAST(width * 128 DIV height AS LONG)")))
+        .withColumn("th", when(!col("valid"), 0L)
+          .when(col("no_op"), col("height"))
+          .when(col("width") >= col("height"),
+            expr("CAST(height * 128 DIV width AS LONG)"))
+          .otherwise(lit(128L)))
+        .withColumn("est_bytes", col("tw") * col("th") * lit(3L))
+        .select("doc_id", "width", "height", "valid", "no_op",
+          "tw", "th", "est_bytes")
+    },
 
-    // the closed loop: a re-driven doc decodes to exactly the features
-    // the clean ingest (d14) would have produced for it
-    "d46_quarantine_redrive" ->
-      """SELECT doc_id,
-        |  CAST(strlen(text) AS BIGINT) AS n_bytes,
-        |  CAST(concat('0x', substr(md5(text), 1, 8)) AS BIGINT) AS checksum,
-        |  CAST(concat('0x', substr(md5(text), 1, 8)) AS BIGINT) % 640 AS width,
-        |  CAST(concat('0x', substr(md5(text), 1, 8)) AS BIGINT) % 480 AS height
-        |FROM documents
-        |WHERE text IS NOT NULL AND (doc_id % 50 = 7 OR doc_id % 50 = 23)
-        |ORDER BY doc_id""".stripMargin,
-
-    "d27_clip_dedup" -> (graft.model.Corpus.docsCte +
+    // Clip-level near-dup via shared frame fingerprints — the video
+    // twin of shingle dedup: each clip contributes one fingerprint per
+    // fixed-stride frame (50-char windows standing in for decoded
+    // frames, hashed like d18's phash), and two clips pair iff they
+    // share ≥ 3 fingerprints. The pairing is an EQUI-join on the
+    // fingerprint (shuffle-partitioned by hash — the reused-shot
+    // minority, never all clip pairs), with df=1 fingerprints pruned
+    // exactly first (a frame seen in ONE clip cannot contribute to any
+    // pair — same argument as d02's gram pruning), so at 100 TB the
+    // join input is the duplicated-content fraction of the corpus.
+    QuerySpec("d27_clip_dedup", by("a_id", "b_id"),
+      graft.model.Corpus.docsCte +
       s""", fr AS (
          |  SELECT DISTINCT doc_id, ${graft.model.Corpus.hash32Sql("substr(norm, i, 50)")} AS ph
          |  FROM docs, UNNEST(range(1, length(norm) - 48, 50)) t(i)
          |  WHERE length(norm) >= 50)
          |SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(1) AS n_shared_frames
          |FROM fr a JOIN fr b ON a.ph = b.ph AND a.doc_id < b.doc_id
-         |GROUP BY 1, 2 HAVING count(1) >= 3 ORDER BY a_id, b_id""".stripMargin)
+         |GROUP BY 1, 2 HAVING count(1) >= 3 ORDER BY a_id, b_id""".stripMargin) { (s, dir) =>
+      val frames = graft.model.Corpus.docs(s, dir)
+        .filter(length(col("norm")) >= 50)
+        .select(col("doc_id"), col("norm"),
+          explode(expr("sequence(1, length(norm) - 49, 50)")).as("i"))
+        .select(col("doc_id"),
+          graft.functions.hash32(expr("substring(norm, i, 50)")).as("ph"))
+        .distinct()
+      val shareable = frames.groupBy("ph")
+        .agg(count(lit(1)).as("c")).filter(col("c") > 1)
+        .select("ph")
+      val f = frames.join(shareable, Seq("ph"))
+      val a = f.select(col("ph"), col("doc_id").as("a_id"))
+      val b = f.select(col("ph"), col("doc_id").as("b_id"))
+      a.join(b, Seq("ph"))
+        .filter(col("a_id") < col("b_id"))
+        .groupBy("a_id", "b_id")
+        .agg(count(lit(1)).as("n_shared_frames"))
+        .filter(col("n_shared_frames") >= 3)
+    }
   )
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.functions._
+import graft.operators.QuerySpec.by
 import graft.sources.Tables
 
 /** §2.A — relational core.
@@ -23,7 +24,7 @@ import graft.sources.Tables
   * (never a global sort); numeric outputs go through exact DECIMAL
   * before a final double cast for engine-portable results.
   */
-object Relational {
+object Relational extends QueryModule {
 
   private val one = lit(1).cast(DecimalType(18, 2))
 
@@ -74,8 +75,17 @@ object Relational {
         count(lit(1)).as("n_orders"))
       .orderBy("o_orderstatus")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_agg" -> { (s, dir) =>
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q01_agg", by("l_returnflag", "l_linestatus"),
+      """SELECT l_returnflag, l_linestatus,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(1) AS avg_qty,
+        |  CAST(SUM(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) / COUNT(1) AS avg_disc,
+        |  COUNT(1) AS count_order
+        |FROM lineitem GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin) { (s, dir) =>
       Tables.lineitem(s, dir)
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -85,10 +95,15 @@ object Relational {
           (asDouble(sum(dec2(col("l_quantity")))) / count(lit(1))).as("avg_qty"),
           (asDouble(sum(dec2(col("l_discount")))) / count(lit(1))).as("avg_disc"),
           count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")
     },
 
-    "q02_filter_project" -> { (s, dir) =>
+    QuerySpec("q02_filter_project", Nil,
+      """SELECT
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
+        |  COUNT(1) AS n_rows
+        |FROM lineitem
+        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
+        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 25""".stripMargin) { (s, dir) =>
       Tables.lineitem(s, dir)
         .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp")
           && col("l_shipdate") < lit("1998-01-01").cast("timestamp")
@@ -99,7 +114,13 @@ object Relational {
           count(lit(1)).as("n_rows"))
     },
 
-    "q03_join_agg" -> { (s, dir) =>
+    QuerySpec("q03_join_agg", by("c_mktsegment"),
+      """SELECT c_mktsegment,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
+        |  COUNT(DISTINCT o_orderkey) AS n_orders
+        |FROM customer JOIN orders ON c_custkey = o_custkey
+        |JOIN lineitem ON o_orderkey = l_orderkey
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin) { (s, dir) =>
       val c = Tables.customer(s, dir)
       val o = Tables.orders(s, dir)
       val l = Tables.lineitem(s, dir)
@@ -114,34 +135,47 @@ object Relational {
         .agg(
           asDouble(sum(col("order_rev"))).as("revenue"),
           count(lit(1)).as("n_orders"))
-        .orderBy("c_mktsegment")
     },
 
-    "q04_semi_join" -> { (s, dir) =>
+    QuerySpec("q04_semi_join", by("o_orderpriority"),
+      """SELECT o_orderpriority, COUNT(1) AS n FROM orders
+        |WHERE EXISTS (SELECT 1 FROM lineitem
+        |  WHERE l_orderkey = o_orderkey AND l_quantity >= 45)
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin) { (s, dir) =>
       val o = Tables.orders(s, dir)
       val big = Tables.lineitem(s, dir).filter(col("l_quantity") >= 45)
       o.join(big, o("o_orderkey") === big("l_orderkey"), "left_semi")
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n"))
-        .orderBy("o_orderpriority")
     },
 
-    "q05_anti_join" -> { (s, dir) =>
+    QuerySpec("q05_anti_join", by("c_custkey"),
+      """SELECT c_custkey, c_name, c_mktsegment FROM customer
+        |WHERE NOT EXISTS (SELECT 1 FROM orders
+        |  WHERE o_custkey = c_custkey AND o_totalprice > 300000)
+        |ORDER BY c_custkey""".stripMargin) { (s, dir) =>
       val c = Tables.customer(s, dir)
       val bigOrders = Tables.orders(s, dir).filter(col("o_totalprice") > 300000)
       c.join(bigOrders, c("c_custkey") === bigOrders("o_custkey"), "left_anti")
         .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-        .orderBy("c_custkey")
     },
 
-    "q06_topk" -> { (s, dir) =>
+    QuerySpec("q06_topk", Nil,
+      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 15""".stripMargin) { (s, dir) =>
       Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
         .limit(15)
     },
 
-    "q07_window_rank" -> { (s, dir) =>
+    QuerySpec("q07_window_rank", by("o_custkey", "rn"),
+      """SELECT o_custkey, o_orderkey, rn FROM (
+        |  SELECT o_custkey, o_orderkey,
+        |    ROW_NUMBER() OVER (PARTITION BY o_custkey
+        |      ORDER BY o_orderdate DESC, o_orderkey ASC) AS rn
+        |  FROM orders) t
+        |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_orderdate").desc, col("o_orderkey").asc)
@@ -149,17 +183,24 @@ object Relational {
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 3)
         .select(col("o_custkey"), col("o_orderkey"), col("rn"))
-        .orderBy("o_custkey", "rn")
     },
 
-    "q08_distinct" -> { (s, dir) =>
+    QuerySpec("q08_distinct", by("o_orderstatus", "o_orderpriority"),
+      """SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders
+        |ORDER BY o_orderstatus, o_orderpriority""".stripMargin) { (s, dir) =>
       Tables.orders(s, dir)
         .select("o_orderstatus", "o_orderpriority")
         .distinct()
-        .orderBy("o_orderstatus", "o_orderpriority")
     },
 
-    "q09_union_all" -> { (s, dir) =>
+    QuerySpec("q09_union_all", by("src"),
+      """SELECT src, COUNT(1) AS n,
+        |  CAST(SUM(CAST(bal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
+        |FROM (
+        |  SELECT 'customer' AS src, c_acctbal AS bal FROM customer
+        |  UNION ALL
+        |  SELECT 'supplier' AS src, s_acctbal AS bal FROM supplier) u
+        |GROUP BY src ORDER BY src""".stripMargin) { (s, dir) =>
       val c = Tables.customer(s, dir)
         .select(lit("customer").as("src"), col("c_acctbal").as("bal"))
       val sup = Tables.supplier(s, dir)
@@ -167,7 +208,6 @@ object Relational {
       c.unionAll(sup)
         .groupBy("src")
         .agg(count(lit(1)).as("n"), asDouble(sum(dec2(col("bal")))).as("total_bal"))
-        .orderBy("src")
     },
 
     // SQL form: rollup grouping columns re-referenced post-agg trip the
@@ -175,7 +215,14 @@ object Relational {
     // them cleanly and plans the identical Expand + Aggregate. Tables
     // are referenced as parquet paths directly — no temp views, so two
     // concurrent calls on one session can't race on named state.
-    "q10_rollup" -> { (s, dir) =>
+    QuerySpec("q10_rollup", by("region", "nation"),
+      """SELECT coalesce(r_name, 'ALL') AS region, coalesce(n_name, 'ALL') AS nation,
+        |  COUNT(1) AS n_cust,
+        |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
+        |FROM customer JOIN nation ON c_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |GROUP BY ROLLUP (r_name, n_name)
+        |ORDER BY region, nation""".stripMargin) { (s, dir) =>
       s.sql(s"""
         SELECT /*+ BROADCAST(n, r) */
                coalesce(r_name, 'ALL') AS region,
@@ -186,20 +233,30 @@ object Relational {
         JOIN parquet.`$dir/nation.parquet` n ON c.c_nationkey = n.n_nationkey
         JOIN parquet.`$dir/region.parquet` r ON n.n_regionkey = r.r_regionkey
         GROUP BY ROLLUP (r_name, n_name)
-        ORDER BY region, nation
       """)
     },
 
-    "q11_having" -> { (s, dir) =>
+    QuerySpec("q11_having", by("l_suppkey"),
+      """SELECT l_suppkey,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price,
+        |  COUNT(1) AS n_lines
+        |FROM lineitem GROUP BY l_suppkey
+        |HAVING CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) > 18000000
+        |ORDER BY l_suppkey""".stripMargin) { (s, dir) =>
       Tables.lineitem(s, dir)
         .groupBy("l_suppkey")
         .agg(asDouble(sum(dec2(col("l_extendedprice")))).as("total_price"),
           count(lit(1)).as("n_lines"))
         .filter(col("total_price") > 18000000)
-        .orderBy("l_suppkey")
     },
 
-    "q12_case_when" -> { (s, dir) =>
+    QuerySpec("q12_case_when", by("bucket"),
+      """SELECT CASE WHEN o_totalprice < 50000 THEN 'small'
+        |            WHEN o_totalprice < 200000 THEN 'medium'
+        |            ELSE 'large' END AS bucket,
+        |  COUNT(1) AS n,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin) { (s, dir) =>
       Tables.orders(s, dir)
         .withColumn("bucket",
           when(col("o_totalprice") < 50000, "small")
@@ -207,17 +264,23 @@ object Relational {
             .otherwise("large"))
         .groupBy("bucket")
         .agg(count(lit(1)).as("n"), asDouble(sum(dec2(col("o_totalprice")))).as("total"))
-        .orderBy("bucket")
     },
 
-    "q13_time_bucket" -> { (s, dir) =>
+    QuerySpec("q13_time_bucket", by("day", "event_type"),
+      """SELECT CAST(date_trunc('day', ts) AS DATE) AS day, event_type,
+        |  COUNT(1) AS n,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+        |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin) { (s, dir) =>
       Tables.events(s, dir)
         .groupBy(date_trunc("day", col("ts")).cast("date").as("day"), col("event_type"))
         .agg(count(lit(1)).as("n"), asDouble(sum(dec2(col("value")))).as("total_value"))
-        .orderBy("day", "event_type")
     },
 
-    "q14_string_funcs" -> { (s, dir) =>
+    QuerySpec("q14_string_funcs", by("p_partkey"),
+      """SELECT p_partkey, upper(p_name) AS up_name, length(p_name) AS name_len,
+        |  string_split(p_name, ' ')[1] AS first_word,
+        |  concat(p_brand, '/', p_type) AS brand_type
+        |FROM part WHERE p_name LIKE '%widget%' ORDER BY p_partkey""".stripMargin) { (s, dir) =>
       Tables.part(s, dir)
         .filter(col("p_name").like("%widget%"))
         .select(
@@ -226,20 +289,28 @@ object Relational {
           length(col("p_name")).as("name_len"),
           split(col("p_name"), " ").getItem(0).as("first_word"),
           concat(col("p_brand"), lit("/"), col("p_type")).as("brand_type"))
-        .orderBy("p_partkey")
     },
 
-    "q15_scalar_subquery" -> { (s, dir) =>
+    QuerySpec("q15_scalar_subquery", by("p_partkey"),
+      """SELECT p_partkey, p_retailprice FROM part
+        |WHERE p_retailprice > (
+        |  SELECT CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(1)
+        |  FROM part)
+        |ORDER BY p_partkey""".stripMargin) { (s, dir) =>
       val p = Tables.part(s, dir)
       val avgPrice = p.agg(
         (asDouble(sum(dec2(col("p_retailprice")))) / count(lit(1))).as("avg_price"))
       p.crossJoin(broadcast(avgPrice))
         .filter(col("p_retailprice") > col("avg_price"))
         .select(col("p_partkey"), col("p_retailprice"))
-        .orderBy("p_partkey")
     },
 
-    "q16_broadcast_join" -> { (s, dir) =>
+    QuerySpec("q16_broadcast_join", by("r_name"),
+      """SELECT r_name, COUNT(1) AS n_cust,
+        |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
+        |FROM customer JOIN nation ON c_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |GROUP BY r_name ORDER BY r_name""".stripMargin) { (s, dir) =>
       val c = Tables.customer(s, dir)
       val n = Tables.nation(s, dir)
       val r = Tables.region(s, dir)
@@ -247,10 +318,19 @@ object Relational {
         .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
         .groupBy("r_name")
         .agg(count(lit(1)).as("n_cust"), asDouble(sum(dec2(col("c_acctbal")))).as("total_bal"))
-        .orderBy("r_name")
     },
 
-    "q17_multi_join" -> { (s, dir) =>
+    QuerySpec("q17_multi_join", by("n_name"),
+      """SELECT n_name,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
+        |FROM customer
+        |JOIN orders ON c_custkey = o_custkey
+        |JOIN lineitem ON o_orderkey = l_orderkey
+        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |WHERE o_orderdate >= TIMESTAMP '1995-01-01' AND o_orderdate < TIMESTAMP '1999-01-01'
+        |GROUP BY n_name ORDER BY n_name""".stripMargin) { (s, dir) =>
       val c = Tables.customer(s, dir)
       val o = Tables.orders(s, dir)
       val l = Tables.lineitem(s, dir)
@@ -266,14 +346,17 @@ object Relational {
           && o("o_orderdate") < lit("1999-01-01").cast("timestamp"))
         .groupBy("n_name")
         .agg(asDouble(sum(dec2(col("l_extendedprice")) * (one - dec2(col("l_discount"))))).as("revenue"))
-        .orderBy("n_name")
     },
 
     // A TRUE correlated EXISTS — written as SQL so Catalyst's subquery
     // rewriting (RewritePredicateSubquery) does the decorrelation into
     // a left-semi join, rather than hand-writing the semi-join shape
     // (PlanSpec asserts the planned semi-join survives).
-    "q18_exists_corr" -> { (s, dir) =>
+    QuerySpec("q18_exists_corr", by("c_mktsegment"),
+      """SELECT c_mktsegment, COUNT(1) AS n_cust FROM customer
+        |WHERE EXISTS (SELECT 1 FROM orders
+        |  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin) { (s, dir) =>
       s.sql(s"""
         SELECT c_mktsegment, count(1) AS n_cust
         FROM parquet.`$dir/customer.parquet` c
@@ -281,11 +364,17 @@ object Relational {
                       WHERE o.o_custkey = c.c_custkey
                         AND o.o_orderpriority = '1-URGENT')
         GROUP BY c_mktsegment
-        ORDER BY c_mktsegment
       """)
     },
 
-    "q19_grouping_sets" -> { (s, dir) =>
+    QuerySpec("q19_grouping_sets", by("status", "priority"),
+      """SELECT coalesce(o_orderstatus, 'ALL') AS status,
+        |  coalesce(o_orderpriority, 'ALL') AS priority,
+        |  COUNT(1) AS n,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |FROM orders
+        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
+        |ORDER BY status, priority""".stripMargin) { (s, dir) =>
       s.sql(s"""
         SELECT coalesce(o_orderstatus, 'ALL')   AS status,
                coalesce(o_orderpriority, 'ALL') AS priority,
@@ -293,7 +382,6 @@ object Relational {
                CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
         FROM parquet.`$dir/orders.parquet`
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        ORDER BY status, priority
       """)
     },
 
@@ -301,7 +389,13 @@ object Relational {
     // keeps this a single-pass aggregate — the value-less pivot API
     // first runs a distinct-collect job over the pivot column, which at
     // 100 TB is a full extra scan before any real work starts.
-    "q20_pivot" -> { (s, dir) =>
+    QuerySpec("q20_pivot", by("o_orderpriority"),
+      """SELECT o_orderpriority,
+        |  COUNT(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS n_f,
+        |  COUNT(CASE WHEN o_orderstatus = 'O' THEN 1 END) AS n_o,
+        |  COUNT(CASE WHEN o_orderstatus = 'P' THEN 1 END) AS n_p
+        |FROM orders GROUP BY o_orderpriority
+        |ORDER BY o_orderpriority""".stripMargin) { (s, dir) =>
       Tables.orders(s, dir)
         .groupBy("o_orderpriority")
         .pivot("o_orderstatus", Seq("F", "O", "P"))
@@ -310,13 +404,25 @@ object Relational {
           coalesce(col("F"), lit(0L)).as("n_f"),
           coalesce(col("O"), lit(0L)).as("n_o"),
           coalesce(col("P"), lit(0L)).as("n_p"))
-        .orderBy("o_orderpriority")
     },
 
     // lag/lead over the per-customer order history: inter-order gap in
     // days and spend delta — the window partitions by a bounded key
     // (customer), so partitions stay small at any total order count.
-    "q21_lead_lag" -> { (s, dir) =>
+    QuerySpec("q21_lead_lag", by("o_custkey", "o_orderkey"),
+      """SELECT o_custkey, o_orderkey, gap_days, price_delta, next_key FROM (
+        |  SELECT o_custkey, o_orderkey,
+        |    CAST(date_diff('day',
+        |      CAST(lag(o_orderdate) OVER w AS DATE),
+        |      CAST(o_orderdate AS DATE)) AS BIGINT) AS gap_days,
+        |    CAST(CAST(o_totalprice AS DECIMAL(18,2))
+        |      - CAST(lag(o_totalprice) OVER w AS DECIMAL(18,2)) AS DOUBLE) AS price_delta,
+        |    lead(o_orderkey) OVER w AS next_key,
+        |    lag(o_orderdate) OVER w AS prev_date
+        |  FROM orders
+        |  WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC)
+        |) t WHERE prev_date IS NOT NULL
+        |ORDER BY o_custkey, o_orderkey""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
@@ -329,14 +435,23 @@ object Relational {
         .withColumn("next_key", lead(col("o_orderkey"), 1).over(w))
         .filter(col("prev_date").isNotNull)
         .select("o_custkey", "o_orderkey", "gap_days", "price_delta", "next_key")
-        .orderBy("o_custkey", "o_orderkey")
     },
 
     // INTERSECT / EXCEPT set algebra (both plan as hash-aggregated
     // left-semi / left-anti joins — no sort, shuffles only the
     // projected key column): the returning-customer partition of two
     // order years.
-    "q22_setops" -> { (s, dir) =>
+    QuerySpec("q22_setops", by("kind", "o_custkey"),
+      """WITH y95 AS (SELECT o_custkey FROM orders
+        |  WHERE o_orderdate >= TIMESTAMP '1995-01-01' AND o_orderdate < TIMESTAMP '1996-01-01'),
+        |y96 AS (SELECT o_custkey FROM orders
+        |  WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01')
+        |SELECT 'both' AS kind, o_custkey
+        |FROM (SELECT o_custkey FROM y95 INTERSECT SELECT o_custkey FROM y96) a
+        |UNION ALL
+        |SELECT 'only_1995' AS kind, o_custkey
+        |FROM (SELECT o_custkey FROM y95 EXCEPT SELECT o_custkey FROM y96) b
+        |ORDER BY kind, o_custkey""".stripMargin) { (s, dir) =>
       val o = Tables.orders(s, dir)
       def custs(from: String, until: String) =
         o.filter(col("o_orderdate") >= lit(from).cast("timestamp")
@@ -347,13 +462,20 @@ object Relational {
       y95.intersect(y96).withColumn("kind", lit("both"))
         .unionAll(y95.except(y96).withColumn("kind", lit("only_1995")))
         .select("kind", "o_custkey")
-        .orderBy("kind", "o_custkey")
     },
 
     // Running aggregate over an explicit ROWS frame: cumulative spend
     // per customer in order-date order (exact DECIMAL accumulation,
     // cast once at the end). Bounded partition key, single shuffle.
-    "q23_running_sum" -> { (s, dir) =>
+    QuerySpec("q23_running_sum", by("o_custkey", "o_orderkey"),
+      """SELECT o_custkey, o_orderkey,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER w AS DOUBLE) AS run_spend,
+        |  count(1) OVER w AS run_orders
+        |FROM orders
+        |WINDOW w AS (PARTITION BY o_custkey
+        |  ORDER BY o_orderdate ASC, o_orderkey ASC
+        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |ORDER BY o_custkey, o_orderkey""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
@@ -362,7 +484,6 @@ object Relational {
         .withColumn("run_spend", asDouble(sum(dec2(col("o_totalprice"))).over(w)))
         .withColumn("run_orders", count(lit(1)).over(w))
         .select("o_custkey", "o_orderkey", "run_spend", "run_orders")
-        .orderBy("o_custkey", "o_orderkey")
     },
 
     // NOT IN subquery — deliberately DIFFERENT machinery from q05's
@@ -372,7 +493,14 @@ object Relational {
     // hash join) instead of a naive anti — the plan shape is
     // spec-asserted. esop analogue: nodes restorable only from
     // locations NOT on any deny list.
-    "q24_not_in" -> { (s, dir) =>
+    QuerySpec("q24_not_in", by("c_nationkey"),
+      """SELECT c_nationkey, count(1) AS n_cust,
+        |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
+        |FROM customer
+        |WHERE c_nationkey NOT IN (
+        |  SELECT s_nationkey FROM supplier WHERE CAST(s_acctbal AS DOUBLE) < 0)
+        |GROUP BY c_nationkey
+        |ORDER BY c_nationkey""".stripMargin) { (s, dir) =>
       s.sql(s"""
         SELECT c_nationkey, count(1) AS n_cust,
                CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
@@ -381,7 +509,6 @@ object Relational {
           SELECT s_nationkey FROM parquet.`$dir/supplier.parquet`
           WHERE CAST(s_acctbal AS DOUBLE) < 0)
         GROUP BY c_nationkey
-        ORDER BY c_nationkey
       """)
     },
 
@@ -393,7 +520,14 @@ object Relational {
     // BEFORE the exchange, then one equi-join back to customers. The
     // plan shape (decorrelated + partial group-limit, no nested loop)
     // is spec-asserted.
-    "q25_lateral" -> { (s, dir) =>
+    QuerySpec("q25_lateral", Seq(col("c_custkey"), col("price").desc, col("o_orderkey")),
+      """SELECT c.c_custkey, t.o_orderkey, t.price
+        |FROM customer c,
+        |LATERAL (SELECT o_orderkey,
+        |                CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS price
+        |         FROM orders o WHERE o.o_custkey = c.c_custkey
+        |         ORDER BY price DESC, o_orderkey LIMIT 3) t
+        |ORDER BY c_custkey, price DESC, o_orderkey""".stripMargin) { (s, dir) =>
       s.sql(s"""
         SELECT c.c_custkey, t.o_orderkey, t.price
         FROM parquet.`$dir/customer.parquet` c,
@@ -402,7 +536,6 @@ object Relational {
                  FROM parquet.`$dir/orders.parquet` o
                  WHERE o.o_custkey = c.c_custkey
                  ORDER BY price DESC, o_orderkey LIMIT 3) t
-        ORDER BY c_custkey, price DESC, o_orderkey
       """)
     },
 
@@ -412,7 +545,14 @@ object Relational {
     // (status, priority) combinations through a single Expand over
     // one orders scan — map-side partial aggs per grouping, never
     // four scans.
-    "q26_cube" -> { (s, dir) =>
+    QuerySpec("q26_cube", by("status", "priority"),
+      """SELECT coalesce(o_orderstatus, 'ALL') AS status,
+        |  coalesce(o_orderpriority, 'ALL') AS priority,
+        |  COUNT(1) AS n_orders,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |FROM orders
+        |GROUP BY CUBE (o_orderstatus, o_orderpriority)
+        |ORDER BY status, priority""".stripMargin) { (s, dir) =>
       s.sql(s"""
         SELECT coalesce(o_orderstatus, 'ALL') AS status,
                coalesce(o_orderpriority, 'ALL') AS priority,
@@ -420,7 +560,6 @@ object Relational {
                CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
         FROM parquet.`$dir/orders.parquet`
         GROUP BY CUBE (o_orderstatus, o_orderpriority)
-        ORDER BY status, priority
       """)
     },
 
@@ -432,7 +571,14 @@ object Relational {
     // One shuffle on the partition key, then a per-partition sliding
     // frame; at 100 TB this is the standard sessionless rolling
     // metric shape.
-    "q27_range_frame" -> { (s, dir) =>
+    QuerySpec("q27_range_frame", by("o_custkey", "order_day", "o_orderkey"),
+      """SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS order_day,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER w AS DOUBLE) AS spend_30d,
+        |  count(1) OVER w AS n_30d
+        |FROM orders
+        |WINDOW w AS (PARTITION BY o_custkey ORDER BY CAST(o_orderdate AS DATE)
+        |  RANGE BETWEEN INTERVAL 30 DAYS PRECEDING AND CURRENT ROW)
+        |ORDER BY o_custkey, order_day, o_orderkey""".stripMargin) { (s, dir) =>
       s.sql(s"""
         SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS order_day,
                CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER w AS DOUBLE) AS spend_30d,
@@ -440,7 +586,6 @@ object Relational {
         FROM parquet.`$dir/orders.parquet`
         WINDOW w AS (PARTITION BY o_custkey ORDER BY CAST(o_orderdate AS DATE)
                      RANGE BETWEEN INTERVAL 30 DAYS PRECEDING AND CURRENT ROW)
-        ORDER BY o_custkey, order_day, o_orderkey
       """)
     },
 
@@ -465,7 +610,18 @@ object Relational {
     // the bin level (containment inside the join condition, NOT a
     // post-join WHERE) keeps zero-match orders in the output with
     // n_inflight=0 from the same single pass.
-    "q28_interval_join" -> { (s, dir) =>
+    QuerySpec("q28_interval_join", by("o_orderkey"),
+      // DuckDB plans the bare containment condition with its native
+      // IEJoin — same semantics, no bins needed on the oracle side.
+      """SELECT o_orderkey, CAST(o_orderdate AS DATE) AS order_day,
+        |  count(l.w_start) AS n_inflight
+        |FROM orders o LEFT JOIN (
+        |  SELECT l_shipdate AS w_start,
+        |    l_shipdate + (CAST(l_quantity AS INT) % 7 + 1) * INTERVAL 1 DAY AS w_end
+        |  FROM lineitem WHERE l_quantity >= 45) l
+        |ON l.w_start <= o.o_orderdate AND o.o_orderdate < l.w_end
+        |GROUP BY o_orderkey, order_day
+        |ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       val W = 8 // smallest power of two ≥ the max span (8 days) ⇒ ≤2 bins/interval
       val iv = Tables.lineitem(s, dir)
         .filter(col("l_quantity") >= 45)
@@ -497,7 +653,6 @@ object Relational {
         .join(broadcast(perDay), Seq("o_orderdate"))
         .select(col("o_orderkey"), to_date(col("o_orderdate")).as("order_day"),
           col("n_inflight"))
-        .orderBy("o_orderkey")
     },
 
     // Exact discrete quartiles — the distribution summary (p25/p50/p75
@@ -513,7 +668,17 @@ object Relational {
     // equality exact. At 100 TB the exact per-group sort is the
     // declared baseline; the scale path is approx_percentile's
     // mergeable sketch (no global sort) when ±ε is acceptable.
-    "q29_quartiles" -> { (s, dir) =>
+    QuerySpec("q29_quartiles", by("o_orderpriority"),
+      // quantile_disc follows the percentile_disc convention: the
+      // element at 1-based rank ceil(q·n) of the sorted group — exactly
+      // the integer index the Spark side computes.
+      """SELECT o_orderpriority, count(1) AS n_orders,
+        |  quantile_disc(o_totalprice, 0.25) AS p25,
+        |  quantile_disc(o_totalprice, 0.50) AS p50,
+        |  quantile_disc(o_totalprice, 0.75) AS p75,
+        |  min(o_totalprice) AS lo, max(o_totalprice) AS hi
+        |FROM orders GROUP BY o_orderpriority
+        |ORDER BY o_orderpriority""".stripMargin) { (s, dir) =>
       val w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice")
       val wAll = Window.partitionBy("o_orderpriority")
       Tables.orders(s, dir)
@@ -528,7 +693,6 @@ object Relational {
           max(when(expr("rn = (3 * n + 3) div 4"), col("o_totalprice"))).as("p75"),
           min(col("o_totalprice")).as("lo"),
           max(col("o_totalprice")).as("hi"))
-        .orderBy("o_orderpriority")
     },
 
     // UNPIVOT — the wide→long reshape completing q20's pivot: a
@@ -537,7 +701,16 @@ object Relational {
     // Catalyst plans unpivot as an Expand over the aggregated (tiny)
     // frame — the melt itself never touches the table, so the cost is
     // q01's aggregation and nothing else (pin orders=1).
-    "q30_unpivot" -> { (s, dir) =>
+    QuerySpec("q30_unpivot", by("o_orderstatus", "measure"),
+      """WITH wide AS (
+        |  SELECT o_orderstatus,
+        |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price,
+        |    CAST(count(1) AS DOUBLE) AS n_orders,
+        |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / count(1) AS avg_price
+        |  FROM orders GROUP BY o_orderstatus)
+        |SELECT o_orderstatus, measure, value FROM wide
+        |UNPIVOT (value FOR measure IN (total_price, n_orders, avg_price))
+        |ORDER BY o_orderstatus, measure""".stripMargin) { (s, dir) =>
       Tables.orders(s, dir)
         .groupBy("o_orderstatus")
         .agg(
@@ -547,7 +720,6 @@ object Relational {
         .unpivot(Array(col("o_orderstatus")),
           Array(col("total_price"), col("n_orders"), col("avg_price")),
           "measure", "value")
-        .orderBy("o_orderstatus", "measure")
     },
 
     // NTILE decile report — the distribution summary q29's quartiles
@@ -567,7 +739,15 @@ object Relational {
     // ntile() row for row. The bin-totals branch is a second pinned
     // scan of the 2-column pruned relation (d65's trade: two cheap
     // scans beat caching the corpus) — pin orders=2.
-    "q31_ntile" -> { (s, dir) =>
+    QuerySpec("q31_ntile", by("decile"),
+      """WITH t AS (
+        |  SELECT o_totalprice,
+        |    CAST(NTILE(10) OVER (ORDER BY o_totalprice, o_orderkey) AS BIGINT) AS decile
+        |  FROM orders)
+        |SELECT decile, count(1) AS n_orders,
+        |  min(o_totalprice) AS lo, max(o_totalprice) AS hi,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spend
+        |FROM t GROUP BY decile ORDER BY decile""".stripMargin) { (s, dir) =>
       val o = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_totalprice"),
           floor(col("o_totalprice") / 16384.0).cast("long").as("bin"))
@@ -595,7 +775,6 @@ object Relational {
           min(col("o_totalprice")).as("lo"),
           max(col("o_totalprice")).as("hi"),
           asDouble(sum(dec2(col("o_totalprice")))).as("total_spend"))
-        .orderBy("decile")
     },
 
     // Multi-COUNT(DISTINCT) in one pass — the cardinality panel a
@@ -609,7 +788,14 @@ object Relational {
     // columns (pin orders=1). Scale note: at 100 TB the same panel
     // downgrades to approx_count_distinct (HLL, mergeable, no Expand)
     // when ±2% is acceptable — this is the declared-exact baseline.
-    "q32_multi_distinct" -> { (s, dir) =>
+    QuerySpec("q32_multi_distinct", by("o_orderstatus"),
+      """SELECT o_orderstatus,
+        |  COUNT(DISTINCT o_custkey) AS n_customers,
+        |  COUNT(DISTINCT o_orderpriority) AS n_priorities,
+        |  COUNT(DISTINCT date_trunc('month', o_orderdate)) AS n_months,
+        |  COUNT(1) AS n_orders,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spend
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
       Tables.orders(s, dir)
         .groupBy("o_orderstatus")
         .agg(
@@ -618,7 +804,6 @@ object Relational {
           countDistinct(date_trunc("month", col("o_orderdate"))).as("n_months"),
           count(lit(1)).as("n_orders"),
           asDouble(sum(dec2(col("o_totalprice")))).as("total_spend"))
-        .orderBy("o_orderstatus")
     },
 
     // Equi-width histogram with DENSIFIED empty buckets — the report
@@ -631,7 +816,20 @@ object Relational {
     // exactly why a histogram is the right 100 TB summary). The
     // single-partition lead window is over the bounded histogram, not
     // the data. Pin orders=1.
-    "q33_histogram" -> { (s, dir) =>
+    QuerySpec("q33_histogram", by("bin"),
+      """WITH h AS (
+        |  SELECT CAST(floor(o_totalprice / 512.0) AS BIGINT) AS bin,
+        |    count(1) AS n_orders,
+        |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spend
+        |  FROM orders GROUP BY 1),
+        |b AS (
+        |  SELECT unnest(generate_series((SELECT min(bin) FROM h),
+        |                                (SELECT max(bin) FROM h))) AS bin)
+        |SELECT b.bin, CAST(b.bin * 512 AS DOUBLE) AS lo_edge,
+        |  CAST((b.bin + 1) * 512 AS DOUBLE) AS hi_edge,
+        |  COALESCE(h.n_orders, 0) AS n_orders,
+        |  CAST(COALESCE(h.total_spend, 0) AS DOUBLE) AS total_spend
+        |FROM b LEFT JOIN h USING (bin) ORDER BY b.bin""".stripMargin) { (s, dir) =>
       val width = 512L
       val wLead = Window.orderBy("bin")
       Tables.orders(s, dir)
@@ -648,7 +846,6 @@ object Relational {
           ((col("bin") + 1) * width).cast("double").as("hi_edge"),
           when(col("bin") === col("obin"), col("n")).otherwise(0L).as("n_orders"),
           when(col("bin") === col("obin"), col("spend")).otherwise(0.0).as("total_spend"))
-        .orderBy("bin")
     },
 
     // Latest-row-per-key WITHOUT a sort window — the agg-argmax form
@@ -663,7 +860,18 @@ object Relational {
     // This is THE pattern for "current state per key" over an event
     // ledger at scale (b07's PIT question, answered shuffle-light).
     // Pin orders=1.
-    "q34_argmax_latest" -> { (s, dir) =>
+    QuerySpec("q34_argmax_latest", by("o_custkey"),
+      """WITH keyed AS (
+        |  SELECT o_custkey, o_orderkey, o_orderdate, o_totalprice,
+        |    CAST(date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS BIGINT)
+        |      * 10000000000 + o_orderkey AS k
+        |  FROM orders)
+        |SELECT o_custkey,
+        |  arg_max(o_orderkey, k) AS last_orderkey,
+        |  arg_max(o_orderdate, k) AS last_orderdate,
+        |  arg_max(o_totalprice, k) AS last_totalprice,
+        |  count(1) AS n_orders
+        |FROM keyed GROUP BY o_custkey ORDER BY o_custkey""".stripMargin) { (s, dir) =>
       val k = expr(
         "datediff(o_orderdate, DATE '1970-01-01') * CAST(10000000000 AS BIGINT) + o_orderkey")
       Tables.orders(s, dir)
@@ -674,7 +882,6 @@ object Relational {
           max_by(col("o_orderdate"), col("k")).as("last_orderdate"),
           max_by(col("o_totalprice"), col("k")).as("last_totalprice"),
           count(lit(1)).as("n_orders"))
-        .orderBy("o_custkey")
     },
 
     // Semi-structured extraction — the JSON payload column every event
@@ -686,7 +893,13 @@ object Relational {
     // column pruning intact (the parser only materializes requested
     // fields). Parsed key rolls up per bucket in the same pass. Pin
     // events=1.
-    "q35_json_extract" -> { (s, dir) =>
+    QuerySpec("q35_json_extract", by("k_bucket"),
+      """WITH parsed AS (
+        |  SELECT CAST(props->>'k' AS BIGINT) AS k, value FROM events)
+        |SELECT k // 10 AS k_bucket, count(1) AS n_events,
+        |  count(DISTINCT k) AS n_keys,
+        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+        |FROM parsed GROUP BY 1 ORDER BY k_bucket""".stripMargin) { (s, dir) =>
       Tables.events(s, dir)
         .withColumn("k",
           from_json(col("props"),
@@ -698,7 +911,6 @@ object Relational {
           count(lit(1)).as("n_events"),
           countDistinct(col("k")).as("n_keys"),
           asDouble(sum(dec2(col("value")))).as("total_value"))
-        .orderBy("k_bucket")
     },
 
     // MERGE/upsert semantics — apply a change-data delta onto a base
@@ -719,7 +931,26 @@ object Relational {
     // × 100 is a lossless long) — per SURVEY §4, no per-row decimal
     // value ever reaches a hash-compared column, so the result is
     // bit-identical under any engine's decimal rendering.
-    "q36_merge_upsert" -> { (s, dir) =>
+    QuerySpec("q36_merge_upsert", by("o_orderkey"),
+      """WITH base AS (
+        |  SELECT o_orderkey, o_orderstatus,
+        |    CAST(o_totalprice AS DECIMAL(18,2)) AS o_price FROM orders),
+        |delta AS (
+        |  SELECT o_orderkey, 'U' AS d_status,
+        |    CAST(CAST(o_totalprice AS DECIMAL(18,2))
+        |         + CAST(100.0 AS DECIMAL(18,2)) AS DECIMAL(18,2)) AS d_price
+        |  FROM orders WHERE o_orderkey % 7 = 0
+        |  UNION ALL
+        |  SELECT -(o_orderkey + 1), 'N', CAST(1.0 AS DECIMAL(18,2))
+        |  FROM orders WHERE o_orderkey % 1000 = 1)
+        |SELECT COALESCE(b.o_orderkey, d.o_orderkey) AS o_orderkey,
+        |  COALESCE(d.d_status, b.o_orderstatus) AS o_orderstatus,
+        |  CAST(COALESCE(d.d_price, b.o_price) * 100 AS BIGINT) AS o_price_cents,
+        |  CASE WHEN b.o_orderstatus IS NULL THEN 'insert'
+        |       WHEN d.d_status IS NULL THEN 'keep'
+        |       ELSE 'update' END AS action
+        |FROM base b FULL OUTER JOIN delta d ON b.o_orderkey = d.o_orderkey
+        |ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       val pdec = org.apache.spark.sql.types.DecimalType(18, 2)
       val base = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_orderstatus"),
@@ -751,7 +982,6 @@ object Relational {
           when(col("o_orderstatus").isNull, "insert")
             .when(col("d_status").isNull, "keep")
             .otherwise("update").as("action"))
-        .orderBy("o_orderkey")
     },
 
     // Fuzzy MATCH against a reference catalog — entity resolution's
@@ -765,7 +995,24 @@ object Relational {
     // spell-correction plan, linear in the dirty feed at any scale.
     // (A huge catalog would add q-gram blocking before the distance;
     // the bounded-dictionary case needs none.)
-    "q38_fuzzy_match" -> { (s, dir) =>
+    QuerySpec("q38_fuzzy_match", by("p_partkey"),
+      """WITH cat AS (SELECT DISTINCT p_name AS cand FROM part),
+        |dirty AS (
+        |  SELECT p_partkey,
+        |    concat(substring(p_name, 1, pos - 1), substring(p_name, pos + 1)) AS d_name
+        |  FROM (
+        |    SELECT p_partkey, p_name,
+        |      CAST(p_partkey % greatest(length(p_name) - 2, 1) AS INT) + 2 AS pos
+        |    FROM part WHERE p_partkey % 3 = 0) t),
+        |ranked AS (
+        |  SELECT d.p_partkey, d.d_name, c.cand,
+        |    levenshtein(d.d_name, c.cand) AS dist,
+        |    row_number() OVER (PARTITION BY d.p_partkey
+        |      ORDER BY levenshtein(d.d_name, c.cand) ASC, c.cand ASC) AS rn
+        |  FROM dirty d CROSS JOIN cat c)
+        |SELECT p_partkey, d_name, cand AS best_name, dist AS best_dist,
+        |  dist <= 2 AS matched
+        |FROM ranked WHERE rn = 1 ORDER BY p_partkey""".stripMargin) { (s, dir) =>
       val cat = Tables.part(s, dir).select(col("p_name").as("cand")).distinct()
       val dirty = Tables.part(s, dir)
         .filter(col("p_partkey") % 3 === 0)
@@ -786,7 +1033,6 @@ object Relational {
         .select(col("p_partkey"), col("d_name"),
           col("b.cand").as("best_name"), col("b.dist").as("best_dist"),
           (col("b.dist") <= 2).as("matched"))
-        .orderBy("p_partkey")
     },
 
     // q38's declared HUGE-CATALOG scale path, landed as code (the
@@ -811,7 +1057,28 @@ object Relational {
     // NOT pre-deduped: min is idempotent and the map-side partial agg
     // absorbs them — cheaper than a distinct exchange on wide strings.
     // Reference analogue: impl/SSTableUtils.java name matching.
-    "q39_fuzzy_blocked" -> { (s, dir) =>
+    QuerySpec("q39_fuzzy_blocked", by("p_partkey"),
+      // q39 is q38's blocked scale variant with PROVABLY identical
+      // output (deletion-gram blocking is exact for dist ≤ 1, and the
+      // fixture's best is always ≤ 1) — the oracle is q38's verbatim:
+      // the hash gate itself certifies the equality at every SF.
+      """WITH cat AS (SELECT DISTINCT p_name AS cand FROM part),
+        |dirty AS (
+        |  SELECT p_partkey,
+        |    concat(substring(p_name, 1, pos - 1), substring(p_name, pos + 1)) AS d_name
+        |  FROM (
+        |    SELECT p_partkey, p_name,
+        |      CAST(p_partkey % greatest(length(p_name) - 2, 1) AS INT) + 2 AS pos
+        |    FROM part WHERE p_partkey % 3 = 0) t),
+        |ranked AS (
+        |  SELECT d.p_partkey, d.d_name, c.cand,
+        |    levenshtein(d.d_name, c.cand) AS dist,
+        |    row_number() OVER (PARTITION BY d.p_partkey
+        |      ORDER BY levenshtein(d.d_name, c.cand) ASC, c.cand ASC) AS rn
+        |  FROM dirty d CROSS JOIN cat c)
+        |SELECT p_partkey, d_name, cand AS best_name, dist AS best_dist,
+        |  dist <= 2 AS matched
+        |FROM ranked WHERE rn = 1 ORDER BY p_partkey""".stripMargin) { (s, dir) =>
       // deletion neighborhood of column `c` (a NAME, spliced into SQL):
       // the string itself ∪ every one-char deletion, per-row deduped
       def delKeys(c: String) = expr(
@@ -836,7 +1103,6 @@ object Relational {
         .select(col("p_partkey"), col("d_name"),
           col("b.cand").as("best_name"), col("b.dist").as("best_dist"),
           (col("b.dist") <= 2).as("matched"))
-        .orderBy("p_partkey")
     },
 
     // Sliding COUNT(DISTINCT) — trailing-7-day distinct active users
@@ -849,7 +1115,17 @@ object Relational {
     // finishes. Beats 7 self-joins or any per-day re-scan; window days
     // are clamped to days present in the data via a broadcast semi
     // join against the bounded day dimension.
-    "q37_sliding_distinct" -> { (s, dir) =>
+    QuerySpec("q37_sliding_distinct", by("win_day"),
+      """WITH du AS (
+        |  SELECT DISTINCT CAST(date_trunc('day', ts) AS DATE) AS day, user_id
+        |  FROM events),
+        |contrib AS (
+        |  SELECT du.day + CAST(x.off AS INTEGER) AS win_day, du.user_id
+        |  FROM du, UNNEST(range(0, 7)) x(off))
+        |SELECT win_day, count(DISTINCT user_id) AS active_7d
+        |FROM contrib
+        |WHERE win_day IN (SELECT day FROM du)
+        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
       val du = Tables.events(s, dir)
         .select(date_trunc("day", col("ts")).cast("date").as("day"), col("user_id"))
         .distinct()
@@ -860,398 +1136,6 @@ object Relational {
         .join(broadcast(days), Seq("win_day"), "left_semi")
         .groupBy("win_day")
         .agg(countDistinct(col("user_id")).as("active_7d"))
-        .orderBy("win_day")
     }
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q01_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(1) AS avg_qty,
-        |  CAST(SUM(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) / COUNT(1) AS avg_disc,
-        |  COUNT(1) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q02_filter_project" ->
-      """SELECT
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-        |  COUNT(1) AS n_rows
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
-        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 25""".stripMargin,
-
-    "q03_join_agg" ->
-      """SELECT c_mktsegment,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-        |  COUNT(DISTINCT o_orderkey) AS n_orders
-        |FROM customer JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    "q04_semi_join" ->
-      """SELECT o_orderpriority, COUNT(1) AS n FROM orders
-        |WHERE EXISTS (SELECT 1 FROM lineitem
-        |  WHERE l_orderkey = o_orderkey AND l_quantity >= 45)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "q05_anti_join" ->
-      """SELECT c_custkey, c_name, c_mktsegment FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |  WHERE o_custkey = c_custkey AND o_totalprice > 300000)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q06_topk" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 15""".stripMargin,
-
-    "q07_window_rank" ->
-      """SELECT o_custkey, o_orderkey, rn FROM (
-        |  SELECT o_custkey, o_orderkey,
-        |    ROW_NUMBER() OVER (PARTITION BY o_custkey
-        |      ORDER BY o_orderdate DESC, o_orderkey ASC) AS rn
-        |  FROM orders) t
-        |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin,
-
-    "q08_distinct" ->
-      """SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders
-        |ORDER BY o_orderstatus, o_orderpriority""".stripMargin,
-
-    "q09_union_all" ->
-      """SELECT src, COUNT(1) AS n,
-        |  CAST(SUM(CAST(bal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
-        |FROM (
-        |  SELECT 'customer' AS src, c_acctbal AS bal FROM customer
-        |  UNION ALL
-        |  SELECT 'supplier' AS src, s_acctbal AS bal FROM supplier) u
-        |GROUP BY src ORDER BY src""".stripMargin,
-
-    "q10_rollup" ->
-      """SELECT coalesce(r_name, 'ALL') AS region, coalesce(n_name, 'ALL') AS nation,
-        |  COUNT(1) AS n_cust,
-        |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY ROLLUP (r_name, n_name)
-        |ORDER BY region, nation""".stripMargin,
-
-    "q11_having" ->
-      """SELECT l_suppkey,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price,
-        |  COUNT(1) AS n_lines
-        |FROM lineitem GROUP BY l_suppkey
-        |HAVING CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) > 18000000
-        |ORDER BY l_suppkey""".stripMargin,
-
-    "q12_case_when" ->
-      """SELECT CASE WHEN o_totalprice < 50000 THEN 'small'
-        |            WHEN o_totalprice < 200000 THEN 'medium'
-        |            ELSE 'large' END AS bucket,
-        |  COUNT(1) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin,
-
-    "q13_time_bucket" ->
-      """SELECT CAST(date_trunc('day', ts) AS DATE) AS day, event_type,
-        |  COUNT(1) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin,
-
-    "q14_string_funcs" ->
-      """SELECT p_partkey, upper(p_name) AS up_name, length(p_name) AS name_len,
-        |  string_split(p_name, ' ')[1] AS first_word,
-        |  concat(p_brand, '/', p_type) AS brand_type
-        |FROM part WHERE p_name LIKE '%widget%' ORDER BY p_partkey""".stripMargin,
-
-    "q15_scalar_subquery" ->
-      """SELECT p_partkey, p_retailprice FROM part
-        |WHERE p_retailprice > (
-        |  SELECT CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(1)
-        |  FROM part)
-        |ORDER BY p_partkey""".stripMargin,
-
-    "q16_broadcast_join" ->
-      """SELECT r_name, COUNT(1) AS n_cust,
-        |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name ORDER BY r_name""".stripMargin,
-
-    "q17_multi_join" ->
-      """SELECT n_name,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE o_orderdate >= TIMESTAMP '1995-01-01' AND o_orderdate < TIMESTAMP '1999-01-01'
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-
-    "q18_exists_corr" ->
-      """SELECT c_mktsegment, COUNT(1) AS n_cust FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders
-        |  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    "q19_grouping_sets" ->
-      """SELECT coalesce(o_orderstatus, 'ALL') AS status,
-        |  coalesce(o_orderpriority, 'ALL') AS priority,
-        |  COUNT(1) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        |ORDER BY status, priority""".stripMargin,
-
-    "q20_pivot" ->
-      """SELECT o_orderpriority,
-        |  COUNT(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS n_f,
-        |  COUNT(CASE WHEN o_orderstatus = 'O' THEN 1 END) AS n_o,
-        |  COUNT(CASE WHEN o_orderstatus = 'P' THEN 1 END) AS n_p
-        |FROM orders GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-
-    "q21_lead_lag" ->
-      """SELECT o_custkey, o_orderkey, gap_days, price_delta, next_key FROM (
-        |  SELECT o_custkey, o_orderkey,
-        |    CAST(date_diff('day',
-        |      CAST(lag(o_orderdate) OVER w AS DATE),
-        |      CAST(o_orderdate AS DATE)) AS BIGINT) AS gap_days,
-        |    CAST(CAST(o_totalprice AS DECIMAL(18,2))
-        |      - CAST(lag(o_totalprice) OVER w AS DECIMAL(18,2)) AS DOUBLE) AS price_delta,
-        |    lead(o_orderkey) OVER w AS next_key,
-        |    lag(o_orderdate) OVER w AS prev_date
-        |  FROM orders
-        |  WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC)
-        |) t WHERE prev_date IS NOT NULL
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-
-    "q22_setops" ->
-      """WITH y95 AS (SELECT o_custkey FROM orders
-        |  WHERE o_orderdate >= TIMESTAMP '1995-01-01' AND o_orderdate < TIMESTAMP '1996-01-01'),
-        |y96 AS (SELECT o_custkey FROM orders
-        |  WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01')
-        |SELECT 'both' AS kind, o_custkey
-        |FROM (SELECT o_custkey FROM y95 INTERSECT SELECT o_custkey FROM y96) a
-        |UNION ALL
-        |SELECT 'only_1995' AS kind, o_custkey
-        |FROM (SELECT o_custkey FROM y95 EXCEPT SELECT o_custkey FROM y96) b
-        |ORDER BY kind, o_custkey""".stripMargin,
-
-    "q23_running_sum" ->
-      """SELECT o_custkey, o_orderkey,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER w AS DOUBLE) AS run_spend,
-        |  count(1) OVER w AS run_orders
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey
-        |  ORDER BY o_orderdate ASC, o_orderkey ASC
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-
-    "q24_not_in" ->
-      """SELECT c_nationkey, count(1) AS n_cust,
-        |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
-        |FROM customer
-        |WHERE c_nationkey NOT IN (
-        |  SELECT s_nationkey FROM supplier WHERE CAST(s_acctbal AS DOUBLE) < 0)
-        |GROUP BY c_nationkey
-        |ORDER BY c_nationkey""".stripMargin,
-
-    "q25_lateral" ->
-      """SELECT c.c_custkey, t.o_orderkey, t.price
-        |FROM customer c,
-        |LATERAL (SELECT o_orderkey,
-        |                CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS price
-        |         FROM orders o WHERE o.o_custkey = c.c_custkey
-        |         ORDER BY price DESC, o_orderkey LIMIT 3) t
-        |ORDER BY c_custkey, price DESC, o_orderkey""".stripMargin,
-
-    "q26_cube" ->
-      """SELECT coalesce(o_orderstatus, 'ALL') AS status,
-        |  coalesce(o_orderpriority, 'ALL') AS priority,
-        |  COUNT(1) AS n_orders,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders
-        |GROUP BY CUBE (o_orderstatus, o_orderpriority)
-        |ORDER BY status, priority""".stripMargin,
-
-    "q27_range_frame" ->
-      """SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS order_day,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER w AS DOUBLE) AS spend_30d,
-        |  count(1) OVER w AS n_30d
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY CAST(o_orderdate AS DATE)
-        |  RANGE BETWEEN INTERVAL 30 DAYS PRECEDING AND CURRENT ROW)
-        |ORDER BY o_custkey, order_day, o_orderkey""".stripMargin,
-
-    // DuckDB plans the bare containment condition with its native
-    // IEJoin — same semantics, no bins needed on the oracle side.
-    "q28_interval_join" ->
-      """SELECT o_orderkey, CAST(o_orderdate AS DATE) AS order_day,
-        |  count(l.w_start) AS n_inflight
-        |FROM orders o LEFT JOIN (
-        |  SELECT l_shipdate AS w_start,
-        |    l_shipdate + (CAST(l_quantity AS INT) % 7 + 1) * INTERVAL 1 DAY AS w_end
-        |  FROM lineitem WHERE l_quantity >= 45) l
-        |ON l.w_start <= o.o_orderdate AND o.o_orderdate < l.w_end
-        |GROUP BY o_orderkey, order_day
-        |ORDER BY o_orderkey""".stripMargin,
-
-    // quantile_disc follows the percentile_disc convention: the
-    // element at 1-based rank ceil(q·n) of the sorted group — exactly
-    // the integer index the Spark side computes.
-    "q29_quartiles" ->
-      """SELECT o_orderpriority, count(1) AS n_orders,
-        |  quantile_disc(o_totalprice, 0.25) AS p25,
-        |  quantile_disc(o_totalprice, 0.50) AS p50,
-        |  quantile_disc(o_totalprice, 0.75) AS p75,
-        |  min(o_totalprice) AS lo, max(o_totalprice) AS hi
-        |FROM orders GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-
-    "q30_unpivot" ->
-      """WITH wide AS (
-        |  SELECT o_orderstatus,
-        |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price,
-        |    CAST(count(1) AS DOUBLE) AS n_orders,
-        |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / count(1) AS avg_price
-        |  FROM orders GROUP BY o_orderstatus)
-        |SELECT o_orderstatus, measure, value FROM wide
-        |UNPIVOT (value FOR measure IN (total_price, n_orders, avg_price))
-        |ORDER BY o_orderstatus, measure""".stripMargin,
-
-    "q31_ntile" ->
-      """WITH t AS (
-        |  SELECT o_totalprice,
-        |    CAST(NTILE(10) OVER (ORDER BY o_totalprice, o_orderkey) AS BIGINT) AS decile
-        |  FROM orders)
-        |SELECT decile, count(1) AS n_orders,
-        |  min(o_totalprice) AS lo, max(o_totalprice) AS hi,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spend
-        |FROM t GROUP BY decile ORDER BY decile""".stripMargin,
-
-    "q32_multi_distinct" ->
-      """SELECT o_orderstatus,
-        |  COUNT(DISTINCT o_custkey) AS n_customers,
-        |  COUNT(DISTINCT o_orderpriority) AS n_priorities,
-        |  COUNT(DISTINCT date_trunc('month', o_orderdate)) AS n_months,
-        |  COUNT(1) AS n_orders,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spend
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "q33_histogram" ->
-      """WITH h AS (
-        |  SELECT CAST(floor(o_totalprice / 512.0) AS BIGINT) AS bin,
-        |    count(1) AS n_orders,
-        |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spend
-        |  FROM orders GROUP BY 1),
-        |b AS (
-        |  SELECT unnest(generate_series((SELECT min(bin) FROM h),
-        |                                (SELECT max(bin) FROM h))) AS bin)
-        |SELECT b.bin, CAST(b.bin * 512 AS DOUBLE) AS lo_edge,
-        |  CAST((b.bin + 1) * 512 AS DOUBLE) AS hi_edge,
-        |  COALESCE(h.n_orders, 0) AS n_orders,
-        |  CAST(COALESCE(h.total_spend, 0) AS DOUBLE) AS total_spend
-        |FROM b LEFT JOIN h USING (bin) ORDER BY b.bin""".stripMargin,
-
-    "q34_argmax_latest" ->
-      """WITH keyed AS (
-        |  SELECT o_custkey, o_orderkey, o_orderdate, o_totalprice,
-        |    CAST(date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS BIGINT)
-        |      * 10000000000 + o_orderkey AS k
-        |  FROM orders)
-        |SELECT o_custkey,
-        |  arg_max(o_orderkey, k) AS last_orderkey,
-        |  arg_max(o_orderdate, k) AS last_orderdate,
-        |  arg_max(o_totalprice, k) AS last_totalprice,
-        |  count(1) AS n_orders
-        |FROM keyed GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-
-    "q35_json_extract" ->
-      """WITH parsed AS (
-        |  SELECT CAST(props->>'k' AS BIGINT) AS k, value FROM events)
-        |SELECT k // 10 AS k_bucket, count(1) AS n_events,
-        |  count(DISTINCT k) AS n_keys,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM parsed GROUP BY 1 ORDER BY k_bucket""".stripMargin,
-
-    "q36_merge_upsert" ->
-      """WITH base AS (
-        |  SELECT o_orderkey, o_orderstatus,
-        |    CAST(o_totalprice AS DECIMAL(18,2)) AS o_price FROM orders),
-        |delta AS (
-        |  SELECT o_orderkey, 'U' AS d_status,
-        |    CAST(CAST(o_totalprice AS DECIMAL(18,2))
-        |         + CAST(100.0 AS DECIMAL(18,2)) AS DECIMAL(18,2)) AS d_price
-        |  FROM orders WHERE o_orderkey % 7 = 0
-        |  UNION ALL
-        |  SELECT -(o_orderkey + 1), 'N', CAST(1.0 AS DECIMAL(18,2))
-        |  FROM orders WHERE o_orderkey % 1000 = 1)
-        |SELECT COALESCE(b.o_orderkey, d.o_orderkey) AS o_orderkey,
-        |  COALESCE(d.d_status, b.o_orderstatus) AS o_orderstatus,
-        |  CAST(COALESCE(d.d_price, b.o_price) * 100 AS BIGINT) AS o_price_cents,
-        |  CASE WHEN b.o_orderstatus IS NULL THEN 'insert'
-        |       WHEN d.d_status IS NULL THEN 'keep'
-        |       ELSE 'update' END AS action
-        |FROM base b FULL OUTER JOIN delta d ON b.o_orderkey = d.o_orderkey
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q38_fuzzy_match" ->
-      """WITH cat AS (SELECT DISTINCT p_name AS cand FROM part),
-        |dirty AS (
-        |  SELECT p_partkey,
-        |    concat(substring(p_name, 1, pos - 1), substring(p_name, pos + 1)) AS d_name
-        |  FROM (
-        |    SELECT p_partkey, p_name,
-        |      CAST(p_partkey % greatest(length(p_name) - 2, 1) AS INT) + 2 AS pos
-        |    FROM part WHERE p_partkey % 3 = 0) t),
-        |ranked AS (
-        |  SELECT d.p_partkey, d.d_name, c.cand,
-        |    levenshtein(d.d_name, c.cand) AS dist,
-        |    row_number() OVER (PARTITION BY d.p_partkey
-        |      ORDER BY levenshtein(d.d_name, c.cand) ASC, c.cand ASC) AS rn
-        |  FROM dirty d CROSS JOIN cat c)
-        |SELECT p_partkey, d_name, cand AS best_name, dist AS best_dist,
-        |  dist <= 2 AS matched
-        |FROM ranked WHERE rn = 1 ORDER BY p_partkey""".stripMargin,
-
-    // q39 is q38's blocked scale variant with PROVABLY identical
-    // output (deletion-gram blocking is exact for dist ≤ 1, and the
-    // fixture's best is always ≤ 1) — the oracle is q38's verbatim:
-    // the hash gate itself certifies the equality at every SF.
-    "q39_fuzzy_blocked" ->
-      """WITH cat AS (SELECT DISTINCT p_name AS cand FROM part),
-        |dirty AS (
-        |  SELECT p_partkey,
-        |    concat(substring(p_name, 1, pos - 1), substring(p_name, pos + 1)) AS d_name
-        |  FROM (
-        |    SELECT p_partkey, p_name,
-        |      CAST(p_partkey % greatest(length(p_name) - 2, 1) AS INT) + 2 AS pos
-        |    FROM part WHERE p_partkey % 3 = 0) t),
-        |ranked AS (
-        |  SELECT d.p_partkey, d.d_name, c.cand,
-        |    levenshtein(d.d_name, c.cand) AS dist,
-        |    row_number() OVER (PARTITION BY d.p_partkey
-        |      ORDER BY levenshtein(d.d_name, c.cand) ASC, c.cand ASC) AS rn
-        |  FROM dirty d CROSS JOIN cat c)
-        |SELECT p_partkey, d_name, cand AS best_name, dist AS best_dist,
-        |  dist <= 2 AS matched
-        |FROM ranked WHERE rn = 1 ORDER BY p_partkey""".stripMargin,
-
-    "q37_sliding_distinct" ->
-      """WITH du AS (
-        |  SELECT DISTINCT CAST(date_trunc('day', ts) AS DATE) AS day, user_id
-        |  FROM events),
-        |contrib AS (
-        |  SELECT du.day + CAST(x.off AS INTEGER) AS win_day, du.user_id
-        |  FROM du, UNNEST(range(0, 7)) x(off))
-        |SELECT win_day, count(DISTINCT user_id) AS active_7d
-        |FROM contrib
-        |WHERE win_day IN (SELECT day FROM du)
-        |GROUP BY 1 ORDER BY 1""".stripMargin
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions._
+import graft.operators.QuerySpec.by
 import graft.sources.Tables
 import graft.streaming.EventStream
 
@@ -12,93 +13,153 @@ import graft.streaming.EventStream
   * proves the same transform over `readStream` produces the same
   * rows).
   */
-object Streaming {
+object Streaming extends QueryModule {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
+  val specs: Seq[QuerySpec] = Seq(
     // Tumbling 1-hour window aggregation — the exact DataFrame transform
     // the streaming job runs (watermark is a no-op on batch input).
-    "s01_stream_window" -> { (s, dir) =>
+    QuerySpec("s01_stream_window", by("hour", "event_type"),
+      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour, event_type,
+        |  COUNT(1) AS n,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+        |FROM events GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin) { (s, dir) =>
       EventStream.hourlyAgg(Tables.events(s, dir))
-        .orderBy("hour", "event_type")
     },
 
     // Deterministic dedup: first event (min event_id) per
     // (user_id, event_type) — batch twin of the streaming dropDuplicates.
-    "s02_stream_dedup" -> { (s, dir) =>
+    QuerySpec("s02_stream_dedup", by("user_id", "event_type"),
+      """SELECT user_id, event_type, MIN(event_id) AS first_event,
+        |  COUNT(1) AS n_events
+        |FROM events GROUP BY user_id, event_type
+        |ORDER BY user_id, event_type""".stripMargin) { (s, dir) =>
       Tables.events(s, dir)
         .groupBy("user_id", "event_type")
         .agg(min(col("event_id")).as("first_event"), count(lit(1)).as("n_events"))
-        .orderBy("user_id", "event_type")
     },
 
     // Stream-static broadcast enrichment, rolled up per dimension row —
     // the join is the exact transform the streaming job runs.
-    "s06_stream_enrich" -> { (s, dir) =>
+    QuerySpec("s06_stream_enrich", by("n_name"),
+      """SELECT n.n_name, COUNT(1) AS n_events,
+        |  CAST(SUM(CAST(e.value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+        |FROM events e JOIN nation n ON e.user_id % 25 = n.n_nationkey
+        |GROUP BY 1 ORDER BY n_name""".stripMargin) { (s, dir) =>
       EventStream.enrich(Tables.events(s, dir), Tables.nation(s, dir))
         .groupBy("n_name")
         .agg(count(lit(1)).as("n_events"),
           asDouble(sum(dec2(col("value")))).as("total_value"))
-        .orderBy("n_name")
     },
 
     // Live backup monitoring: the ledger's per-(day, node) manifest
     // report as the exact transform the streaming job runs (day
     // windows ≡ snapshot days on batch input).
-    "s07_backup_monitor" -> { (s, dir) =>
+    QuerySpec("s07_backup_monitor", by("snapshot_day", "node_id"),
+      """SELECT CAST(date_trunc('day', ts) AS DATE) AS snapshot_day,
+        |  user_id AS node_id, COUNT(1) AS n_uploads,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_bytes
+        |FROM events GROUP BY 1, 2 ORDER BY snapshot_day, node_id""".stripMargin) { (s, dir) =>
       EventStream.backupMonitor(Tables.events(s, dir))
-        .orderBy("snapshot_day", "node_id")
     },
 
     // Live upload-progress tracking — the b26 tracker report as the
     // exact transform the streaming job runs (no NOT_STARTED class:
     // un-arrived events are not yet units in a live tracker).
-    "s09_stream_progress" -> { (s, dir) =>
+    QuerySpec("s09_stream_progress", by("snapshot_day", "node_id"),
+      """WITH st AS (
+        |  SELECT CAST(date_trunc('day', ts) AS DATE) AS snapshot_day,
+        |    user_id AS node_id,
+        |    CASE WHEN event_id % 41 = 0 THEN 'FAILED'
+        |         WHEN event_id % 37 = 0 THEN 'IGNORED'
+        |         ELSE 'FINISHED' END AS state
+        |  FROM events)
+        |SELECT snapshot_day, node_id, count(1) AS n_units,
+        |  count(CASE WHEN state = 'FAILED' THEN 1 END) AS n_failed,
+        |  count(CASE WHEN state = 'IGNORED' THEN 1 END) AS n_ignored,
+        |  CAST(count(1) - count(CASE WHEN state = 'FAILED' THEN 1 END)
+        |       - count(CASE WHEN state = 'IGNORED' THEN 1 END) AS DOUBLE)
+        |    / count(1) AS ok_ratio
+        |FROM st GROUP BY 1, 2 ORDER BY snapshot_day, node_id""".stripMargin) { (s, dir) =>
       EventStream.progressMonitor(Tables.events(s, dir))
-        .orderBy("snapshot_day", "node_id")
     },
 
     // Sliding-window aggregation — the same DataFrame transform the
     // streaming job runs; the oracle expands each event into its two
     // overlapping windows explicitly.
-    "s05_sliding_window" -> { (s, dir) =>
+    QuerySpec("s05_sliding_window", by("win_start", "event_type"),
+      """SELECT win_start, event_type, COUNT(1) AS n,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+        |FROM (
+        |  SELECT time_bucket(INTERVAL '30 minutes', CAST(ts AS TIMESTAMP))
+        |           - (k * INTERVAL '30 minutes') AS win_start,
+        |         event_type, value
+        |  FROM events, UNNEST(range(0, 2)) t(k)) x
+        |GROUP BY 1, 2 ORDER BY win_start, event_type""".stripMargin) { (s, dir) =>
       EventStream.slidingAgg(Tables.events(s, dir))
-        .orderBy("win_start", "event_type")
     },
 
     // Streaming corpus curation — the document-feed quality gate as
     // the exact transform the streaming job runs (per-row kernel
     // scoring shared with d09, bounded (lang, source) state).
-    "s08_corpus_curate" -> { (s, dir) =>
+    QuerySpec("s08_corpus_curate", by("lang", "source"),
+      s"""WITH d AS (
+         |  SELECT lang, source, text, string_split(${graft.model.Corpus.normSql}, ' ') AS ws
+         |  FROM documents),
+         |scored AS (
+         |  SELECT lang, source,
+         |    CAST(len(ws) AS BIGINT) AS n_words,
+         |    CAST(len(list_filter(ws, w -> list_contains(${TextAnalysis.enStopSqlList}, w))) AS DOUBLE)
+         |      / greatest(len(ws), 1)
+         |    - CAST(length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
+         |      / greatest(length(text), 1)
+         |    + CASE WHEN len(ws) BETWEEN 5 AND 200 THEN 0.1 ELSE 0.0 END AS quality
+         |  FROM d)
+         |SELECT lang, source, COUNT(1) AS n_docs,
+         |  CAST(SUM(CASE WHEN quality >= 0.1 THEN 1 ELSE 0 END) AS BIGINT) AS n_keep,
+         |  CAST(SUM(n_words) AS BIGINT) AS total_words
+         |FROM scored GROUP BY lang, source ORDER BY lang, source""".stripMargin) { (s, dir) =>
       graft.streaming.DocStream.curate(Tables.documents(s, dir))
-        .orderBy("lang", "source")
     },
 
     // Streaming frame sampler — the d18 media transform as clips land:
     // stateless per-row bounded explode, no watermark, no state at
     // all. The batch twin is d18 itself (shared transform + oracle).
-    "s12_stream_frames" -> { (s, dir) =>
+    QuerySpec("s12_stream_frames", by("doc_id", "frame_idx"),
+      // the streaming frame sampler is the d18 transform verbatim — the
+      // oracle is shared the same way s11 shares b07's
+      Multimodal.oracle("d18_frame_sample")) { (s, dir) =>
       Multimodal.frameSample(Tables.documents(s, dir))
-        .orderBy("doc_id", "frame_idx")
     },
 
     // Streaming PIT tracker — the same running-max transform the
     // streaming job runs (complete-mode state bounded by node×key),
     // applied to the batch table. Value-equal to b07's window
     // formulation (same oracle; equality also spec-proven).
-    "s11_stream_pit" -> { (s, dir) =>
+    QuerySpec("s11_stream_pit", by("node_id", "k"),
+      // identical output contract to b07 — the PIT question asked of the
+      // stream must get the batch answer, so it shares the oracle text
+      Backup.oracle("b07_pit_state")) { (s, dir) =>
       graft.streaming.EventStream.pitTracker(Tables.events(s, dir))
-        .orderBy("node_id", "k")
     },
 
     // Streaming boilerplate gate — the same transform the streaming
     // job runs (stream-static tile-index join, bounded (lang, source)
     // aggregate), applied to the batch table.
-    "s10_stream_boilerplate" -> { (s, dir) =>
+    QuerySpec("s10_stream_boilerplate", by("lang", "source"),
+      graft.model.Corpus.docsCte + graft.model.Corpus.tilesCte +
+      """, idx AS (SELECT DISTINCT tile FROM tiles WHERE doc_id % 3 = 0)
+        |SELECT lang, source, n_tiles, n_known,
+        |  CAST(n_known AS DOUBLE) / n_tiles AS known_frac
+        |FROM (
+        |  SELECT t.lang, t.source, count(1) AS n_tiles,
+        |    CAST(sum(CASE WHEN i.tile IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_known
+        |  FROM tiles t LEFT JOIN idx i ON t.tile = i.tile
+        |  WHERE t.doc_id % 3 <> 0
+        |  GROUP BY t.lang, t.source) r
+        |ORDER BY lang, source""".stripMargin) { (s, dir) =>
       graft.streaming.DocStream.boilerplateGate(
           graft.streaming.DocStream.tileIndex(s, dir))(
           Tables.documents(s, dir))
-        .orderBy("lang", "source")
     },
 
     // Streaming decontamination — the d22 question asked at INGESTION:
@@ -106,11 +167,14 @@ object Streaming {
     // (d43's sorted-probe kernel against the broadcast bench array),
     // applied to the batch table. Output contract ≡ d22 (shared
     // oracle); stream ≡ batch proven in EventStreamSpec.
-    "s13_stream_decon" -> { (s, dir) =>
+    QuerySpec("s13_stream_decon", by("doc_id"),
+      // the streaming decon gate answers d22's question with d43's
+      // kernel — value-identical to the batch join formulation, so it
+      // shares d22's oracle text
+      Curation.oracle("d22_decontaminate")) { (s, dir) =>
       graft.streaming.DocStream.deconGate(
           graft.streaming.DocStream.benchGramIndex(s, dir))(
           Tables.documents(s, dir))
-        .orderBy("doc_id")
     },
 
     // Streaming media-ingest quarantine — the d44 audit asked at
@@ -121,10 +185,12 @@ object Streaming {
     // oracle-predictable pack+damage FIXTURE is composed in front, as
     // in d44. Output contract ≡ d44 (shared oracle); stream ≡ batch
     // proven in EventStreamSpec.
-    "s14_stream_quarantine" -> { (s, dir) =>
+    QuerySpec("s14_stream_quarantine", by("err_kind"),
+      // the streaming quarantine gate is the d44 audit verbatim — the
+      // oracle is shared the same way s12 shares d18's
+      Multimodal.oracle("d44_media_quarantine")) { (s, dir) =>
       Multimodal.quarantineAudit(
           Multimodal.packDamagedFixture(Tables.documents(s, dir)))
-        .orderBy("err_kind")
     },
 
     // Streaming metadata sweep — the d47 question asked at INGESTION:
@@ -134,8 +200,11 @@ object Streaming {
     // backfill and the live stream run the SAME transform at scan cost.
     // Output contract ≡ d47 (shared transform + oracle); stream ≡ batch
     // proven in EventStreamSpec.
-    "s15_stream_dims" -> { (s, dir) =>
-      Multimodal.dimsSweep(Tables.documents(s, dir)).orderBy("doc_id")
+    QuerySpec("s15_stream_dims", by("doc_id"),
+      // the streaming dims sweep is the d47 transform verbatim — the
+      // oracle is shared the same way s12 shares d18's
+      Multimodal.oracle("d47_media_dims")) { (s, dir) =>
+      Multimodal.dimsSweep(Tables.documents(s, dir))
     },
 
     // Streaming incremental ingest — the d49 freshen decision made as
@@ -147,9 +216,11 @@ object Streaming {
     // store), append mode; backfill and live feed run the SAME
     // transform. Output contract ≡ d49 (shared transform + oracle);
     // stream ≡ batch proven in EventStreamSpec.
-    "s16_stream_ingest" -> { (s, dir) =>
+    QuerySpec("s16_stream_ingest", by("doc_id"),
+      // the streaming freshen gate is the d49 transform verbatim
+      // (stream-static anti-join against the same persisted ledger)
+      Curation.oracle("d49_incremental_ingest")) { (s, dir) =>
       Curation.incrementalIngest(Tables.documents(s, dir), Curation.ingestLedger(s, dir))
-        .orderBy("doc_id")
     },
 
     // Streaming ANN routing — the scatter step of a distributed ANN
@@ -160,10 +231,13 @@ object Streaming {
     // the per-cell search runs shard-side (d50's cell join) — a router
     // only decides WHERE each query goes. Stream ≡ batch proven in
     // VecStreamSpec.
-    "s17_stream_ann_route" -> { (s, dir) =>
+    QuerySpec("s17_stream_ann_route", by("vec_id"),
+      // the routing decision probed against the index centroid table —
+      // the SQL rebuilds cents1 exactly (the persisted index is exact
+      // state, same sharing rationale as d50 ← d15)
+      Similarity.annRouteSql) { (s, dir) =>
       val cents = graft.sources.IO.readParquet(s, Similarity.annIndexCents(s, dir))
       Similarity.annRoute(cents)(graft.model.Corpus.qvecs(s, dir))
-        .orderBy("vec_id")
     },
 
     // Streaming outlier gate — d87's audit question asked at
@@ -172,11 +246,15 @@ object Streaming {
     // stats both load from the index, the corpus is never touched) —
     // a corrupt vector is flagged before it enters the index.
     // Stateless per-row, append mode; stream ≡ batch in AnnIndexSpec.
-    "s34_stream_outliers" -> { (s, dir) =>
+    QuerySpec("s34_stream_outliers", by("vec_id"),
+      // the ingest-side outlier verdict per arriving vector — d87's
+      // audit CTEs (assignment + per-cell stats), un-filtered: the SQL
+      // rebuilds the cell stats exactly as the persisted artifact holds
+      // them (same exact-state sharing rationale as s17 ← d50)
+      Similarity.outlierGateSql) { (s, dir) =>
       val cents = graft.sources.IO.readParquet(s, Similarity.annIndexCents(s, dir))
       val stats = graft.sources.IO.readParquet(s, Similarity.annIndexCellStats(s, dir))
       Similarity.outlierGate(cents, stats)(graft.model.Corpus.qvecs(s, dir))
-        .orderBy("vec_id")
     },
 
     // Streaming semantic-dedup gate — d35's cluster-dedup decision
@@ -186,11 +264,14 @@ object Streaming {
     // broadcast) — one cosine per arrival decides rep/drop/keep
     // before the vector ever reaches the corpus. Stateless per-row,
     // append mode; stream ≡ batch proven in AnnIndexSpec.
-    "s35_stream_semdedup" -> { (s, dir) =>
+    QuerySpec("s35_stream_semdedup", by("vec_id"),
+      // the ingest-side semantic-dedup verdict — d35's rep scoring
+      // against the refined index cells; the SQL rebuilds assignment +
+      // rep election exactly as the persisted reps artifact holds them
+      Similarity.semdedupGateSql) { (s, dir) =>
       val cents = graft.sources.IO.readParquet(s, Similarity.annIndexCents(s, dir))
       val reps = graft.sources.IO.readParquet(s, Similarity.annIndexReps(s, dir))
       Similarity.semdedupGate(cents, reps)(graft.model.Corpus.qvecs(s, dir))
-        .orderBy("vec_id")
     },
 
     // Streaming community-routing gate — the d95/d97 nightly
@@ -203,10 +284,13 @@ object Streaming {
     // argmin is a per-row fold — no aggregation, no state store, no
     // shuffle of the feed), append mode; backfill and live feed run
     // the SAME transform. Stream ≡ batch proven in AnnIndexSpec.
-    "s38_stream_communities" -> { (s, dir) =>
+    QuerySpec("s38_stream_communities", by("vec_id"),
+      // the ingest-side community routing — the full community + medoid
+      // election rebuilt in SQL (the persisted medoid artifact is exact
+      // state over the indexed population), then nearest-medoid argmin
+      Similarity.communityGateSql) { (s, dir) =>
       val meds = graft.sources.IO.readParquet(s, Similarity.annIndexMedoids(s, dir))
       Similarity.communityGate(meds)(graft.model.Corpus.qvecs(s, dir))
-        .orderBy("vec_id")
     },
 
     // The s38 gate's declared 100 TB form — same medoid artifact,
@@ -218,9 +302,12 @@ object Streaming {
     // precedent; AnnIndexSpec pins row-for-row equality). This is the
     // variant a fleet with millions of communities runs; s38 remains
     // the broadcast fast path while the medoid table fits.
-    "s41_stream_communities_sharded" -> { (s, dir) =>
+    QuerySpec("s41_stream_communities_sharded", by("vec_id"),
+      // the sharded scatter/gather gate recomputes s38's answer exactly
+      // (same artifact, same argmin, same tie-break — only the memory
+      // shape changes), so it stands behind the SAME oracle
+      Similarity.communityGateSql) { (s, dir) =>
       Similarity.communityGateRouted(s, dir)(graft.model.Corpus.qvecs(s, dir))
-        .orderBy("vec_id")
     },
 
     // Live community LOAD — the serving dashboard over the s38 gate:
@@ -231,10 +318,11 @@ object Streaming {
     // community level) — spots a community absorbing disproportionate
     // or far-off arrivals with no nightly recompute. Stream ≡ batch
     // EXACT (integer sums are order-invariant); proven in AnnIndexSpec.
-    "s39_stream_community_load" -> { (s, dir) =>
+    QuerySpec("s39_stream_community_load", by("cluster_id"),
+      // the per-community arrival tally over the same rebuilt route chain
+      Similarity.communityLoadSql) { (s, dir) =>
       val meds = graft.sources.IO.readParquet(s, Similarity.annIndexMedoids(s, dir))
       Similarity.communityLoad(meds)(graft.model.Corpus.qvecs(s, dir))
-        .orderBy("cluster_id")
     },
 
     // Live per-dimension moment sketch — the bounded 64-row state
@@ -245,8 +333,11 @@ object Streaming {
     // the vector domain — the spectrum's input is always current, no
     // nightly recompute). Stream ≡ batch EXACT (integer sums are
     // order-invariant); proven in AnnIndexSpec.
-    "s36_stream_spectrum" -> { (s, dir) =>
-      Similarity.dimMoments(graft.model.Corpus.qvecs(s, dir)).orderBy("pos")
+    QuerySpec("s36_stream_spectrum", by("pos"),
+      // the live moment sketch's batch twin — exact integer per-dim
+      // counts/sums over the quantized grid
+      Similarity.dimMomentsSql) { (s, dir) =>
+      Similarity.dimMoments(graft.model.Corpus.qvecs(s, dir))
     },
 
     // Live token-fertility profile — d100's multilingual cost table
@@ -258,8 +349,10 @@ object Streaming {
     // contract ≡ d100 (shared transform + oracle); stream ≡ batch
     // EXACT (integer sums are order-invariant); proven in
     // EventStreamSpec.
-    "s40_stream_fertility" -> { (s, dir) =>
-      TextAnalysis.tokenFertility(graft.model.Corpus.docs(s, dir)).orderBy("lang")
+    QuerySpec("s40_stream_fertility", by("lang"),
+      // the live fertility table ≡ d100's batch profile
+      TextAnalysis.oracle("d100_token_fertility")) { (s, dir) =>
+      TextAnalysis.tokenFertility(graft.model.Corpus.docs(s, dir))
     },
 
     // Streaming Gopher gate — d92's rule panel asked as pages LAND:
@@ -269,8 +362,11 @@ object Streaming {
     // the cheapest possible "refuse at the door" filter. Output
     // contract ≡ d92 (shared transform + oracle); stream ≡ batch
     // proven in EventStreamSpec.
-    "s37_stream_gopher" -> { (s, dir) =>
-      TextAnalysis.gopherPanel(graft.model.Corpus.docs(s, dir)).orderBy("doc_id")
+    QuerySpec("s37_stream_gopher", by("doc_id"),
+      // the streaming Gopher gate is the d92 panel verbatim (stateless
+      // per-row rule verdicts) — shared oracle like s15 ← d47
+      TextAnalysis.oracle("d92_gopher_rules")) { (s, dir) =>
+      TextAnalysis.gopherPanel(graft.model.Corpus.docs(s, dir))
     },
 
     // Streaming index maintenance — the d52 freshen decision made as
@@ -282,13 +378,15 @@ object Streaming {
     // append mode; backfill and live feed run the SAME transform.
     // Output contract ≡ d52 (shared transform + oracle); stream ≡
     // batch proven in AnnIndexSpec.
-    "s18_stream_index_update" -> { (s, dir) =>
+    QuerySpec("s18_stream_index_update", by("vec_id"),
+      // the streaming freshen gate is the d52 transform verbatim
+      // (stream-static anti-join against the same persisted index)
+      Similarity.oracle("d52_ann_index_update")) { (s, dir) =>
       val cents = graft.sources.IO.readParquet(s, Similarity.annSnapCents(s, dir))
       val post = graft.sources.IO.readParquet(s, Similarity.annSnapPostings(s, dir))
       Similarity.indexUpdate(
           graft.model.Corpus.qvecs(s, dir).filter(Similarity.arrivingCond),
           post, cents)
-        .orderBy("vec_id")
     },
 
     // Streaming context-window chunking — d48's retrieval layout cut
@@ -300,9 +398,11 @@ object Streaming {
     // and 100 TB backfill are ONE code path at scan cost. Output
     // contract ≡ d48 (shared transform + oracle); stream ≡ batch
     // proven in EventStreamSpec.
-    "s19_stream_chunk" -> { (s, dir) =>
+    QuerySpec("s19_stream_chunk", by("doc_id", "chunk_idx"),
+      // the streaming chunker is the d48 transform verbatim (stateless
+      // bounded explode) — shared oracle like s15 ← d47
+      Curation.oracle("d48_doc_chunk")) { (s, dir) =>
       Curation.chunkDocs(Tables.documents(s, dir))
-        .orderBy("doc_id", "chunk_idx")
     },
 
     // Streaming split assignment — d57's content-keyed train/val/test
@@ -313,8 +413,11 @@ object Streaming {
     // Stateless per-row append mode; backfill ≡ live. Output contract
     // ≡ d57 (shared transform + oracle); stream ≡ batch proven in
     // EventStreamSpec.
-    "s21_stream_split" -> { (s, dir) =>
-      Curation.splitAssign(Tables.documents(s, dir)).orderBy("doc_id")
+    QuerySpec("s21_stream_split", by("doc_id"),
+      // the streaming split stamp is the d57 transform verbatim
+      // (pure per-row content function)
+      Curation.oracle("d57_data_split")) { (s, dir) =>
+      Curation.splitAssign(Tables.documents(s, dir))
     },
 
     // Streaming blocklist gate — d55's two-stage deny-list decision
@@ -326,10 +429,13 @@ object Streaming {
     // store; the filter and the deny artifact are the static state.
     // Output contract ≡ d55 (shared transform + oracle); stream ≡
     // batch proven in EventStreamSpec.
-    "s20_stream_blocklist" -> { (s, dir) =>
+    QuerySpec("s20_stream_blocklist", by("doc_id"),
+      // the streaming blocklist gate is the d55 transform verbatim
+      // (broadcast bloom + stream-static verify against the same
+      // persisted deny store)
+      Curation.oracle("d55_blocklist_bloom")) { (s, dir) =>
       Curation.blocklistGate(Tables.documents(s, dir),
           Curation.denyList(s, dir), Curation.denyBits(s, dir))
-        .orderBy("doc_id")
     },
 
     // Event-lateness audit — the measurement that PICKS a watermark
@@ -338,9 +444,25 @@ object Streaming {
     // fixture), computed two-stage (bucket-local windows + a bounded
     // prefix-max) — the oracle keeps the sequential global-window
     // formulation, proving the decomposition exact.
-    "s31_stream_lateness" -> { (s, dir) =>
+    QuerySpec("s31_stream_lateness", by("node_id"),
+      """WITH ev AS (
+        |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+        |    epoch_us(ts) + CASE WHEN event_id % 17 = 0
+        |      THEN CAST(7200 AS BIGINT) * 1000000 ELSE 0 END AS arr_us
+        |  FROM events),
+        |lagged AS (
+        |  SELECT user_id,
+        |    max(ts_us) OVER (ORDER BY arr_us, event_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |      - ts_us AS lag_us
+        |  FROM ev)
+        |SELECT user_id AS node_id, count(1) AS n_events,
+        |  count(CASE WHEN lag_us > CAST(3600 AS BIGINT) * 1000000 THEN 1 END) AS n_late_1h,
+        |  max(lag_us) AS max_lag_us,
+        |  CAST(count(CASE WHEN lag_us > CAST(3600 AS BIGINT) * 1000000 THEN 1 END) AS DOUBLE)
+        |    / count(1) AS late_frac
+        |FROM lagged GROUP BY 1 ORDER BY node_id""".stripMargin) { (s, dir) =>
       EventStream.latenessAudit(Tables.events(s, dir))
-        .orderBy("node_id")
     },
 
     // Live snapshot-completeness monitor — b43's existence gate as
@@ -349,9 +471,16 @@ object Streaming {
     // twin of the exact transform the streaming job runs; verdict over
     // raw arrivals (a live gate prices arrivals, not the deduped
     // manifest b43 sweeps).
-    "s30_stream_completeness" -> { (s, dir) =>
+    QuerySpec("s30_stream_completeness", by("node_id", "snapshot_day"),
+      graft.model.BackupLedger.oracleCte +
+      """SELECT node_id, snapshot_day, count(1) AS n_uploads,
+        |  count(CASE WHEN ftype = 'MANIFEST_FILE' THEN 1 END) AS n_manifest,
+        |  count(CASE WHEN ftype = 'CQL_SCHEMA' THEN 1 END) AS n_schema,
+        |  count(CASE WHEN ftype = 'COMMIT_LOG' THEN 1 END) AS n_commitlog,
+        |  count(CASE WHEN ftype = 'MANIFEST_FILE' THEN 1 END) > 0
+        |    AND count(CASE WHEN ftype = 'CQL_SCHEMA' THEN 1 END) > 0 AS complete
+        |FROM ledger GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
       EventStream.completenessMonitor(Tables.events(s, dir))
-        .orderBy("node_id", "snapshot_day")
     },
 
     // Live lexical-diversity gate — d107's quality panel scored as
@@ -361,8 +490,10 @@ object Streaming {
     // watermark and no state at all — the same shape as s21/s37.
     // Shared transform (TextAnalysis.diversityPanel) + shared oracle;
     // stream ≡ batch proven in EventStreamSpec.
-    "s43_stream_diversity" -> { (s, dir) =>
-      TextAnalysis.diversityPanel(Tables.documents(s, dir)).orderBy("doc_id")
+    QuerySpec("s43_stream_diversity", by("doc_id"),
+      // the live diversity gate ≡ d107's batch panel
+      TextAnalysis.oracle("d107_lexical_diversity")) { (s, dir) =>
+      TextAnalysis.diversityPanel(Tables.documents(s, dir))
     },
 
     // Live retry-budget monitor — b46's backoff pricing as uploads
@@ -373,9 +504,22 @@ object Streaming {
     // worst case — spec pins that containment against b46 per
     // (node, day). Batch twin of the exact transform the streaming
     // job runs.
-    "s42_stream_retry" -> { (s, dir) =>
+    QuerySpec("s42_stream_retry", by("snapshot_day", "node_id"),
+      graft.model.BackupLedger.oracleCte +
+      """, agg AS (
+        |  SELECT snapshot_day, node_id, count(1) AS n_uploads,
+        |    count(CASE WHEN upload_hash <> download_hash THEN 1 END) AS n_failed,
+        |    coalesce(sum(CASE WHEN upload_hash <> download_hash THEN size END),
+        |             CAST(0 AS DECIMAL(18,2))) AS fsz
+        |  FROM ledger GROUP BY 1, 2)
+        |SELECT snapshot_day, node_id, n_uploads, n_failed,
+        |  CAST(fsz AS DOUBLE) AS failed_bytes,
+        |  n_failed * 70 AS sleep_exp_sec,
+        |  CAST(ceil(CAST(fsz AS DOUBLE) * 3 / 25.0) AS BIGINT) AS retransfer_sec,
+        |  n_failed * 70
+        |    + CAST(ceil(CAST(fsz AS DOUBLE) * 3 / 25.0) AS BIGINT) AS added_sec
+        |FROM agg ORDER BY snapshot_day, node_id""".stripMargin) { (s, dir) =>
       EventStream.retryMonitor(Tables.events(s, dir))
-        .orderBy("snapshot_day", "node_id")
     },
 
     // Streaming per-source KMV sketch — d26's grouped distinct
@@ -383,9 +527,11 @@ object Streaming {
     // state (≤k longs per source forever; micro-batches merge through
     // the aggregate's own associative merge). Batch twin of the exact
     // transform the streaming job runs; same oracle as d26.
-    "s29_stream_kmv" -> { (s, dir) =>
+    QuerySpec("s29_stream_kmv", by("source"),
+      // the streaming sketch is the d26 transform verbatim (order-
+      // invariant sorted-distinct k-min state)
+      TextAnalysis.oracle("d26_kmv_by_source")) { (s, dir) =>
       graft.streaming.DocStream.kmvBySource(Tables.documents(s, dir))
-        .orderBy("source")
     },
 
     // Streaming domain-reputation gate — d72's index consumed at the
@@ -394,26 +540,61 @@ object Streaming {
     // state store; the provenance twin of s20's content deny list).
     // Batch twin of the exact transform the streaming job runs;
     // stream ≡ batch proven in EventStreamSpec.
-    "s28_stream_reputation" -> { (s, dir) =>
+    QuerySpec("s28_stream_reputation", by("doc_id"),
+      graft.model.Corpus.docsCte + ", " +
+      TextAnalysis.rawsCteSql + ",\n" + TextAnalysis.domainRepCteSql +
+      s""",
+         |lowarr AS (
+         |  SELECT COALESCE(list(domain ORDER BY domain), []) AS deny
+         |  FROM ranked WHERE q_rank * 4 <= nd),
+         |doms AS (
+         |  SELECT doc_id, regexp_extract_all(raw, '${TextAnalysis.urlRe}', 1) AS domains
+         |  FROM raws)
+         |SELECT doc_id, CAST(len(domains) AS BIGINT) AS n_domains,
+         |  CAST(len(list_filter(domains, x -> list_contains(deny, x))) AS BIGINT) AS n_low,
+         |  CASE WHEN len(list_filter(domains, x -> list_contains(deny, x))) > 0
+         |       THEN 'review' ELSE 'accept' END AS verdict
+         |FROM doms, lowarr ORDER BY doc_id""".stripMargin) { (s, dir) =>
       graft.streaming.DocStream.reputationGate(
           graft.streaming.DocStream.repDenyIndex(s, dir))(
           Tables.documents(s, dir))
-        .orderBy("doc_id")
     },
 
     // Stream-stream interval join — the same transform the streaming
     // job runs (watermarks are no-ops on batch input); in batch Spark
     // plans it as an equi-join on user plus the range predicate.
-    "s04_stream_join" -> { (s, dir) =>
+    QuerySpec("s04_stream_join", by("error_id", "click_id"),
+      """WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type FROM events)
+        |SELECT e.event_id AS error_id, e.user_id AS user_id, e.ts AS e_ts,
+        |  c.event_id AS click_id, c.ts AS c_ts
+        |FROM ev e JOIN ev c ON c.user_id = e.user_id
+        | AND e.event_type = 'error' AND c.event_type = 'click'
+        | AND c.ts >= e.ts - INTERVAL 1 HOUR AND c.ts < e.ts
+        |ORDER BY error_id, click_id""".stripMargin) { (s, dir) =>
       val ev = Tables.events(s, dir)
-      EventStream.clickErrorJoin(ev, ev).orderBy("error_id", "click_id")
+      EventStream.clickErrorJoin(ev, ev)
     },
 
     // Sessionization (30-min inactivity gap) — batch twin of the
     // flatMapGroupsWithState streaming path (EventStream.sessionize):
     // gap marks via lag + running sum = session numbers, one window
     // pass partitioned by user.
-    "s03_sessionize" -> { (s, dir) =>
+    QuerySpec("s03_sessionize", by("user_id", "sess_no"),
+      """WITH ordered AS (
+        |  SELECT user_id, ts, event_id, CAST(value AS DECIMAL(18,2)) AS v,
+        |    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
+        |         OR epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800000000
+        |         THEN 1 ELSE 0 END AS new_sess
+        |  FROM events),
+        |sess AS (
+        |  SELECT *, SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess_no
+        |  FROM ordered)
+        |SELECT user_id, CAST(sess_no AS BIGINT) AS sess_no,
+        |  CAST(MIN(ts) AS TIMESTAMP) AS session_start, COUNT(1) AS n_events,
+        |  CAST(SUM(v) AS DOUBLE) AS total_value
+        |FROM sess GROUP BY user_id, sess_no
+        |ORDER BY user_id, sess_no""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val wOrd = Window.partitionBy("user_id")
         .orderBy(col("ts").asc, col("event_id").asc)
@@ -431,369 +612,15 @@ object Streaming {
           min(col("ts")).as("session_start"),
           count(lit(1)).as("n_events"),
           asDouble(sum(col("v"))).as("total_value"))
-        .orderBy("user_id", "sess_no")
     },
 
     // Streaming per-day verification gate — b35's freshness input
     // computed as days close (watermarked day windows over hash checks
     // done at upload time). Identical transform over the batch table;
     // stream ≡ batch proven in EventStreamSpec.
-    "s22_stream_verify" -> { (s, dir) =>
-      EventStream.verifyDayGate(Tables.events(s, dir))
-        .orderBy("snapshot_day", "node_id", "keyspace")
-    },
-
-    // Streaming Count-Min sketch — d61's frequency sketch as
-    // bounded-state (4096 counters, forever) streaming aggregation;
-    // identical transform over the batch table, stream ≡ batch proven
-    // in EventStreamSpec.
-    "s23_stream_cms" -> { (s, dir) =>
-      graft.streaming.DocStream.cmsSketch(Tables.documents(s, dir))
-        .orderBy("i", "cell")
-    },
-
-    // Canonical-URL ingest gate — d60's dedup asked at ARRIVAL:
-    // stateless per-row canonicalization probed against the
-    // already-ingested index (stream-static broadcast); identical
-    // transform over the batch table, stream ≡ batch proven in
-    // EventStreamSpec.
-    "s24_stream_url" -> { (s, dir) =>
-      graft.streaming.DocStream.urlGate(
-          graft.streaming.DocStream.urlIndex(s, dir))(
-          Tables.documents(s, dir))
-        .orderBy("doc_id")
-    },
-
-    // Streaming template gate — d85's triage question asked at
-    // INGESTION: each arriving page's 8-word head probed against the
-    // already-ingested template index (stream-static broadcast,
-    // stateless per-row, append mode). Identical transform over the
-    // batch table; stream ≡ batch proven in EventStreamSpec.
-    "s33_stream_template" -> { (s, dir) =>
-      graft.streaming.DocStream.templateGate(
-          graft.streaming.DocStream.templateIndex(s, dir))(
-          Tables.documents(s, dir))
-        .orderBy("doc_id")
-    },
-
-    // Streaming as-of lookup — the same broadcast SCD-2 probe the
-    // streaming job runs (pre-intervalized dimension, stateless
-    // per-row), applied to the batch table; stream ≡ batch in
-    // EventStreamSpec.
-    "s27_stream_asof" -> { (s, dir) =>
-      EventStream.scdLookup(EventStream.restorableDim(s, dir))(
-          Tables.events(s, dir))
-        .orderBy("event_id")
-    },
-
-    // Live upload-size histogram — the same bounded-bin transform the
-    // streaming job runs (complete mode, state = the histogram),
-    // applied to the batch table; stream ≡ batch in EventStreamSpec.
-    "s26_stream_sizehist" -> { (s, dir) =>
-      EventStream.sizeHistogram(Tables.events(s, dir)).orderBy("bin")
-    },
-
-    // Per-source crawl-budget gate — DocStream.ingestBudget's batch
-    // twin: the stream's one-long-per-source state IS a prefix sum in
-    // arrival (doc_id) order, so the batch formulation is a per-source
-    // cumsum window; stream ≡ batch proven in EventStreamSpec.
-    "s25_stream_budget" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("source").orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      graft.model.Corpus.docs(s, dir)
-        .select(col("doc_id"), col("source"),
-          TextAnalysis.nonEmptyCount(col("ws")).as("n_tokens"))
-        .withColumn("cum_before", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
-        .withColumn("admitted",
-          col("cum_before") + col("n_tokens") <= graft.streaming.DocStream.budgetTokens)
-        .orderBy("doc_id")
-    },
-
-    // Streaming SHARD PACKER — DocStream.shardPack's batch twin: the
-    // live half of d65's planning question. Docs hash-route to 32
-    // writers (d65's exact bucket law), each writer packs its own
-    // shard sequence in arrival (doc_id) order with ONE long of state;
-    // global shard identity = (bucket, shard_seq), writer-id ×
-    // local-seq — no cross-writer coordination, which is precisely
-    // what d65's close-time offset broadcast cannot do live. The batch
-    // formulation is therefore a per-bucket cumsum window in doc_id
-    // order (32 parallel bounded partitions, one corpus scan); stream
-    // ≡ batch proven in EventStreamSpec.
-    "s32_stream_shardpack" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("bucket").orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      graft.model.Corpus.docs(s, dir)
-        .select(col("doc_id"),
-          (graft.functions.hash32(concat(lit("shard"), col("doc_id").cast("string"))) % 32)
-            .cast("int").as("bucket"),
-          TextAnalysis.nonEmptyCount(col("ws")).as("n_tokens"))
-        .withColumn("cum_before_bucket",
-          coalesce(sum(col("n_tokens")).over(w), lit(0L)))
-        .withColumn("shard_seq",
-          expr(s"cum_before_bucket div ${graft.streaming.DocStream.packShardTokens}"))
-        .orderBy("doc_id")
-    }
-  )
-
-  val oracle: Map[String, String] = Map(
-    "s01_stream_window" ->
-      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour, event_type,
-        |  COUNT(1) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin,
-
-    "s02_stream_dedup" ->
-      """SELECT user_id, event_type, MIN(event_id) AS first_event,
-        |  COUNT(1) AS n_events
-        |FROM events GROUP BY user_id, event_type
-        |ORDER BY user_id, event_type""".stripMargin,
-
-    "s06_stream_enrich" ->
-      """SELECT n.n_name, COUNT(1) AS n_events,
-        |  CAST(SUM(CAST(e.value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM events e JOIN nation n ON e.user_id % 25 = n.n_nationkey
-        |GROUP BY 1 ORDER BY n_name""".stripMargin,
-
-    "s07_backup_monitor" ->
-      """SELECT CAST(date_trunc('day', ts) AS DATE) AS snapshot_day,
-        |  user_id AS node_id, COUNT(1) AS n_uploads,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_bytes
-        |FROM events GROUP BY 1, 2 ORDER BY snapshot_day, node_id""".stripMargin,
-
-    "s09_stream_progress" ->
-      """WITH st AS (
-        |  SELECT CAST(date_trunc('day', ts) AS DATE) AS snapshot_day,
-        |    user_id AS node_id,
-        |    CASE WHEN event_id % 41 = 0 THEN 'FAILED'
-        |         WHEN event_id % 37 = 0 THEN 'IGNORED'
-        |         ELSE 'FINISHED' END AS state
-        |  FROM events)
-        |SELECT snapshot_day, node_id, count(1) AS n_units,
-        |  count(CASE WHEN state = 'FAILED' THEN 1 END) AS n_failed,
-        |  count(CASE WHEN state = 'IGNORED' THEN 1 END) AS n_ignored,
-        |  CAST(count(1) - count(CASE WHEN state = 'FAILED' THEN 1 END)
-        |       - count(CASE WHEN state = 'IGNORED' THEN 1 END) AS DOUBLE)
-        |    / count(1) AS ok_ratio
-        |FROM st GROUP BY 1, 2 ORDER BY snapshot_day, node_id""".stripMargin,
-
-    "s05_sliding_window" ->
-      """SELECT win_start, event_type, COUNT(1) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM (
-        |  SELECT time_bucket(INTERVAL '30 minutes', CAST(ts AS TIMESTAMP))
-        |           - (k * INTERVAL '30 minutes') AS win_start,
-        |         event_type, value
-        |  FROM events, UNNEST(range(0, 2)) t(k)) x
-        |GROUP BY 1, 2 ORDER BY win_start, event_type""".stripMargin,
-
-    // identical output contract to b07 — the PIT question asked of the
-    // stream must get the batch answer, so it shares the oracle text
-    "s11_stream_pit" -> Backup.oracle("b07_pit_state"),
-
-    // the streaming frame sampler is the d18 transform verbatim — the
-    // oracle is shared the same way s11 shares b07's
-    "s12_stream_frames" -> Multimodal.oracle("d18_frame_sample"),
-
-    // the streaming decon gate answers d22's question with d43's
-    // kernel — value-identical to the batch join formulation, so it
-    // shares d22's oracle text
-    "s13_stream_decon" -> Curation.oracle("d22_decontaminate"),
-
-    // the streaming quarantine gate is the d44 audit verbatim — the
-    // oracle is shared the same way s12 shares d18's
-    "s14_stream_quarantine" -> Multimodal.oracle("d44_media_quarantine"),
-
-    // the streaming dims sweep is the d47 transform verbatim — the
-    // oracle is shared the same way s12 shares d18's
-    "s15_stream_dims" -> Multimodal.oracle("d47_media_dims"),
-
-    // the streaming freshen gate is the d49 transform verbatim
-    // (stream-static anti-join against the same persisted ledger)
-    "s16_stream_ingest" -> Curation.oracle("d49_incremental_ingest"),
-
-    // the routing decision probed against the index centroid table —
-    // the SQL rebuilds cents1 exactly (the persisted index is exact
-    // state, same sharing rationale as d50 ← d15)
-    "s17_stream_ann_route" -> Similarity.annRouteSql,
-
-    // the streaming freshen gate is the d52 transform verbatim
-    // (stream-static anti-join against the same persisted index)
-    "s18_stream_index_update" -> Similarity.oracle("d52_ann_index_update"),
-
-    // the ingest-side outlier verdict per arriving vector — d87's
-    // audit CTEs (assignment + per-cell stats), un-filtered: the SQL
-    // rebuilds the cell stats exactly as the persisted artifact holds
-    // them (same exact-state sharing rationale as s17 ← d50)
-    "s34_stream_outliers" -> Similarity.outlierGateSql,
-
-    // the ingest-side community routing — the full community + medoid
-    // election rebuilt in SQL (the persisted medoid artifact is exact
-    // state over the indexed population), then nearest-medoid argmin
-    "s38_stream_communities" -> Similarity.communityGateSql,
-
-    // the sharded scatter/gather gate recomputes s38's answer exactly
-    // (same artifact, same argmin, same tie-break — only the memory
-    // shape changes), so it stands behind the SAME oracle
-    "s41_stream_communities_sharded" -> Similarity.communityGateSql,
-
-    // the per-community arrival tally over the same rebuilt route chain
-    "s39_stream_community_load" -> Similarity.communityLoadSql,
-
-    // the ingest-side semantic-dedup verdict — d35's rep scoring
-    // against the refined index cells; the SQL rebuilds assignment +
-    // rep election exactly as the persisted reps artifact holds them
-    "s35_stream_semdedup" -> Similarity.semdedupGateSql,
-
-    // the live moment sketch's batch twin — exact integer per-dim
-    // counts/sums over the quantized grid
-    "s36_stream_spectrum" -> Similarity.dimMomentsSql,
-
-    // the streaming Gopher gate is the d92 panel verbatim (stateless
-    // per-row rule verdicts) — shared oracle like s15 ← d47
-    "s37_stream_gopher" -> TextAnalysis.oracle("d92_gopher_rules"),
-
-    // the live diversity gate ≡ d107's batch panel
-    "s43_stream_diversity" -> TextAnalysis.oracle("d107_lexical_diversity"),
-
-    // the live fertility table ≡ d100's batch profile
-    "s40_stream_fertility" -> TextAnalysis.oracle("d100_token_fertility"),
-
-    // the streaming chunker is the d48 transform verbatim (stateless
-    // bounded explode) — shared oracle like s15 ← d47
-    "s19_stream_chunk" -> Curation.oracle("d48_doc_chunk"),
-
-    // the streaming blocklist gate is the d55 transform verbatim
-    // (broadcast bloom + stream-static verify against the same
-    // persisted deny store)
-    "s20_stream_blocklist" -> Curation.oracle("d55_blocklist_bloom"),
-
-    // the streaming sketch is the d26 transform verbatim (order-
-    // invariant sorted-distinct k-min state)
-    "s29_stream_kmv" -> TextAnalysis.oracle("d26_kmv_by_source"),
-
-    "s31_stream_lateness" ->
-      """WITH ev AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |    epoch_us(ts) + CASE WHEN event_id % 17 = 0
-        |      THEN CAST(7200 AS BIGINT) * 1000000 ELSE 0 END AS arr_us
-        |  FROM events),
-        |lagged AS (
-        |  SELECT user_id,
-        |    max(ts_us) OVER (ORDER BY arr_us, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      - ts_us AS lag_us
-        |  FROM ev)
-        |SELECT user_id AS node_id, count(1) AS n_events,
-        |  count(CASE WHEN lag_us > CAST(3600 AS BIGINT) * 1000000 THEN 1 END) AS n_late_1h,
-        |  max(lag_us) AS max_lag_us,
-        |  CAST(count(CASE WHEN lag_us > CAST(3600 AS BIGINT) * 1000000 THEN 1 END) AS DOUBLE)
-        |    / count(1) AS late_frac
-        |FROM lagged GROUP BY 1 ORDER BY node_id""".stripMargin,
-
-    "s30_stream_completeness" -> (graft.model.BackupLedger.oracleCte +
-      """SELECT node_id, snapshot_day, count(1) AS n_uploads,
-        |  count(CASE WHEN ftype = 'MANIFEST_FILE' THEN 1 END) AS n_manifest,
-        |  count(CASE WHEN ftype = 'CQL_SCHEMA' THEN 1 END) AS n_schema,
-        |  count(CASE WHEN ftype = 'COMMIT_LOG' THEN 1 END) AS n_commitlog,
-        |  count(CASE WHEN ftype = 'MANIFEST_FILE' THEN 1 END) > 0
-        |    AND count(CASE WHEN ftype = 'CQL_SCHEMA' THEN 1 END) > 0 AS complete
-        |FROM ledger GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-
-    "s42_stream_retry" -> (graft.model.BackupLedger.oracleCte +
-      """, agg AS (
-        |  SELECT snapshot_day, node_id, count(1) AS n_uploads,
-        |    count(CASE WHEN upload_hash <> download_hash THEN 1 END) AS n_failed,
-        |    coalesce(sum(CASE WHEN upload_hash <> download_hash THEN size END),
-        |             CAST(0 AS DECIMAL(18,2))) AS fsz
-        |  FROM ledger GROUP BY 1, 2)
-        |SELECT snapshot_day, node_id, n_uploads, n_failed,
-        |  CAST(fsz AS DOUBLE) AS failed_bytes,
-        |  n_failed * 70 AS sleep_exp_sec,
-        |  CAST(ceil(CAST(fsz AS DOUBLE) * 3 / 25.0) AS BIGINT) AS retransfer_sec,
-        |  n_failed * 70
-        |    + CAST(ceil(CAST(fsz AS DOUBLE) * 3 / 25.0) AS BIGINT) AS added_sec
-        |FROM agg ORDER BY snapshot_day, node_id""".stripMargin),
-
-    "s28_stream_reputation" -> (graft.model.Corpus.docsCte + ", " +
-      TextAnalysis.rawsCteSql + ",\n" + TextAnalysis.domainRepCteSql +
-      s""",
-         |lowarr AS (
-         |  SELECT COALESCE(list(domain ORDER BY domain), []) AS deny
-         |  FROM ranked WHERE q_rank * 4 <= nd),
-         |doms AS (
-         |  SELECT doc_id, regexp_extract_all(raw, '${TextAnalysis.urlRe}', 1) AS domains
-         |  FROM raws)
-         |SELECT doc_id, CAST(len(domains) AS BIGINT) AS n_domains,
-         |  CAST(len(list_filter(domains, x -> list_contains(deny, x))) AS BIGINT) AS n_low,
-         |  CASE WHEN len(list_filter(domains, x -> list_contains(deny, x))) > 0
-         |       THEN 'review' ELSE 'accept' END AS verdict
-         |FROM doms, lowarr ORDER BY doc_id""".stripMargin),
-
-    // the streaming split stamp is the d57 transform verbatim
-    // (pure per-row content function)
-    "s21_stream_split" -> Curation.oracle("d57_data_split"),
-
-    "s10_stream_boilerplate" -> (graft.model.Corpus.docsCte + graft.model.Corpus.tilesCte +
-      """, idx AS (SELECT DISTINCT tile FROM tiles WHERE doc_id % 3 = 0)
-        |SELECT lang, source, n_tiles, n_known,
-        |  CAST(n_known AS DOUBLE) / n_tiles AS known_frac
-        |FROM (
-        |  SELECT t.lang, t.source, count(1) AS n_tiles,
-        |    CAST(sum(CASE WHEN i.tile IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_known
-        |  FROM tiles t LEFT JOIN idx i ON t.tile = i.tile
-        |  WHERE t.doc_id % 3 <> 0
-        |  GROUP BY t.lang, t.source) r
-        |ORDER BY lang, source""".stripMargin),
-
-    "s08_corpus_curate" ->
-      s"""WITH d AS (
-         |  SELECT lang, source, text, string_split(${graft.model.Corpus.normSql}, ' ') AS ws
-         |  FROM documents),
-         |scored AS (
-         |  SELECT lang, source,
-         |    CAST(len(ws) AS BIGINT) AS n_words,
-         |    CAST(len(list_filter(ws, w -> list_contains(${TextAnalysis.enStopSqlList}, w))) AS DOUBLE)
-         |      / greatest(len(ws), 1)
-         |    - CAST(length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
-         |      / greatest(length(text), 1)
-         |    + CASE WHEN len(ws) BETWEEN 5 AND 200 THEN 0.1 ELSE 0.0 END AS quality
-         |  FROM d)
-         |SELECT lang, source, COUNT(1) AS n_docs,
-         |  CAST(SUM(CASE WHEN quality >= 0.1 THEN 1 ELSE 0 END) AS BIGINT) AS n_keep,
-         |  CAST(SUM(n_words) AS BIGINT) AS total_words
-         |FROM scored GROUP BY lang, source ORDER BY lang, source""".stripMargin,
-
-    "s04_stream_join" ->
-      """WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type FROM events)
-        |SELECT e.event_id AS error_id, e.user_id AS user_id, e.ts AS e_ts,
-        |  c.event_id AS click_id, c.ts AS c_ts
-        |FROM ev e JOIN ev c ON c.user_id = e.user_id
-        | AND e.event_type = 'error' AND c.event_type = 'click'
-        | AND c.ts >= e.ts - INTERVAL 1 HOUR AND c.ts < e.ts
-        |ORDER BY error_id, click_id""".stripMargin,
-
-    "s03_sessionize" ->
-      """WITH ordered AS (
-        |  SELECT user_id, ts, event_id, CAST(value AS DECIMAL(18,2)) AS v,
-        |    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-        |         OR epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800000000
-        |         THEN 1 ELSE 0 END AS new_sess
-        |  FROM events),
-        |sess AS (
-        |  SELECT *, SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess_no
-        |  FROM ordered)
-        |SELECT user_id, CAST(sess_no AS BIGINT) AS sess_no,
-        |  CAST(MIN(ts) AS TIMESTAMP) AS session_start, COUNT(1) AS n_events,
-        |  CAST(SUM(v) AS DOUBLE) AS total_value
-        |FROM sess GROUP BY user_id, sess_no
-        |ORDER BY user_id, sess_no""".stripMargin,
-
-    // the md5 compare flags exactly the %53 corruption fixture rows
-    // (distinct md5 inputs, so the hashes always differ there)
-    "s22_stream_verify" ->
+    QuerySpec("s22_stream_verify", by("snapshot_day", "node_id", "keyspace"),
+      // the md5 compare flags exactly the %53 corruption fixture rows
+      // (distinct md5 inputs, so the hashes always differ there)
       """WITH lg AS (
         |  SELECT CAST(date_trunc('day', ts) AS DATE) AS snapshot_day,
         |    user_id AS node_id,
@@ -804,9 +631,16 @@ object Streaming {
         |  count(CASE WHEN bad THEN 1 END) AS n_bad,
         |  count(CASE WHEN bad THEN 1 END) = 0 AS day_ok
         |FROM lg GROUP BY 1, 2, 3
-        |ORDER BY snapshot_day, node_id, keyspace""".stripMargin,
+        |ORDER BY snapshot_day, node_id, keyspace""".stripMargin) { (s, dir) =>
+      EventStream.verifyDayGate(Tables.events(s, dir))
+    },
 
-    "s23_stream_cms" -> (graft.model.Corpus.docsCte + {
+    // Streaming Count-Min sketch — d61's frequency sketch as
+    // bounded-state (4096 counters, forever) streaming aggregation;
+    // identical transform over the batch table, stream ≡ batch proven
+    // in EventStreamSpec.
+    QuerySpec("s23_stream_cms", by("i", "cell"),
+      graft.model.Corpus.docsCte + {
       val cell = graft.model.Corpus.hash32Sql(
         "concat('cms', CAST(i AS VARCHAR), '#', w)") + " % 1024"
       s""", toks AS (
@@ -814,17 +648,16 @@ object Streaming {
         |SELECT i, $cell AS cell, count(1) AS c
         |FROM toks, UNNEST(range(0, 4)) t(i)
         |GROUP BY 1, 2 ORDER BY i, cell""".stripMargin
-    }),
+    }) { (s, dir) =>
+      graft.streaming.DocStream.cmsSketch(Tables.documents(s, dir))
+    },
 
-    "s33_stream_template" -> (graft.model.Corpus.docsCte
-      + graft.operators.Dedup.prefixKeysCte +
-      """, idx AS (SELECT DISTINCT prefix FROM pref WHERE doc_id % 3 = 0)
-        |SELECT p.doc_id, p.prefix,
-        |  (idx.prefix IS NOT NULL) AS is_template
-        |FROM pref p LEFT JOIN idx ON p.prefix = idx.prefix
-        |WHERE p.doc_id % 3 <> 0 ORDER BY p.doc_id""".stripMargin),
-
-    "s24_stream_url" ->
+    // Canonical-URL ingest gate — d60's dedup asked at ARRIVAL:
+    // stateless per-row canonicalization probed against the
+    // already-ingested index (stream-static broadcast); identical
+    // transform over the batch table, stream ≡ batch proven in
+    // EventStreamSpec.
+    QuerySpec("s24_stream_url", by("doc_id"),
       """WITH urls AS (
         |  SELECT doc_id, concat(
         |    CASE WHEN doc_id % 4 = 2 THEN 'HTTP://'
@@ -850,9 +683,71 @@ object Streaming {
         |SELECT c.doc_id, c.canonical_url,
         |  i.canonical_url IS NULL AS is_new
         |FROM canon c LEFT JOIN idx i ON c.canonical_url = i.canonical_url
-        |ORDER BY c.doc_id""".stripMargin,
+        |ORDER BY c.doc_id""".stripMargin) { (s, dir) =>
+      graft.streaming.DocStream.urlGate(
+          graft.streaming.DocStream.urlIndex(s, dir))(
+          Tables.documents(s, dir))
+    },
 
-    "s25_stream_budget" -> (graft.model.Corpus.docsCte +
+    // Streaming template gate — d85's triage question asked at
+    // INGESTION: each arriving page's 8-word head probed against the
+    // already-ingested template index (stream-static broadcast,
+    // stateless per-row, append mode). Identical transform over the
+    // batch table; stream ≡ batch proven in EventStreamSpec.
+    QuerySpec("s33_stream_template", by("doc_id"),
+      graft.model.Corpus.docsCte
+      + graft.operators.Dedup.prefixKeysCte +
+      """, idx AS (SELECT DISTINCT prefix FROM pref WHERE doc_id % 3 = 0)
+        |SELECT p.doc_id, p.prefix,
+        |  (idx.prefix IS NOT NULL) AS is_template
+        |FROM pref p LEFT JOIN idx ON p.prefix = idx.prefix
+        |WHERE p.doc_id % 3 <> 0 ORDER BY p.doc_id""".stripMargin) { (s, dir) =>
+      graft.streaming.DocStream.templateGate(
+          graft.streaming.DocStream.templateIndex(s, dir))(
+          Tables.documents(s, dir))
+    },
+
+    // Streaming as-of lookup — the same broadcast SCD-2 probe the
+    // streaming job runs (pre-intervalized dimension, stateless
+    // per-row), applied to the batch table; stream ≡ batch in
+    // EventStreamSpec.
+    QuerySpec("s27_stream_asof", by("event_id"),
+      graft.model.BackupLedger.oracleCte +
+      """, dim AS (
+        |  SELECT node_id AS dim_node, snapshot_day AS valid_from,
+        |    LEAD(snapshot_day) OVER (PARTITION BY node_id
+        |      ORDER BY snapshot_day) AS valid_to
+        |  FROM snapshots
+        |  WHERE date_diff('day', DATE '2020-01-01', snapshot_day) % 3 <> 0)
+        |SELECT e.event_id, e.node_id, e.snapshot_day AS event_day,
+        |  d.valid_from AS snapshot_day,
+        |  date_diff('day', d.valid_from, e.snapshot_day) AS lag_days
+        |FROM ledger e
+        |LEFT JOIN dim d ON d.dim_node = e.node_id
+        |  AND e.snapshot_day >= d.valid_from
+        |  AND (d.valid_to IS NULL OR e.snapshot_day < d.valid_to)
+        |ORDER BY event_id""".stripMargin) { (s, dir) =>
+      EventStream.scdLookup(EventStream.restorableDim(s, dir))(
+          Tables.events(s, dir))
+    },
+
+    // Live upload-size histogram — the same bounded-bin transform the
+    // streaming job runs (complete mode, state = the histogram),
+    // applied to the batch table; stream ≡ batch in EventStreamSpec.
+    QuerySpec("s26_stream_sizehist", by("bin"),
+      """SELECT CAST(floor(value / 16.0) AS BIGINT) AS bin,
+        |  count(1) AS n_uploads,
+        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_bytes
+        |FROM events GROUP BY 1 ORDER BY bin""".stripMargin) { (s, dir) =>
+      EventStream.sizeHistogram(Tables.events(s, dir))
+    },
+
+    // Per-source crawl-budget gate — DocStream.ingestBudget's batch
+    // twin: the stream's one-long-per-source state IS a prefix sum in
+    // arrival (doc_id) order, so the batch formulation is a per-source
+    // cumsum window; stream ≡ batch proven in EventStreamSpec.
+    QuerySpec("s25_stream_budget", by("doc_id"),
+      graft.model.Corpus.docsCte +
       """, toks AS (
         |  SELECT doc_id, source,
         |    CAST(len(list_filter(ws, x -> x <> '')) AS BIGINT) AS n_tokens
@@ -866,9 +761,30 @@ object Streaming {
         |  FROM toks)
         |SELECT doc_id, source, n_tokens, cum_before,
         |  cum_before + n_tokens <= 600 AS admitted
-        |FROM cum ORDER BY doc_id""".stripMargin),
+        |FROM cum ORDER BY doc_id""".stripMargin) { (s, dir) =>
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy("source").orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, -1)
+      graft.model.Corpus.docs(s, dir)
+        .select(col("doc_id"), col("source"),
+          TextAnalysis.nonEmptyCount(col("ws")).as("n_tokens"))
+        .withColumn("cum_before", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
+        .withColumn("admitted",
+          col("cum_before") + col("n_tokens") <= graft.streaming.DocStream.budgetTokens)
+    },
 
-    "s32_stream_shardpack" -> (graft.model.Corpus.docsCte +
+    // Streaming SHARD PACKER — DocStream.shardPack's batch twin: the
+    // live half of d65's planning question. Docs hash-route to 32
+    // writers (d65's exact bucket law), each writer packs its own
+    // shard sequence in arrival (doc_id) order with ONE long of state;
+    // global shard identity = (bucket, shard_seq), writer-id ×
+    // local-seq — no cross-writer coordination, which is precisely
+    // what d65's close-time offset broadcast cannot do live. The batch
+    // formulation is therefore a per-bucket cumsum window in doc_id
+    // order (32 parallel bounded partitions, one corpus scan); stream
+    // ≡ batch proven in EventStreamSpec.
+    QuerySpec("s32_stream_shardpack", by("doc_id"),
+      graft.model.Corpus.docsCte +
       s""", pd AS (
          |  SELECT doc_id,
          |    CAST(${graft.model.Corpus.hash32Sql("concat('shard', CAST(doc_id AS VARCHAR))")} % 32 AS INT) AS bucket,
@@ -883,28 +799,19 @@ object Streaming {
          |  FROM pd)
          |SELECT doc_id, bucket, n_tokens, cum_before_bucket,
          |  cum_before_bucket // ${graft.streaming.DocStream.packShardTokens} AS shard_seq
-         |FROM pc ORDER BY doc_id""".stripMargin),
-
-    "s26_stream_sizehist" ->
-      """SELECT CAST(floor(value / 16.0) AS BIGINT) AS bin,
-        |  count(1) AS n_uploads,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_bytes
-        |FROM events GROUP BY 1 ORDER BY bin""".stripMargin,
-
-    "s27_stream_asof" -> (graft.model.BackupLedger.oracleCte +
-      """, dim AS (
-        |  SELECT node_id AS dim_node, snapshot_day AS valid_from,
-        |    LEAD(snapshot_day) OVER (PARTITION BY node_id
-        |      ORDER BY snapshot_day) AS valid_to
-        |  FROM snapshots
-        |  WHERE date_diff('day', DATE '2020-01-01', snapshot_day) % 3 <> 0)
-        |SELECT e.event_id, e.node_id, e.snapshot_day AS event_day,
-        |  d.valid_from AS snapshot_day,
-        |  date_diff('day', d.valid_from, e.snapshot_day) AS lag_days
-        |FROM ledger e
-        |LEFT JOIN dim d ON d.dim_node = e.node_id
-        |  AND e.snapshot_day >= d.valid_from
-        |  AND (d.valid_to IS NULL OR e.snapshot_day < d.valid_to)
-        |ORDER BY event_id""".stripMargin)
+         |FROM pc ORDER BY doc_id""".stripMargin) { (s, dir) =>
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy("bucket").orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, -1)
+      graft.model.Corpus.docs(s, dir)
+        .select(col("doc_id"),
+          (graft.functions.hash32(concat(lit("shard"), col("doc_id").cast("string"))) % 32)
+            .cast("int").as("bucket"),
+          TextAnalysis.nonEmptyCount(col("ws")).as("n_tokens"))
+        .withColumn("cum_before_bucket",
+          coalesce(sum(col("n_tokens")).over(w), lit(0L)))
+        .withColumn("shard_seq",
+          expr(s"cum_before_bucket div ${graft.streaming.DocStream.packShardTokens}"))
+    }
   )
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions._
 import graft.model.Corpus
+import graft.operators.QuerySpec.by
 
 /** §2.C d08–d11 — text analysis over the document corpus.
   *
@@ -15,7 +16,7 @@ import graft.model.Corpus
   * aggregation — embarrassingly parallel at 100 TB (no cross-doc
   * shuffle except the langid argmax window, partitioned per doc).
   */
-object TextAnalysis {
+object TextAnalysis extends QueryModule {
 
   /** Per-language stopword lexicon, langs in tie-break (alphabetical)
     * order. The lexicon is a compile-time constant, so language scoring
@@ -41,11 +42,14 @@ object TextAnalysis {
     * is CodegenFallback and ran INTERPRETED once per corpus row in
     * every quality/langid/curation scorer. Same count (per
     * occurrence, binary string equality); the list is sorted ascending
-    * at build time (the kernel's contract — ASCII word lists sort
-    * identically under String and UTF8String orderings). */
-  private[operators] def wordHits(ws: org.apache.spark.sql.Column,
+    * under UTF8String (UTF-8 byte) order at build time — the kernel's
+    * binary-search contract. Java String order differs past the BMP:
+    * a surrogate pair (U+1F600) sorts before U+FF21 as UTF-16 but
+    * after it as UTF-8. */
+  private[graft] def wordHits(ws: org.apache.spark.sql.Column,
       list: Seq[String]): org.apache.spark.sql.Column =
-    graft.functions.SortedHitCount(ws, array(list.sorted.map(lit): _*))
+    graft.functions.SortedHitCount(ws, array(
+      list.sortBy(org.apache.spark.unsafe.types.UTF8String.fromString).map(lit): _*))
 
   /** Non-empty token count — `size(filter(ws, x -> x != ''))` without
     * the interpreted lambda: total size minus the ''-occurrence count
@@ -387,8 +391,7 @@ object TextAnalysis {
           / col("n_tokens").cast("double")).as("simpson"))
       .withColumn("low_diversity", col("ttr") < 0.35)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
+  val specs: Seq[QuerySpec] = Seq(
     // ZIPF HEAD CURVE — rank-frequency over the top-100 terms by
     // corpus frequency, with each rank's share and the CUMULATIVE
     // share of the head: the "how head-heavy is this corpus" panel
@@ -402,7 +405,19 @@ object TextAnalysis {
     // frame (exchange reuse, not a second corpus scan), and the
     // running head-mass is a window over the bounded 100 rows.
     // Shares divide exact longs → bit-identical doubles.
-    "d86_zipf_curve" -> { (s, dir) =>
+    QuerySpec("d86_zipf_curve", by("rnk"),
+      Corpus.docsCte +
+      """, cf AS (
+        |  SELECT w, count(1) AS cf
+        |  FROM (SELECT unnest(ws) AS w FROM docs) t
+        |  WHERE w <> '' GROUP BY w),
+        |tot AS (SELECT sum(cf) AS total FROM cf),
+        |top AS (SELECT w, cf FROM cf ORDER BY cf DESC, w LIMIT 100)
+        |SELECT ROW_NUMBER() OVER (ORDER BY cf DESC, w) AS rnk, w, cf,
+        |  CAST(cf AS DOUBLE) / CAST(total AS DOUBLE) AS share,
+        |  CAST(sum(cf) OVER (ORDER BY cf DESC, w ROWS UNBOUNDED PRECEDING) AS DOUBLE)
+        |    / CAST(total AS DOUBLE) AS cum_share
+        |FROM top CROSS JOIN tot ORDER BY rnk""".stripMargin) { (s, dir) =>
       val cf = Corpus.docs(s, dir)
         .select(explode(col("ws")).as("w"))
         .filter(col("w") =!= "")
@@ -417,7 +432,6 @@ object TextAnalysis {
         .select(col("rnk"), col("w"), col("cf"),
           (col("cf").cast("double") / col("total").cast("double")).as("share"),
           (col("cum_cf").cast("double") / col("total").cast("double")).as("cum_share"))
-        .orderBy("rnk")
     },
 
     // Language ID: stopword-lexicon scoring, argmax lang per doc
@@ -425,10 +439,29 @@ object TextAnalysis {
     // shuffles: each language's score is size(filter(ws, ...)) against
     // its constant lexicon, the argmax is a greatest + CASE cascade in
     // tie-break order. At 100 TB this is embarrassingly parallel.
-    "d08_langid" -> { (s, dir) =>
+    QuerySpec("d08_langid", by("doc_id"),
+      Corpus.docsCte + {
+      val scExprs = langWords.map { case (lang, ws) =>
+        val lst = ws.map(w => s"'$w'").mkString("[", ", ", "]")
+        s"CAST(len(list_filter(ws, w -> list_contains($lst, w))) AS BIGINT) AS sc_$lang"
+      }.mkString(",\n|    ")
+      val scNames = langWords.map { case (l, _) => s"sc_$l" }.mkString(", ")
+      val cases = langWords.map { case (l, _) => s"WHEN sc_$l = m THEN '$l'" }
+        .mkString("\n|       ")
+      s""", sc AS (
+         |  SELECT doc_id,
+         |    $scExprs
+         |  FROM docs),
+         |mx AS (SELECT doc_id, $scNames, greatest($scNames) AS m FROM sc)
+         |SELECT doc_id,
+         |  CASE WHEN m = 0 THEN 'und'
+         |       $cases
+         |  END AS pred_lang,
+         |  m AS score
+         |FROM mx ORDER BY doc_id""".stripMargin
+    }) { (s, dir) =>
       langidScored(Corpus.docs(s, dir))
         .select(col("doc_id"), col("pred_lang"), col("score"))
-        .orderBy("doc_id")
     },
 
     // LANGID CONFUSION — the eval that closes d08's loop: predicted
@@ -441,25 +474,66 @@ object TextAnalysis {
     // lang²-bounded aggregate; the row totals ride a window over the
     // 25-cell aggregate output (no second scan, no persist). Share
     // divides identical integers both engines → bit-identical doubles.
-    "d101_langid_confusion" -> { (s, dir) =>
+    QuerySpec("d101_langid_confusion", by("lang", "pred_lang"),
+      Corpus.docsCte + {
+      val scExprs = langWords.map { case (lang, ws) =>
+        val lst = ws.map(w => s"'$w'").mkString("[", ", ", "]")
+        s"CAST(len(list_filter(ws, w -> list_contains($lst, w))) AS BIGINT) AS sc_$lang"
+      }.mkString(",\n|    ")
+      val scNames = langWords.map { case (l, _) => s"sc_$l" }.mkString(", ")
+      val cases = langWords.map { case (l, _) => s"WHEN sc_$l = m THEN '$l'" }
+        .mkString("\n|       ")
+      s""", sc AS (
+         |  SELECT doc_id, lang,
+         |    $scExprs
+         |  FROM docs),
+         |mx AS (SELECT doc_id, lang, $scNames, greatest($scNames) AS m FROM sc),
+         |pred AS (
+         |  SELECT lang,
+         |    CASE WHEN m = 0 THEN 'und'
+         |         $cases
+         |    END AS pred_lang
+         |  FROM mx)
+         |SELECT lang, pred_lang, count(1) AS n,
+         |  CAST(sum(count(1)) OVER (PARTITION BY lang) AS BIGINT) AS n_lang,
+         |  CAST(count(1) AS DOUBLE)
+         |    / CAST(sum(count(1)) OVER (PARTITION BY lang) AS BIGINT) AS share
+         |FROM pred GROUP BY lang, pred_lang
+         |ORDER BY lang, pred_lang""".stripMargin
+    }) { (s, dir) =>
       val w = org.apache.spark.sql.expressions.Window.partitionBy("lang")
       langidScored(Corpus.docs(s, dir))
         .groupBy(col("lang"), col("pred_lang"))
         .agg(count(lit(1)).as("n"))
         .withColumn("n_lang", sum(col("n")).over(w))
         .withColumn("share", col("n").cast("double") / col("n_lang"))
-        .orderBy("lang", "pred_lang")
     },
 
     // Quality scoring from integer-count ratios. Digit/punct counts come
     // from the single-pass CharCounts kernel (one byte loop per row)
     // instead of two full regex passes — same values, ~half the text
     // scanning cost of the hottest per-row operator.
-    "d09_quality" -> { (s, dir) =>
+    QuerySpec("d09_quality", by("doc_id"),
+      Corpus.docsCte +
+      s"""SELECT doc_id,
+         |  CAST(length(text) AS BIGINT) AS n_chars_raw,
+         |  CAST(len(ws) AS BIGINT) AS n_words,
+         |  CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS BIGINT) AS n_digits,
+         |  CAST(length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g')) AS BIGINT) AS n_punct,
+         |  CAST(len(list_filter(ws, w -> list_contains($enStopSqlList, w))) AS BIGINT) AS n_stop,
+         |  CAST(len(list_filter(ws, w -> list_contains($enStopSqlList, w))) AS DOUBLE)
+         |    / greatest(len(ws), 1) AS stop_ratio,
+         |  CAST(length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
+         |    / greatest(length(text), 1) AS punct_ratio,
+         |  CAST(len(list_filter(ws, w -> list_contains($enStopSqlList, w))) AS DOUBLE)
+         |    / greatest(len(ws), 1)
+         |  - CAST(length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
+         |    / greatest(length(text), 1)
+         |  + CASE WHEN len(ws) BETWEEN 5 AND 200 THEN 0.1 ELSE 0.0 END AS quality
+         |FROM docs ORDER BY doc_id""".stripMargin) { (s, dir) =>
       qualityCols(Corpus.docs(s, dir))
         .select("doc_id", "n_chars_raw", "n_words", "n_digits", "n_punct",
           "n_stop", "stop_ratio", "punct_ratio", "quality")
-        .orderBy("doc_id")
     },
 
     // The Gopher rule PANEL — d09 scores quality on a continuous
@@ -467,19 +541,49 @@ object TextAnalysis {
     // rule's verdict attributable per doc, the report a curation run
     // publishes so "why was this dropped?" has an answer. Per-row
     // HOF work over one corpus scan, zero shuffles (see gopherPanel).
-    "d92_gopher_rules" -> { (s, dir) =>
-      gopherPanel(Corpus.docs(s, dir)).orderBy("doc_id")
+    QuerySpec("d92_gopher_rules", by("doc_id"),
+      Corpus.docsCte +
+      s""", wtab AS (SELECT doc_id, unnest(ws) AS w FROM docs),
+         |per AS (
+         |  SELECT doc_id, w, count(1) AS c, len(w) AS wl
+         |  FROM wtab GROUP BY doc_id, w),
+         |agg AS (
+         |  SELECT doc_id,
+         |    CAST(sum(c) AS BIGINT) AS n_words,
+         |    CAST(sum(c * wl) AS BIGINT) AS wchars,
+         |    CAST(sum(CASE WHEN wl >= 3 THEN c ELSE 0 END) AS BIGINT) AS n_subst,
+         |    CAST(count(CASE WHEN list_contains($enStopSqlList, w) THEN 1 END) AS BIGINT) AS n_stop_kinds,
+         |    CAST(max(c) AS BIGINT) AS top_word_n
+         |  FROM per GROUP BY doc_id)
+         |SELECT doc_id, n_words, wchars, n_subst, n_stop_kinds, top_word_n,
+         |  n_words BETWEEN 50 AND 100000 AS r_count,
+         |  (wchars >= 3 * n_words AND wchars <= 10 * n_words) AS r_wlen,
+         |  5 * n_subst >= 4 * n_words AS r_subst,
+         |  n_stop_kinds >= 2 AS r_stop,
+         |  5 * top_word_n <= n_words AS r_rep,
+         |  ((n_words BETWEEN 50 AND 100000)
+         |   AND wchars >= 3 * n_words AND wchars <= 10 * n_words
+         |   AND 5 * n_subst >= 4 * n_words
+         |   AND n_stop_kinds >= 2
+         |   AND 5 * top_word_n <= n_words) AS keep
+         |FROM agg ORDER BY doc_id""".stripMargin) { (s, dir) =>
+      gopherPanel(Corpus.docs(s, dir))
     },
 
     // Token counting: whitespace words, regex tokens, BPE-ish estimate.
-    "d10_tokens" -> { (s, dir) =>
+    QuerySpec("d10_tokens", by("doc_id"),
+      Corpus.docsCte +
+      s"""SELECT doc_id,
+         |  CAST(len(ws) AS BIGINT) AS ws_tokens,
+         |  CAST(len(regexp_extract_all(lower(text), '$tokenRe')) AS BIGINT) AS re_tokens,
+         |  CAST(ceil(length(text) / 4.0) AS BIGINT) AS bpe_est
+         |FROM docs ORDER BY doc_id""".stripMargin) { (s, dir) =>
       Corpus.docs(s, dir)
         .withColumn("ws_tokens", size(col("ws")).cast("long"))
         .withColumn("re_tokens",
           size(regexp_extract_all(lower(col("text")), lit(tokenRe), lit(0))).cast("long"))
         .withColumn("bpe_est", ceil(length(col("text")) / 4.0).cast("long"))
         .select("doc_id", "ws_tokens", "re_tokens", "bpe_est")
-        .orderBy("doc_id")
     },
 
     // TOKEN FERTILITY per language — the multilingual cost profile
@@ -491,14 +595,29 @@ object TextAnalysis {
     // counters folded per language in ONE corpus scan into a
     // lang-bounded aggregate; the ratios are one-shot divides of
     // identical integers both engines → bit-identical doubles.
-    "d100_token_fertility" -> { (s, dir) =>
-      tokenFertility(Corpus.docs(s, dir)).orderBy("lang")
+    QuerySpec("d100_token_fertility", by("lang"),
+      Corpus.docsCte +
+      s"""SELECT lang, count(1) AS n_docs,
+         |  CAST(sum(len(ws)) AS BIGINT) AS n_words,
+         |  CAST(sum(len(regexp_extract_all(lower(text), '$tokenRe'))) AS BIGINT) AS n_tokens,
+         |  CAST(sum(length(text)) AS BIGINT) AS n_chars,
+         |  CAST(CAST(sum(len(regexp_extract_all(lower(text), '$tokenRe'))) AS BIGINT) AS DOUBLE)
+         |    / CAST(sum(len(ws)) AS BIGINT) AS fertility,
+         |  CAST(CAST(sum(length(text)) AS BIGINT) AS DOUBLE)
+         |    / CAST(sum(len(regexp_extract_all(lower(text), '$tokenRe'))) AS BIGINT) AS chars_per_token
+         |FROM docs GROUP BY lang ORDER BY lang""".stripMargin) { (s, dir) =>
+      tokenFertility(Corpus.docs(s, dir))
     },
 
     // Corpus vocabulary: top-20 words by document frequency — the
     // df table a corpus-level quality/stopword pipeline starts from.
     // One distinct + one agg + TakeOrderedAndProject (no global sort).
-    "d16_vocab" -> { (s, dir) =>
+    QuerySpec("d16_vocab", Nil,
+      Corpus.docsCte +
+      """SELECT w, COUNT(1) AS doc_freq FROM
+        |  (SELECT DISTINCT doc_id, w FROM
+        |    (SELECT doc_id, unnest(ws) AS w FROM docs) u) t
+        |GROUP BY w ORDER BY doc_freq DESC, w ASC LIMIT 20""".stripMargin) { (s, dir) =>
       Corpus.docs(s, dir)
         .select(col("doc_id"), explode(col("ws")).as("w"))
         .distinct()
@@ -519,7 +638,20 @@ object TextAnalysis {
     // partial keeps ≤3 rows per doc per partition in bounded heaps, so
     // the rank exchange carries ~3/|terms per doc| of the rows the
     // row_number window formulation would shuffle AND sort.
-    "d19_tfidf" -> { (s, dir) =>
+    QuerySpec("d19_tfidf", by("doc_id", "rn"),
+      Corpus.docsCte +
+      """, wa AS (SELECT doc_id, unnest(ws) AS w FROM docs),
+        |tf AS (SELECT doc_id, w, count(1) AS tf FROM wa GROUP BY 1, 2),
+        |dfreq AS (SELECT w, count(1) AS df FROM (SELECT DISTINCT doc_id, w FROM wa) t GROUP BY w),
+        |n AS (SELECT count(1) AS n_docs FROM docs)
+        |SELECT doc_id, w, tf, df, score, rn FROM (
+        |  SELECT t.doc_id, t.w, t.tf, d.df,
+        |    CAST(t.tf AS DOUBLE) * (CAST(n.n_docs AS DOUBLE) / CAST(d.df AS DOUBLE)) AS score,
+        |    ROW_NUMBER() OVER (PARTITION BY t.doc_id ORDER BY
+        |      CAST(t.tf AS DOUBLE) * (CAST(n.n_docs AS DOUBLE) / CAST(d.df AS DOUBLE)) DESC,
+        |      t.w ASC) AS rn
+        |  FROM tf t JOIN dfreq d USING (w) CROSS JOIN n) x
+        |WHERE rn <= 3 ORDER BY doc_id, rn""".stripMargin) { (s, dir) =>
       val docs = Corpus.docs(s, dir)
       val wa = docs.select(col("doc_id"), explode(col("ws")).as("w"))
       val tf = wa.groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
@@ -540,7 +672,6 @@ object TextAnalysis {
       graft.plans.TopK.perGroup(scored,
           Seq("doc_id"), Seq(("score", true), ("w", false)), k = 3, rankName = "rn")
         .select("doc_id", "w", "tf", "df", "score", "rn")
-        .orderBy("doc_id", "rn")
     },
 
     // BM25 RETRIEVAL — the lexical-search baseline every retrieval
@@ -561,7 +692,32 @@ object TextAnalysis {
     // ~terms×5×partitions rows however large the corpus. The query
     // catalog is a bounded literal set — at 100 TB the same plan
     // serves any term list that fits a broadcast.
-    "d84_bm25" -> { (s, dir) =>
+    QuerySpec("d84_bm25", by("w", "rn"),
+      Corpus.docsCte + {
+      val termList = bm25Terms.map(t => s"'$t'").mkString("(", ", ", ")")
+      s""", toks AS (
+         |  SELECT doc_id, CAST(len(list_filter(ws, x -> x <> '')) AS BIGINT) AS dl,
+         |    unnest(ws) AS w
+         |  FROM docs),
+         |tf AS (
+         |  SELECT doc_id, w, count(1) AS tf, max(dl) AS dl
+         |  FROM toks WHERE w IN $termList GROUP BY doc_id, w),
+         |dfq AS (SELECT w, count(1) AS df FROM tf GROUP BY w),
+         |st AS (SELECT count(1) AS n_docs,
+         |  sum(CAST(len(list_filter(ws, x -> x <> '')) AS BIGINT)) AS sum_dl FROM docs),
+         |sc AS (
+         |  SELECT tf.w, tf.doc_id, tf.tf, tf.dl, dfq.df,
+         |    ((CAST(st.n_docs AS DOUBLE) - CAST(dfq.df AS DOUBLE) + 0.5)
+         |      / (CAST(dfq.df AS DOUBLE) + 0.5))
+         |      * (CAST(tf.tf AS DOUBLE) * 2.2)
+         |      / (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25
+         |        + 0.75 * (CAST(tf.dl AS DOUBLE) * CAST(st.n_docs AS DOUBLE) / CAST(st.sum_dl AS DOUBLE)))) AS score
+         |  FROM tf JOIN dfq USING (w) CROSS JOIN st)
+         |SELECT w, doc_id, tf, dl, df, score, rn FROM (
+         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY w ORDER BY score DESC, doc_id ASC) AS rn
+         |  FROM sc) t
+         |WHERE rn <= 5 ORDER BY w, rn""".stripMargin
+    }) { (s, dir) =>
       val docs = Corpus.docs(s, dir)
       val dlCol = size(filter(col("ws"), w => w =!= "")).cast("long")
       val toks = docs
@@ -588,7 +744,6 @@ object TextAnalysis {
       graft.plans.TopK.perGroup(scored,
           Seq("w"), Seq(("score", true), ("doc_id", false)), k = 5, rankName = "rn")
         .select("w", "doc_id", "tf", "dl", "df", "score", "rn")
-        .orderBy("w", "rn")
     },
 
     // KMV (k-minimum-values) distinct-count sketch: est = (k−1)·2³²/h_k
@@ -601,7 +756,19 @@ object TextAnalysis {
     // global sort. The error baseline is the distinct-HASH count
     // (named honestly: ~n²/2³³ birthday collisions below the true
     // distinct-word count at large n).
-    "d20_kmv_sketch" -> { (s, dir) =>
+    QuerySpec("d20_kmv_sketch", Nil,
+      Corpus.docsCte + {
+      val h = Corpus.hash32Sql("w")
+      s""", hd AS (SELECT DISTINCT $h AS h FROM (SELECT doc_id, unnest(ws) AS w FROM docs) t),
+         |hs AS (SELECT h FROM hd ORDER BY h LIMIT 64),
+         |kth AS (SELECT CAST(max(h) AS BIGINT) AS h_k, count(1) AS k_actual FROM hs),
+         |ex AS (SELECT count(1) AS n_distinct_hashes FROM hd)
+         |SELECT k_actual, h_k,
+         |  CASE WHEN k_actual < 64 THEN CAST(n_distinct_hashes AS DOUBLE)
+         |       ELSE 63.0 * 4294967296.0 / CAST(h_k AS DOUBLE) END AS est_distinct,
+         |  n_distinct_hashes
+         |FROM kth, ex""".stripMargin
+    }) { (s, dir) =>
       val k = 64
       val hashes = Corpus.docs(s, dir)
         .select(explode(col("ws")).as("w"))
@@ -626,7 +793,24 @@ object TextAnalysis {
     // double), and the per-doc argmax runs on TopKPerGroup with k=1 —
     // the exchange carries ONE bigram per (doc, partition), not the
     // full bigram frequency table a row_number window would sort.
-    "d29_repetition" -> { (s, dir) =>
+    QuerySpec("d29_repetition", by("doc_id"),
+      Corpus.docsCte +
+      """, bgs AS (
+        |  SELECT doc_id, ws[i] || ' ' || ws[i+1] AS bg
+        |  FROM docs, UNNEST(range(1, len(ws))) t(i)
+        |  WHERE len(ws) >= 2),
+        |counts AS (SELECT doc_id, bg, count(1) AS c FROM bgs GROUP BY 1, 2),
+        |ranked AS (
+        |  SELECT doc_id, bg, c,
+        |    row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, bg ASC) AS rn
+        |  FROM counts),
+        |nb AS (SELECT doc_id, CAST(len(ws) - 1 AS BIGINT) AS n_bigrams
+        |       FROM docs WHERE len(ws) >= 2)
+        |SELECT r.doc_id, r.bg, r.c, n.n_bigrams,
+        |  CAST(r.c AS DOUBLE) / n.n_bigrams AS top_frac,
+        |  CAST(r.c AS DOUBLE) / n.n_bigrams >= 0.2 AS repetitive
+        |FROM ranked r JOIN nb n USING (doc_id)
+        |WHERE rn = 1 ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val docs = Corpus.docs(s, dir).filter(size(col("ws")) >= 2)
       // bigram build on the GramShingles codegen kernel — the
       // transform HOF it replaces folded interpreted per word
@@ -640,7 +824,6 @@ object TextAnalysis {
         .withColumn("top_frac", col("c").cast("double") / col("n_bigrams"))
         .withColumn("repetitive", col("top_frac") >= 0.2)
         .select("doc_id", "bg", "c", "n_bigrams", "top_frac", "repetitive")
-        .orderBy("doc_id")
     },
 
     // LEXICAL-DIVERSITY panel — the vocabulary-concentration quality
@@ -661,8 +844,27 @@ object TextAnalysis {
     // oracle recomputes the panel through the RELATIONAL histogram
     // (explode → GROUP BY), so the hash compare also proves the
     // sorted-run fold ≡ the group-by histogram. Pin documents=1.
-    "d107_lexical_diversity" -> { (s, dir) =>
-      diversityPanel(graft.sources.Tables.documents(s, dir)).orderBy("doc_id")
+    QuerySpec("d107_lexical_diversity", by("doc_id"),
+      Corpus.docsCte +
+      """, words AS (
+        |  SELECT doc_id, ws[i] AS w
+        |  FROM docs, UNNEST(range(1, len(ws) + 1)) t(i)),
+        |wc AS (SELECT doc_id, w, count(1) AS c FROM words GROUP BY 1, 2),
+        |div AS (
+        |  SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
+        |    count(1) AS n_types,
+        |    count(CASE WHEN c = 1 THEN 1 END) AS n_hapax,
+        |    CAST(sum(c * c) AS BIGINT) AS sumsq
+        |  FROM wc GROUP BY 1)
+        |SELECT doc_id, n_tokens, n_types, n_hapax,
+        |  CAST(n_types AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS ttr,
+        |  CAST(n_hapax AS DOUBLE) / CAST(n_types AS DOUBLE) AS hapax_frac,
+        |  CAST(sumsq AS DOUBLE) / CAST(n_tokens AS DOUBLE)
+        |    / CAST(n_tokens AS DOUBLE) AS simpson,
+        |  CAST(n_types AS DOUBLE) / CAST(n_tokens AS DOUBLE) < 0.35
+        |    AS low_diversity
+        |FROM div ORDER BY doc_id""".stripMargin) { (s, dir) =>
+      diversityPanel(graft.sources.Tables.documents(s, dir))
     },
 
     // VOCABULARY-GROWTH curve (Heaps' law, measured not fitted) — how
@@ -683,7 +885,30 @@ object TextAnalysis {
     // rows (declared in PlanSpec's bounded-window set). Quarter cut
     // is integer arithmetic (doc_id·4 div N) — engine-exact; ratios
     // divide exact integers (§4).
-    "d109_vocab_growth" -> { (s, dir) =>
+    QuerySpec("d109_vocab_growth", by("quarter"),
+      Corpus.docsCte +
+      """, n AS (SELECT count(1) AS n FROM documents),
+        |words AS (
+        |  SELECT doc_id, ws[i] AS w
+        |  FROM docs, UNNEST(range(1, len(ws) + 1)) t(i)),
+        |fs AS (SELECT w, min(doc_id) AS first_doc FROM words GROUP BY 1),
+        |nt AS (
+        |  SELECT least(CAST(3 AS BIGINT), first_doc * 4 // (SELECT n FROM n)) + 1 AS quarter,
+        |    count(1) AS new_types
+        |  FROM fs GROUP BY 1),
+        |tk AS (
+        |  SELECT least(CAST(3 AS BIGINT), doc_id * 4 // (SELECT n FROM n)) + 1 AS quarter,
+        |    CAST(sum(len(ws)) AS BIGINT) AS n_tokens
+        |  FROM docs GROUP BY 1)
+        |SELECT quarter,
+        |  CAST((SELECT n FROM n) AS BIGINT) * quarter // 4 AS n_docs_prefix,
+        |  CAST(coalesce(nt.new_types, 0) AS BIGINT) AS new_types,
+        |  CAST(sum(coalesce(nt.new_types, 0)) OVER (ORDER BY quarter) AS BIGINT) AS cum_types,
+        |  tk.n_tokens,
+        |  CAST(sum(tk.n_tokens) OVER (ORDER BY quarter) AS BIGINT) AS cum_tokens,
+        |  CAST(sum(coalesce(nt.new_types, 0)) OVER (ORDER BY quarter) AS DOUBLE)
+        |    / CAST(sum(tk.n_tokens) OVER (ORDER BY quarter) AS DOUBLE) AS prefix_ttr
+        |FROM tk LEFT JOIN nt USING (quarter) ORDER BY quarter""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val n = graft.sources.Stats.parquetRowCount(s, s"$dir/documents.parquet")
       val docs = Corpus.docs(s, dir)
@@ -708,7 +933,6 @@ object TextAnalysis {
           col("cum_types").cast("double") / col("cum_tokens").cast("double"))
         .select("quarter", "n_docs_prefix", "new_types", "cum_types",
           "n_tokens", "cum_tokens", "prefix_ttr")
-        .orderBy("quarter")
     },
 
     // Corpus length statistics — the quality-dashboard numbers every
@@ -721,7 +945,13 @@ object TextAnalysis {
     // ((n−1)·q position, linear between neighbors) is the same
     // definition DuckDB's quantile_cont uses, over exact integer
     // inputs — bit-identical doubles.
-    "d28_corpus_stats" -> { (s, dir) =>
+    QuerySpec("d28_corpus_stats", by("lang"),
+      """SELECT lang, COUNT(1) AS n_docs,
+        |  quantile_cont(n_chars, 0.5) AS p50,
+        |  quantile_cont(n_chars, 0.9) AS p90,
+        |  quantile_cont(n_chars, 0.99) AS p99,
+        |  CAST(SUM(n_chars) AS BIGINT) AS total_chars
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin) { (s, dir) =>
       graft.sources.Tables.documents(s, dir)
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"),
@@ -730,7 +960,6 @@ object TextAnalysis {
         .select(col("lang"), col("n_docs"),
           col("ps")(0).as("p50"), col("ps")(1).as("p90"), col("ps")(2).as("p99"),
           col("total_chars"))
-        .orderBy("lang")
     },
 
     // Column PROFILE — the ANALYZE-style schema report run before a
@@ -744,7 +973,30 @@ object TextAnalysis {
     // are the declared baseline; at 100 TB the same report downgrades
     // to approx_count_distinct per column (mergeable HLL, no Expand).
     // Pin documents=1.
-    "d70_profile" -> { (s, dir) =>
+    QuerySpec("d70_profile", by("col_name"),
+      """WITH a AS (
+        |  SELECT count(1) AS n_rows,
+        |    count(doc_id) AS nn_doc_id, count(DISTINCT doc_id) AS nd_doc_id,
+        |    CAST(sum(length(CAST(doc_id AS VARCHAR))) AS BIGINT) AS len_doc_id,
+        |    count(text) AS nn_text, count(DISTINCT text) AS nd_text,
+        |    CAST(sum(length(text)) AS BIGINT) AS len_text,
+        |    count(lang) AS nn_lang, count(DISTINCT lang) AS nd_lang,
+        |    CAST(sum(length(lang)) AS BIGINT) AS len_lang,
+        |    count(source) AS nn_source, count(DISTINCT source) AS nd_source,
+        |    CAST(sum(length(source)) AS BIGINT) AS len_source,
+        |    count(n_chars) AS nn_n_chars, count(DISTINCT n_chars) AS nd_n_chars,
+        |    CAST(sum(length(CAST(n_chars AS VARCHAR))) AS BIGINT) AS len_n_chars
+        |  FROM documents)
+        |SELECT col_name, n_rows, n_nonnull, n_distinct,
+        |  CAST(n_rows - n_nonnull AS DOUBLE) / n_rows AS null_frac,
+        |  CAST(sum_len AS DOUBLE) / greatest(n_nonnull, 1) AS avg_len
+        |FROM (
+        |  SELECT 'doc_id' AS col_name, n_rows, nn_doc_id AS n_nonnull, nd_doc_id AS n_distinct, len_doc_id AS sum_len FROM a
+        |  UNION ALL SELECT 'text', n_rows, nn_text, nd_text, len_text FROM a
+        |  UNION ALL SELECT 'lang', n_rows, nn_lang, nd_lang, len_lang FROM a
+        |  UNION ALL SELECT 'source', n_rows, nn_source, nd_source, len_source FROM a
+        |  UNION ALL SELECT 'n_chars', n_rows, nn_n_chars, nd_n_chars, len_n_chars FROM a)
+        |ORDER BY col_name""".stripMargin) { (s, dir) =>
       val d = graft.sources.Tables.documents(s, dir)
       def cols3(c: String, strForm: org.apache.spark.sql.Column) = Seq(
         count(col(c)).as(s"nn_$c"),
@@ -767,7 +1019,6 @@ object TextAnalysis {
             / col("n_rows").cast("double")).as("null_frac"),
           (col("p.sum_len").cast("double")
             / greatest(col("p.n_nonnull"), lit(1L)).cast("double")).as("avg_len"))
-        .orderBy("col_name")
     },
 
     // GROUPED distinct-count sketches in ONE pass: per-source
@@ -777,7 +1028,25 @@ object TextAnalysis {
     // partition) through the exchange — the partial/final merge tree
     // IS the sketch union, so the cost per group is O(k) regardless of
     // corpus size.
-    "d26_kmv_by_source" -> { (s, dir) =>
+    QuerySpec("d26_kmv_by_source", by("source"),
+      Corpus.docsCte + {
+      val h = Corpus.hash32Sql("w")
+      s""", wh AS (
+         |  SELECT DISTINCT dd.source, $h AS h
+         |  FROM (SELECT doc_id, unnest(ws) AS w FROM docs) t
+         |  JOIN documents dd USING (doc_id)),
+         |r AS (
+         |  SELECT source, h,
+         |    row_number() OVER (PARTITION BY source ORDER BY h) AS rn,
+         |    count(1) OVER (PARTITION BY source) AS nd
+         |  FROM wh)
+         |SELECT source,
+         |  CAST(least(nd, 64) AS BIGINT) AS k_actual,
+         |  CAST(max(CASE WHEN rn <= 64 THEN h END) AS BIGINT) AS h_k,
+         |  CASE WHEN nd < 64 THEN CAST(nd AS DOUBLE)
+         |       ELSE 63.0 * 4294967296.0 / CAST(max(CASE WHEN rn <= 64 THEN h END) AS DOUBLE) END AS est_distinct
+         |FROM r GROUP BY source, nd ORDER BY source""".stripMargin
+    }) { (s, dir) =>
       Corpus.docs(s, dir)
         .select(col("source"), explode(col("ws")).as("w"))
         .select(col("source"), hash32(col("w")).as("h"))
@@ -785,7 +1054,6 @@ object TextAnalysis {
         .agg(KmvSketchAgg(col("h"), 64).as("kmv"))
         .select(col("source"), col("kmv.k_actual").as("k_actual"),
           col("kmv.h_k").as("h_k"), col("kmv.est_distinct").as("est_distinct"))
-        .orderBy("source")
     },
 
     // End-to-end training-set selection: the composition a real corpus
@@ -794,7 +1062,20 @@ object TextAnalysis {
     // (min doc_id per content hash). One scan computes quality per-row;
     // the dedup keeper is a window over the same pass (no groupBy +
     // join-back, which would recompute the normalization lineage).
-    "d21_corpus_select" -> { (s, dir) =>
+    QuerySpec("d21_corpus_select", by("doc_id"),
+      Corpus.docsCte +
+      s""", scored AS (
+         |  SELECT doc_id, md5(norm) AS content_hash,
+         |    CAST(len(ws) AS BIGINT) AS n_words,
+         |    CAST(len(list_filter(ws, w -> list_contains($enStopSqlList, w))) AS DOUBLE)
+         |      / greatest(len(ws), 1) AS stop_ratio,
+         |    MIN(doc_id) OVER (PARTITION BY md5(norm)) AS keeper
+         |  FROM docs
+         |)
+         |SELECT doc_id, content_hash, n_words, stop_ratio
+         |FROM scored
+         |WHERE doc_id = keeper AND stop_ratio >= 0.05 AND n_words BETWEEN 5 AND 500
+         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val keepW = Window.partitionBy("content_hash")
       Corpus.docs(s, dir)
         .withColumn("content_hash", md5(col("norm")))
@@ -806,7 +1087,6 @@ object TextAnalysis {
         .filter(col("doc_id") === col("keeper")
           && col("stop_ratio") >= 0.05 && col("n_words").between(5, 500))
         .select("doc_id", "content_hash", "n_words", "stop_ratio")
-        .orderBy("doc_id")
     },
 
     // Quality × duplication CORRELATION diagnostic — "are my low-
@@ -835,714 +1115,8 @@ object TextAnalysis {
     // threshold rows and ONE conditional aggregate emits the whole
     // curve — the sweep never re-scans. Counts exact ints, fractions
     // one-shot divides.
-    "d83_quality_curve" -> { (s, dir) =>
-      val sigW = Window.partitionBy("band", "sig")
-      val dup = Dedup.bandSigs(s, dir)
-        .withColumn("bn", count(lit(1)).over(sigW))
-        .groupBy("doc_id")
-        .agg(max(when(col("bn") > 1, 1L).otherwise(0L)).as("is_dup"))
-      val perDoc = qualityCols(Corpus.docs(s, dir))
-        .select(col("doc_id"), col("quality"),
-          expr("CAST(size(filter(ws, x -> x != '')) AS BIGINT)").as("n_tokens"))
-        .join(dup, Seq("doc_id"), "left")
-        .withColumn("is_dup", coalesce(col("is_dup"), lit(0L)))
-      perDoc
-        .select(col("quality"), col("n_tokens"), col("is_dup"),
-          explode(array(lit(0.05), lit(0.10), lit(0.20), lit(0.30))).as("t"))
-        .groupBy("t")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("quality") >= col("t"), 1L).otherwise(0L)).as("docs_kept"),
-          sum(when(col("quality") >= col("t"), col("n_tokens")).otherwise(0L)).as("tokens_kept"),
-          sum(when(col("quality") >= col("t"), col("is_dup")).otherwise(0L)).as("dup_kept"))
-        .withColumn("keep_frac", col("docs_kept").cast("double") / col("n_docs"))
-        .withColumn("dup_rate_kept",
-          col("dup_kept").cast("double") / greatest(col("docs_kept"), lit(1L)))
-        .orderBy("t")
-    },
-
-    "d77_quality_dup_corr" -> { (s, dir) =>
-      val sigW = Window.partitionBy("band", "sig")
-      val dup = Dedup.bandSigs(s, dir)
-        .withColumn("bucket_n", count(lit(1)).over(sigW))
-        .groupBy("doc_id")
-        .agg(max(when(col("bucket_n") > 1, 1L).otherwise(0L)).as("is_dup"))
-      qualityCols(Corpus.docs(s, dir))
-        .select(col("doc_id"), col("quality"))
-        .join(dup, Seq("doc_id"), "left")
-        .withColumn("is_dup", coalesce(col("is_dup"), lit(0L)))
-        .withColumn("qbin", floor(col("quality") * 20).cast("long"))
-        .groupBy("qbin")
-        .agg(count(lit(1)).as("n_docs"), sum(col("is_dup")).as("n_dup_docs"))
-        .withColumn("dup_rate", col("n_dup_docs").cast("double") / col("n_docs"))
-        .orderBy("qbin")
-    },
-
-    // QUALITY ↔ GOPHER CALIBRATION — do the two quality axes agree?
-    // d09 scores a continuous scalar, d92 votes a hard rule panel;
-    // this is d77's correlation shape between THEM: per d77-style
-    // quality bin (floor(quality·20)) the doc count, how many the
-    // Gopher panel keeps, and the keep rate — the calibration curve
-    // that decides whether the cheap scalar can stand in for the rule
-    // panel at a given cutoff (and where the two disagree enough that
-    // a pipeline must run both). Two per-row passes joined on doc_id
-    // (d77's two-pass shape, pin documents=2); the bin aggregate is
-    // 20-row bounded; keep_rate divides identical integers both
-    // engines.
-    "d102_quality_calibration" -> { (s, dir) =>
-      val q = qualityCols(Corpus.docs(s, dir)).select(col("doc_id"), col("quality"))
-      val g = gopherPanel(Corpus.docs(s, dir)).select(col("doc_id"), col("keep"))
-      q.join(g, Seq("doc_id"))
-        .withColumn("qbin", floor(col("quality") * 20).cast("long"))
-        .groupBy("qbin")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("keep"), 1L).otherwise(0L)).as("n_keep"))
-        .withColumn("keep_rate", col("n_keep").cast("double") / col("n_docs"))
-        .orderBy("qbin")
-    },
-
-    // Per-source DATASET CARD — the datasheet a corpus release ships
-    // (Datasheets for Datasets, Gebru et al. 2021), one row per
-    // source: volume (docs, tokens), language spread, mean length,
-    // provenance coverage (share citing a URL), and near-dup exposure
-    // (share in a shared LSH bucket — d77's membership flag). The
-    // card COMPOSES existing passes rather than inventing new
-    // metrics: one corpus scan carries tokens/langs/length/URL flags,
-    // the signature pass prices dup membership, and ONE bounded
-    // per-source aggregate emits the panel. Every fraction is a
-    // one-shot divide of exact longs.
-    "d79_dataset_card" -> { (s, dir) =>
-      val sigW = Window.partitionBy("band", "sig")
-      val dup = Dedup.bandSigs(s, dir)
-        .withColumn("bn", count(lit(1)).over(sigW))
-        .groupBy("doc_id")
-        .agg(max(when(col("bn") > 1, 1L).otherwise(0L)).as("is_dup"))
-      withInjectedUrls(Corpus.docs(s, dir))
-        .withColumn("has_url",
-          size(regexp_extract_all(col("raw"), lit(urlRe), lit(0))) > 0)
-        .join(dup, Seq("doc_id"), "left")
-        .withColumn("is_dup", coalesce(col("is_dup"), lit(0L)))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(size(col("ws"))).cast("long").as("n_tokens"),
-          countDistinct(col("lang")).as("n_langs"),
-          sum(length(col("text"))).cast("long").as("sum_chars"),
-          sum(when(col("has_url"), 1L).otherwise(0L)).as("n_with_url"),
-          sum(col("is_dup")).as("n_dup"))
-        .select(col("source"), col("n_docs"), col("n_tokens"), col("n_langs"),
-          (col("sum_chars").cast("double") / col("n_docs")).as("mean_chars"),
-          (col("n_with_url").cast("double") / col("n_docs")).as("url_frac"),
-          (col("n_dup").cast("double") / col("n_docs")).as("dup_frac"))
-        .orderBy("source")
-    },
-
-    // Document fingerprint: min rolling hash over stride-4 8-char
-    // windows of the normalized text (winnowing-style min-sampling;
-    // the stride cuts hash work 4× with the same min-sketch shape).
-    // One Fingerprint kernel call per row AT THE SCAN — the previous
-    // explode formulation (which the oracle still mirrors) fanned each
-    // doc out to |windows| ≈ len/4 rows and shuffled them into a
-    // per-doc aggregate; at 100 TB that multiplies the dominant
-    // exchange by the window count for a value-identical result.
-    "d11_fingerprint" -> { (s, dir) =>
-      Corpus.docs(s, dir)
-        .filter(length(col("norm")) >= 8)
-        .withColumn("fpv", Fingerprint(col("norm")))
-        .select(col("doc_id"),
-          element_at(col("fpv"), 1).as("fp_min"),
-          element_at(col("fpv"), 2).as("n_uniq_windows"))
-        .orderBy("doc_id")
-    },
-
-    // URL extraction + per-domain inventory — the provenance report a
-    // crawl corpus runs before domain-level filtering/deduplication.
-    // The corpus text is synthetic word salad, so URLs are INJECTED
-    // deterministically from doc_id (mirrored in the oracle CTE; same
-    // pattern as d25's PII injection) — the operator under test is the
-    // extract→explode→per-domain rollup. The countDistinct Expand runs
-    // over the extracted URL stream (≤2 rows/doc by construction, and
-    // in a real crawl |urls| ≪ |text bytes|), never the corpus scan.
-    "d31_url_extract" -> { (s, dir) =>
-      val raw = withInjectedUrls(graft.sources.Tables.documents(s, dir))
-      raw.select(col("doc_id"),
-          explode(regexp_extract_all(col("raw"), lit(urlRe), lit(0))).as("url"))
-        .withColumn("domain", regexp_extract(col("url"), urlRe, 1))
-        .withColumn("path", regexp_extract(col("url"), urlRe, 2))
-        .groupBy("domain")
-        .agg(count(lit(1)).as("n_urls"),
-          countDistinct(col("doc_id")).as("n_docs"),
-          countDistinct(col("path")).as("n_paths"))
-        .orderBy("domain")
-    },
-
-    // Domain REPUTATION index — the filter table a web corpus builds
-    // from d31's provenance: per domain, how good are the documents
-    // citing it, and where does it rank? One corpus scan builds the
-    // doc→domain link stream with the d09 quality score already
-    // attached per row; the per-domain aggregate is bounded (domains ≪
-    // docs) with exact DECIMAL quality sums (no float summation-order
-    // drift), and the quartile tiering is a rank window over the
-    // BOUNDED domain table only — rank-based tiers (bottom quartile =
-    // "low") stay discriminative at every corpus size where absolute
-    // cutoffs drift with the mix. s28 consumes this index as the
-    // streaming ingest gate.
-    "d72_domain_reputation" -> { (s, dir) =>
-      domainReputation(s, dir).orderBy("domain")
-    },
-
-    // Source-overlap MATRIX via mergeable KMV sketch algebra — "how
-    // much content do my ingest sources share?" asked WITHOUT an
-    // all-pairs content join: one corpus pass folds each source's
-    // word-3-gram stream into a ≤k-value sketch (the x06 aggregate's
-    // payload form — the shuffle carries ≤k longs per source per
-    // partition), then every source PAIR union-merges two bounded
-    // arrays: the k smallest of the merged sketches is a valid sketch
-    // of the union, so |A∪B|, |A∩B| and Jaccard fall out of pure
-    // array arithmetic on 20 rows — no second data pass, no gram
-    // rejoin. At 100 TB this is the only affordable shape for an S²
-    // overlap report. Estimates are the d26 KMV law (exact when a
-    // sketch never filled); every double derives from one division of
-    // exact integers, so the matrix is bit-identical cross-engine.
-    "d73_source_overlap" -> { (s, dir) =>
-      import org.apache.spark.sql.Column
-      val k = 64
-      val sk = Corpus.docs(s, dir)
-        .select(col("source"), explode(Corpus.gramsArr).as("gram"))
-        .select(col("source"), hash32(col("gram")).as("h"))
-        .groupBy("source")
-        .agg(KmvValuesAgg(col("h"), k).as("hs"))
-        // persist: both pair sides reference this aggregate, and AQE
-        // exchange reuse is best-effort (the lshPairs lesson) — the
-        // frame is ≤k longs per source, so the cache is trivial and
-        // the one-corpus-scan pin becomes structural
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val a = sk.select(col("source").as("a_source"), col("hs").as("a_hs"))
-      val b = sk.select(col("source").as("b_source"), col("hs").as("b_hs"))
-      def est(hs: Column): Column =
-        when(size(hs) < k, size(hs).cast("double"))
-          .otherwise(lit((k - 1).toDouble) * lit(4294967296.0)
-            / element_at(hs, size(hs)).cast("double"))
-      a.join(broadcast(b), col("a_source") < col("b_source"))
-        .withColumn("u_hs",
-          slice(array_sort(array_union(col("a_hs"), col("b_hs"))), 1, k))
-        .withColumn("est_a", est(col("a_hs")))
-        .withColumn("est_b", est(col("b_hs")))
-        .withColumn("est_union", est(col("u_hs")))
-        .withColumn("est_inter",
-          greatest(lit(0.0), (col("est_a") + col("est_b")) - col("est_union")))
-        .withColumn("jaccard_est", col("est_inter") / col("est_union"))
-        .select("a_source", "b_source", "est_a", "est_b", "est_union",
-          "est_inter", "jaccard_est")
-        .orderBy("a_source", "b_source")
-    },
-
-    // Z-order data layout (x07 kernel in production): a 32-bit Morton
-    // key over (length bucket, source bucket) — the clustering key a
-    // 100 TB corpus would range-partition + sort by so scans filtering
-    // on EITHER dimension prune files via min/max stats. The report
-    // groups docs into the 16 top-level Z-ranges (the key's high 4
-    // bits = the 4×4 grid cell both dimensions quartered) and shows
-    // the layout is balanced + range-contiguous. Key computation is
-    // the branch-free ZOrder2 codegen kernel — a pure per-row
-    // projection at the scan, no shuffle before the 16-group agg.
-    "d33_zorder" -> { (s, dir) =>
-      graft.sources.Tables.documents(s, dir)
-        .withColumn("x", least(col("n_chars") * 100, lit(65535L)))
-        .withColumn("y", pmod(hash32(col("source")), lit(65536L)))
-        .withColumn("zkey", ZOrder2(col("x"), col("y")))
-        .withColumn("zrange", shiftright(col("zkey"), 28))
-        .groupBy("zrange")
-        .agg(count(lit(1)).as("n_docs"),
-          min(col("zkey")).as("min_z"),
-          max(col("zkey")).as("max_z"),
-          countDistinct(col("source")).as("n_sources"))
-        .orderBy("zrange")
-    },
-
-    // Bigram LM novelty filter — the CCNet/KenLM quality-filter shape
-    // with bit-stable arithmetic: the corpus bigram model scores each
-    // transition p(w2|w1) = c(w1w2)/c(w1·), and each doc reports its
-    // rarest and commonest transition plus the fraction of transitions
-    // it ALONE contributes to the corpus (c2 = 1 — pure novel text vs
-    // formulaic recombination). All model statistics are integer
-    // counts; the only float ops are per-row IEEE divides of those
-    // integers (no float SUM anywhere — min/max/count aggregate the
-    // divides order-independently), so scores are bit-identical
-    // cross-engine: d19's rational-idf determinism trick applied to
-    // LM scoring. Scale: the full bigram stream crosses exactly TWO
-    // exchanges — one hash partition by bg (built once; ReuseExchange
-    // serves both the c2 aggregate and the model join probe) and the
-    // final per-doc aggregate. The unigram denominators come from the
-    // c2 TABLE (c1(w1) = Σ c2 over w1's bigrams — |model| rows, not
-    // the stream), so the model enrich join never touches the corpus.
-    "d37_lm_novelty" -> { (s, dir) =>
-      val docs = Corpus.docs(s, dir).filter(size(col("ws")) >= 2)
-      // bigram build on the GramShingles codegen kernel (the struct
-      // transform it replaces folded interpreted per word); the stream
-      // no longer carries w1 per row — words are space-free (split
-      // output), so w1 ≡ the bigram's prefix before the space and is
-      // recovered on the |model|-row aggregate instead: one narrower
-      // exchange (doc_id, bg), same exact model.
-      val bg = docs.select(col("doc_id"),
-        explode(graft.functions.GramShingles(col("ws"), 2, distinct = false)).as("bg"))
-      // bg determines w1. materialize-once: c2 feeds BOTH the model
-      // join and c1's aggregation — without the persist each consumer
-      // re-runs the full bigram-stream aggregate (measured: 3 corpus
-      // scans). The cached frame is the MODEL (distinct bigrams), not
-      // the corpus; persist keeps lineage for executor-loss recompute.
-      val c2 = bg.groupBy("bg")
-        .agg(count(lit(1)).as("c2"))
-        .withColumn("w1", substring_index(col("bg"), " ", 1))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val c1 = c2.groupBy("w1").agg(sum(col("c2")).as("c1"))
-      val model = c2.join(c1, Seq("w1"))
-        .select(col("bg"), col("c2"), col("c1"))
-      bg.join(model, Seq("bg"))
-        .withColumn("p", col("c2").cast("double") / col("c1"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_bigrams"),
-          sum(when(col("c2") === 1, 1L).otherwise(0L)).as("n_novel"),
-          min(col("p")).as("min_p"),
-          max(col("p")).as("max_p"))
-        .withColumn("novelty", col("n_novel").cast("double") / col("n_bigrams"))
-        .orderBy("doc_id")
-    },
-
-    // Canonical-URL dedup — the first dedup pass a web corpus runs,
-    // BEFORE any content hashing: the same page crawled as
-    // `http://…`, `https://www.…/`, `HTTP://…?utm_…`, `…#frag` is one
-    // document. Each doc carries a deterministic crawl URL whose
-    // variant decoration depends on doc_id%4; canonicalization strips
-    // scheme/`www.`/query/fragment/trailing slash and lowercases the
-    // host, then the keeper per canonical page is the min doc_id —
-    // computed by [[urlDedupOver]]'s AGGREGATE+JOIN (skew-survivable),
-    // not a partition window (which would stall one task on a hot
-    // URL). Pure per-row string kernels (codegen'd regexps) front the
-    // two cheap pruned passes.
-    "d60_url_dedup" -> { (s, dir) =>
-      urlDedupOver(graft.sources.Tables.documents(s, dir)
-        .select(col("doc_id"), crawlUrl(col("doc_id")).as("url")))
-        .orderBy("doc_id")
-    },
-
-    // Count-Min sketch heavy hitters — the frequency twin of d20's KMV
-    // (distinct-count) sketch: 4 hash rows × 1024 cells, every token
-    // occurrence incrementing one cell per row; an estimate is the MIN
-    // over a token's 4 cells, always ≥ the true count (one-sided
-    // error — the property the spec pins). The sketch agg is the
-    // 100 TB path: a BOUNDED 4096-cell aggregate whose map-side
-    // partials collapse each partition before the shuffle, vs the
-    // exact count's full token-keyed exchange. The exact top-20 ride
-    // along as the declared QA baseline (the d34 pattern) so the
-    // report carries measured inflation, not hoped-for accuracy; the
-    // 4096-row sketch broadcasts to the probe join.
-    "d61_cms_heavy" -> { (s, dir) =>
-      val cellsOf = Corpus.cmsCellsSql
-      val toks = Corpus.docs(s, dir)
-        .select(explode(col("ws")).as("w")).filter(col("w") =!= "")
-      val sketch = toks
-        .select(explode(expr(cellsOf)).as("rc"))
-        .select(col("rc.i").as("i"), col("rc.cell").as("cell"))
-        .groupBy("i", "cell").agg(count(lit(1)).as("c"))
-      val exact = toks.groupBy("w").agg(count(lit(1)).as("n_exact"))
-        .orderBy(col("n_exact").desc, col("w").asc).limit(20)
-      exact
-        .select(col("w"), col("n_exact"), explode(expr(cellsOf)).as("rc"))
-        .select(col("w"), col("n_exact"),
-          col("rc.i").as("i"), col("rc.cell").as("cell"))
-        .join(broadcast(sketch), Seq("i", "cell"))
-        .groupBy("w", "n_exact")
-        .agg(min(col("c")).as("n_cms"))
-        .withColumn("inflation", col("n_cms") - col("n_exact"))
-        .orderBy(col("n_exact").desc, col("w").asc)
-    },
-
-    // BPE merge-pair statistics — the counting round a tokenizer
-    // trainer runs at corpus scale: every adjacent CHARACTER pair,
-    // weighted by corpus word frequency (train on the word TABLE, not
-    // the token stream — the BPE trick that makes corpus size
-    // irrelevant: the heavy explode runs over the bounded vocabulary,
-    // the corpus contributes only the frequency weights from one
-    // token-stream agg). Two counts per pair, both exact integers:
-    // the sliding count (every position — what frequency ranking
-    // uses) and the NON-OVERLAPPING merge count (what one BPE apply
-    // round would actually perform, via the replace() length-delta —
-    // 'aaa' holds two sliding 'aa's but ONE merge), plus the distinct
-    // words carrying the pair. Top-10 by sliding count.
-    "d64_bpe_pairs" -> { (s, dir) =>
-      // the bounded word table persists: both pair counts branch from
-      // it, and without the persist each branch would re-run the
-      // corpus token agg
-      val words = Corpus.docs(s, dir)
-        .select(explode(col("ws")).as("w")).filter(col("w") =!= "")
-        .groupBy("w").agg(count(lit(1)).as("n"))
-        .filter(length(col("w")) >= 2)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val pairs = words
-        .select(col("w"), col("n"), explode(expr(
-          "transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))")).as("p"))
-      val naive = pairs.groupBy("p").agg(sum(col("n")).as("pair_count"))
-      val merged = pairs.distinct()
-        .withColumn("m",
-          col("n") * expr("(length(w) - length(replace(w, p, ''))) div 2"))
-        .groupBy("p")
-        .agg(sum(col("m")).as("merge_count"), count(lit(1)).as("n_words"))
-      naive.join(merged, Seq("p"))
-        .orderBy(col("pair_count").desc, col("p").asc)
-        .limit(10)
-    }
-  )
-
-  val oracle: Map[String, String] = Map(
-    "d86_zipf_curve" -> (Corpus.docsCte +
-      """, cf AS (
-        |  SELECT w, count(1) AS cf
-        |  FROM (SELECT unnest(ws) AS w FROM docs) t
-        |  WHERE w <> '' GROUP BY w),
-        |tot AS (SELECT sum(cf) AS total FROM cf),
-        |top AS (SELECT w, cf FROM cf ORDER BY cf DESC, w LIMIT 100)
-        |SELECT ROW_NUMBER() OVER (ORDER BY cf DESC, w) AS rnk, w, cf,
-        |  CAST(cf AS DOUBLE) / CAST(total AS DOUBLE) AS share,
-        |  CAST(sum(cf) OVER (ORDER BY cf DESC, w ROWS UNBOUNDED PRECEDING) AS DOUBLE)
-        |    / CAST(total AS DOUBLE) AS cum_share
-        |FROM top CROSS JOIN tot ORDER BY rnk""".stripMargin),
-
-    "d08_langid" -> (Corpus.docsCte + {
-      val scExprs = langWords.map { case (lang, ws) =>
-        val lst = ws.map(w => s"'$w'").mkString("[", ", ", "]")
-        s"CAST(len(list_filter(ws, w -> list_contains($lst, w))) AS BIGINT) AS sc_$lang"
-      }.mkString(",\n|    ")
-      val scNames = langWords.map { case (l, _) => s"sc_$l" }.mkString(", ")
-      val cases = langWords.map { case (l, _) => s"WHEN sc_$l = m THEN '$l'" }
-        .mkString("\n|       ")
-      s""", sc AS (
-         |  SELECT doc_id,
-         |    $scExprs
-         |  FROM docs),
-         |mx AS (SELECT doc_id, $scNames, greatest($scNames) AS m FROM sc)
-         |SELECT doc_id,
-         |  CASE WHEN m = 0 THEN 'und'
-         |       $cases
-         |  END AS pred_lang,
-         |  m AS score
-         |FROM mx ORDER BY doc_id""".stripMargin
-    }),
-
-    "d101_langid_confusion" -> (Corpus.docsCte + {
-      val scExprs = langWords.map { case (lang, ws) =>
-        val lst = ws.map(w => s"'$w'").mkString("[", ", ", "]")
-        s"CAST(len(list_filter(ws, w -> list_contains($lst, w))) AS BIGINT) AS sc_$lang"
-      }.mkString(",\n|    ")
-      val scNames = langWords.map { case (l, _) => s"sc_$l" }.mkString(", ")
-      val cases = langWords.map { case (l, _) => s"WHEN sc_$l = m THEN '$l'" }
-        .mkString("\n|       ")
-      s""", sc AS (
-         |  SELECT doc_id, lang,
-         |    $scExprs
-         |  FROM docs),
-         |mx AS (SELECT doc_id, lang, $scNames, greatest($scNames) AS m FROM sc),
-         |pred AS (
-         |  SELECT lang,
-         |    CASE WHEN m = 0 THEN 'und'
-         |         $cases
-         |    END AS pred_lang
-         |  FROM mx)
-         |SELECT lang, pred_lang, count(1) AS n,
-         |  CAST(sum(count(1)) OVER (PARTITION BY lang) AS BIGINT) AS n_lang,
-         |  CAST(count(1) AS DOUBLE)
-         |    / CAST(sum(count(1)) OVER (PARTITION BY lang) AS BIGINT) AS share
-         |FROM pred GROUP BY lang, pred_lang
-         |ORDER BY lang, pred_lang""".stripMargin
-    }),
-
-    "d100_token_fertility" -> (Corpus.docsCte +
-      s"""SELECT lang, count(1) AS n_docs,
-         |  CAST(sum(len(ws)) AS BIGINT) AS n_words,
-         |  CAST(sum(len(regexp_extract_all(lower(text), '$tokenRe'))) AS BIGINT) AS n_tokens,
-         |  CAST(sum(length(text)) AS BIGINT) AS n_chars,
-         |  CAST(CAST(sum(len(regexp_extract_all(lower(text), '$tokenRe'))) AS BIGINT) AS DOUBLE)
-         |    / CAST(sum(len(ws)) AS BIGINT) AS fertility,
-         |  CAST(CAST(sum(length(text)) AS BIGINT) AS DOUBLE)
-         |    / CAST(sum(len(regexp_extract_all(lower(text), '$tokenRe'))) AS BIGINT) AS chars_per_token
-         |FROM docs GROUP BY lang ORDER BY lang""".stripMargin),
-
-    "d09_quality" -> (Corpus.docsCte +
-      s"""SELECT doc_id,
-         |  CAST(length(text) AS BIGINT) AS n_chars_raw,
-         |  CAST(len(ws) AS BIGINT) AS n_words,
-         |  CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS BIGINT) AS n_digits,
-         |  CAST(length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g')) AS BIGINT) AS n_punct,
-         |  CAST(len(list_filter(ws, w -> list_contains($enStopSqlList, w))) AS BIGINT) AS n_stop,
-         |  CAST(len(list_filter(ws, w -> list_contains($enStopSqlList, w))) AS DOUBLE)
-         |    / greatest(len(ws), 1) AS stop_ratio,
-         |  CAST(length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
-         |    / greatest(length(text), 1) AS punct_ratio,
-         |  CAST(len(list_filter(ws, w -> list_contains($enStopSqlList, w))) AS DOUBLE)
-         |    / greatest(len(ws), 1)
-         |  - CAST(length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
-         |    / greatest(length(text), 1)
-         |  + CASE WHEN len(ws) BETWEEN 5 AND 200 THEN 0.1 ELSE 0.0 END AS quality
-         |FROM docs ORDER BY doc_id""".stripMargin),
-
-    "d92_gopher_rules" -> (Corpus.docsCte +
-      s""", wtab AS (SELECT doc_id, unnest(ws) AS w FROM docs),
-         |per AS (
-         |  SELECT doc_id, w, count(1) AS c, len(w) AS wl
-         |  FROM wtab GROUP BY doc_id, w),
-         |agg AS (
-         |  SELECT doc_id,
-         |    CAST(sum(c) AS BIGINT) AS n_words,
-         |    CAST(sum(c * wl) AS BIGINT) AS wchars,
-         |    CAST(sum(CASE WHEN wl >= 3 THEN c ELSE 0 END) AS BIGINT) AS n_subst,
-         |    CAST(count(CASE WHEN list_contains($enStopSqlList, w) THEN 1 END) AS BIGINT) AS n_stop_kinds,
-         |    CAST(max(c) AS BIGINT) AS top_word_n
-         |  FROM per GROUP BY doc_id)
-         |SELECT doc_id, n_words, wchars, n_subst, n_stop_kinds, top_word_n,
-         |  n_words BETWEEN 50 AND 100000 AS r_count,
-         |  (wchars >= 3 * n_words AND wchars <= 10 * n_words) AS r_wlen,
-         |  5 * n_subst >= 4 * n_words AS r_subst,
-         |  n_stop_kinds >= 2 AS r_stop,
-         |  5 * top_word_n <= n_words AS r_rep,
-         |  ((n_words BETWEEN 50 AND 100000)
-         |   AND wchars >= 3 * n_words AND wchars <= 10 * n_words
-         |   AND 5 * n_subst >= 4 * n_words
-         |   AND n_stop_kinds >= 2
-         |   AND 5 * top_word_n <= n_words) AS keep
-         |FROM agg ORDER BY doc_id""".stripMargin),
-
-    "d10_tokens" -> (Corpus.docsCte +
-      s"""SELECT doc_id,
-         |  CAST(len(ws) AS BIGINT) AS ws_tokens,
-         |  CAST(len(regexp_extract_all(lower(text), '$tokenRe')) AS BIGINT) AS re_tokens,
-         |  CAST(ceil(length(text) / 4.0) AS BIGINT) AS bpe_est
-         |FROM docs ORDER BY doc_id""".stripMargin),
-
-    "d16_vocab" -> (Corpus.docsCte +
-      """SELECT w, COUNT(1) AS doc_freq FROM
-        |  (SELECT DISTINCT doc_id, w FROM
-        |    (SELECT doc_id, unnest(ws) AS w FROM docs) u) t
-        |GROUP BY w ORDER BY doc_freq DESC, w ASC LIMIT 20""".stripMargin),
-
-    "d84_bm25" -> (Corpus.docsCte + {
-      val termList = bm25Terms.map(t => s"'$t'").mkString("(", ", ", ")")
-      s""", toks AS (
-         |  SELECT doc_id, CAST(len(list_filter(ws, x -> x <> '')) AS BIGINT) AS dl,
-         |    unnest(ws) AS w
-         |  FROM docs),
-         |tf AS (
-         |  SELECT doc_id, w, count(1) AS tf, max(dl) AS dl
-         |  FROM toks WHERE w IN $termList GROUP BY doc_id, w),
-         |dfq AS (SELECT w, count(1) AS df FROM tf GROUP BY w),
-         |st AS (SELECT count(1) AS n_docs,
-         |  sum(CAST(len(list_filter(ws, x -> x <> '')) AS BIGINT)) AS sum_dl FROM docs),
-         |sc AS (
-         |  SELECT tf.w, tf.doc_id, tf.tf, tf.dl, dfq.df,
-         |    ((CAST(st.n_docs AS DOUBLE) - CAST(dfq.df AS DOUBLE) + 0.5)
-         |      / (CAST(dfq.df AS DOUBLE) + 0.5))
-         |      * (CAST(tf.tf AS DOUBLE) * 2.2)
-         |      / (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25
-         |        + 0.75 * (CAST(tf.dl AS DOUBLE) * CAST(st.n_docs AS DOUBLE) / CAST(st.sum_dl AS DOUBLE)))) AS score
-         |  FROM tf JOIN dfq USING (w) CROSS JOIN st)
-         |SELECT w, doc_id, tf, dl, df, score, rn FROM (
-         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY w ORDER BY score DESC, doc_id ASC) AS rn
-         |  FROM sc) t
-         |WHERE rn <= 5 ORDER BY w, rn""".stripMargin
-    }),
-
-    "d19_tfidf" -> (Corpus.docsCte +
-      """, wa AS (SELECT doc_id, unnest(ws) AS w FROM docs),
-        |tf AS (SELECT doc_id, w, count(1) AS tf FROM wa GROUP BY 1, 2),
-        |dfreq AS (SELECT w, count(1) AS df FROM (SELECT DISTINCT doc_id, w FROM wa) t GROUP BY w),
-        |n AS (SELECT count(1) AS n_docs FROM docs)
-        |SELECT doc_id, w, tf, df, score, rn FROM (
-        |  SELECT t.doc_id, t.w, t.tf, d.df,
-        |    CAST(t.tf AS DOUBLE) * (CAST(n.n_docs AS DOUBLE) / CAST(d.df AS DOUBLE)) AS score,
-        |    ROW_NUMBER() OVER (PARTITION BY t.doc_id ORDER BY
-        |      CAST(t.tf AS DOUBLE) * (CAST(n.n_docs AS DOUBLE) / CAST(d.df AS DOUBLE)) DESC,
-        |      t.w ASC) AS rn
-        |  FROM tf t JOIN dfreq d USING (w) CROSS JOIN n) x
-        |WHERE rn <= 3 ORDER BY doc_id, rn""".stripMargin),
-
-    "d20_kmv_sketch" -> (Corpus.docsCte + {
-      val h = Corpus.hash32Sql("w")
-      s""", hd AS (SELECT DISTINCT $h AS h FROM (SELECT doc_id, unnest(ws) AS w FROM docs) t),
-         |hs AS (SELECT h FROM hd ORDER BY h LIMIT 64),
-         |kth AS (SELECT CAST(max(h) AS BIGINT) AS h_k, count(1) AS k_actual FROM hs),
-         |ex AS (SELECT count(1) AS n_distinct_hashes FROM hd)
-         |SELECT k_actual, h_k,
-         |  CASE WHEN k_actual < 64 THEN CAST(n_distinct_hashes AS DOUBLE)
-         |       ELSE 63.0 * 4294967296.0 / CAST(h_k AS DOUBLE) END AS est_distinct,
-         |  n_distinct_hashes
-         |FROM kth, ex""".stripMargin
-    }),
-
-    "d29_repetition" -> (Corpus.docsCte +
-      """, bgs AS (
-        |  SELECT doc_id, ws[i] || ' ' || ws[i+1] AS bg
-        |  FROM docs, UNNEST(range(1, len(ws))) t(i)
-        |  WHERE len(ws) >= 2),
-        |counts AS (SELECT doc_id, bg, count(1) AS c FROM bgs GROUP BY 1, 2),
-        |ranked AS (
-        |  SELECT doc_id, bg, c,
-        |    row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, bg ASC) AS rn
-        |  FROM counts),
-        |nb AS (SELECT doc_id, CAST(len(ws) - 1 AS BIGINT) AS n_bigrams
-        |       FROM docs WHERE len(ws) >= 2)
-        |SELECT r.doc_id, r.bg, r.c, n.n_bigrams,
-        |  CAST(r.c AS DOUBLE) / n.n_bigrams AS top_frac,
-        |  CAST(r.c AS DOUBLE) / n.n_bigrams >= 0.2 AS repetitive
-        |FROM ranked r JOIN nb n USING (doc_id)
-        |WHERE rn = 1 ORDER BY doc_id""".stripMargin),
-
-    "d107_lexical_diversity" -> (Corpus.docsCte +
-      """, words AS (
-        |  SELECT doc_id, ws[i] AS w
-        |  FROM docs, UNNEST(range(1, len(ws) + 1)) t(i)),
-        |wc AS (SELECT doc_id, w, count(1) AS c FROM words GROUP BY 1, 2),
-        |div AS (
-        |  SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
-        |    count(1) AS n_types,
-        |    count(CASE WHEN c = 1 THEN 1 END) AS n_hapax,
-        |    CAST(sum(c * c) AS BIGINT) AS sumsq
-        |  FROM wc GROUP BY 1)
-        |SELECT doc_id, n_tokens, n_types, n_hapax,
-        |  CAST(n_types AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS ttr,
-        |  CAST(n_hapax AS DOUBLE) / CAST(n_types AS DOUBLE) AS hapax_frac,
-        |  CAST(sumsq AS DOUBLE) / CAST(n_tokens AS DOUBLE)
-        |    / CAST(n_tokens AS DOUBLE) AS simpson,
-        |  CAST(n_types AS DOUBLE) / CAST(n_tokens AS DOUBLE) < 0.35
-        |    AS low_diversity
-        |FROM div ORDER BY doc_id""".stripMargin),
-
-    "d109_vocab_growth" -> (Corpus.docsCte +
-      """, n AS (SELECT count(1) AS n FROM documents),
-        |words AS (
-        |  SELECT doc_id, ws[i] AS w
-        |  FROM docs, UNNEST(range(1, len(ws) + 1)) t(i)),
-        |fs AS (SELECT w, min(doc_id) AS first_doc FROM words GROUP BY 1),
-        |nt AS (
-        |  SELECT least(CAST(3 AS BIGINT), first_doc * 4 // (SELECT n FROM n)) + 1 AS quarter,
-        |    count(1) AS new_types
-        |  FROM fs GROUP BY 1),
-        |tk AS (
-        |  SELECT least(CAST(3 AS BIGINT), doc_id * 4 // (SELECT n FROM n)) + 1 AS quarter,
-        |    CAST(sum(len(ws)) AS BIGINT) AS n_tokens
-        |  FROM docs GROUP BY 1)
-        |SELECT quarter,
-        |  CAST((SELECT n FROM n) AS BIGINT) * quarter // 4 AS n_docs_prefix,
-        |  CAST(coalesce(nt.new_types, 0) AS BIGINT) AS new_types,
-        |  CAST(sum(coalesce(nt.new_types, 0)) OVER (ORDER BY quarter) AS BIGINT) AS cum_types,
-        |  tk.n_tokens,
-        |  CAST(sum(tk.n_tokens) OVER (ORDER BY quarter) AS BIGINT) AS cum_tokens,
-        |  CAST(sum(coalesce(nt.new_types, 0)) OVER (ORDER BY quarter) AS DOUBLE)
-        |    / CAST(sum(tk.n_tokens) OVER (ORDER BY quarter) AS DOUBLE) AS prefix_ttr
-        |FROM tk LEFT JOIN nt USING (quarter) ORDER BY quarter""".stripMargin),
-
-    "d70_profile" ->
-      """WITH a AS (
-        |  SELECT count(1) AS n_rows,
-        |    count(doc_id) AS nn_doc_id, count(DISTINCT doc_id) AS nd_doc_id,
-        |    CAST(sum(length(CAST(doc_id AS VARCHAR))) AS BIGINT) AS len_doc_id,
-        |    count(text) AS nn_text, count(DISTINCT text) AS nd_text,
-        |    CAST(sum(length(text)) AS BIGINT) AS len_text,
-        |    count(lang) AS nn_lang, count(DISTINCT lang) AS nd_lang,
-        |    CAST(sum(length(lang)) AS BIGINT) AS len_lang,
-        |    count(source) AS nn_source, count(DISTINCT source) AS nd_source,
-        |    CAST(sum(length(source)) AS BIGINT) AS len_source,
-        |    count(n_chars) AS nn_n_chars, count(DISTINCT n_chars) AS nd_n_chars,
-        |    CAST(sum(length(CAST(n_chars AS VARCHAR))) AS BIGINT) AS len_n_chars
-        |  FROM documents)
-        |SELECT col_name, n_rows, n_nonnull, n_distinct,
-        |  CAST(n_rows - n_nonnull AS DOUBLE) / n_rows AS null_frac,
-        |  CAST(sum_len AS DOUBLE) / greatest(n_nonnull, 1) AS avg_len
-        |FROM (
-        |  SELECT 'doc_id' AS col_name, n_rows, nn_doc_id AS n_nonnull, nd_doc_id AS n_distinct, len_doc_id AS sum_len FROM a
-        |  UNION ALL SELECT 'text', n_rows, nn_text, nd_text, len_text FROM a
-        |  UNION ALL SELECT 'lang', n_rows, nn_lang, nd_lang, len_lang FROM a
-        |  UNION ALL SELECT 'source', n_rows, nn_source, nd_source, len_source FROM a
-        |  UNION ALL SELECT 'n_chars', n_rows, nn_n_chars, nd_n_chars, len_n_chars FROM a)
-        |ORDER BY col_name""".stripMargin,
-
-    "d28_corpus_stats" ->
-      """SELECT lang, COUNT(1) AS n_docs,
-        |  quantile_cont(n_chars, 0.5) AS p50,
-        |  quantile_cont(n_chars, 0.9) AS p90,
-        |  quantile_cont(n_chars, 0.99) AS p99,
-        |  CAST(SUM(n_chars) AS BIGINT) AS total_chars
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "d26_kmv_by_source" -> (Corpus.docsCte + {
-      val h = Corpus.hash32Sql("w")
-      s""", wh AS (
-         |  SELECT DISTINCT dd.source, $h AS h
-         |  FROM (SELECT doc_id, unnest(ws) AS w FROM docs) t
-         |  JOIN documents dd USING (doc_id)),
-         |r AS (
-         |  SELECT source, h,
-         |    row_number() OVER (PARTITION BY source ORDER BY h) AS rn,
-         |    count(1) OVER (PARTITION BY source) AS nd
-         |  FROM wh)
-         |SELECT source,
-         |  CAST(least(nd, 64) AS BIGINT) AS k_actual,
-         |  CAST(max(CASE WHEN rn <= 64 THEN h END) AS BIGINT) AS h_k,
-         |  CASE WHEN nd < 64 THEN CAST(nd AS DOUBLE)
-         |       ELSE 63.0 * 4294967296.0 / CAST(max(CASE WHEN rn <= 64 THEN h END) AS DOUBLE) END AS est_distinct
-         |FROM r GROUP BY source, nd ORDER BY source""".stripMargin
-    }),
-
-    "d21_corpus_select" -> (Corpus.docsCte +
-      s""", scored AS (
-         |  SELECT doc_id, md5(norm) AS content_hash,
-         |    CAST(len(ws) AS BIGINT) AS n_words,
-         |    CAST(len(list_filter(ws, w -> list_contains($enStopSqlList, w))) AS DOUBLE)
-         |      / greatest(len(ws), 1) AS stop_ratio,
-         |    MIN(doc_id) OVER (PARTITION BY md5(norm)) AS keeper
-         |  FROM docs
-         |)
-         |SELECT doc_id, content_hash, n_words, stop_ratio
-         |FROM scored
-         |WHERE doc_id = keeper AND stop_ratio >= 0.05 AND n_words BETWEEN 5 AND 500
-         |ORDER BY doc_id""".stripMargin),
-
-    "d11_fingerprint" -> (Corpus.docsCte +
-      s""", wins AS (
-         |  SELECT doc_id, substr(norm, i, 8) AS w8
-         |  FROM docs, UNNEST(range(1, length(norm) - 6, 4)) t(i)
-         |  WHERE length(norm) >= 8
-         |)
-         |SELECT doc_id, min(${Corpus.hash32Sql("w8")}) AS fp_min,
-         |  count(DISTINCT w8) AS n_uniq_windows
-         |FROM wins GROUP BY doc_id ORDER BY doc_id""".stripMargin),
-
-    "d31_url_extract" ->
-      s"""WITH $rawsCteSql,
-         |urls AS (
-         |  SELECT doc_id, unnest(regexp_extract_all(raw, '$urlRe')) AS url FROM raws)
-         |SELECT regexp_extract(url, '$urlRe', 1) AS domain,
-         |  count(1) AS n_urls,
-         |  count(DISTINCT doc_id) AS n_docs,
-         |  count(DISTINCT regexp_extract(url, '$urlRe', 2)) AS n_paths
-         |FROM urls GROUP BY 1 ORDER BY domain""".stripMargin,
-
-    "d79_dataset_card" -> (Dedup.bandSigsCte +
-      s""", $rawsCteSql,
-         |dup AS (
-         |  SELECT doc_id,
-         |    max(CASE WHEN bn > 1 THEN 1 ELSE 0 END) AS is_dup
-         |  FROM (SELECT doc_id, count(1) OVER (PARTITION BY band, sig) AS bn FROM sig) t
-         |  GROUP BY 1)
-         |SELECT d.source, count(1) AS n_docs,
-         |  CAST(sum(len(d.ws)) AS BIGINT) AS n_tokens,
-         |  count(DISTINCT d.lang) AS n_langs,
-         |  CAST(CAST(sum(length(d.text)) AS BIGINT) AS DOUBLE) / count(1) AS mean_chars,
-         |  CAST(CAST(sum(CASE WHEN len(regexp_extract_all(r.raw, '$urlRe')) > 0
-         |    THEN 1 ELSE 0 END) AS BIGINT) AS DOUBLE) / count(1) AS url_frac,
-         |  CAST(CAST(sum(COALESCE(dup.is_dup, 0)) AS BIGINT) AS DOUBLE) / count(1) AS dup_frac
-         |FROM docs d
-         |JOIN raws r ON r.doc_id = d.doc_id
-         |LEFT JOIN dup ON dup.doc_id = d.doc_id
-         |GROUP BY 1 ORDER BY d.source""".stripMargin),
-
-    "d83_quality_curve" -> (Dedup.bandSigsCte +
+    QuerySpec("d83_quality_curve", by("t"),
+      Dedup.bandSigsCte +
       s""", dup AS (
          |  SELECT doc_id,
          |    max(CASE WHEN bn > 1 THEN 1 ELSE 0 END) AS is_dup
@@ -1567,9 +1141,32 @@ object TextAnalysis {
          |  CAST(sum(CASE WHEN sc.quality >= th.t THEN sc.is_dup ELSE 0 END) AS DOUBLE)
          |    / greatest(sum(CASE WHEN sc.quality >= th.t THEN 1 ELSE 0 END), 1) AS dup_rate_kept
          |FROM sc CROSS JOIN th
-         |GROUP BY th.t ORDER BY th.t""".stripMargin),
+         |GROUP BY th.t ORDER BY th.t""".stripMargin) { (s, dir) =>
+      val sigW = Window.partitionBy("band", "sig")
+      val dup = Dedup.bandSigs(s, dir)
+        .withColumn("bn", count(lit(1)).over(sigW))
+        .groupBy("doc_id")
+        .agg(max(when(col("bn") > 1, 1L).otherwise(0L)).as("is_dup"))
+      val perDoc = qualityCols(Corpus.docs(s, dir))
+        .select(col("doc_id"), col("quality"),
+          expr("CAST(size(filter(ws, x -> x != '')) AS BIGINT)").as("n_tokens"))
+        .join(dup, Seq("doc_id"), "left")
+        .withColumn("is_dup", coalesce(col("is_dup"), lit(0L)))
+      perDoc
+        .select(col("quality"), col("n_tokens"), col("is_dup"),
+          explode(array(lit(0.05), lit(0.10), lit(0.20), lit(0.30))).as("t"))
+        .groupBy("t")
+        .agg(count(lit(1)).as("n_docs"),
+          sum(when(col("quality") >= col("t"), 1L).otherwise(0L)).as("docs_kept"),
+          sum(when(col("quality") >= col("t"), col("n_tokens")).otherwise(0L)).as("tokens_kept"),
+          sum(when(col("quality") >= col("t"), col("is_dup")).otherwise(0L)).as("dup_kept"))
+        .withColumn("keep_frac", col("docs_kept").cast("double") / col("n_docs"))
+        .withColumn("dup_rate_kept",
+          col("dup_kept").cast("double") / greatest(col("docs_kept"), lit(1L)))
+    },
 
-    "d77_quality_dup_corr" -> (Dedup.bandSigsCte +
+    QuerySpec("d77_quality_dup_corr", by("qbin"),
+      Dedup.bandSigsCte +
       s""", dup AS (
          |  SELECT doc_id,
          |    max(CASE WHEN bn > 1 THEN 1 ELSE 0 END) AS is_dup
@@ -1588,9 +1185,35 @@ object TextAnalysis {
          |  CAST(sum(COALESCE(dup.is_dup, 0)) AS BIGINT) AS n_dup_docs,
          |  CAST(sum(COALESCE(dup.is_dup, 0)) AS DOUBLE) / count(1) AS dup_rate
          |FROM sc LEFT JOIN dup ON sc.doc_id = dup.doc_id
-         |GROUP BY 1 ORDER BY 1""".stripMargin),
+         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
+      val sigW = Window.partitionBy("band", "sig")
+      val dup = Dedup.bandSigs(s, dir)
+        .withColumn("bucket_n", count(lit(1)).over(sigW))
+        .groupBy("doc_id")
+        .agg(max(when(col("bucket_n") > 1, 1L).otherwise(0L)).as("is_dup"))
+      qualityCols(Corpus.docs(s, dir))
+        .select(col("doc_id"), col("quality"))
+        .join(dup, Seq("doc_id"), "left")
+        .withColumn("is_dup", coalesce(col("is_dup"), lit(0L)))
+        .withColumn("qbin", floor(col("quality") * 20).cast("long"))
+        .groupBy("qbin")
+        .agg(count(lit(1)).as("n_docs"), sum(col("is_dup")).as("n_dup_docs"))
+        .withColumn("dup_rate", col("n_dup_docs").cast("double") / col("n_docs"))
+    },
 
-    "d102_quality_calibration" -> (Corpus.docsCte +
+    // QUALITY ↔ GOPHER CALIBRATION — do the two quality axes agree?
+    // d09 scores a continuous scalar, d92 votes a hard rule panel;
+    // this is d77's correlation shape between THEM: per d77-style
+    // quality bin (floor(quality·20)) the doc count, how many the
+    // Gopher panel keeps, and the keep rate — the calibration curve
+    // that decides whether the cheap scalar can stand in for the rule
+    // panel at a given cutoff (and where the two disagree enough that
+    // a pipeline must run both). Two per-row passes joined on doc_id
+    // (d77's two-pass shape, pin documents=2); the bin aggregate is
+    // 20-row bounded; keep_rate divides identical integers both
+    // engines.
+    QuerySpec("d102_quality_calibration", by("qbin"),
+      Corpus.docsCte +
       s""", wtab AS (SELECT doc_id, unnest(ws) AS w FROM docs),
          |per AS (
          |  SELECT doc_id, w, count(1) AS c, len(w) AS wl
@@ -1624,18 +1247,161 @@ object TextAnalysis {
          |  CAST(sum(CASE WHEN gk.keep THEN 1 ELSE 0 END) AS BIGINT) AS n_keep,
          |  CAST(sum(CASE WHEN gk.keep THEN 1 ELSE 0 END) AS DOUBLE) / count(1) AS keep_rate
          |FROM sc JOIN gk USING (doc_id)
-         |GROUP BY 1 ORDER BY 1""".stripMargin),
+         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
+      val q = qualityCols(Corpus.docs(s, dir)).select(col("doc_id"), col("quality"))
+      val g = gopherPanel(Corpus.docs(s, dir)).select(col("doc_id"), col("keep"))
+      q.join(g, Seq("doc_id"))
+        .withColumn("qbin", floor(col("quality") * 20).cast("long"))
+        .groupBy("qbin")
+        .agg(count(lit(1)).as("n_docs"),
+          sum(when(col("keep"), 1L).otherwise(0L)).as("n_keep"))
+        .withColumn("keep_rate", col("n_keep").cast("double") / col("n_docs"))
+    },
 
-    "d72_domain_reputation" -> (Corpus.docsCte + ", " + rawsCteSql + ",\n" +
+    // Per-source DATASET CARD — the datasheet a corpus release ships
+    // (Datasheets for Datasets, Gebru et al. 2021), one row per
+    // source: volume (docs, tokens), language spread, mean length,
+    // provenance coverage (share citing a URL), and near-dup exposure
+    // (share in a shared LSH bucket — d77's membership flag). The
+    // card COMPOSES existing passes rather than inventing new
+    // metrics: one corpus scan carries tokens/langs/length/URL flags,
+    // the signature pass prices dup membership, and ONE bounded
+    // per-source aggregate emits the panel. Every fraction is a
+    // one-shot divide of exact longs.
+    QuerySpec("d79_dataset_card", by("source"),
+      Dedup.bandSigsCte +
+      s""", $rawsCteSql,
+         |dup AS (
+         |  SELECT doc_id,
+         |    max(CASE WHEN bn > 1 THEN 1 ELSE 0 END) AS is_dup
+         |  FROM (SELECT doc_id, count(1) OVER (PARTITION BY band, sig) AS bn FROM sig) t
+         |  GROUP BY 1)
+         |SELECT d.source, count(1) AS n_docs,
+         |  CAST(sum(len(d.ws)) AS BIGINT) AS n_tokens,
+         |  count(DISTINCT d.lang) AS n_langs,
+         |  CAST(CAST(sum(length(d.text)) AS BIGINT) AS DOUBLE) / count(1) AS mean_chars,
+         |  CAST(CAST(sum(CASE WHEN len(regexp_extract_all(r.raw, '$urlRe')) > 0
+         |    THEN 1 ELSE 0 END) AS BIGINT) AS DOUBLE) / count(1) AS url_frac,
+         |  CAST(CAST(sum(COALESCE(dup.is_dup, 0)) AS BIGINT) AS DOUBLE) / count(1) AS dup_frac
+         |FROM docs d
+         |JOIN raws r ON r.doc_id = d.doc_id
+         |LEFT JOIN dup ON dup.doc_id = d.doc_id
+         |GROUP BY 1 ORDER BY d.source""".stripMargin) { (s, dir) =>
+      val sigW = Window.partitionBy("band", "sig")
+      val dup = Dedup.bandSigs(s, dir)
+        .withColumn("bn", count(lit(1)).over(sigW))
+        .groupBy("doc_id")
+        .agg(max(when(col("bn") > 1, 1L).otherwise(0L)).as("is_dup"))
+      withInjectedUrls(Corpus.docs(s, dir))
+        .withColumn("has_url",
+          size(regexp_extract_all(col("raw"), lit(urlRe), lit(0))) > 0)
+        .join(dup, Seq("doc_id"), "left")
+        .withColumn("is_dup", coalesce(col("is_dup"), lit(0L)))
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_docs"),
+          sum(size(col("ws"))).cast("long").as("n_tokens"),
+          countDistinct(col("lang")).as("n_langs"),
+          sum(length(col("text"))).cast("long").as("sum_chars"),
+          sum(when(col("has_url"), 1L).otherwise(0L)).as("n_with_url"),
+          sum(col("is_dup")).as("n_dup"))
+        .select(col("source"), col("n_docs"), col("n_tokens"), col("n_langs"),
+          (col("sum_chars").cast("double") / col("n_docs")).as("mean_chars"),
+          (col("n_with_url").cast("double") / col("n_docs")).as("url_frac"),
+          (col("n_dup").cast("double") / col("n_docs")).as("dup_frac"))
+    },
+
+    // Document fingerprint: min rolling hash over stride-4 8-char
+    // windows of the normalized text (winnowing-style min-sampling;
+    // the stride cuts hash work 4× with the same min-sketch shape).
+    // One Fingerprint kernel call per row AT THE SCAN — the previous
+    // explode formulation (which the oracle still mirrors) fanned each
+    // doc out to |windows| ≈ len/4 rows and shuffled them into a
+    // per-doc aggregate; at 100 TB that multiplies the dominant
+    // exchange by the window count for a value-identical result.
+    QuerySpec("d11_fingerprint", by("doc_id"),
+      Corpus.docsCte +
+      s""", wins AS (
+         |  SELECT doc_id, substr(norm, i, 8) AS w8
+         |  FROM docs, UNNEST(range(1, length(norm) - 6, 4)) t(i)
+         |  WHERE length(norm) >= 8
+         |)
+         |SELECT doc_id, min(${Corpus.hash32Sql("w8")}) AS fp_min,
+         |  count(DISTINCT w8) AS n_uniq_windows
+         |FROM wins GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
+      Corpus.docs(s, dir)
+        .filter(length(col("norm")) >= 8)
+        .withColumn("fpv", Fingerprint(col("norm")))
+        .select(col("doc_id"),
+          element_at(col("fpv"), 1).as("fp_min"),
+          element_at(col("fpv"), 2).as("n_uniq_windows"))
+    },
+
+    // URL extraction + per-domain inventory — the provenance report a
+    // crawl corpus runs before domain-level filtering/deduplication.
+    // The corpus text is synthetic word salad, so URLs are INJECTED
+    // deterministically from doc_id (mirrored in the oracle CTE; same
+    // pattern as d25's PII injection) — the operator under test is the
+    // extract→explode→per-domain rollup. The countDistinct Expand runs
+    // over the extracted URL stream (≤2 rows/doc by construction, and
+    // in a real crawl |urls| ≪ |text bytes|), never the corpus scan.
+    QuerySpec("d31_url_extract", by("domain"),
+      s"""WITH $rawsCteSql,
+         |urls AS (
+         |  SELECT doc_id, unnest(regexp_extract_all(raw, '$urlRe')) AS url FROM raws)
+         |SELECT regexp_extract(url, '$urlRe', 1) AS domain,
+         |  count(1) AS n_urls,
+         |  count(DISTINCT doc_id) AS n_docs,
+         |  count(DISTINCT regexp_extract(url, '$urlRe', 2)) AS n_paths
+         |FROM urls GROUP BY 1 ORDER BY domain""".stripMargin) { (s, dir) =>
+      val raw = withInjectedUrls(graft.sources.Tables.documents(s, dir))
+      raw.select(col("doc_id"),
+          explode(regexp_extract_all(col("raw"), lit(urlRe), lit(0))).as("url"))
+        .withColumn("domain", regexp_extract(col("url"), urlRe, 1))
+        .withColumn("path", regexp_extract(col("url"), urlRe, 2))
+        .groupBy("domain")
+        .agg(count(lit(1)).as("n_urls"),
+          countDistinct(col("doc_id")).as("n_docs"),
+          countDistinct(col("path")).as("n_paths"))
+    },
+
+    // Domain REPUTATION index — the filter table a web corpus builds
+    // from d31's provenance: per domain, how good are the documents
+    // citing it, and where does it rank? One corpus scan builds the
+    // doc→domain link stream with the d09 quality score already
+    // attached per row; the per-domain aggregate is bounded (domains ≪
+    // docs) with exact DECIMAL quality sums (no float summation-order
+    // drift), and the quartile tiering is a rank window over the
+    // BOUNDED domain table only — rank-based tiers (bottom quartile =
+    // "low") stay discriminative at every corpus size where absolute
+    // cutoffs drift with the mix. s28 consumes this index as the
+    // streaming ingest gate.
+    QuerySpec("d72_domain_reputation", by("domain"),
+      Corpus.docsCte + ", " + rawsCteSql + ",\n" +
       domainRepCteSql +
       """
         |SELECT domain, n_docs, avg_quality, q_rank,
         |  CASE WHEN q_rank * 4 <= nd THEN 'low'
         |       WHEN q_rank * 4 > nd * 3 THEN 'high'
         |       ELSE 'mid' END AS tier
-        |FROM ranked ORDER BY domain""".stripMargin),
+        |FROM ranked ORDER BY domain""".stripMargin) { (s, dir) =>
+      domainReputation(s, dir)
+    },
 
-    "d73_source_overlap" -> (Corpus.docsCte + {
+    // Source-overlap MATRIX via mergeable KMV sketch algebra — "how
+    // much content do my ingest sources share?" asked WITHOUT an
+    // all-pairs content join: one corpus pass folds each source's
+    // word-3-gram stream into a ≤k-value sketch (the x06 aggregate's
+    // payload form — the shuffle carries ≤k longs per source per
+    // partition), then every source PAIR union-merges two bounded
+    // arrays: the k smallest of the merged sketches is a valid sketch
+    // of the union, so |A∪B|, |A∩B| and Jaccard fall out of pure
+    // array arithmetic on 20 rows — no second data pass, no gram
+    // rejoin. At 100 TB this is the only affordable shape for an S²
+    // overlap report. Estimates are the d26 KMV law (exact when a
+    // sketch never filled); every double derives from one division of
+    // exact integers, so the matrix is bit-identical cross-engine.
+    QuerySpec("d73_source_overlap", by("a_source", "b_source"),
+      Corpus.docsCte + {
       val h = Corpus.hash32Sql("g.gram")
       s""", sg AS (
          |  SELECT DISTINCT d2.source, $h AS h
@@ -1668,9 +1434,48 @@ object TextAnalysis {
          |SELECT a_source, b_source, est_a, est_b, est_union, est_inter,
          |  est_inter / est_union AS jaccard_est
          |FROM f ORDER BY a_source, b_source""".stripMargin
-    }),
+    }) { (s, dir) =>
+      import org.apache.spark.sql.Column
+      val k = 64
+      val sk = Corpus.docs(s, dir)
+        .select(col("source"), explode(Corpus.gramsArr).as("gram"))
+        .select(col("source"), hash32(col("gram")).as("h"))
+        .groupBy("source")
+        .agg(KmvValuesAgg(col("h"), k).as("hs"))
+        // persist: both pair sides reference this aggregate, and AQE
+        // exchange reuse is best-effort (the lshPairs lesson) — the
+        // frame is ≤k longs per source, so the cache is trivial and
+        // the one-corpus-scan pin becomes structural
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val a = sk.select(col("source").as("a_source"), col("hs").as("a_hs"))
+      val b = sk.select(col("source").as("b_source"), col("hs").as("b_hs"))
+      def est(hs: Column): Column =
+        when(size(hs) < k, size(hs).cast("double"))
+          .otherwise(lit((k - 1).toDouble) * lit(4294967296.0)
+            / element_at(hs, size(hs)).cast("double"))
+      a.join(broadcast(b), col("a_source") < col("b_source"))
+        .withColumn("u_hs",
+          slice(array_sort(array_union(col("a_hs"), col("b_hs"))), 1, k))
+        .withColumn("est_a", est(col("a_hs")))
+        .withColumn("est_b", est(col("b_hs")))
+        .withColumn("est_union", est(col("u_hs")))
+        .withColumn("est_inter",
+          greatest(lit(0.0), (col("est_a") + col("est_b")) - col("est_union")))
+        .withColumn("jaccard_est", col("est_inter") / col("est_union"))
+        .select("a_source", "b_source", "est_a", "est_b", "est_union",
+          "est_inter", "jaccard_est")
+    },
 
-    "d33_zorder" ->
+    // Z-order data layout (x07 kernel in production): a 32-bit Morton
+    // key over (length bucket, source bucket) — the clustering key a
+    // 100 TB corpus would range-partition + sort by so scans filtering
+    // on EITHER dimension prune files via min/max stats. The report
+    // groups docs into the 16 top-level Z-ranges (the key's high 4
+    // bits = the 4×4 grid cell both dimensions quartered) and shows
+    // the layout is balanced + range-contiguous. Key computation is
+    // the branch-free ZOrder2 codegen kernel — a pure per-row
+    // projection at the scan, no shuffle before the 16-group agg.
+    QuerySpec("d33_zorder", by("zrange"),
       s"""WITH zt AS (
          |  SELECT doc_id, source,
          |    least(n_chars * 100, 65535) AS x,
@@ -1685,9 +1490,37 @@ object TextAnalysis {
          |SELECT zkey >> 28 AS zrange, count(1) AS n_docs,
          |  min(zkey) AS min_z, max(zkey) AS max_z,
          |  count(DISTINCT source) AS n_sources
-         |FROM zk GROUP BY 1 ORDER BY zrange""".stripMargin,
+         |FROM zk GROUP BY 1 ORDER BY zrange""".stripMargin) { (s, dir) =>
+      graft.sources.Tables.documents(s, dir)
+        .withColumn("x", least(col("n_chars") * 100, lit(65535L)))
+        .withColumn("y", pmod(hash32(col("source")), lit(65536L)))
+        .withColumn("zkey", ZOrder2(col("x"), col("y")))
+        .withColumn("zrange", shiftright(col("zkey"), 28))
+        .groupBy("zrange")
+        .agg(count(lit(1)).as("n_docs"),
+          min(col("zkey")).as("min_z"),
+          max(col("zkey")).as("max_z"),
+          countDistinct(col("source")).as("n_sources"))
+    },
 
-    "d37_lm_novelty" -> (Corpus.docsCte +
+    // Bigram LM novelty filter — the CCNet/KenLM quality-filter shape
+    // with bit-stable arithmetic: the corpus bigram model scores each
+    // transition p(w2|w1) = c(w1w2)/c(w1·), and each doc reports its
+    // rarest and commonest transition plus the fraction of transitions
+    // it ALONE contributes to the corpus (c2 = 1 — pure novel text vs
+    // formulaic recombination). All model statistics are integer
+    // counts; the only float ops are per-row IEEE divides of those
+    // integers (no float SUM anywhere — min/max/count aggregate the
+    // divides order-independently), so scores are bit-identical
+    // cross-engine: d19's rational-idf determinism trick applied to
+    // LM scoring. Scale: the full bigram stream crosses exactly TWO
+    // exchanges — one hash partition by bg (built once; ReuseExchange
+    // serves both the c2 aggregate and the model join probe) and the
+    // final per-doc aggregate. The unigram denominators come from the
+    // c2 TABLE (c1(w1) = Σ c2 over w1's bigrams — |model| rows, not
+    // the stream), so the model enrich join never touches the corpus.
+    QuerySpec("d37_lm_novelty", by("doc_id"),
+      Corpus.docsCte +
       """, bgs AS (
         |  SELECT doc_id, ws[i] AS w1, ws[i] || ' ' || ws[i+1] AS bg
         |  FROM docs, UNNEST(range(1, len(ws))) t(i)
@@ -1701,9 +1534,50 @@ object TextAnalysis {
         |  CAST(sum(CASE WHEN c2.c2 = 1 THEN 1 ELSE 0 END) AS DOUBLE) / count(1) AS novelty
         |FROM bgs b JOIN c2 ON b.bg = c2.bg JOIN c1 ON b.w1 = c1.w1
         |GROUP BY b.doc_id
-        |ORDER BY doc_id""".stripMargin),
+        |ORDER BY doc_id""".stripMargin) { (s, dir) =>
+      val docs = Corpus.docs(s, dir).filter(size(col("ws")) >= 2)
+      // bigram build on the GramShingles codegen kernel (the struct
+      // transform it replaces folded interpreted per word); the stream
+      // no longer carries w1 per row — words are space-free (split
+      // output), so w1 ≡ the bigram's prefix before the space and is
+      // recovered on the |model|-row aggregate instead: one narrower
+      // exchange (doc_id, bg), same exact model.
+      val bg = docs.select(col("doc_id"),
+        explode(graft.functions.GramShingles(col("ws"), 2, distinct = false)).as("bg"))
+      // bg determines w1. materialize-once: c2 feeds BOTH the model
+      // join and c1's aggregation — without the persist each consumer
+      // re-runs the full bigram-stream aggregate (measured: 3 corpus
+      // scans). The cached frame is the MODEL (distinct bigrams), not
+      // the corpus; persist keeps lineage for executor-loss recompute.
+      val c2 = bg.groupBy("bg")
+        .agg(count(lit(1)).as("c2"))
+        .withColumn("w1", substring_index(col("bg"), " ", 1))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val c1 = c2.groupBy("w1").agg(sum(col("c2")).as("c1"))
+      val model = c2.join(c1, Seq("w1"))
+        .select(col("bg"), col("c2"), col("c1"))
+      bg.join(model, Seq("bg"))
+        .withColumn("p", col("c2").cast("double") / col("c1"))
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n_bigrams"),
+          sum(when(col("c2") === 1, 1L).otherwise(0L)).as("n_novel"),
+          min(col("p")).as("min_p"),
+          max(col("p")).as("max_p"))
+        .withColumn("novelty", col("n_novel").cast("double") / col("n_bigrams"))
+    },
 
-    "d60_url_dedup" ->
+    // Canonical-URL dedup — the first dedup pass a web corpus runs,
+    // BEFORE any content hashing: the same page crawled as
+    // `http://…`, `https://www.…/`, `HTTP://…?utm_…`, `…#frag` is one
+    // document. Each doc carries a deterministic crawl URL whose
+    // variant decoration depends on doc_id%4; canonicalization strips
+    // scheme/`www.`/query/fragment/trailing slash and lowercases the
+    // host, then the keeper per canonical page is the min doc_id —
+    // computed by [[urlDedupOver]]'s AGGREGATE+JOIN (skew-survivable),
+    // not a partition window (which would stall one task on a hot
+    // URL). Pure per-row string kernels (codegen'd regexps) front the
+    // two cheap pruned passes.
+    QuerySpec("d60_url_dedup", by("doc_id"),
       """WITH urls AS (
         |  SELECT doc_id, concat(
         |    CASE WHEN doc_id % 4 = 2 THEN 'HTTP://'
@@ -1725,9 +1599,24 @@ object TextAnalysis {
         |  FROM urls)
         |SELECT doc_id, url, canonical_url,
         |  doc_id = min(doc_id) OVER (PARTITION BY canonical_url) AS is_keeper
-        |FROM canon ORDER BY doc_id""".stripMargin,
+        |FROM canon ORDER BY doc_id""".stripMargin) { (s, dir) =>
+      urlDedupOver(graft.sources.Tables.documents(s, dir)
+        .select(col("doc_id"), crawlUrl(col("doc_id")).as("url")))
+    },
 
-    "d61_cms_heavy" -> (Corpus.docsCte + {
+    // Count-Min sketch heavy hitters — the frequency twin of d20's KMV
+    // (distinct-count) sketch: 4 hash rows × 1024 cells, every token
+    // occurrence incrementing one cell per row; an estimate is the MIN
+    // over a token's 4 cells, always ≥ the true count (one-sided
+    // error — the property the spec pins). The sketch agg is the
+    // 100 TB path: a BOUNDED 4096-cell aggregate whose map-side
+    // partials collapse each partition before the shuffle, vs the
+    // exact count's full token-keyed exchange. The exact top-20 ride
+    // along as the declared QA baseline (the d34 pattern) so the
+    // report carries measured inflation, not hoped-for accuracy; the
+    // 4096-row sketch broadcasts to the probe join.
+    QuerySpec("d61_cms_heavy", Seq(col("n_exact").desc, col("w").asc),
+      Corpus.docsCte + {
       val cellSql = (i: String) => Corpus.hash32Sql(
         s"concat('cms', CAST($i AS VARCHAR), '#', w)") + " % 1024"
       s""", toks AS (
@@ -1746,9 +1635,40 @@ object TextAnalysis {
         |FROM probes p JOIN sketch s ON p.i = s.i AND p.cell = s.cell
         |GROUP BY p.w, p.n_exact
         |ORDER BY n_exact DESC, w ASC""".stripMargin
-    }),
+    }) { (s, dir) =>
+      val cellsOf = Corpus.cmsCellsSql
+      val toks = Corpus.docs(s, dir)
+        .select(explode(col("ws")).as("w")).filter(col("w") =!= "")
+      val sketch = toks
+        .select(explode(expr(cellsOf)).as("rc"))
+        .select(col("rc.i").as("i"), col("rc.cell").as("cell"))
+        .groupBy("i", "cell").agg(count(lit(1)).as("c"))
+      val exact = toks.groupBy("w").agg(count(lit(1)).as("n_exact"))
+        .orderBy(col("n_exact").desc, col("w").asc).limit(20)
+      exact
+        .select(col("w"), col("n_exact"), explode(expr(cellsOf)).as("rc"))
+        .select(col("w"), col("n_exact"),
+          col("rc.i").as("i"), col("rc.cell").as("cell"))
+        .join(broadcast(sketch), Seq("i", "cell"))
+        .groupBy("w", "n_exact")
+        .agg(min(col("c")).as("n_cms"))
+        .withColumn("inflation", col("n_cms") - col("n_exact"))
+    },
 
-    "d64_bpe_pairs" -> (Corpus.docsCte +
+    // BPE merge-pair statistics — the counting round a tokenizer
+    // trainer runs at corpus scale: every adjacent CHARACTER pair,
+    // weighted by corpus word frequency (train on the word TABLE, not
+    // the token stream — the BPE trick that makes corpus size
+    // irrelevant: the heavy explode runs over the bounded vocabulary,
+    // the corpus contributes only the frequency weights from one
+    // token-stream agg). Two counts per pair, both exact integers:
+    // the sliding count (every position — what frequency ranking
+    // uses) and the NON-OVERLAPPING merge count (what one BPE apply
+    // round would actually perform, via the replace() length-delta —
+    // 'aaa' holds two sliding 'aa's but ONE merge), plus the distinct
+    // words carrying the pair. Top-10 by sliding count.
+    QuerySpec("d64_bpe_pairs", Nil,
+      Corpus.docsCte +
       """, words AS (
         |  SELECT w, count(1) AS n
         |  FROM (SELECT unnest(ws) AS w FROM docs) u WHERE w <> ''
@@ -1766,6 +1686,27 @@ object TextAnalysis {
         |  FROM (SELECT DISTINCT w, n, p FROM pairs) nv GROUP BY p)
         |SELECT nv.p, nv.pair_count, m.merge_count, m.n_words
         |FROM naive nv JOIN merged m ON nv.p = m.p
-        |ORDER BY nv.pair_count DESC, nv.p ASC LIMIT 10""".stripMargin)
+        |ORDER BY nv.pair_count DESC, nv.p ASC LIMIT 10""".stripMargin) { (s, dir) =>
+      // the bounded word table persists: both pair counts branch from
+      // it, and without the persist each branch would re-run the
+      // corpus token agg
+      val words = Corpus.docs(s, dir)
+        .select(explode(col("ws")).as("w")).filter(col("w") =!= "")
+        .groupBy("w").agg(count(lit(1)).as("n"))
+        .filter(length(col("w")) >= 2)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val pairs = words
+        .select(col("w"), col("n"), explode(expr(
+          "transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))")).as("p"))
+      val naive = pairs.groupBy("p").agg(sum(col("n")).as("pair_count"))
+      val merged = pairs.distinct()
+        .withColumn("m",
+          col("n") * expr("(length(w) - length(replace(w, p, ''))) div 2"))
+        .groupBy("p")
+        .agg(sum(col("m")).as("merge_count"), count(lit(1)).as("n_words"))
+      naive.join(merged, Seq("p"))
+        .orderBy(col("pair_count").desc, col("p").asc)
+        .limit(10)
+    }
   )
 }

@@ -187,7 +187,7 @@ class AnnIndexSpec extends SparkSpec {
       df => Similarity.communityLoad(meds)(Corpus.qvecsOf(df)), mode = "complete")
     q.awaitTermination(120000); q.stop()
     val streamed = rows(spark.table("graft_s39_test").orderBy("cluster_id"))
-    val batch = rows(SparkEntry.queries("s39_stream_community_load")(spark, sf))
+    val batch = rows(presented("s39_stream_community_load"))
     assert(streamed == batch, "streamed community load diverges from batch tally")
     // state bound: at most one row per community, never stream-length
     val nMeds = meds.count()
@@ -200,7 +200,7 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("d99 route fidelity: exact recount from the gate's own routes + membership") {
-    val rows99 = SparkEntry.queries("d99_route_fidelity")(spark, sf).collect()
+    val rows99 = presented("d99_route_fidelity").collect()
     // independent inputs: s38's oracle-proven routes and d95's
     // oracle-proven membership
     val routes = SparkEntry.queries("s38_stream_communities")(spark, sf)
@@ -240,7 +240,7 @@ class AnnIndexSpec extends SparkSpec {
       df => Similarity.dimMoments(Corpus.qvecsOf(df)), mode = "complete")
     q.awaitTermination(120000); q.stop()
     val streamed = rows(spark.table("graft_s36_test").orderBy("pos"))
-    val batch = rows(SparkEntry.queries("s36_stream_spectrum")(spark, sf))
+    val batch = rows(presented("s36_stream_spectrum"))
     assert(streamed == batch, "streamed moments diverge from batch moments")
     // the state bound: 64 dimension rows, never stream-length
     assert(batch.length == 64, s"moment state grew to ${batch.length} rows")
@@ -341,7 +341,7 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("d96 modularity: exact recount over d50's edges + partition laws") {
-    val rows = SparkEntry.queries("d96_knn_modularity")(spark, sf).collect()
+    val rows = presented("d96_knn_modularity").collect()
     val edges = SparkEntry.queries("d50_ann_index_probe")(spark, sf)
       .select("a_id", "b_id").collect()
       .map(r => (r.getLong(0), r.getLong(1)))

@@ -28,14 +28,15 @@ class CurationSpec extends SparkSpec {
     assert(rows.forall(r => r.getLong(1) < r.getLong(2)), "kept row at/above its rate bucket")
     val rates = rows.map(r => r.getString(0) -> r.getLong(2)).toMap
     assert(rates("en") == 60L && rates("zh") == 50L && rates("de") == 100L, rates.toString)
-    // dropping the presentation sort, the plan is shuffle-free
-    val df = graft.operators.Curation.queries("d23_corpus_mix")(spark, sf)
-    val noSort = df.queryExecution.optimizedPlan.collect {
+    // the plan is a per-row filter: no sort (presentation order is
+    // applied at the sink) and no shuffle
+    val df = SparkEntry.queries("d23_corpus_mix")(spark, sf)
+    val sorts = df.queryExecution.optimizedPlan.collect {
       case s: org.apache.spark.sql.catalyst.plans.logical.Sort => s
     }
     val p = plan("d23_corpus_mix")
-    assert(!p.contains("Exchange hashpartitioning"), s"per-row sampler shuffled:\n$p")
-    assert(noSort.nonEmpty) // only the presentation ORDER BY remains
+    assert(!p.contains("Exchange"), s"per-row sampler shuffled:\n$p")
+    assert(sorts.isEmpty, s"sort in the per-row sampler:\n$p")
   }
 
   test("d24 clusters are closed over the candidate pairs and labeled by their min id") {

@@ -7,14 +7,17 @@ class EntrySpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every query has an oracle and every oracle has a query") {
-    // a typo'd key silently downgrades the driver's hash gate to a
-    // rows-only check (or errors on a dangling oracle) — pin the
-    // full-oracle contract so map edits can't drift
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert((o -- q).isEmpty, s"oracles without a query: ${o -- q}")
-    assert((q -- o).isEmpty, s"queries missing an oracle: ${q -- o}")
+  test("query ids are unique, and a duplicate id is rejected") {
+    // a QuerySpec carries its oracle, so a query without one cannot
+    // compile; what a record cannot rule out is two records sharing an
+    // id, which an id-keyed map would silently collapse to the last
+    val ids = SparkEntry.specs.map(_.id)
+    assert(ids.distinct.size == ids.size, s"duplicate ids: ${ids.diff(ids.distinct)}")
+    assert(SparkEntry.queries.size == ids.size && SparkEntry.oracleSql.size == ids.size)
+    import graft.operators.QuerySpec
+    val q = QuerySpec("q01_agg", Nil, "SELECT 1")((s, _) => s.range(1).toDF())
+    val ex = intercept[IllegalArgumentException](SparkEntry.unique(Seq(q, q.copy()(q.plan))))
+    assert(ex.getMessage.contains("duplicate query id(s): q01_agg"), ex.getMessage)
   }
 
   test("every query has a SURVEY §2 row and every §2 row has a query (the d105 lesson)") {

@@ -29,7 +29,7 @@ class EventStreamSpec extends SparkSpec {
     val streamed = spark.table("graft_s03_test")
       .select("user_id", "session_start", "n_events")
       .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2))).toSet
-    val batch = SparkEntry.queries("s03_sessionize")(spark, sf)
+    val batch = presented("s03_sessionize")
       .select("user_id", "session_start", "n_events")
       .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2))).toSet
     // append mode only emits sessions closed before the final watermark;
@@ -58,7 +58,7 @@ class EventStreamSpec extends SparkSpec {
       EventStream.scdLookup(dim), mode = "append")
     q.awaitTermination(120000); q.stop()
     val streamed = spark.table("graft_s27_test").orderBy("event_id").collect()
-    val batch = SparkEntry.queries("s27_stream_asof")(spark, sf).collect()
+    val batch = presented("s27_stream_asof").collect()
     assert(streamed.length == batch.length, s"${streamed.length} vs ${batch.length}")
     assert(streamed.sameElements(batch))
     // as-of law: resolution = latest restorable day <= event day
@@ -88,7 +88,7 @@ class EventStreamSpec extends SparkSpec {
       EventStream.sizeHistogram, mode = "complete")
     q.awaitTermination(120000); q.stop()
     val streamed = spark.table("graft_s26_test").orderBy("bin").collect()
-    val batch = SparkEntry.queries("s26_stream_sizehist")(spark, sf).collect()
+    val batch = presented("s26_stream_sizehist").collect()
     assert(streamed.length == batch.length, s"${streamed.length} vs ${batch.length}")
     assert(streamed.sameElements(batch))
     // the state bound: bins are value-range/width, not stream-length
@@ -103,7 +103,7 @@ class EventStreamSpec extends SparkSpec {
     q.awaitTermination(120000); q.stop()
     val streamed = spark.table("graft_s09_test")
       .orderBy("snapshot_day", "node_id").collect()
-    val batch = SparkEntry.queries("s09_stream_progress")(spark, sf).collect()
+    val batch = presented("s09_stream_progress").collect()
     assert(streamed.length == batch.length, s"${streamed.length} vs ${batch.length}")
     assert(streamed.sameElements(batch))
   }
@@ -114,7 +114,7 @@ class EventStreamSpec extends SparkSpec {
     q.awaitTermination(120000); q.stop()
     val streamed = spark.table("graft_s07_test")
       .orderBy("snapshot_day", "node_id").collect()
-    val batch = SparkEntry.queries("s07_backup_monitor")(spark, sf).collect()
+    val batch = presented("s07_backup_monitor").collect()
     assert(streamed.length == batch.length, s"${streamed.length} vs ${batch.length}")
     assert(streamed.sameElements(batch))
   }
@@ -125,7 +125,7 @@ class EventStreamSpec extends SparkSpec {
     q.awaitTermination(120000); q.stop()
     val streamed = spark.table("graft_s30_test")
       .orderBy("node_id", "snapshot_day").collect()
-    val batch = SparkEntry.queries("s30_stream_completeness")(spark, sf).collect()
+    val batch = presented("s30_stream_completeness").collect()
     assert(streamed.length == batch.length, s"${streamed.length} vs ${batch.length}")
     assert(streamed.sameElements(batch))
     // verdict law + both outcomes on this fixture
@@ -144,11 +144,11 @@ class EventStreamSpec extends SparkSpec {
       graft.operators.TextAnalysis.diversityPanel, mode = "append")
     q.awaitTermination(120000); q.stop()
     val streamed = spark.table("graft_s43_test").orderBy("doc_id").collect()
-    val batch = SparkEntry.queries("s43_stream_diversity")(spark, sf).collect()
+    val batch = presented("s43_stream_diversity").collect()
     assert(streamed.length == batch.length, s"${streamed.length} vs ${batch.length}")
     assert(streamed.sameElements(batch))
     // ... and the shared-transform guarantee: s43 ≡ d107 row-for-row
-    val d107 = SparkEntry.queries("d107_lexical_diversity")(spark, sf).collect()
+    val d107 = presented("d107_lexical_diversity").collect()
     assert(batch.sameElements(d107))
   }
 
@@ -158,7 +158,7 @@ class EventStreamSpec extends SparkSpec {
     q.awaitTermination(120000); q.stop()
     val streamed = spark.table("graft_s42_test")
       .orderBy("snapshot_day", "node_id").collect()
-    val batch = SparkEntry.queries("s42_stream_retry")(spark, sf).collect()
+    val batch = presented("s42_stream_retry").collect()
     assert(streamed.length == batch.length, s"${streamed.length} vs ${batch.length}")
     assert(streamed.sameElements(batch))
     // backoff law, composition, zero-failure rows clean, both verdicts
@@ -172,7 +172,7 @@ class EventStreamSpec extends SparkSpec {
     assert(batch.exists(_.getLong(3) > 0) && batch.exists(_.getLong(3) == 0))
     // the live monitor prices ARRIVALS; b46 prices the deduped manifest —
     // dedupe can only DROP failed uploads, so live >= b46 per (node, day)
-    val b46 = SparkEntry.queries("b46_retry_budget")(spark, sf).collect()
+    val b46 = presented("b46_retry_budget").collect()
       .map(r => (r.getLong(0), r.getDate(1)) -> r.getLong(3)).toMap
     batch.foreach { r =>
       val k = (r.getLong(1), r.getDate(0))
@@ -187,7 +187,7 @@ class EventStreamSpec extends SparkSpec {
     q.awaitTermination(120000); q.stop()
     val streamed = spark.table("graft_s22_test")
       .orderBy("snapshot_day", "node_id", "keyspace").collect()
-    val batch = SparkEntry.queries("s22_stream_verify")(spark, sf).collect()
+    val batch = presented("s22_stream_verify").collect()
     assert(streamed.length == batch.length, s"${streamed.length} vs ${batch.length}")
     assert(streamed.sameElements(batch))
     // the corruption fixture must flip at least one day verdict
@@ -204,7 +204,7 @@ class EventStreamSpec extends SparkSpec {
       DocStream.kmvBySource, mode = "complete")
     q.awaitTermination(120000); q.stop()
     val streamed = spark.table("graft_s29_test").orderBy("source").collect()
-    val batch = SparkEntry.queries("s29_stream_kmv")(spark, sf).collect()
+    val batch = presented("s29_stream_kmv").collect()
     assert(streamed.length == batch.length, s"${streamed.length} vs ${batch.length}")
     assert(streamed.sameElements(batch))
     // the corpus vocabulary (~31 words) never fills k=64: every sketch
@@ -220,7 +220,7 @@ class EventStreamSpec extends SparkSpec {
       DocStream.reputationGate(DocStream.repDenyIndex(spark, sf)), mode = "append")
     q.awaitTermination(120000); q.stop()
     val streamed = spark.table("graft_s28_test").orderBy("doc_id").collect()
-    val batch = SparkEntry.queries("s28_stream_reputation")(spark, sf).collect()
+    val batch = presented("s28_stream_reputation").collect()
     assert(streamed.length == batch.length, s"${streamed.length} vs ${batch.length}")
     assert(streamed.sameElements(batch))
     // the gate must discriminate: both verdicts occur, URL-less docs accept
@@ -242,7 +242,7 @@ class EventStreamSpec extends SparkSpec {
       DocStream.urlGate(DocStream.urlIndex(spark, sf)), mode = "append")
     q.awaitTermination(120000); q.stop()
     val streamed = spark.table("graft_s24_test").orderBy("doc_id").collect()
-    val batch = SparkEntry.queries("s24_stream_url")(spark, sf).collect()
+    val batch = presented("s24_stream_url").collect()
     assert(streamed.length == batch.length, s"${streamed.length} vs ${batch.length}")
     assert(streamed.sameElements(batch))
     // the hash-range index leaves ~30% of pages uncrawled: both
@@ -260,7 +260,7 @@ class EventStreamSpec extends SparkSpec {
       DocStream.templateGate(DocStream.templateIndex(spark, sf)), mode = "append")
     q.awaitTermination(120000); q.stop()
     val streamed = spark.table("graft_s33_test").orderBy("doc_id").collect()
-    val batch = SparkEntry.queries("s33_stream_template")(spark, sf).collect()
+    val batch = presented("s33_stream_template").collect()
     assert(streamed.length == batch.length, s"${streamed.length} vs ${batch.length}")
     assert(streamed.sameElements(batch))
     // the gate must discriminate: known templates AND fresh heads both
@@ -276,7 +276,7 @@ class EventStreamSpec extends SparkSpec {
       DocStream.shardPack, mode = "append")
     q.awaitTermination(120000); q.stop()
     val streamed = spark.table("graft_s32_test").orderBy("doc_id").collect()
-    val batch = SparkEntry.queries("s32_stream_shardpack")(spark, sf).collect()
+    val batch = presented("s32_stream_shardpack").collect()
     assert(streamed.length == batch.length, s"${streamed.length} vs ${batch.length}")
     assert(streamed.sameElements(batch))
     // the writer-local sequence must actually advance (the packer
@@ -305,7 +305,7 @@ class EventStreamSpec extends SparkSpec {
       DocStream.ingestBudget, mode = "append")
     q.awaitTermination(120000); q.stop()
     val streamed = spark.table("graft_s25_test").orderBy("doc_id").collect()
-    val batch = SparkEntry.queries("s25_stream_budget")(spark, sf).collect()
+    val batch = presented("s25_stream_budget").collect()
     assert(streamed.length == batch.length, s"${streamed.length} vs ${batch.length}")
     assert(streamed.sameElements(batch))
     // the budget must actually close on at least one source, and the
@@ -333,7 +333,7 @@ class EventStreamSpec extends SparkSpec {
     q.awaitTermination(120000); q.stop()
     val streamed = spark.table("graft_s23_test")
       .orderBy("i", "cell").collect()
-    val batch = SparkEntry.queries("s23_stream_cms")(spark, sf).collect()
+    val batch = presented("s23_stream_cms").collect()
     assert(streamed.length == batch.length, s"${streamed.length} vs ${batch.length}")
     assert(streamed.sameElements(batch))
     // total mass per hash row is the token count — the merge is lossless
@@ -348,7 +348,7 @@ class EventStreamSpec extends SparkSpec {
     q.awaitTermination(120000); q.stop()
     val streamed = spark.table("graft_s08_test")
       .orderBy("lang", "source").collect()
-    val batch = SparkEntry.queries("s08_corpus_curate")(spark, sf).collect()
+    val batch = presented("s08_corpus_curate").collect()
     assert(streamed.length == batch.length, s"${streamed.length} vs ${batch.length}")
     assert(streamed.sameElements(batch))
   }
@@ -360,7 +360,7 @@ class EventStreamSpec extends SparkSpec {
         graft.model.Corpus.normalized(df)), mode = "complete")
     q.awaitTermination(120000); q.stop()
     val streamed = spark.table("graft_s40_test").orderBy("lang").collect()
-    val batch = SparkEntry.queries("s40_stream_fertility")(spark, sf).collect()
+    val batch = presented("s40_stream_fertility").collect()
     assert(streamed.length == batch.length, s"${streamed.length} vs ${batch.length}")
     assert(streamed.sameElements(batch))
     // state bound: one row per language, never stream-length
@@ -379,7 +379,7 @@ class EventStreamSpec extends SparkSpec {
         graft.model.Corpus.normalized(df)), mode = "append")
     q.awaitTermination(120000); q.stop()
     val streamed = spark.table("graft_s37_test").orderBy("doc_id").collect()
-    val batch = SparkEntry.queries("s37_stream_gopher")(spark, sf).collect()
+    val batch = presented("s37_stream_gopher").collect()
     assert(streamed.length == batch.length, s"${streamed.length} vs ${batch.length}")
     assert(streamed.sameElements(batch))
     // the gate must discriminate: both keep outcomes occur
@@ -396,7 +396,7 @@ class EventStreamSpec extends SparkSpec {
     // compare against d22 ITSELF (broadcast gram join + groupBy), not
     // just the s13 batch twin — the per-row kernel probe must
     // reproduce the join's counts exactly
-    val batch = SparkEntry.queries("d22_decontaminate")(spark, sf).collect()
+    val batch = presented("d22_decontaminate").collect()
     assert(streamed.length == batch.length, s"${streamed.length} vs ${batch.length}")
     assert(streamed.sameElements(batch))
     assert(batch.exists(_.getBoolean(2)) && batch.exists(!_.getBoolean(2)))
@@ -410,7 +410,7 @@ class EventStreamSpec extends SparkSpec {
       mode = "complete")
     q.awaitTermination(120000); q.stop()
     val streamed = spark.table("graft_s14_test").orderBy("err_kind").collect()
-    val batch = SparkEntry.queries("d44_media_quarantine")(spark, sf).collect()
+    val batch = presented("d44_media_quarantine").collect()
     assert(streamed.length == batch.length, s"${streamed.length} vs ${batch.length}")
     assert(streamed.sameElements(batch))
     // both damage classes must actually occur on this corpus — the
@@ -424,7 +424,7 @@ class EventStreamSpec extends SparkSpec {
       graft.operators.Multimodal.dimsSweep, mode = "append")
     q.awaitTermination(120000); q.stop()
     val streamed = spark.table("graft_s15_test").orderBy("doc_id").collect()
-    val batch = SparkEntry.queries("d47_media_dims")(spark, sf).collect()
+    val batch = presented("d47_media_dims").collect()
     assert(streamed.length == batch.length, s"${streamed.length} vs ${batch.length}")
     assert(streamed.sameElements(batch))
   }
@@ -438,7 +438,7 @@ class EventStreamSpec extends SparkSpec {
     q.awaitTermination(120000); q.stop()
     val streamed = spark.table("graft_s19_test")
       .orderBy("doc_id", "chunk_idx").collect()
-    val batch = SparkEntry.queries("s19_stream_chunk")(spark, sf).collect()
+    val batch = presented("s19_stream_chunk").collect()
     assert(streamed.length == batch.length, s"${streamed.length} vs ${batch.length}")
     assert(streamed.sameElements(batch))
   }
@@ -449,7 +449,7 @@ class EventStreamSpec extends SparkSpec {
       graft.operators.Curation.splitAssign, mode = "append")
     q.awaitTermination(120000); q.stop()
     val streamed = spark.table("graft_s21_test").orderBy("doc_id").collect()
-    val batch = SparkEntry.queries("s21_stream_split")(spark, sf).collect()
+    val batch = presented("s21_stream_split").collect()
     assert(streamed.length == batch.length, s"${streamed.length} vs ${batch.length}")
     assert(streamed.sameElements(batch))
   }
@@ -466,7 +466,7 @@ class EventStreamSpec extends SparkSpec {
       docs => Curation.blocklistGate(docs, deny, m), mode = "append")
     q.awaitTermination(120000); q.stop()
     val streamed = spark.table("graft_s20_test").orderBy("doc_id").collect()
-    val batch = SparkEntry.queries("s20_stream_blocklist")(spark, sf).collect()
+    val batch = presented("s20_stream_blocklist").collect()
     assert(streamed.length == batch.length, s"${streamed.length} vs ${batch.length}")
     assert(streamed.sameElements(batch))
   }
@@ -481,7 +481,7 @@ class EventStreamSpec extends SparkSpec {
       mode = "append")
     q.awaitTermination(120000); q.stop()
     val streamed = spark.table("graft_s16_test").orderBy("doc_id").collect()
-    val batch = SparkEntry.queries("d49_incremental_ingest")(spark, sf).collect()
+    val batch = presented("d49_incremental_ingest").collect()
     assert(streamed.length == batch.length, s"${streamed.length} vs ${batch.length}")
     assert(streamed.sameElements(batch))
   }
@@ -494,7 +494,7 @@ class EventStreamSpec extends SparkSpec {
       .orderBy("node_id", "k").collect()
     // compare against b07 ITSELF (row_number window), not just the s11
     // batch twin — the running-max register must reproduce the window
-    val batch = SparkEntry.queries("b07_pit_state")(spark, sf).collect()
+    val batch = presented("b07_pit_state").collect()
     assert(streamed.length == batch.length, s"${streamed.length} vs ${batch.length}")
     assert(streamed.sameElements(batch))
   }
@@ -506,7 +506,7 @@ class EventStreamSpec extends SparkSpec {
     q.awaitTermination(120000); q.stop()
     val streamed = spark.table("graft_s12_test")
       .orderBy("doc_id", "frame_idx").collect()
-    val batch = SparkEntry.queries("d18_frame_sample")(spark, sf).collect()
+    val batch = presented("d18_frame_sample").collect()
     assert(streamed.length == batch.length, s"${streamed.length} vs ${batch.length}")
     assert(streamed.sameElements(batch))
   }
@@ -518,7 +518,7 @@ class EventStreamSpec extends SparkSpec {
     q.awaitTermination(120000); q.stop()
     val streamed = spark.table("graft_s10_test")
       .orderBy("lang", "source").collect()
-    val batch = SparkEntry.queries("s10_stream_boilerplate")(spark, sf).collect()
+    val batch = presented("s10_stream_boilerplate").collect()
     assert(streamed.length == batch.length, s"${streamed.length} vs ${batch.length}")
     assert(streamed.sameElements(batch))
     // the gate must actually catch known boilerplate on this corpus
@@ -532,7 +532,7 @@ class EventStreamSpec extends SparkSpec {
     val streamed = spark.table("graft_s04_test")
       .select("error_id", "click_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val batch = SparkEntry.queries("s04_stream_join")(spark, sf)
+    val batch = presented("s04_stream_join")
       .select("error_id", "click_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(streamed == batch,

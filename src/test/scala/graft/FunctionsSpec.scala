@@ -634,6 +634,18 @@ class FunctionsSpec extends SparkSpec {
     assert(both.exists(_.getLong(1) > 0L), "fixture never hits — test is vacuous")
   }
 
+  test("wordHits counts a non-BMP word list (the kernel's UTF-8 byte order, not String order)") {
+    // Java String order puts the surrogate pair of U+1F600 (0xD83D)
+    // before U+FF21; UTF-8 byte order puts it after (F0 > EF). A list
+    // sorted the String way hides U+FF21 from the binary search.
+    import graft.operators.TextAnalysis.wordHits
+    val words = Seq("\uFF21", "\uD83D\uDE00")
+    val hits = spark.range(1)
+      .select(wordHits(array((words :+ "x").map(lit): _*), words))
+      .head().getLong(0)
+    assert(hits == 2L, s"non-BMP word list miscounted: $hits of 2")
+  }
+
   test("graft_minhash_fold and graft_sorted_hit_count registered via extensions") {
     val out = spark.sql(
       """SELECT graft_minhash_fold(array('a b c')) = graft_minhash16('a b c') AS same_sig,

@@ -693,7 +693,7 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("d100 fertility: sequential recount per language from the raw docs") {
-    val rows = SparkEntry.queries("d100_token_fertility")(spark, sf).collect()
+    val rows = presented("d100_token_fertility").collect()
     val tokenRe = "[a-z]+|[0-9]+|[^a-z0-9 ]".r
     val want = graft.model.Corpus.docs(spark, sf)
       .select("lang", "text", "ws").collect()
@@ -757,7 +757,7 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("d102 calibration: recount from d09's and d92's own verdicts") {
-    val rows = SparkEntry.queries("d102_quality_calibration")(spark, sf).collect()
+    val rows = presented("d102_quality_calibration").collect()
     val quality = SparkEntry.queries("d09_quality")(spark, sf)
       .select("doc_id", "quality").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -1352,7 +1352,7 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("q31 distributed rank reproduces NTILE's remainder law exactly") {
-    val rows = SparkEntry.queries("q31_ntile")(spark, sf).collect()
+    val rows = presented("q31_ntile").collect()
     assert(rows.map(_.getLong(0)).toSeq == (1L to 10L),
       "expected exactly deciles 1..10")
     // brute-force ntile over the totally-ordered price list
@@ -1539,7 +1539,7 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("d70 profile: one row per column, panels match per-column recounts") {
-    val rows = SparkEntry.queries("d70_profile")(spark, sf).collect()
+    val rows = presented("d70_profile").collect()
     assert(rows.map(_.getString(0)).toSeq ==
       Seq("doc_id", "lang", "n_chars", "source", "text"))
     val d = graft.sources.Tables.documents(spark, sf).collect()
@@ -1599,7 +1599,7 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("d71 dedup curve: monotone in the threshold, pair/doc counts consistent") {
-    val rows = SparkEntry.queries("d71_dedup_curve")(spark, sf).collect()
+    val rows = presented("d71_dedup_curve").collect()
     assert(rows.map(_.getDouble(0)).toSeq == Seq(0.5, 0.95, 0.98))
     // tightening the cutoff can only shrink both counts
     rows.sliding(2).foreach { case Array(lo, hi) =>
@@ -2151,7 +2151,7 @@ class OperatorSpec extends SparkSpec {
 
   test("d83 quality curve: monotone in the bar, totals constant, dup mass ties to d77") {
     // (t, n_docs, docs_kept, tokens_kept, dup_kept, keep_frac, dup_rate_kept)
-    val rows = SparkEntry.queries("d83_quality_curve")(spark, sf).collect()
+    val rows = presented("d83_quality_curve").collect()
     assert(rows.length == 4)
     val nDocs = graft.model.Corpus.docs(spark, sf).count()
     rows.foreach { r =>
@@ -2181,7 +2181,7 @@ class OperatorSpec extends SparkSpec {
 
   test("d82 MRL truncation: full-dim row is exact agreement 1.0 and the curve is lawful") {
     // (dim, n_queries, n_agree, agreement)
-    val rows = SparkEntry.queries("d82_mrl_truncation")(spark, sf).collect()
+    val rows = presented("d82_mrl_truncation").collect()
     assert(rows.map(_.getInt(0)).toSeq == Seq(64, 32, 16, 8), s"dims: ${rows.mkString(",")}")
     val nVecs = graft.sources.Tables.embeddings(spark, sf).count()
     rows.foreach { r =>

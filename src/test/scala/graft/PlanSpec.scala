@@ -171,8 +171,8 @@ class PlanSpec extends SparkSpec {
   test("q29 rank/count windows and the final agg ride one exchange") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     // both windows and the groupBy share the o_orderpriority
-    // partitioning: exactly one hash exchange, plus the presentation
-    // range sort — a second hash exchange would mean the agg re-shuffled
+    // partitioning: exactly one hash exchange — a second would mean the
+    // agg re-shuffled
     val plan = SparkEntry.queries("q29_quartiles")(spark, sf)
       .queryExecution.executedPlan
     val hashEx = plan.collect {
@@ -237,17 +237,16 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), s"semdedup degenerated to all-pairs:\n$p")
   }
 
-  test("d42 probes the broadcast benchmark per-row (single presentation exchange)") {
+  test("d42 probes the broadcast benchmark per-row (no exchange)") {
     // the corpus stream must fold over the broadcast benchmark array —
-    // no shuffle, no window, no join keyed on the corpus; the ONLY
-    // exchange allowed is the final ORDER BY range partition
+    // no shuffle, no window, no join keyed on the corpus (the
+    // presentation sort is applied at the sink, not in the plan)
     val p = SparkEntry.queries("d42_semantic_decon")(spark, sf)
       .queryExecution.executedPlan.toString
     assert(!p.contains("SortMergeJoin") && !p.contains("Window "),
       s"corpus stream shuffled for the probe:\n$p")
     val exchanges = "Exchange [a-z]+partitioning".r.findAllIn(p).toList
-    assert(exchanges.forall(_.contains("rangepartitioning")) && exchanges.size <= 1,
-      s"non-presentation exchange on the corpus stream: $exchanges\n$p")
+    assert(exchanges.isEmpty, s"exchange on the corpus stream: $exchanges\n$p")
   }
 
   test("d42 semanticDecon rejects an oversized benchmark before building the fold array") {
@@ -454,13 +453,13 @@ class PlanSpec extends SparkSpec {
       s"Expand not above the URL explode:\n$sp"))
   }
 
-  test("d32 quantization is per-row: only the presentation sort exchanges") {
+  test("d32 quantization is per-row: no exchange") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     val df = SparkEntry.queries("d32_embed_quant")(spark, sf)
     val shuffles = df.queryExecution.sparkPlan.collect {
       case e: ShuffleExchangeLike => e
     }
-    assert(shuffles.size <= 1, // the final orderBy range partitioning only
+    assert(shuffles.isEmpty,
       s"quantization shuffles the vector stream:\n${df.queryExecution.sparkPlan}")
   }
 
@@ -724,5 +723,27 @@ class PlanSpec extends SparkSpec {
       s"global-window set drifted — new entries need a boundedness argument:\n" +
         s"  got      ${withGlobalWindow.mkString(", ")}\n" +
         s"  declared ${declared.mkString(", ")}")
+  }
+
+  test("presentation order lives in `present`: no spec's plan ends in a global sort") {
+    // a trailing orderBy is presentation only — Verify applies the
+    // record's `present` keys at the sink, so a global sort left at a
+    // plan's root is a range exchange and a stage every caller pays for
+    // nothing. Sorts that something above reads (limit, top-k, lastN)
+    // sit under that operator, not at the root.
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Sort}
+    def root(p: LogicalPlan): LogicalPlan = p match {
+      case Project(_, c) => root(c)
+      case Filter(_, c)  => root(c)
+      case other         => other
+    }
+    val sorted = SparkEntry.specs.filter(_.present.nonEmpty).map(_.id).filter { id =>
+      root(SparkEntry.queries(id)(spark, sf).queryExecution.optimizedPlan) match {
+        case s: Sort => s.global
+        case _       => false
+      }
+    }
+    assert(sorted.isEmpty,
+      s"global sort at the plan root (move its keys into `present`): ${sorted.mkString(", ")}")
   }
 }
