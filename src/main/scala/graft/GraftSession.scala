@@ -9,7 +9,11 @@ import org.apache.spark.sql.SparkSession
   * join splitting), UTC session time zone (oracle parity), and a
   * shuffle partition count sized to the parallelism at hand instead of
   * the 200 default. The [[plans.GraftExtensions]] injection registers
-  * graft's native SQL functions.
+  * graft's native SQL functions. `spark.hadoop.fs.file.impl` and
+  * `spark.hadoop.fs.AbstractFileSystem.file.impl` route `file:` I/O
+  * (checkpoints, state stores, sinks, scratch) through
+  * [[sources.LocalFs]], Hadoop's local filesystem without its `chmod`/
+  * `readlink`/`ls` process forks; other schemes are untouched.
   */
 object GraftSession {
 
@@ -37,6 +41,7 @@ object GraftSession {
       // retune against actual file sizes, per-table not globally
       .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config(sources.LocalFs.sparkConf)
 
   /** Standalone local session (tests / ad-hoc). */
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {

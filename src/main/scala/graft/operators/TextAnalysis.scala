@@ -54,7 +54,8 @@ object TextAnalysis extends QueryModule {
   /** Non-empty token count — `size(filter(ws, x -> x != ''))` without
     * the interpreted lambda: total size minus the ''-occurrence count
     * (split() yields [''] only for an empty normalized text, so the
-    * subtraction is exact). */
+    * subtraction is exact). A null `ws` yields null (the kernel is
+    * null-safe), not the lambda form's -1; `[]` and `[""]` yield 0. */
   private[graft] def nonEmptyCount(ws: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     size(ws).cast("long") - graft.functions.SortedHitCount(ws, array(lit("")))
 

@@ -646,6 +646,17 @@ class FunctionsSpec extends SparkSpec {
     assert(hits == 2L, s"non-BMP word list miscounted: $hits of 2")
   }
 
+  test("nonEmptyCount: null ws is null, [] and [\"\"] are 0, [\"a\", \"\"] is 1") {
+    import graft.operators.TextAnalysis.nonEmptyCount
+    val out = spark.sql(
+      """SELECT * FROM VALUES (0, CAST(NULL AS ARRAY<STRING>)), (1, CAST(array() AS ARRAY<STRING>)),
+        |  (2, array('')), (3, array('a', '')) AS t(i, ws)""".stripMargin)
+      .select(col("i"), nonEmptyCount(col("ws")))
+      .collect().map(r => r.getInt(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1))))
+      .toMap
+    assert(out == Map(0 -> None, 1 -> Some(0L), 2 -> Some(0L), 3 -> Some(1L)), out)
+  }
+
   test("graft_minhash_fold and graft_sorted_hit_count registered via extensions") {
     val out = spark.sql(
       """SELECT graft_minhash_fold(array('a b c')) = graft_minhash16('a b c') AS same_sig,
