@@ -20,9 +20,7 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.specs.filter(q => only.isEmpty || only(q.id)).foreach { q =>
-      // Caller-owned cache lifecycle: operators may persist() internal
-      // multi-consumer subtrees (d15/d35); release them between queries so
-      // corpus-sized blocks don't accumulate across the ~100-query run.
+      // release the previous query's persisted frames (QuerySpec)
       spark.catalog.clearCache()
       try q.presented(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/${q.id}")

@@ -506,7 +506,7 @@ object Curation extends QueryModule {
       // materialize-once: the per-source table (bounded by the source
       // domain) feeds BOTH the totals aggregate and the final join —
       // without this the corpus scan + token reduction run twice
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist()
     val tot = per.agg(sum("n_tokens").as("tot_tokens"), sum("w_raw").as("tot_w"))
     per.crossJoin(broadcast(tot))
       .withColumn("actual_frac",

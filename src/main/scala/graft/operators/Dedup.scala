@@ -80,32 +80,23 @@ object Dedup extends QueryModule {
   private[operators] def bandSigs(s: SparkSession, dir: String): DataFrame =
     bandSigsOf(minhashWide(s, dir))
 
-  /** ONE persisted copy of [[bandSigs]] per (session, dir) — the frame
-    * every LSH consumer (d04/d24/d67 via [[lshPairs]], d76's two-sided
-    * index/probe, d77/d79's membership pricing) shares. Without the
-    * memo each consumer persisted its own structurally-identical frame,
-    * so a session running d04 and d76 cached the signatures TWICE.
-    * Persisting (vs relying on AQE exchange reuse, which is
-    * best-effort under concurrent stage submission) is what makes the
-    * one-corpus-scan guarantee structural; the frame is 4 signature
-    * rows per doc, far smaller than the corpus. Callers release blocks
-    * via the Verify/Bench clearCache lifecycle — storageLevel is
-    * re-checked on every access so a cleared frame transparently
-    * re-registers instead of silently running uncached. */
-  private val sigMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private[operators] def bandSigsPersisted(s: SparkSession, dir: String): DataFrame = {
-    // Leak guard: drop entries owned by stopped sessions, so a
-    // long-lived JVM cycling SparkSessions never pins dead analyzed
-    // plans, and a stopped session's cached frame is never re-served.
-    // The map holds one entry per live (session, sf dir) — the sweep
-    // is O(entries) on a tiny map, not a hot-path cost.
-    sigMemo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val df = sigMemo.computeIfAbsent((s, dir), _ => bandSigs(s, dir))
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    df
-  }
+  /** [[bandSigs]], persisted: the one frame every LSH consumer
+    * (d04/d24/d67 via [[lshPairs]], d76's two-sided index/probe,
+    * d77/d79's membership pricing) reads. Persisting (vs relying on AQE
+    * exchange reuse, which is best-effort under concurrent stage
+    * submission) is what makes the one-corpus-scan guarantee
+    * structural; the frame is 4 signature rows per doc, far smaller
+    * than the corpus. */
+  private[operators] def bandSigsPersisted(s: SparkSession, dir: String): DataFrame =
+    persisted(bandSigs(s, dir))
+
+  /** `df`, persisted. Spark's CacheManager keys cached data by plan, so
+    * a fresh build of an already-cached frame reads the cached copy;
+    * `storageLevel` is that plan lookup, and skipping the repeat
+    * `persist()` keeps it from logging "Asked to cache already cached
+    * data". */
+  private def persisted(df: DataFrame): DataFrame =
+    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) df.persist() else df
 
   /** All ordered pairs (i < j) from a SORTED array column — the
     * combination explode that replaces a key-equality SELF-join. The
@@ -149,12 +140,12 @@ object Dedup extends QueryModule {
     * stream and 1 scan, with identical output (same distinct-gram
     * multiset per doc, same pairs, same exact integers).
     *
-    * The (doc_id, n, gram) stream is PERSISTED per (session, dir) —
-    * same pattern and lifecycle as [[bandSigsPersisted]] — for two
-    * measured reasons, not convenience: (1) both join sides and any
-    * co-running consumer (d34/d104 pair exact + probe) read one
-    * materialization; (2) WITHOUT the cache barrier, Catalyst inlines
-    * the `ga` projection into every pushed-down filter — the
+    * The (doc_id, n, gram) stream is PERSISTED, like
+    * [[bandSigsPersisted]], for two measured reasons, not convenience:
+    * (1) both join sides and any co-running consumer (d34/d104 pair
+    * exact + probe, which build the stream once and pass it on) read
+    * one materialization; (2) WITHOUT the cache barrier, Catalyst
+    * inlines the `ga` projection into every pushed-down filter — the
     * normText→split→transform→array_distinct chain re-evaluates ~6×
     * per row (no cross-operator subexpression elimination) and d02
     * measured 150 s at sf0.1 vs ~6 s baseline. The cache bounds that
@@ -165,10 +156,7 @@ object Dedup extends QueryModule {
     * shared by m docs builds its m²/2 pair structs inside ONE
     * interpreted higher-order expression on one core, while the
     * codegen'd self-join streams the same pairs through the merge. */
-  private val gramMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private def gramStreamPersisted(s: SparkSession, dir: String): DataFrame = {
-    gramMemo.keySet.removeIf(k => k._1.sparkContext.isStopped)
     // The explode child MUST stay a non-attribute EXPRESSION: exploding
     // a projected array attribute lets InferFiltersFromGenerate add
     // size(ga) > 0 / isnotnull(ga) filters whose pushdown substitutes
@@ -179,27 +167,22 @@ object Dedup extends QueryModule {
     // projection intact, computed once per doc) and the generator child
     // an expression (no filter inference), while carrying the per-doc
     // distinct-gram count on every element.
-    val df = gramMemo.computeIfAbsent((s, dir), _ =>
-      Corpus.docs(s, dir).filter(size(col("ws")) >= 3)
-        .select(col("doc_id"), Corpus.gramsArr.as("ga"))
-        .select(col("doc_id"), explode(expr(
-          "transform(ga, g -> named_struct('gram', g, 'n', CAST(size(ga) AS BIGINT)))")).as("z"))
-        .select(col("doc_id"), col("z.n").as("n"), col("z.gram").as("gram")))
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    df
+    persisted(Corpus.docs(s, dir).filter(size(col("ws")) >= 3)
+      .select(col("doc_id"), Corpus.gramsArr.as("ga"))
+      .select(col("doc_id"), explode(expr(
+        "transform(ga, g -> named_struct('gram', g, 'n', CAST(size(ga) AS BIGINT)))")).as("z"))
+      .select(col("doc_id"), col("z.n").as("n"), col("z.gram").as("gram")))
   }
-  private def gramPairStats(s: SparkSession, dir: String): DataFrame = {
-    val dg = gramStreamPersisted(s, dir)
+  private def gramPairStats(dg: DataFrame): DataFrame = {
     val a = dg.select(col("gram"), col("doc_id").as("a_id"), col("n").as("na"))
     val b = dg.select(col("gram"), col("doc_id").as("b_id"), col("n").as("nb"))
     // merge hint (r19, measured): the cached stream's stats sit under
     // the auto-broadcast threshold, and the planner's broadcast choice
     // LOSES — collecting the 260 k-row string-keyed build to the
     // driver and probing one big hashed relation measured 2.2 s vs
-    // 0.78 s for the 32-way partitioned merge (StageProbe, steady
-    // state). The merge is also the only shape that exists at 100 TB,
-    // where the gram stream can never broadcast.
+    // 0.78 s for the 32-way partitioned merge (OPTIMIZATION_r19.md §4,
+    // steady state). The merge is also the only shape that exists at
+    // 100 TB, where the gram stream can never broadcast.
     a.join(b.hint("merge"), Seq("gram"))
       .filter(col("a_id") < col("b_id"))
       .groupBy("a_id", "b_id")
@@ -231,8 +214,8 @@ object Dedup extends QueryModule {
     * its own scan for the sketch-only consumers (d04/d24/d76/…), where
     * materializing the full gram stream just to stream it once into
     * the 16-column min-agg would be pure write amplification at scale. */
-  private def bandSigsFromGrams(s: SparkSession, dir: String): DataFrame =
-    bandSigsOf(minhashWideOver(gramStreamPersisted(s, dir)))
+  private def bandSigsFromGrams(dg: DataFrame): DataFrame =
+    bandSigsOf(minhashWideOver(dg))
 
   /** DuckDB CTE chain ending in `sig(doc_id, band, sig)` — the oracle
     * twin of [[bandSigs]], shared by the d04/d24 pair chain and d76's
@@ -266,8 +249,8 @@ object Dedup extends QueryModule {
     * prefix filtering (3× slower — the rank window + per-doc arrays
     * cost more than the candidate reduction saves here); d04's MinHash
     * banding remains the scale path. */
-  private def jaccardPairs(s: SparkSession, dir: String): DataFrame =
-    gramPairStats(s, dir)
+  private def jaccardPairs(dg: DataFrame): DataFrame =
+    gramPairStats(dg)
       .withColumn("jaccard",
         col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
       .filter(col("jaccard") >= 0.5)
@@ -386,9 +369,9 @@ object Dedup extends QueryModule {
         |  SELECT t, unnest([a_id, b_id]) AS doc FROM ex)
         |SELECT t, count(1) // 2 AS n_pairs, count(DISTINCT doc) AS n_docs
         |FROM docstream GROUP BY t ORDER BY t""".stripMargin) { (s, dir) =>
-      val p = jaccardPairs(s, dir)
+      val p = jaccardPairs(gramStreamPersisted(s, dir))
         .select("a_id", "b_id", "jaccard")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       p.select(col("a_id"), col("b_id"), col("jaccard"),
           explode(array(lit(0.5), lit(0.95), lit(0.98))).as("t"))
         .filter(col("jaccard") >= col("t"))
@@ -419,7 +402,7 @@ object Dedup extends QueryModule {
         |GROUP BY a.doc_id, b.doc_id
         |HAVING CAST(count(1) AS DOUBLE) / (any_value(sa.n) + any_value(sb.n) - count(1)) >= 0.5
         |ORDER BY a_id, b_id""".stripMargin) { (s, dir) =>
-      jaccardPairs(s, dir)
+      jaccardPairs(gramStreamPersisted(s, dir))
         .select("a_id", "b_id", "inter", "jaccard")
     },
 
@@ -596,10 +579,11 @@ object Dedup extends QueryModule {
       // extra corpus scans (r18 built them TWICE: once in
       // bandSigsPersisted's own scan for the candidates, once from the
       // cached stream for the lookups)
-      val aw = minhashWideOver(gramStreamPersisted(s, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val dg = gramStreamPersisted(s, dir)
+      val aw = minhashWideOver(dg)
+        .persist()
       val cand = lshPairsOver(bandSigsOf(aw)).select("a_id", "b_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       val a = aw.toDF(("a_id" +: (0 until 16).map(i => s"ma$i")): _*)
       val b = aw.toDF(("b_id" +: (0 until 16).map(i => s"mb$i")): _*)
       val nMatch = (0 until 16)
@@ -607,7 +591,7 @@ object Dedup extends QueryModule {
         .reduce(_ + _)
       // sizes is one tiny aggregate over the CACHED gram stream (n is
       // constant per doc) — no extra corpus scan
-      val sizes = gramStreamPersisted(s, dir)
+      val sizes = dg
         .groupBy("doc_id").agg(min(col("n")).as("n"))
       // exact |∩| restricted to the CANDIDATE DOC MINORITY before the
       // quadratic gram self-join (guide §3.2 — pre-filter the big side
@@ -623,7 +607,7 @@ object Dedup extends QueryModule {
       val candDocs = cand
         .select(explode(array(col("a_id"), col("b_id"))).as("doc_id"))
         .distinct()
-      val dgc = gramStreamPersisted(s, dir).select("doc_id", "gram")
+      val dgc = dg.select("doc_id", "gram")
         .join(broadcast(candDocs), Seq("doc_id"), "left_semi")
       val inter = dgc.toDF("a_id", "gram")
         .join(dgc.toDF("b_id", "gram").select(col("gram"), col("b_id")), Seq("gram"))
@@ -669,9 +653,9 @@ object Dedup extends QueryModule {
         |  JOIN docs da ON da.doc_id = e.a_id
         |  JOIN docs db ON db.doc_id = e.b_id) t
         |GROUP BY 1, 2 ORDER BY source_a, source_b""".stripMargin) { (s, dir) =>
-      val pairs = jaccardPairs(s, dir).select("a_id", "b_id")
+      val pairs = jaccardPairs(gramStreamPersisted(s, dir)).select("a_id", "b_id")
       val src = Corpus.docs(s, dir).select(col("doc_id"), col("source"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       pairs
         .join(src.toDF("a_id", "src_a"), Seq("a_id"))
         .join(src.toDF("b_id", "src_b"), Seq("b_id"))
@@ -697,7 +681,7 @@ object Dedup extends QueryModule {
         |ORDER BY a_id, b_id""".stripMargin) { (s, dir) =>
       // same one-scan/two-exchange pair core as d02 ([[gramPairStats]]);
       // only the metric differs (min-denominator instead of union)
-      gramPairStats(s, dir)
+      gramPairStats(gramStreamPersisted(s, dir))
         .withColumn("containment",
           col("inter").cast("double") / least(col("na"), col("nb")))
         .filter(col("containment") >= 0.8)
@@ -722,11 +706,12 @@ object Dedup extends QueryModule {
         |  CAST((SELECT count(1) FROM exact e JOIN pairs p
         |     ON e.a_id = p.a_id AND e.b_id = p.b_id) AS DOUBLE)
         |    / greatest((SELECT count(1) FROM exact), 1) AS recall""".stripMargin) { (s, dir) =>
-      val exact = jaccardPairs(s, dir).select("a_id", "b_id")
+      val dg = gramStreamPersisted(s, dir)
+      val exact = jaccardPairs(dg).select("a_id", "b_id")
       // candidates from the gram stream the exact side already
       // persists (bit-identical signatures, one corpus scan for the
       // whole query instead of two)
-      val cand = lshPairsOver(bandSigsFromGrams(s, dir)).select("a_id", "b_id")
+      val cand = lshPairsOver(bandSigsFromGrams(dg)).select("a_id", "b_id")
       val hits = exact.join(cand.withColumn("hit", lit(1)),
         Seq("a_id", "b_id"), "left")
         .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_hit"))
@@ -772,7 +757,8 @@ object Dedup extends QueryModule {
         |ORDER BY n_bands""".stripMargin) { (s, dir) =>
       // signatures from the gram stream the exact side already
       // persists (bit-identical, one corpus scan for the whole query)
-      val sig = bandSigsFromGrams(s, dir)
+      val dg = gramStreamPersisted(s, dir)
+      val sig = bandSigsFromGrams(dg)
       // lshPairs' combination-explode shape, keeping min(band) instead
       // of the shared-band count — one exchange instead of a self-join
       val firstBand = sig.groupBy("band", "sig")
@@ -781,8 +767,8 @@ object Dedup extends QueryModule {
         .select(col("band"), explode(combos(col("ds"))).as("p"))
         .groupBy(col("p.a").as("a_id"), col("p.b").as("b_id"))
         .agg(min(col("band")).as("first_band"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val exact = jaccardPairs(s, dir).select("a_id", "b_id")
+        .persist()
+      val exact = jaccardPairs(dg).select("a_id", "b_id")
       val hits = exact.join(firstBand, Seq("a_id", "b_id"), "left")
         .agg(count(lit(1)).as("n_exact"),
           (1 to 4).map(nb =>
@@ -851,7 +837,7 @@ object Dedup extends QueryModule {
         "CAST(conv(substr(md5(concat('smp2', CAST(doc_id AS STRING))), 1, 2), 16, 10) AS INT)"
       val bk = graft.sources.Tables.documents(s, dir)
         .select(col("doc_id"), expr(bkExpr).as("b"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       val pb = lshPairs(s, dir).select("a_id", "b_id")
         .join(bk.toDF("a_id", "ba"), Seq("a_id"))
         .join(bk.toDF("b_id", "bb"), Seq("b_id"))
@@ -959,7 +945,7 @@ object Dedup extends QueryModule {
         .posTiles(graft.sources.Tables.documents(s, dir))
         .withColumn("is_dup",
           min(col("doc_id")).over(byTile) =!= max(col("doc_id")).over(byTile))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       val agg = flagged.groupBy("doc_id")
         .agg(count(lit(1)).as("n_tiles"),
           sum(when(col("is_dup"), 1L).otherwise(0L)).as("n_dup_tiles"))
@@ -1028,7 +1014,7 @@ object Dedup extends QueryModule {
         .winnowTiles(graft.sources.Tables.documents(s, dir))
         .withColumn("is_dup",
           min(col("doc_id")).over(byTile) =!= max(col("doc_id")).over(byTile))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       val agg = flagged.groupBy("doc_id")
         .agg(count(lit(1)).as("n_sel"),
           sum(when(col("is_dup"), 1L).otherwise(0L)).as("n_dup_sel"))

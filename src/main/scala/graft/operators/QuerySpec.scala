@@ -10,7 +10,16 @@ import org.apache.spark.sql.functions.col
   * The plan carries no presentation sort. A sort stays in a plan only
   * when an operator above it reads the order (a limit, top-k, lastN);
   * a trailing sort is presentation, declared as `present` and applied
-  * at the sink by [[presented]]. */
+  * at the sink by [[presented]].
+  *
+  * Cache release is the caller's. A plan may `persist()` a subtree that
+  * several of its consumers read; Spark's CacheManager owns the cached
+  * frame, keyed by its plan, so a later query (or a second build in
+  * the same one) that builds the same frame reads the cached copy. It
+  * stays cached until the caller calls `spark.catalog.clearCache()`:
+  * Verify and Bench do so between queries and timing passes, and a
+  * long-lived session embedding an operator must do the same after
+  * consuming its result. */
 final case class QuerySpec(id: String, present: Seq[Column], oracleSql: String)(
     val plan: (SparkSession, String) => DataFrame) {
 

@@ -114,15 +114,12 @@ object Similarity extends QueryModule {
     * representative election aggregate and the probe side of the
     * broadcast rep join — the probe side has no exchange, so nothing
     * reuses and without this the corpus is scanned + folded TWICE
-    * (the same reasoning as d15's cents1 persist). Cache lifecycle is
-    * CALLER-owned: Bench and Verify call spark.catalog.clearCache()
-    * between queries; any long-lived session embedding this operator
-    * must do the same after consuming the result. */
+    * (the same reasoning as d15's cents1 persist). */
   private def semdedupScored(s: SparkSession, dir: String): DataFrame = {
     val n = graft.sources.Stats.parquetRowCount(s, s"$dir/embeddings.parquet")
     val ass = assignTop2(Corpus.qvecs(s, dir), centroids(s, ivfCells(n)))
       .select(col("vec_id"), col("cell1").as("cell"), col("q"), col("norm2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist()
     // struct min: lexicographic on (vec_id, …) elects the min-id
     // member carrying its vector — one bounded-key aggregate, no
     // window, no join back to find the representative's payload
@@ -381,7 +378,7 @@ object Similarity extends QueryModule {
       val labels = graft.sources.IO.readParquet(s, annIndexCommunities(s, dir))
       val mem = post
         .join(labels, Seq("vec_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       val longf = mem.select(col("cluster_id"), col("vec_id"), col("norm2"),
         posexplode(col("q")).as(Seq("pos", "v")))
       val csum = longf.groupBy("cluster_id", "pos").agg(sum(col("v")).as("sv"))
@@ -936,7 +933,7 @@ object Similarity extends QueryModule {
       graft.sources.IO.readParquet(s, annIndexPostings(s, dir)), "q")
     ivfTopK(assignTop2(Corpus.qvecs(s, dir), cents), post)
       .select(col("a_id"), col("b_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist()
   }
 
   /** Mutual-kNN community labels (`id`, `lbl`) over a directed edge
@@ -1768,9 +1765,9 @@ object Similarity extends QueryModule {
       val q = Corpus.qvecsAll(graft.sources.Tables.embeddings(s, dir))
       val n = graft.sources.Stats.parquetRowCount(s, s"$dir/embeddings.parquet")
       val cents1 = refinedCents(s, q, n)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       val ass = assignTop2(q, cents1)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       val data = ass.select(col("vec_id"), col("cell1").as("cell"),
         col("q"), col("norm2"), col("label"))
       ivfTopK(ass, data, carry = Seq("label"),
@@ -1816,13 +1813,13 @@ object Similarity extends QueryModule {
       // losing an executor on a real cluster recomputes the cached
       // partitions instead of failing the query.
       val cents1 = refinedCents(s, q, n)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       // same materialize-once reasoning one level up: the refined
       // assignment feeds BOTH sides of the cell equi-join (the probe
       // explode and the data side), whose exchanges differ in shape —
       // without this the embeddings scan + fold run twice.
       val ass = assignTop2(q, cents1)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       ivfTopK(ass, ass.select(col("vec_id"), col("cell1").as("cell"),
           col("q"), col("norm2")))
     },
@@ -1866,13 +1863,13 @@ object Similarity extends QueryModule {
       val q = Corpus.qvecs(s, dir)
       val n = graft.sources.Stats.parquetRowCount(s, s"$dir/embeddings.parquet")
       val cents1 = refinedCents(s, q, n)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       // the assignment feeds both the stats aggregate and the per-row
       // flag — materialize once (d15's reasoning; there is no exchange
       // between scan and assignment for reuse to latch onto)
       val ass = assignTop2(q, cents1)
         .select(col("vec_id"), col("cell1").as("cell"), col("dist1").as("d2"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       val stats = ass.groupBy("cell")
         .agg(count(lit(1)).as("n_cell"),
           sum(col("d2").cast("decimal(38,0)")).as("s1"),
@@ -1927,7 +1924,7 @@ object Similarity extends QueryModule {
       // the reciprocity semi-join, the total) — materialize once
       val edges = ivfTopK(assignTop2(Corpus.qvecs(s, dir), cents), post)
         .select(col("a_id"), col("b_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       val deg = edges.select(col("a_id").as("vec_id"), lit(1L).as("o"), lit(0L).as("i"))
         .unionAll(edges.select(col("b_id").as("vec_id"), lit(0L).as("o"), lit(1L).as("i")))
         .groupBy("vec_id")
@@ -2136,7 +2133,7 @@ object Similarity extends QueryModule {
         |  LEFT JOIN ind i USING (cluster_id), tot
         |ORDER BY s.cluster_id""".stripMargin) { (s, dir) =>
       val edges = graft.sources.IO.readParquet(s, annKnnEdges(s, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       val cc = graft.sources.IO.readParquet(s, annIndexCommunities(s, dir))
         .toDF("id", "lbl")
       val nodes = edges.select(col("a_id").as("id"))
@@ -2146,7 +2143,7 @@ object Similarity extends QueryModule {
       val e2 = edges
         .join(lab.select(col("id").as("a_id"), col("cid").as("ca")), Seq("a_id"))
         .join(lab.select(col("id").as("b_id"), col("cid").as("cb")), Seq("b_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       val outd = e2.groupBy(col("ca").as("cluster_id"))
         .agg(count(lit(1)).as("d_out"),
           sum(when(col("ca") === col("cb"), 1L).otherwise(0L)).as("e_intra"))
@@ -2188,7 +2185,7 @@ object Similarity extends QueryModule {
       val mem = denull(
           graft.sources.IO.readParquet(s, annIndexPostings(s, dir)), "q")
         .join(labels, Seq("vec_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       val longf = mem.select(col("cluster_id"), col("vec_id"), col("norm2"),
         posexplode(col("q")).as(Seq("pos", "v")))
       val csum = longf.groupBy("cluster_id", "pos").agg(sum(col("v")).as("sv"))
@@ -2657,10 +2654,9 @@ object Similarity extends QueryModule {
     // 30-sims-per-query candidate self-join needs NO further
     // embeddings scan — two pinned scans total (query side + the
     // broadcast corpus of the declared-exact d06 baseline). The tiny
-    // pool/selection frames persist across rounds (Verify clears
-    // caches between queries). All similarities divide exact integer
-    // dots, and every float expression sequence matches the oracle's
-    // unrolled 3-stage greedy verbatim.
+    // pool/selection frames persist across rounds. All similarities
+    // divide exact integer dots, and every float expression sequence
+    // matches the oracle's unrolled 3-stage greedy verbatim.
     QuerySpec("d62_mmr_rerank", by("a_id", "pick_no"),
       // Greedy MMR unrolled into explicit stages (K=3 is a constant):
       // s1 = argmax rel; each later stage scores the not-yet-selected
@@ -2742,7 +2738,7 @@ object Similarity extends QueryModule {
       val cands = graft.plans.TopK.perGroup(scored, Seq("a_id"),
           Seq(("rel", true), ("b_id", false)), k = 6, rankName = "rn")
         .select("a_id", "b_id", "rel", "qb", "nb")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       val csim = cands.select(col("a_id"), col("b_id").as("x_id"),
           col("qb").as("qx"), col("nb").as("nx"))
         .join(cands.select(col("a_id"), col("b_id").as("y_id"),
@@ -2750,7 +2746,7 @@ object Similarity extends QueryModule {
         .filter(col("x_id") =!= col("y_id"))
         .withColumn("sim", cos(DotLong(col("qx"), col("qy")), col("nx"), col("ny")))
         .select("a_id", "x_id", "y_id", "sim")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       var sel = graft.plans.TopK.perGroup(cands, Seq("a_id"),
           Seq(("rel", true), ("b_id", false)), k = 1, rankName = "rn1")
         .select(col("a_id"), col("b_id"), lit(1).as("pick_no"), col("rel"))
@@ -2830,7 +2826,7 @@ object Similarity extends QueryModule {
         .withColumn("h", graft.functions.hash32(concat(lit("neg"),
           col("a_id").cast("string"), lit("#"), col("b_id").cast("string"))))
         .select("a_id", "b_id", "cos", "h")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       val pos = graft.plans.TopK.perGroup(scored, Seq("a_id"),
           Seq(("cos", true), ("b_id", false)), k = 1, rankName = "rp")
         .select(col("a_id"), col("b_id").as("pos_id"))
@@ -2878,7 +2874,7 @@ object Similarity extends QueryModule {
         .withColumn("cos", col("dot").cast("double")
           / (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
         .select("a_id", "b_id", "cos", "probe_rank")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       val q = Corpus.qvecs(s, dir)
       val pairs = q.toDF("a_id", "qa", "na")
         .join(broadcast(q.toDF("b_id", "qb", "nb")), col("a_id") =!= col("b_id"))
@@ -2888,7 +2884,7 @@ object Similarity extends QueryModule {
       val exact = graft.plans.TopK.perGroup(pairs,
           Seq("a_id"), Seq(("cos", true), ("b_id", false)), k = 3, rankName = "rn")
         .select("a_id", "b_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       Seq(1, 2).map { p =>
         val ann = graft.plans.TopK.perGroup(
             scored.filter(col("probe_rank") <= p),

@@ -309,8 +309,8 @@ object TextAnalysis extends QueryModule {
   private[graft] def domainReputation(s: SparkSession, dir: String): DataFrame = {
     // persist the domain aggregate: both the band-offset side and the
     // final ranked frame consume it (the d15/d35 multi-consumer
-    // persist convention — caller-owned lifecycle via clearCache);
-    // without it each side would re-scan the corpus (pin documents=1)
+    // persist convention); without it each side would re-scan the
+    // corpus (pin documents=1)
     val agg = domainLinks(s, dir)
       .groupBy("domain")
       .agg(count(lit(1)).as("n_docs"),
@@ -318,7 +318,7 @@ object TextAnalysis extends QueryModule {
           .as("q_sum"))
       .withColumn("avg_quality", col("q_sum").cast("double") / col("n_docs"))
       .withColumn("qband", floor(col("avg_quality") * 1024.0).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist()
     val wBand = Window.partitionBy("qband")
       .orderBy(col("avg_quality").asc, col("domain").asc)
     val wPrefix = Window.orderBy("qband")
@@ -1447,7 +1447,7 @@ object TextAnalysis extends QueryModule {
         // exchange reuse is best-effort (the lshPairs lesson) — the
         // frame is ≤k longs per source, so the cache is trivial and
         // the one-corpus-scan pin becomes structural
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       val a = sk.select(col("source").as("a_source"), col("hs").as("a_hs"))
       val b = sk.select(col("source").as("b_source"), col("hs").as("b_hs"))
       def est(hs: Column): Column =
@@ -1553,7 +1553,7 @@ object TextAnalysis extends QueryModule {
       val c2 = bg.groupBy("bg")
         .agg(count(lit(1)).as("c2"))
         .withColumn("w1", substring_index(col("bg"), " ", 1))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       val c1 = c2.groupBy("w1").agg(sum(col("c2")).as("c1"))
       val model = c2.join(c1, Seq("w1"))
         .select(col("bg"), col("c2"), col("c1"))
@@ -1695,7 +1695,7 @@ object TextAnalysis extends QueryModule {
         .select(explode(col("ws")).as("w")).filter(col("w") =!= "")
         .groupBy("w").agg(count(lit(1)).as("n"))
         .filter(length(col("w")) >= 2)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       val pairs = words
         .select(col("w"), col("n"), explode(expr(
           "transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))")).as("p"))

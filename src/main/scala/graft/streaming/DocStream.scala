@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 import graft.model.Corpus
@@ -273,8 +273,6 @@ object DocStream {
         when(col("n_low") > 0, "review").otherwise("accept"))
       .select("doc_id", "n_domains", "n_low", "verdict")
 
-  /** Run a document-stream transform to a memory sink (AvailableNow —
-    * drains the source then stops), for the stream ≡ batch specs. */
   /** s32's row/state shapes: hash-bucketed live shard packing. */
   case class PackDoc(doc_id: Long, bucket: Int, n_tokens: Long)
   case class PackOut(doc_id: Long, bucket: Int, n_tokens: Long,
@@ -330,13 +328,9 @@ object DocStream {
     out.iterator
   }
 
+  /** Run a document-stream transform to a memory sink (AvailableNow —
+    * drains the source then stops), for the stream ≡ batch specs. */
   def runToMemory(s: SparkSession, dir: String, name: String,
       transform: DataFrame => DataFrame, mode: String = "complete"): StreamingQuery =
-    transform(readDocsStream(s, dir))
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(mode)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    MemorySink.run(readDocsStream(s, dir), name, transform, mode)
 }

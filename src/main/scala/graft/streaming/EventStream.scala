@@ -461,11 +461,5 @@ object EventStream {
     * processing all available input (test/CI harness). */
   def runToMemory(s: SparkSession, dir: String, name: String,
       transform: DataFrame => DataFrame, mode: String = "append"): StreamingQuery =
-    transform(readEventsStream(s, dir))
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(mode)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    MemorySink.run(readEventsStream(s, dir), name, transform, mode)
 }

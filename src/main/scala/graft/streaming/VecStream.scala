@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** §2.D — Structured Streaming over the embedding feed (the vector
@@ -33,11 +33,5 @@ object VecStream {
   /** Run `transform` over the vector stream into a memory sink. */
   def runToMemory(s: SparkSession, dir: String, name: String,
       transform: DataFrame => DataFrame, mode: String = "append"): StreamingQuery =
-    transform(readVecsStream(s, dir))
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(mode)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    MemorySink.run(readVecsStream(s, dir), name, transform, mode)
 }

@@ -15,7 +15,7 @@ object BenchProbe {
       SparkEntry.queries(name)(spark, dir)
         .write.format("noop").mode("overwrite").save()
       // Bench parity: Bench clears the cache before every timed pass,
-      // so operator-internal persists (bandSigs memo, d35's scored
+      // so operator-internal persists (d04's band signatures, d35's scored
       // frame) must NOT carry over from the warm run — without this
       // the probe under-reports any query whose cost hides in a
       // persisted subtree.

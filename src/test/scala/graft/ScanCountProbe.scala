@@ -85,18 +85,24 @@ object ScanCount {
     * execution's plan (Dataset.localCheckpoint runs through withAction,
     * so checkpoint materializations fire it too); the cache-dedupe set
     * spans executions, so a relation persisted in one job and probed in
-    * later ones still counts once. */
+    * later ones still counts once.
+    *
+    * `after` continues from the dedupe set of earlier calls: the cache
+    * is not cleared first, and a cached relation those calls already
+    * counted counts 0 here — what a query reads off storage when it
+    * runs after them in one cache lifetime. */
   def countsDuring(s: org.apache.spark.sql.SparkSession, name: String, sf: String,
-      tables: Seq[String] = Seq("documents", "embeddings")): Map[String, Int] = {
+      tables: Seq[String] = Seq("documents", "embeddings"),
+      after: Option[scala.collection.mutable.Set[Int]] = None): Map[String, Int] = {
     quiesce(s)
-    s.catalog.clearCache()
+    if (after.isEmpty) s.catalog.clearCache()
     // drain the async listener bus BEFORE registering: execution
     // events still queued from PRECEDING queries would otherwise
     // deliver to the new listener and be counted into THIS query (the
     // full-suite-order "+1 documents" flake — the previous query's one
     // scan arriving late)
     org.apache.spark.GraftTestBus.flush(s.sparkContext)
-    val seenCaches = scala.collection.mutable.Set[Int]()
+    val seenCaches = after.getOrElse(scala.collection.mutable.Set[Int]())
     val acc = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
