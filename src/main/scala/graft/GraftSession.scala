@@ -29,9 +29,10 @@ object GraftSession {
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .config("spark.sql.parquet.aggregatePushdown", "true")
-      // ns-timestamp parquet (events table) read as raw longs —
-      // Tables.events also sets this per-session, but sessions built
-      // here are safe even if a caller scans events.parquet directly
+      // ns-timestamp parquet (events table) read as raw longs, which
+      // EventStream.normalize decodes — the events loaders also set
+      // this per-session, but sessions built here are safe even if a
+      // caller scans events.parquet directly
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // scan-split / post-shuffle sizing stays at the Spark defaults
       // (128 MB maxPartitionBytes, 64 MB AQE advisory): measured here,

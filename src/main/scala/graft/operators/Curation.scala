@@ -348,32 +348,16 @@ object Curation extends QueryModule {
     * recomputing — acceptable for a seconds-long loop; a long-lived
     * cluster deployment would set a reliable checkpoint dir and use
     * Dataset.checkpoint on the same cadence. */
-  private[graft] def connectedComponents(s: SparkSession, pairs: DataFrame): DataFrame = {
-    val p2 = pairs.toDF("a_id", "b_id")
-    // canonical undirected edges (lo < hi), deduplicated — materialized
-    // UNDER THE CALLER'S CONF: the edge pipeline includes the
-    // corpus-side candidate generation (LSH joins, ANN probes), which
-    // needs the caller's AQE/partitioning — only the loop below wants
-    // them dialed down
-    val e0 = p2
+  private[graft] def connectedComponents(pairs: DataFrame): DataFrame = {
+    // canonical undirected edges (lo < hi), deduplicated. Every round
+    // runs on the caller's session: AQE coalesces each round's shuffle
+    // to the measured edge minority (KBs–MBs even on a 100 TB corpus),
+    // and nothing here touches a conf.
+    val e0 = pairs.toDF("a_id", "b_id")
       .select(least(col("a_id"), col("b_id")).as("lo"),
         greatest(col("a_id"), col("b_id")).as("hi"))
       .filter(col("lo") =!= col("hi")).distinct()
       .localCheckpoint(false) // materialized by the initial sig() below
-    // loop-local tuning: the contraction rounds run over the clustered
-    // minority (KBs–MBs even when the corpus is 100 TB — the edge set
-    // is the candidate-pair output, not the corpus), so each round's
-    // job is pure scheduling overhead; AQE and 32-partition exchanges
-    // would multiply it. The loop runs on an ISOLATED session
-    // (newSession: own SQLConf, shared SparkContext and cache) so the
-    // overrides cannot leak into queries concurrently planned on the
-    // caller's session. Edge blocks cross sessions through the public
-    // Row-RDD bridge.
-    // size the loop's parallelism to the MEASURED edge minority (one
-    // count over the pinned blocks): a near-dup edge set is KBs–MBs
-    // even on a 100 TB corpus, and 8-partition exchanges over KBs are
-    // pure scheduling overhead — tiered so a genuinely large minority
-    // still fans out (≈16 B/edge: tier 2 ≈ ≤1 GB, ≈128 MB/task)
     // EXACT fixpoint detection from one tiny agg per round: every edge
     // a star pass actually rewrites strictly lowers its partner to the
     // neighborhood minimum, so Σ(lo+hi) over the canonical set is
@@ -385,16 +369,11 @@ object Curation extends QueryModule {
         if (r.isNullAt(1)) java.math.BigDecimal.ZERO else r.getDecimal(1))
     }
     // the initial convergence signature doubles as the edge count —
-    // ONE action materializes e0's checkpoint, sizes the loop tier,
-    // and seeds the fixpoint check (previously three separate jobs:
-    // eager checkpoint, count, initial sig)
+    // ONE action materializes e0's checkpoint and seeds the fixpoint
+    // check
     val prev0 = sig(e0)
     val m0 = prev0._1
-    val loop = loopSession(s,
-      if (m0 <= 200000L) 1 else if (m0 <= 64000000L) 8 else 64)
-    // no second checkpoint: e0's blocks are already pinned; the bridge
-    // frame is a LogicalRDD wrapper (O(1) plan) over them
-    var edges = loop.createDataFrame(e0.rdd, e0.schema)
+    var edges = e0
 
     // LARGE-STAR: every strictly-larger neighbor of u hooks to
     // m = min(N(u) ∪ {u}) — long chains fold toward minima
@@ -431,7 +410,8 @@ object Curation extends QueryModule {
     // analyzer/optimizer swamps the actual µs of data work (stride-2
     // measured 6× slower than per-round checkpoints on the same graph).
     // The checkpoint is lazy: the round's sig() action materializes it,
-    // so each round costs exactly ONE job.
+    // so each round costs exactly ONE action (AQE submits each of its
+    // shuffle stages as a job of its own).
     var prev = prev0
     var converged = false
     var rounds = 0
@@ -458,39 +438,11 @@ object Curation extends QueryModule {
     // node set — no self-loops can arise, so no node ever drops), so
     // labels read straight off the stars: each hi appears exactly
     // once (one root), each root self-labels once via the distinct
-    val labels = edges.select(col("hi").as("id"), col("lo").as("lbl"))
+    edges.select(col("hi").as("id"), col("lo").as("lbl"))
       .unionAll(edges.select(col("lo")).distinct()
         .select(col("lo").as("id"), col("lo").as("lbl")))
       .localCheckpoint(false) // lazy: the caller's first action materializes
-    // bridge the result BACK to the caller's session: a frame left
-    // bound to the loop session would silently plan every downstream
-    // consumer with AQE off and 8 partitions
-    s.createDataFrame(labels.rdd, labels.schema)
   }
-  /** One dialed-down loop session per SparkContext, created lazily and
-    * REUSED — newSession per invocation would register a fresh
-    * ExecutionListenerBus on the shared LiveListenerBus every call and
-    * never release it (Bench alone runs the d24 loop three times). */
-  private val loopSessions =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.SparkContext, Int), SparkSession]()
-  private[graft] def loopSession(s: SparkSession, partitions: Int = 8): SparkSession =
-    loopSessions.computeIfAbsent((s.sparkContext, partitions), { case (sc, p) =>
-      // evict on context stop — without this, a JVM that creates and
-      // stops multiple contexts (test suites) would pin every stopped
-      // context and its session state here forever. Keyed by the
-      // partition tier too (≤3 sessions per context): the tier is
-      // fixed at session creation, so concurrent loops on different
-      // tiers never mutate a shared conf under each other.
-      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          loopSessions.remove((sc, p))
-      })
-      val loop = s.newSession()
-      loop.conf.set("spark.sql.adaptive.enabled", "false")
-      loop.conf.set("spark.sql.shuffle.partitions", p.toString)
-      loop
-    })
 
   /** The d51 mix plan (per-source shares, weights, epochs) — ONE
     * definition shared by d51 (the report) and d69 (the execution):
@@ -644,7 +596,7 @@ object Curation extends QueryModule {
         |SELECT l.id AS doc_id, l.cluster_id, s.cluster_size
         |FROM lbl l JOIN sz s USING (cluster_id) ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val labels =
-        connectedComponents(s, Dedup.lshPairs(s, dir).select("a_id", "b_id"))
+        connectedComponents(Dedup.lshPairs(s, dir).select("a_id", "b_id"))
       labels
         .join(labels.groupBy(col("lbl")).agg(count(lit(1)).as("cluster_size")), Seq("lbl"))
         .select(col("id").as("doc_id"), col("lbl").as("cluster_id"), col("cluster_size"))
@@ -691,7 +643,7 @@ object Curation extends QueryModule {
         |    / CAST((SELECT n_corpus FROM tot) AS DOUBLE) AS doc_frac
         |FROM allrows ORDER BY cluster_size""".stripMargin) { (s, dir) =>
       val labels =
-        connectedComponents(s, Dedup.lshPairs(s, dir).select("a_id", "b_id"))
+        connectedComponents(Dedup.lshPairs(s, dir).select("a_id", "b_id"))
       val hist = labels.groupBy(col("lbl"))
         .agg(count(lit(1)).as("cluster_size"))
         .groupBy("cluster_size")
@@ -1351,7 +1303,7 @@ object Curation extends QueryModule {
          |FROM k ORDER BY doc_id""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val labels =
-        connectedComponents(s, Dedup.lshPairs(s, dir).select("a_id", "b_id"))
+        connectedComponents(Dedup.lshPairs(s, dir).select("a_id", "b_id"))
       val scored = Corpus.docs(s, dir)
         .withColumn("n_tokens", TextAnalysis.nonEmptyCount(col("ws")))
         .withColumn("n_stop", TextAnalysis.wordHits(col("ws"), TextAnalysis.enStop))

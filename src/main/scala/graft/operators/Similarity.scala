@@ -357,7 +357,7 @@ object Similarity extends QueryModule {
     * labels where they need totality). */
   private[graft] def annIndexCommunities(s: SparkSession, dir: String): String =
     graft.sources.Scratch.materialize(s, "ann_index_communities", dir) {
-      mutualLabels(s, graft.sources.IO.readParquet(s, annKnnEdges(s, dir)))
+      mutualLabels(graft.sources.IO.readParquet(s, annKnnEdges(s, dir)))
         .toDF("vec_id", "cluster_id")
     }
 
@@ -942,7 +942,7 @@ object Similarity extends QueryModule {
     * components via d24's shared star-contraction loop. Nodes outside
     * any mutual edge are absent — callers that need singletons
     * coalesce the label to the node's own id. */
-  private def mutualLabels(s: SparkSession, edges: DataFrame): DataFrame = {
+  private def mutualLabels(edges: DataFrame): DataFrame = {
     // Shape note (r19, measured): a canonical-pair count-2 aggregate
     // computes the same mutual set with ONE exchange and no broadcast,
     // but paired probes read it 0.5 s SLOWER here — the persisted edge
@@ -953,7 +953,7 @@ object Similarity extends QueryModule {
       .join(edges.select(col("b_id").as("a_id"), col("a_id").as("b_id")),
         Seq("a_id", "b_id"), "left_semi")
       .filter(col("a_id") < col("b_id"))
-    Curation.connectedComponents(s, mutual)
+    Curation.connectedComponents(mutual)
   }
 
   /** DuckDB CTE chain for the IVF-family oracles, parametrized by the
@@ -2077,7 +2077,7 @@ object Similarity extends QueryModule {
       """, sz AS (SELECT cluster_id, count(1) AS cluster_size FROM lbl GROUP BY 1)
         |SELECT l.id AS vec_id, l.cluster_id, s.cluster_size
         |FROM lbl l JOIN sz s USING (cluster_id) ORDER BY vec_id""".stripMargin) { (s, dir) =>
-      val labels = mutualLabels(s, knnGraph(s, dir))
+      val labels = mutualLabels(knnGraph(s, dir))
       labels
         .join(labels.groupBy("lbl").agg(count(lit(1)).as("cluster_size")), Seq("lbl"))
         .select(col("id").as("vec_id"), col("lbl").as("cluster_id"),

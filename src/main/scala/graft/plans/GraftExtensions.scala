@@ -198,7 +198,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new KmvValuesAgg(c(0), k)
       }
     ))
-    ext.injectOptimizerRule(_ => SelfDistanceElimination)
     ext.injectPlannerStrategy(_ => TopKPerGroupStrategy)
   }
 }

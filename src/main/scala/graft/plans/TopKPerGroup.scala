@@ -23,16 +23,21 @@ import org.apache.spark.sql.types.IntegerType
   *
   * Why a custom physical operator instead of the stock
   * `row_number().over(partitionBy(group).orderBy(order)) <= k` plan:
-  * WindowExec is SORT-based with NO partial aggregation — every input
-  * row is shuffled, then every partition fully sorted, then all rows
-  * ranked and most discarded. This operator is the aggregate-shaped
-  * alternative: a map-side PARTIAL pass keeps at most k rows per group
-  * per input partition in bounded heaps (O(log k) per row, no sort of
-  * the discarded majority), so the exchange carries ≤ k·|groups| rows
-  * instead of ALL rows; the FINAL pass re-prunes after the shuffle and
-  * ranks the k survivors. At 100 TB with bounded k the shuffle shrinks
-  * by |rows per group|/k — for d19 (≥3-word docs, top 3 of ~40 terms)
-  * that is >10× less exchange traffic.
+  * Spark 4.1 plans that window as a SORT-based `WindowGroupLimit
+  * Partial → Exchange → WindowGroupLimit Final`, so the exchange is
+  * already pruned to ≤ k rows per group per partition — but only after
+  * each input partition is fully sorted. This operator's map-side
+  * PARTIAL pass keeps at most k rows per group in bounded heaps
+  * (O(log k) per row, no sort of the discarded majority); the FINAL
+  * pass re-prunes after the shuffle and ranks the k survivors.
+  *
+  * Kept on a measured win: with the `TopK.perGroup` body swapped for
+  * the window form (oracle still 239/239), sf0.1 single-query probes
+  * (`BenchProbe`, 2 alternating rounds, 4-core VM) slowed every
+  * pair-stream family — d80 0.91/0.96 → 1.52/1.76 s, d06 1.71/1.70 →
+  * 3.26/3.61 s, d74 1.32/1.26 → 2.83/3.43 s, d82 2.87/2.96 →
+  * 15.2/16.4 s — while the text families (d19/d38/d84) stayed within
+  * noise.
   *
   * Semantics note: ranks are deterministic iff `order` is a total
   * order within each group (ties broken by a unique trailing key, as

@@ -9,40 +9,31 @@ import org.apache.spark.sql.SparkSession
   *
   * The ANN operators size their hash/cell spaces from the input row
   * count (SURVEY §5) — the same class of statistic AQE plans from. The
-  * count comes from parquet FOOTER metadata (exact, no Spark job) and
-  * is cached per (path, root mtime) per JVM, so repeated query
-  * constructions (d07 + d15 + d17 in one run) never re-read the
-  * footers — one cheap FS stat per lookup — while a dataset rewritten
-  * in-process (Overwrite recreates the directory, bumping its mtime)
-  * invalidates the stale count instead of silently mis-sizing the
-  * LSH bit / IVF cell spaces.
+  * count comes from parquet FOOTER metadata (exact, no Spark job), read
+  * on every call: a dataset rewritten in-process can never leave a
+  * stale count behind to mis-size the LSH bit / IVF cell spaces.
   */
 object Stats {
-
-  private val rowCounts = scala.collection.concurrent.TrieMap.empty[(String, Long), Long]
 
   /** Exact row count of a parquet file or directory of part files. */
   def parquetRowCount(s: SparkSession, path: String): Long = {
     val conf = s.sparkContext.hadoopConfiguration
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
-    val rootStatus = fs.getFileStatus(root)
-    rowCounts.getOrElseUpdate((path, rootStatus.getModificationTime), {
-      val files: Seq[Path] =
-        if (rootStatus.isFile) Seq(root)
-        else {
-          val it = fs.listFiles(root, true)
-          val buf = scala.collection.mutable.ArrayBuffer.empty[Path]
-          while (it.hasNext) {
-            val f = it.next()
-            if (f.isFile && f.getPath.getName.endsWith(".parquet")) buf += f.getPath
-          }
-          buf.toSeq
+    val files: Seq[Path] =
+      if (fs.getFileStatus(root).isFile) Seq(root)
+      else {
+        val it = fs.listFiles(root, true)
+        val buf = scala.collection.mutable.ArrayBuffer.empty[Path]
+        while (it.hasNext) {
+          val f = it.next()
+          if (f.isFile && f.getPath.getName.endsWith(".parquet")) buf += f.getPath
         }
-      files.iterator.map { f =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-        try reader.getRecordCount finally reader.close()
-      }.sum
-    })
+        buf.toSeq
+      }
+    files.iterator.map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      try reader.getRecordCount finally reader.close()
+    }.sum
   }
 }

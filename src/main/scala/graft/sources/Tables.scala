@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, expr}
 
 /** Loaders for the shared testdata tables.
   *
@@ -18,29 +17,13 @@ object Tables {
   def part(s: SparkSession, dir: String): DataFrame      = load(s, dir, "part")
   def orders(s: SparkSession, dir: String): DataFrame    = load(s, dir, "orders")
   def lineitem(s: SparkSession, dir: String): DataFrame  = load(s, dir, "lineitem")
-  /** `events.ts` has shipped in two physical layouts: nanosecond-precision
-    * parquet (which Spark's vectorized reader rejects outright,
-    * [PARQUET_TYPE_ILLEGAL] — read as raw nanos-since-epoch via the legacy
-    * nanosAsLong conf and truncated to µs, matching DuckDB's own µs
-    * truncation of ns parquet) and plain microsecond timestamps (read
-    * directly). Dispatch on the decoded type of `ts`: with nanosAsLong set,
-    * a ns file surfaces as LongType and a µs file as TimestampType, so the
-    * branch is unambiguous. Any new code path reading events.parquet must
-    * go through this loader. */
+  /** The events table with `ts` as a µs ltz TIMESTAMP whatever layout
+    * the file shipped in ([[graft.streaming.EventStream.normalize]]
+    * decides it). Any new code path reading events.parquet must go
+    * through this loader. */
   def events(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = load(s, dir, "events")
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        // µs file without UTC adjustment decodes as NTZ; downstream
-        // operators (unix_micros, watermarks) need ltz TIMESTAMP. Under
-        // the UTC session timezone this cast is instant-preserving and
-        // matches DuckDB's naive-timestamp reading of the same file.
-        raw.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => raw
-    }
+    graft.streaming.EventStream.normalize(load(s, dir, "events"))
   }
   def documents(s: SparkSession, dir: String): DataFrame = load(s, dir, "documents")
   def embeddings(s: SparkSession, dir: String): DataFrame = load(s, dir, "embeddings")

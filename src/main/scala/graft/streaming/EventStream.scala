@@ -22,7 +22,7 @@ import graft.functions._
 object EventStream {
 
   /** Parquet schema of the LEGACY events layout: ns-timestamps read as
-    * raw longs (see [[graft.sources.Tables.events]]). */
+    * raw longs (see [[normalize]]). */
   val rawSchema: StructType = StructType(Seq(
     StructField("event_id", LongType),
     StructField("ts", LongType),
@@ -37,9 +37,15 @@ object EventStream {
     rawSchema.fields.map(f =>
       if (f.name == "ts") f.copy(dataType = TimestampNTZType) else f))
 
-  /** Normalize a raw events frame (batch or stream): legacy ns-long
-    * `ts` → µs timestamp; NTZ `ts` → ltz (instant-preserving under the
-    * UTC session timezone); already-ltz `ts` passes through. */
+  /** Normalize a raw events frame (batch or stream) — the one place
+    * the `events.ts` layout is decided. The table has shipped as
+    * nanosecond parquet (which Spark's vectorized reader rejects,
+    * [PARQUET_TYPE_ILLEGAL]; read through the legacy nanosAsLong conf it
+    * decodes as LongType and is truncated to µs, matching DuckDB's own
+    * µs truncation of ns parquet) and as plain µs timestamps without UTC
+    * adjustment (decode as NTZ; cast to ltz, which is instant-preserving
+    * under the UTC session timezone and matches DuckDB's naive reading
+    * of the same file). Already-ltz `ts` passes through. */
   def normalize(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       case LongType         => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))

@@ -61,7 +61,7 @@ class CurationSpec extends SparkSpec {
     import spark.implicits._
     def cc(pairs: Seq[(Long, Long)]): Map[Long, Long] =
       graft.operators.Curation
-        .connectedComponents(spark, pairs.toDF("a_id", "b_id"))
+        .connectedComponents(pairs.toDF("a_id", "b_id"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // a 40-node chain: worst-case diameter, forces multiple
     // propagate+jump rounds before the fixpoint
@@ -102,34 +102,21 @@ class CurationSpec extends SparkSpec {
       "long-path labels wrong — contraction broke")
   }
 
-  test("d24 loop tuning never touches the caller's session conf (isolated session)") {
+  test("d24 loop runs on the caller's session and never touches its conf") {
     import spark.implicits._
     val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
     val partsBefore = spark.conf.get("spark.sql.shuffle.partitions")
     val labels = graft.operators.Curation.connectedComponents(
-      spark, Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a_id", "b_id"))
+      Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a_id", "b_id"))
     val m = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(m == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
     // the caller's conf was never mutated — a query planned on `spark`
     // at ANY point during the loop keeps AQE (and its skew-splitting)
     assert(spark.conf.get("spark.sql.adaptive.enabled") == aqeBefore)
     assert(spark.conf.get("spark.sql.shuffle.partitions") == partsBefore)
-    // the returned frame is bridged BACK to the caller's session, so
-    // downstream consumers plan with the caller's AQE — the
-    // dialed-down tuning lives only on the cached loop session
+    // the returned frame stays on the caller's session, so downstream
+    // consumers plan with the caller's AQE
     assert(labels.sparkSession eq spark)
-    val loop = graft.operators.Curation.loopSession(spark)
-    assert(loop ne spark)
-    assert(loop.conf.get("spark.sql.adaptive.enabled") == "false")
-    assert(loop.conf.get("spark.sql.shuffle.partitions") == "8")
-    // and the loop session is REUSED, not re-created per invocation
-    assert(graft.operators.Curation.loopSession(spark) eq loop)
-    // partition tiers are SEPARATE cached sessions (a tier is fixed at
-    // creation — concurrent loops on different tiers never mutate a
-    // shared conf under each other)
-    val tiny = graft.operators.Curation.loopSession(spark, 1)
-    assert((tiny ne loop) && tiny.conf.get("spark.sql.shuffle.partitions") == "1")
-    assert(graft.operators.Curation.loopSession(spark, 1) eq tiny)
   }
 
   test("d24 cluster sizes are consistent with the labeling") {

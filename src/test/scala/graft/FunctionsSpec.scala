@@ -95,15 +95,6 @@ class FunctionsSpec extends SparkSpec {
     df.collect().foreach(r => assert(r.getLong(0) == r.getLong(1)))
   }
 
-  test("x05: injected optimizer rule folds self-distance to a constant") {
-    import spark.implicits._
-    val df = Seq((1L, Array(1L, 2L, 3L))).toDF("id", "q")
-      .select(graft.functions.SqDistLong(col("q"), col("q")).as("d"))
-    val opt = df.queryExecution.optimizedPlan.toString
-    assert(!opt.contains("graft_sqdist"), s"self-distance not eliminated:\n$opt")
-    assert(df.collect().head.getLong(0) == 0L)
-  }
-
   test("CharCounts kernel equals the two-regex formulation") {
     // includes multi-byte code points (©, é) — counted once, as punct
     val df = spark.range(50)

@@ -84,8 +84,9 @@ class PlanAuditSpec extends SparkSpec {
     // A count BELOW the pin is progress: tighten the pin.
     // d24's corpus work happens inside localCheckpoint materialization,
     // opaque to the final plan — it is counted with the listener-based
-    // [[ScanCount.countsDuring]] (every execution the query triggers,
-    // caller AND loop session), which sees the real materialization:
+    // [[ScanCount.countsDuring]] (every execution the query triggers on
+    // the caller's session, loop rounds included), which sees the real
+    // materialization:
     // ONE documents scan for the whole iterative clustering.
     val expected: Map[String, (Int, Int)] = Map( // name -> (documents, embeddings)
       "d01_dedup_exact" -> (1, 0), "d02_dedup_ngram" -> (1, 0),

@@ -81,7 +81,7 @@ object ScanCount {
     * iterative operators (d24), whose corpus work happens inside
     * localCheckpoint materializations that the returned frame's plan
     * no longer references. A QueryExecutionListener on the caller's
-    * session AND on d24's isolated loop session walks each successful
+    * session (the CC loop runs on it too) walks each successful
     * execution's plan (Dataset.localCheckpoint runs through withAction,
     * so checkpoint materializations fire it too); the cache-dedupe set
     * spans executions, so a relation persisted in one job and probed in
@@ -109,12 +109,11 @@ object ScanCount {
         acc.synchronized { walk(qe.executedPlan, tables, seenCaches, acc) }
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    val sessions = Seq(s, graft.operators.Curation.loopSession(s))
-    sessions.foreach(_.listenerManager.register(listener))
+    s.listenerManager.register(listener)
     try {
       SparkEntry.queries(name)(s, sf).collect()
       org.apache.spark.GraftTestBus.flush(s.sparkContext)
-    } finally sessions.foreach(_.listenerManager.unregister(listener))
+    } finally s.listenerManager.unregister(listener)
     acc.synchronized(acc.toMap)
   }
 }

@@ -6,9 +6,11 @@
 Reads `<run_dir>/spans.jsonl`, as written by
 `python3 graftbench/run.py --workload <w> --seed <n> --trace 1` (run
 directories are `.bench_build/runs/<workload>-s<seed>-t1-<pid>/`), and
-prints, for each traced pass and each op in it, the jobs, stages, tasks,
-shuffle read and write bytes and executor CPU ms the tracer attributed
-to the op, then the pass totals and the pass's `cached_bytes_peak`.
+prints, for each traced pass and each op in it, the op's wall ms (span
+end minus start), the ms in which at least one of its tasks ran
+(`busy_ms`), and the jobs, stages, tasks, shuffle read and write bytes
+and executor CPU ms the tracer attributed to the op, then the pass
+totals and the pass's `cached_bytes_peak`.
 
 Given two run directories, prints them side by side: each cell is
 `first -> second (delta)`, or one value when both runs agree. Ops are
@@ -18,7 +20,8 @@ import json
 import os
 import sys
 
-COLS = (("jobs", "jobs"), ("stages", "stages"), ("tasks", "tasks"),
+COLS = (("wall_ms", "wall_ms"), ("busy_ms", "busy_ms"),
+        ("jobs", "jobs"), ("stages", "stages"), ("tasks", "tasks"),
         ("shuffle_read_bytes", "shuf_read"), ("shuffle_write_bytes", "shuf_write"),
         ("cpu_ms", "cpu_ms"))
 
@@ -45,7 +48,8 @@ def load(run_dir):
     for s in spans:
         p = pass_of(s) if s["kind"] == "op" else None
         if p is not None:
-            passes[p["trace"]]["ops"][s["name"]] = {k: s["attrs"].get(k, 0.0) for k, _ in COLS}
+            attrs = dict(s["attrs"], wall_ms=s["end_ms"] - s["start_ms"])
+            passes[p["trace"]]["ops"][s["name"]] = {k: attrs.get(k, 0.0) for k, _ in COLS}
     return passes
 
 
