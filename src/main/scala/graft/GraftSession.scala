@@ -30,9 +30,9 @@ object GraftSession {
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .config("spark.sql.parquet.aggregatePushdown", "true")
       // ns-timestamp parquet (events table) read as raw longs, which
-      // EventStream.normalize decodes — the events loaders also set
-      // this per-session, but sessions built here are safe even if a
-      // caller scans events.parquet directly
+      // EventStream.normalize decodes. Set here once: the events
+      // loaders read it from the caller's session and never set it,
+      // so no load mutates a session's conf under concurrent queries
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // scan-split / post-shuffle sizing stays at the Spark defaults
       // (128 MB maxPartitionBytes, 64 MB AQE advisory): measured here,

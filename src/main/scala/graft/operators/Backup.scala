@@ -174,7 +174,7 @@ object Backup extends QueryModule {
     // the multi-countDistinct Expand runs over the reduced set (days ×
     // nodes × entities), not the full manifest — at 100 TB the Expand
     // over raw entries would triple the dominant shuffle.
-    QuerySpec("b01_manifest_list", Seq(col("snapshot_day").desc),
+    QuerySpec("b01_manifest_list", Seq(col("snapshot_day").desc), Pins(Scans(events = 1), 4),
       cte +
       """SELECT snapshot_day, COUNT(1) AS n_files,
         |  CAST(SUM(size) AS DOUBLE) AS total_size,
@@ -195,7 +195,7 @@ object Backup extends QueryModule {
 
     // esop `ListOperation.filterLastN` (ListOperation.java:181-198):
     // last 3 backups per node via a per-node window (bounded partitions).
-    QuerySpec("b02_list_lastn", by("node_id", "rn"),
+    QuerySpec("b02_list_lastn", by("node_id", "rn"), Pins(Scans(events = 1), 2),
       cte +
       """SELECT node_id, snapshot_day, rn FROM (
         |  SELECT node_id, snapshot_day,
@@ -210,7 +210,7 @@ object Backup extends QueryModule {
     },
 
     // esop `ListOperation.filterFromTimestamp` (ListOperation.java:167-179).
-    QuerySpec("b03_list_from_ts", Seq(col("snapshot_day").desc),
+    QuerySpec("b03_list_from_ts", Seq(col("snapshot_day").desc), Pins(Scans(events = 1), 2),
       cte +
       """SELECT snapshot_day, COUNT(1) AS n_files,
         |  CAST(SUM(size) AS DOUBLE) AS total_size
@@ -224,7 +224,8 @@ object Backup extends QueryModule {
 
     // esop incremental backup (Backuper FRESH vs ALREADY_PRESENT): keys
     // in snapshot S never uploaded before S → left-anti join on object_key.
-    QuerySpec("b04_snapshot_diff", by("object_key"),
+    // Scans: the snapshot pair: one pass per side of the diff
+    QuerySpec("b04_snapshot_diff", by("object_key"), Pins(Scans(events = 2), 4),
       cte +
       """SELECT object_key, keyspace, table_name, node_id, CAST(size AS DOUBLE) AS size
         |FROM manifest m
@@ -246,7 +247,7 @@ object Backup extends QueryModule {
     // exactly one manifest. Ref-counts via a per-key window over the
     // SAME manifest pass — a groupBy+self-join would compute the
     // manifest dedupe (the biggest shuffle here) twice at 100 TB.
-    QuerySpec("b05_reclaimable", by("snapshot_day"),
+    QuerySpec("b05_reclaimable", by("snapshot_day"), Pins(Scans(events = 1), 3),
       cte +
       """, refs AS (SELECT object_key, COUNT(1) AS n_refs FROM manifest GROUP BY object_key)
         |SELECT m.snapshot_day,
@@ -272,7 +273,8 @@ object Backup extends QueryModule {
     // broadcast into the join (never a global window over the
     // manifest), and the rollup groups the bounded (ks, tab, sst) key
     // space — at 100 TB this is one manifest pass + one bounded agg.
-    QuerySpec("b40_replica_spread", by("keyspace", "table_name", "sst"),
+    // Scans: latest-day agg + the filtered manifest slice (b13's two-role shape)
+    QuerySpec("b40_replica_spread", by("keyspace", "table_name", "sst"), Pins(Scans(events = 2), 6),
       cte +
       """SELECT keyspace, table_name,
         |  CAST(regexp_extract(object_key, 'sst_([0-9]+)$', 1) AS BIGINT) AS sst,
@@ -304,7 +306,9 @@ object Backup extends QueryModule {
     // manifest pass), per-object stats compute ONCE, and the 4-point
     // sweep is a bounded explode over the per-object frame — the
     // manifest is never re-scanned per policy.
-    QuerySpec("b41_retention_curve", by("keep_last"),
+    // Scans: manifest pass + the bounded snapshots-rank side; the 4-policy sweep explodes the
+    // per-object frame, never the ledger
+    QuerySpec("b41_retention_curve", by("keep_last"), Pins(Scans(events = 2), 6),
       cte +
       """, ranked AS (
         |  SELECT node_id, snapshot_day,
@@ -351,7 +355,8 @@ object Backup extends QueryModule {
     // deleted). One manifest pass folds to per-object stats (max day
     // + arg-max current size), the head day is a broadcast 1-row max,
     // and the rollup groups (keyspace, tier) — bounded output.
-    QuerySpec("b42_storage_tiering", by("keyspace", "tier"),
+    // Scans: per-object fold + the broadcast head-day agg
+    QuerySpec("b42_storage_tiering", by("keyspace", "tier"), Pins(Scans(events = 2), 6),
       cte +
       """, obj AS (
         |  SELECT object_key, keyspace, max(snapshot_day) AS last_day,
@@ -391,6 +396,8 @@ object Backup extends QueryModule {
     // schema agreement); this gates EXISTENCE, the cheaper first
     // filter a restore planner applies.
     QuerySpec("b43_snapshot_completeness", by("node_id", "snapshot_day"),
+      // Scans: one manifest pass into the bounded (node, day) aggregate
+      Pins(Scans(events = 1), 2),
       cte +
       """SELECT node_id, snapshot_day, count(1) AS n_files,
         |  count(CASE WHEN ftype = 'MANIFEST_FILE' THEN 1 END) AS n_manifest,
@@ -419,7 +426,9 @@ object Backup extends QueryModule {
     // the bounded (day × node) snapshot table (one 2-column ledger
     // distinct, no second scan). b34 composes the same state
     // per-node; this is the fleet-wide dashboard form.
-    QuerySpec("b44_fleet_liveness", by("snapshot_day", "node_id"),
+    // Scans: one 2-column snapshots distinct; every liveness count is a window over the bounded
+    // (day × node) aggregate
+    QuerySpec("b44_fleet_liveness", by("snapshot_day", "node_id"), Pins(Scans(events = 1), 2),
       cte +
       s""", st AS (
          |  SELECT snapshot_day, node_id, $gossipStateDuck AS state
@@ -472,7 +481,9 @@ object Backup extends QueryModule {
     // into a per-node aggregate; the fleet head rides a single-row
     // broadcast fold (the assignTop2 convention), never a corpus
     // window.
-    QuerySpec("b45_backup_cadence", by("node_id"),
+    // Scans: per-node cadence agg + the single-row fleet-head fold (the head derives from the same
+    // snapshots distinct — 2nd pass)
+    QuerySpec("b45_backup_cadence", by("node_id"), Pins(Scans(events = 2), 5),
       cte +
       """, pn AS (
         |  SELECT node_id, min(snapshot_day) AS first_day,
@@ -532,7 +543,9 @@ object Backup extends QueryModule {
     // manifest pass (conditional aggs carry the failed minority —
     // no second scan, no join; pin events=1); bounded (node × day)
     // output; exact integer/decimal arithmetic throughout.
-    QuerySpec("b46_retry_budget", by("node_id", "snapshot_day"),
+    // Scans: ONE manifest pass — the failed minority rides conditional aggs inside the same (node,
+    // day) groupBy, never a second scan
+    QuerySpec("b46_retry_budget", by("node_id", "snapshot_day"), Pins(Scans(events = 1), 2),
       cte +
       """, agg AS (
         |  SELECT node_id, snapshot_day, count(1) AS n_files,
@@ -581,7 +594,7 @@ object Backup extends QueryModule {
     },
 
     // esop `RemoveBackupOperation` olderThan (RemoveBackupOperation.java:184-186).
-    QuerySpec("b06_retention", by("snapshot_day"),
+    QuerySpec("b06_retention", by("snapshot_day"), Pins(Scans(events = 1), 2),
       cte +
       """SELECT snapshot_day, COUNT(1) AS n_files,
         |  CAST(SUM(size) AS DOUBLE) AS total_size
@@ -595,7 +608,7 @@ object Backup extends QueryModule {
 
     // esop PIT commit-log replay: final state = last write per (node, key)
     // with ts ≤ T (impl/restore/CommitLogRestorationStrategy).
-    QuerySpec("b07_pit_state", by("node_id", "k"),
+    QuerySpec("b07_pit_state", by("node_id", "k"), Pins(Scans(events = 1), 1),
       cte +
       """SELECT node_id, k, event_id, CAST(size AS DOUBLE) AS size FROM (
         |  SELECT node_id, regexp_extract(props, '([0-9]+)', 1) AS k, event_id, size,
@@ -616,7 +629,7 @@ object Backup extends QueryModule {
 
     // esop hash verification (impl/hash/HashServiceImpl.java): entries
     // whose download hash disagrees with the manifest hash.
-    QuerySpec("b08_hash_verify", by("snapshot_day", "object_key"),
+    QuerySpec("b08_hash_verify", by("snapshot_day", "object_key"), Pins(Scans(events = 1), 1),
       cte +
       """SELECT snapshot_day, object_key, node_id, upload_hash, download_hash
         |FROM manifest WHERE upload_hash <> download_hash
@@ -628,7 +641,7 @@ object Backup extends QueryModule {
 
     // esop S3 multipart planning (impl/backup/Backuper.java): parts =
     // ceil(size/chunk), rolled up per node.
-    QuerySpec("b09_chunking", by("node_id"),
+    QuerySpec("b09_chunking", by("node_id"), Pins(Scans(events = 1), 2),
       cte +
       """SELECT node_id,
         |  CAST(SUM(GREATEST(1, CAST(CEIL(CAST(size AS DOUBLE) / 10.0) AS BIGINT))) AS BIGINT) AS total_parts,
@@ -647,7 +660,7 @@ object Backup extends QueryModule {
 
     // esop topology (topology/CassandraSimpleTopology.java): cluster→DC→node
     // counts; DC derived deterministically from the node id.
-    QuerySpec("b10_topology", by("dc"),
+    QuerySpec("b10_topology", by("dc"), Pins(Scans(events = 1), 2),
       cte +
       """SELECT concat('dc', CAST(node_id % 3 AS VARCHAR)) AS dc,
         |  COUNT(DISTINCT node_id) AS n_nodes,
@@ -666,7 +679,7 @@ object Backup extends QueryModule {
     // esop restore-under-different-name (impl/RenamedEntities.java):
     // entity-level rename — the keyspace path segment is rewritten to
     // its restore target, exactly what `--rename ks=ks_restored` does.
-    QuerySpec("b11_table_rename", by("object_key"),
+    QuerySpec("b11_table_rename", by("object_key"), Pins(Scans(events = 1), 1),
       cte +
       """SELECT object_key, keyspace, table_name,
         |  replace(object_key, concat('/', keyspace, '/'), concat('/', keyspace, '_restored/')) AS renamed_key,
@@ -691,7 +704,7 @@ object Backup extends QueryModule {
     // ref-count window as b05, ONE manifest pass + a broadcast scalar —
     // the scalar comes off the raw ledger, whose day set is identical,
     // so the manifest dedupe window never runs twice).
-    QuerySpec("b13_remove_oldest", by("object_key"),
+    QuerySpec("b13_remove_oldest", by("object_key"), Pins(Scans(events = 2), 4),
       cte +
       """SELECT object_key, node_id, CAST(size AS DOUBLE) AS size,
         |  CASE WHEN n_refs = 1 THEN 1 ELSE 0 END AS deletable
@@ -714,7 +727,7 @@ object Backup extends QueryModule {
     // `--entities ks.tab,...` list — per-entity per-snapshot report.
     // The filter is a pushed-down IN over the derived entity column;
     // at 100 TB it prunes at the scan before any shuffle.
-    QuerySpec("b14_entities_filter", by("entity", "snapshot_day"),
+    QuerySpec("b14_entities_filter", by("entity", "snapshot_day"), Pins(Scans(events = 1), 2),
       cte +
       """SELECT concat(keyspace, '.', table_name) AS entity, snapshot_day,
         |  COUNT(1) AS n_files, CAST(SUM(size) AS DOUBLE) AS total_size
@@ -739,7 +752,7 @@ object Backup extends QueryModule {
     // scan is columnar on one key column and the anti-join shuffles
     // only (object_key); phantom remote objects (never uploaded by us)
     // are simply never matched.
-    QuerySpec("b18_remote_inventory", by("object_key"),
+    QuerySpec("b18_remote_inventory", by("object_key"), Pins(Scans(events = 1), 2),
       cte +
       """, inv AS (
         |  SELECT DISTINCT object_key FROM ledger
@@ -778,7 +791,7 @@ object Backup extends QueryModule {
     // set-equality is a sorted-list md5 comparison — one per-row
     // projection over snapshots, no shuffle. Node ids divisible by 5
     // have "moved" (one token replaced) to exercise the mismatch path.
-    QuerySpec("b15_token_check", by("node_id", "snapshot_day"),
+    QuerySpec("b15_token_check", by("node_id", "snapshot_day"), Pins(Scans(events = 1), 1),
       cte +
       s"""SELECT node_id, snapshot_day,
          |  ${tokenHashDuck(target = false)} AS backup_hash,
@@ -809,7 +822,7 @@ object Backup extends QueryModule {
     // sensitive, pinning the distinct; phase 2 folds the tiny
     // per-version rows. Nodes are unique within (day, sv), so
     // count(1) sums to the distinct node count.
-    QuerySpec("b16_schema_versions", by("snapshot_day"),
+    QuerySpec("b16_schema_versions", by("snapshot_day"), Pins(Scans(events = 1), 3),
       cte +
       s""", sv AS (
         |  SELECT snapshot_day, node_id, $schemaVerDuck AS sv
@@ -837,7 +850,7 @@ object Backup extends QueryModule {
     // .java:37-181, getNodesFromDcAndRack): cluster→DC→rack→endpoint
     // with per-level counts — one GROUPING SETS pass (a single scan +
     // Expand, not three scans) over the ledger.
-    QuerySpec("b17_topology_full", by("dc", "rack", "endpoint"),
+    QuerySpec("b17_topology_full", by("dc", "rack", "endpoint"), Pins(Scans(events = 1), 2),
       cte +
       """SELECT dc, COALESCE(rack, 'ALL') AS rack, COALESCE(endpoint, 'ALL') AS endpoint,
         |  COUNT(DISTINCT node_id) AS n_nodes, COUNT(1) AS n_entries,
@@ -874,7 +887,7 @@ object Backup extends QueryModule {
     // ledger columns — this is the path-parsing a real manifest needs),
     // then per-entity generation stats. A parse_ok counter cross-checks
     // the parsed node against the ledger's node_id.
-    QuerySpec("b19_sstable_gen", by("keyspace", "table_name"),
+    QuerySpec("b19_sstable_gen", by("keyspace", "table_name"), Pins(Scans(events = 1), 3),
       cte +
       """, parsed AS (
         |  SELECT keyspace, table_name, node_id,
@@ -908,7 +921,7 @@ object Backup extends QueryModule {
     // (ceil(size/rate)) and each node's running finish offset (nodes
     // upload their own files sequentially, in deterministic key order).
     // One bounded per-node window over one manifest pass.
-    QuerySpec("b21_bandwidth_plan", by("node_id", "object_key"),
+    QuerySpec("b21_bandwidth_plan", by("node_id", "object_key"), Pins(Scans(events = 1), 2),
       cte +
       """SELECT node_id, object_key, CAST(size AS DOUBLE) AS size,
         |  CAST(CEIL(CAST(size AS DOUBLE) / 25.0) AS BIGINT) AS est_sec,
@@ -943,7 +956,9 @@ object Backup extends QueryModule {
     // derivation feeds resolution, slice and dealing; tokens+schema
     // come from ONE bounded snapshots pass; every join after the
     // slice is against node- or day-sized aggregates (broadcast).
-    QuerySpec("b34_restore_plan", by("node_id"),
+    // Scans: resolution agg + the resolved slice (dealing and hash gate fused into ONE pass over
+    // it) + one bounded snapshots pass carrying all three gate windows
+    QuerySpec("b34_restore_plan", by("node_id"), Pins(Scans(events = 3), 8),
       cte +
       s""", resolved AS (
          |  SELECT node_id, max(snapshot_day) AS snapshot_day
@@ -1017,7 +1032,8 @@ object Backup extends QueryModule {
     // time — the measure-don't-guess gate on the dealing). Ranking
     // windows partition per node; the makespan/balance windows run
     // over the bounded (node × 4) aggregate.
-    QuerySpec("b33_restore_workers", by("node_id", "worker"),
+    // Scans: latest-day agg + the join target (b25's two-role shape)
+    QuerySpec("b33_restore_workers", by("node_id", "worker"), Pins(Scans(events = 2), 5),
       cte +
       """, latest AS (
         |  SELECT node_id, max(snapshot_day) AS snapshot_day
@@ -1079,6 +1095,7 @@ object Backup extends QueryModule {
     // compaction scopes, so groups parallelize across the fleet and
     // no global sort exists at any scale.
     QuerySpec("b32_compaction_plan", by("node_id", "keyspace", "table_name", "bin"),
+      Pins(Scans(events = 1), 2),
       cte +
       """, files AS (
         |  SELECT node_id, keyspace, table_name, object_key,
@@ -1118,7 +1135,7 @@ object Backup extends QueryModule {
     // (ClusterSchemaVersions). One row per snapshot with the violation
     // counts and a ready flag; three single-pass aggs joined on the
     // tiny snapshot_day key.
-    QuerySpec("b20_restore_readiness", by("snapshot_day"),
+    QuerySpec("b20_restore_readiness", by("snapshot_day"), Pins(Scans(events = 2), 6),
       cte +
       s""", h AS (
          |  SELECT snapshot_day,
@@ -1171,7 +1188,9 @@ object Backup extends QueryModule {
     // from the ingested documents. The oracle computes the identical
     // report straight from the ledger — the JSON round-trip must be
     // lossless.
-    QuerySpec("b22_manifest_ingest", by("snapshot_day"),
+    // Scans: empty: the events read happens inside the eager Scratch JSON-fixture write at
+    // construction time; the measured plan reads the fixture back
+    QuerySpec("b22_manifest_ingest", by("snapshot_day"), Pins(Scans(), 2),
       cte +
       s"""SELECT snapshot_day,
          |  COUNT(DISTINCT node_id) AS n_manifests,
@@ -1239,7 +1258,7 @@ object Backup extends QueryModule {
     // absent from that cut's state). ONE pass over the ledger:
     // conditional max(struct) aggregates carry both cuts' last writes
     // through a single shuffle — no self-join of two PIT states.
-    QuerySpec("b23_pit_diff", by("node_id", "k"),
+    QuerySpec("b23_pit_diff", by("node_id", "k"), Pins(Scans(events = 1), 1),
       cte +
       """, ev AS (
         |  SELECT node_id, COALESCE(regexp_extract(props, '([0-9]+)', 1), '') AS k, ts, event_id, size, ftype
@@ -1314,7 +1333,7 @@ object Backup extends QueryModule {
     // the parse), cross-checked against the ledger's node_id, and the
     // inventory rolled up per (proto, bucket) — the per-location view
     // a multi-bucket deployment plans transfers with.
-    QuerySpec("b24_storage_locations", by("proto", "bucket"),
+    QuerySpec("b24_storage_locations", by("proto", "bucket"), Pins(Scans(events = 1), 2),
       cte +
       """, locs AS (
         |  SELECT node_id, size,
@@ -1366,7 +1385,8 @@ object Backup extends QueryModule {
     // day+1) with requests, one per-node ordered window carries the last
     // visible snapshot forward — a single shuffle on node_id, no
     // correlated per-row probing, scales linearly.
-    QuerySpec("b12_asof_join", by("event_id"),
+    // Scans: the as-of build side + the probe side
+    QuerySpec("b12_asof_join", by("event_id"), Pins(Scans(events = 2), 2),
       cte +
       """SELECT l.event_id, l.node_id, l.snapshot_day AS request_day,
         |  (SELECT max(sn.snapshot_day) FROM snapshots sn
@@ -1405,7 +1425,8 @@ object Backup extends QueryModule {
     // snapshot_day per (node, object_key)). Both aggregates key on the
     // manifest's natural keys; `latest` is per-node (broadcast-sized at
     // any fleet size).
-    QuerySpec("b25_fetch_plan", by("node_id", "src_day"),
+    // Scans: three roles: the fetch waves
+    QuerySpec("b25_fetch_plan", by("node_id", "src_day"), Pins(Scans(events = 3), 8),
       cte +
       """, latest AS (
         |  SELECT node_id, max(snapshot_day) AS snapshot_day FROM manifest GROUP BY 1),
@@ -1436,7 +1457,7 @@ object Backup extends QueryModule {
     // the ledger (failures/ignores pinned by event_id; FINISHED = upload
     // event at or before the cut) — one conditional-agg pass per
     // (node, snapshot) session, no per-unit state kept anywhere.
-    QuerySpec("b26_progress", by("node_id", "snapshot_day"),
+    QuerySpec("b26_progress", by("node_id", "snapshot_day"), Pins(Scans(events = 1), 1),
       cte +
       """, st AS (
         |  SELECT node_id, snapshot_day,
@@ -1487,7 +1508,7 @@ object Backup extends QueryModule {
     // ≤|tables|-row local-schema dim — broadcast either way), applied to
     // each node's LATEST manifest (b25's broadcast latest-day idiom):
     // zero shuffles beyond that broadcast join at any manifest size.
-    QuerySpec("b27_local_resolve", by("node_id", "object_key"),
+    QuerySpec("b27_local_resolve", by("node_id", "object_key"), Pins(Scans(events = 2), 4),
       cte +
       s""", latest AS (
          |  SELECT node_id, max(snapshot_day) AS snapshot_day FROM manifest GROUP BY 1),
@@ -1541,7 +1562,8 @@ object Backup extends QueryModule {
     // hold mutations stamped before the cut. Selection is one scan
     // filter plus a per-node min(struct) aggregate (map-side partials
     // over bounded node keys) joined back broadcast — never a sort.
-    QuerySpec("b28_commitlog_fetch", by("node_id", "mtime", "seg_key"),
+    // Scans: three roles: log + anchor + replay
+    QuerySpec("b28_commitlog_fetch", by("node_id", "mtime", "seg_key"), Pins(Scans(events = 3), 2),
       cte +
       """, segs AS (
         |  SELECT node_id, event_id, epoch_us(ts) AS mtime,
@@ -1594,7 +1616,7 @@ object Backup extends QueryModule {
     // mean perform the only float ops, identical one-shot IEEE
     // divides of identical integers in both engines. Two bounded-key
     // aggregates ((node, day) then node), linear at any ledger size.
-    QuerySpec("b29_growth_trend", by("node_id"),
+    QuerySpec("b29_growth_trend", by("node_id"), Pins(Scans(events = 1), 2),
       cte +
       """, daily AS (
         |  SELECT node_id, snapshot_day,
@@ -1659,6 +1681,8 @@ object Backup extends QueryModule {
     // bounded by construction: data volume never enters this query, it
     // scales with cluster size only.
     QuerySpec("b30_topology_remap", by("node_id"),
+      Pins(Scans(events = 1), 3, globalWindow = Some(
+        "token-ring prefix over the (nodes × vnodes) topology")),
       cte + {
       val srcTok = graft.model.Corpus.hash32Sql(
         "concat('tok', CAST(node_id AS VARCHAR), '_', CAST(i AS VARCHAR))")
@@ -1742,7 +1766,8 @@ object Backup extends QueryModule {
     // into download / keep / delete_mismatch / delete_untracked; at
     // 100 TB it shuffles only the join keys + hashes, and the
     // per-(node, action) rollup is a bounded-key aggregate.
-    QuerySpec("b31_sync_plan", by("node_id", "action"),
+    // Scans: the manifest's target and local roles
+    QuerySpec("b31_sync_plan", by("node_id", "action"), Pins(Scans(events = 2), 7),
       cte + {
       val orphanSel = graft.model.Corpus.hash32Sql("concat('o#', object_key)")
       val staleSel = graft.model.Corpus.hash32Sql("concat('stale#', object_key)")
@@ -1829,7 +1854,8 @@ object Backup extends QueryModule {
     // bounded (node, ks, day) key with map-side partials doing the
     // real collapse; the second re-aggs the already-tiny daily rows.
     // No join anywhere: policy is a CASE over the keyspace.
-    QuerySpec("b35_rpo_compliance", by("node_id", "keyspace"),
+    // Scans: both agg levels stack on ONE manifest derivation
+    QuerySpec("b35_rpo_compliance", by("node_id", "keyspace"), Pins(Scans(events = 1), 3),
       cte +
       """, daily AS (
         |  SELECT node_id, keyspace, snapshot_day,
@@ -1878,6 +1904,8 @@ object Backup extends QueryModule {
     // latest-day resolution is a tiny agg broadcast back (the b13
     // two-role shape, pin events=2).
     QuerySpec("b36_verify_sample", by("node_id", "keyspace", "table_name", "rk"),
+      // Scans: latest-day agg + the sampled slice (b13's two-role shape)
+      Pins(Scans(events = 2), 5),
       cte +
       """, latest AS (SELECT max(snapshot_day) AS snapshot_day FROM manifest),
         |ranked AS (
@@ -1916,7 +1944,8 @@ object Backup extends QueryModule {
     // rollup. Reclaimed bytes use the FIRST-appearance copy's size
     // (incremental storage keeps one physical object under its first
     // snapshot — b25's provenance rule), i.e. min_by(size, day).
-    QuerySpec("b37_orphan_gc", by("keyspace", "table_name"),
+    // Scans: pure per-object aggregate — no survivor-set join at all
+    QuerySpec("b37_orphan_gc", by("keyspace", "table_name"), Pins(Scans(events = 1), 3),
       cte +
       """, per_obj AS (
         |  SELECT object_key, keyspace, table_name,
@@ -1951,7 +1980,8 @@ object Backup extends QueryModule {
     // the window partitions are per-node day counts — topology-sized,
     // not data-sized. The b35 RPO report says how STALE a node is now;
     // this says how RELIABLE its cadence has been. Pin events=1.
-    QuerySpec("b38_backup_streaks", by("node_id", "streak_start"),
+    // Scans: rides the 2-column snapshots distinct, one node exchange
+    QuerySpec("b38_backup_streaks", by("node_id", "streak_start"), Pins(Scans(events = 1), 2),
       cte +
       """, anchored AS (
         |  SELECT node_id, snapshot_day,
@@ -1986,7 +2016,8 @@ object Backup extends QueryModule {
     // the per-backup file count — exactly what esop holds in memory to
     // write the same file. Output carries the doc's length + md5, the
     // upload-integrity record a registry keeps per manifest.
-    QuerySpec("b39_manifest_export", by("node_id", "snapshot_day"),
+    // Scans: one manifest-keyed agg renders every backup's document
+    QuerySpec("b39_manifest_export", by("node_id", "snapshot_day"), Pins(Scans(events = 1), 2),
       cte +
       s""", ent AS (
          |  SELECT node_id, snapshot_day,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions._
 import graft.model.Corpus
-import graft.operators.QuerySpec.by
+import graft.operators.QuerySpec.{by, persisted}
 
 /** §2.C d22–d25 — corpus CURATION: the decisions a training-data
   * pipeline makes on top of the raw analysis/dedup passes (which docs
@@ -458,7 +458,7 @@ object Curation extends QueryModule {
       // materialize-once: the per-source table (bounded by the source
       // domain) feeds BOTH the totals aggregate and the final join —
       // without this the corpus scan + token reduction run twice
-      .persist()
+      .transform(persisted)
     val tot = per.agg(sum("n_tokens").as("tot_tokens"), sum("w_raw").as("tot_w"))
     per.crossJoin(broadcast(tot))
       .withColumn("actual_frac",
@@ -475,7 +475,8 @@ object Curation extends QueryModule {
     // Benchmark decontamination ([[decontaminate]]) against the
     // BOUNDED held-out fixture (≤100 docs at any corpus size — the
     // external-benchmark stand-in; see [[benchIdCap]]).
-    QuerySpec("d22_decontaminate", by("doc_id"),
+    // Scans: three input roles: the train stream, the bench slice and the probe
+    QuerySpec("d22_decontaminate", by("doc_id"), Pins(Scans(documents = 3), 4),
       Corpus.docsCte +
       s""", bench AS (SELECT DISTINCT gram FROM grams WHERE $benchCond),
          |hits AS (
@@ -497,7 +498,7 @@ object Curation extends QueryModule {
     // decision is pmod(hash32("mix#" || doc_id), 100) < rate(lang) —
     // reproducible (same doc always kept/dropped at a given rate,
     // raising a rate only ADDS docs), per-row, zero shuffles.
-    QuerySpec("d23_corpus_mix", by("doc_id"),
+    QuerySpec("d23_corpus_mix", by("doc_id"), Pins(Scans(documents = 1), 0),
       {
       val rateSql = mixRates.map { case (l, r) => s"WHEN lang = '$l' THEN $r" }
         .mkString("CASE ", " ", " ELSE 100 END")
@@ -534,7 +535,9 @@ object Curation extends QueryModule {
     // so the float denominators are bit-identical cross-engine. ONE
     // corpus scan, map-side partial to a lang-bounded aggregate; the
     // α explode happens on the one packed row, never the corpus.
-    QuerySpec("d94_lang_temperature", by("alpha", "lang"),
+    // Scans: one corpus scan map-side-reduced to the lang-bounded aggregate; the α explode happens
+    // on ONE packed row
+    QuerySpec("d94_lang_temperature", by("alpha", "lang"), Pins(Scans(documents = 1), 2),
       // the α-law over lang counts: w per (alpha, lang), denominators as
       // an ORDERED sequential list_reduce (≡ Spark's left fold over the
       // sorted struct array — bit-identical float sums), boost left-assoc
@@ -581,7 +584,9 @@ object Curation extends QueryModule {
 
     // Near-dup clusters: connected components over the d04 LSH pairs —
     // pairwise near-dup hits become transitive KEEP-one groups.
-    QuerySpec("d24_dup_clusters", by("doc_id"),
+    // Scans: ONE documents scan for the whole iterative clustering, counted across the loop's
+    // checkpoint materializations
+    QuerySpec("d24_dup_clusters", by("doc_id"), Pins(Scans(documents = 1), 2, loop = true),
       Dedup.lshPairsCte.replaceFirst("WITH ", "WITH RECURSIVE ") +
       """, sym AS (
         |  SELECT a_id AS src, b_id AS dst FROM pairs
@@ -614,8 +619,9 @@ object Curation extends QueryModule {
     // bounded size domain), never from a second labels pass; the
     // corpus count is one column-pruned scan folded in as a broadcast
     // singleton. Same CC loop as d24 (star contraction, pinned
-    // rounds), so the scan pin rides countsDuring like d24's.
+    // rounds), so its pins set `loop` like d24's.
     QuerySpec("d106_cluster_size_hist", by("cluster_size"),
+      Pins(Scans(documents = 2), 9, loop = true),
       Dedup.lshPairsCte.replaceFirst("WITH ", "WITH RECURSIVE ") +
       """, sym AS (
         |  SELECT a_id AS src, b_id AS dst FROM pairs
@@ -669,7 +675,7 @@ object Curation extends QueryModule {
     // class containing other classes' alphabets). Output carries the
     // counts + md5 of the redacted text (narrow result, full-text
     // equality check across engines).
-    QuerySpec("d25_pii_scrub", by("doc_id"),
+    QuerySpec("d25_pii_scrub", by("doc_id"), Pins(Scans(documents = 1), 0),
       {
       s"""WITH raws AS (
          |  SELECT doc_id, $piiRawSql AS raw FROM documents)
@@ -712,7 +718,7 @@ object Curation extends QueryModule {
     // oracle at all. Runs on the x04 TopKPerGroup operator in
     // production: map-side bounded heaps mean the exchange carries ≤k
     // rows per language, not the corpus.
-    QuerySpec("d38_corpus_sample", by("lang", "rank"),
+    QuerySpec("d38_corpus_sample", by("lang", "rank"), Pins(Scans(documents = 1), 1),
       """SELECT lang, rank, doc_id, h FROM (
         |  SELECT lang, doc_id, md5('smp' || CAST(doc_id AS VARCHAR)) AS h,
         |    ROW_NUMBER() OVER (PARTITION BY lang
@@ -757,7 +763,7 @@ object Curation extends QueryModule {
     // four-stage pipeline, zero self-joins, corpus
     // text read ONCE (the second documents scan is the ≤100-doc bench
     // fixture slice, filter-pruned at the scan).
-    QuerySpec("d43_curation_pipeline", by("doc_id"),
+    QuerySpec("d43_curation_pipeline", by("doc_id"), Pins(Scans(documents = 2), 5),
       Corpus.docsCte +
       s""", bench AS (SELECT DISTINCT gram FROM grams WHERE $benchCond),
          |grams_t AS (SELECT doc_id, gram FROM grams WHERE NOT ($benchCond)),
@@ -870,7 +876,7 @@ object Curation extends QueryModule {
     // shuffles, output linear in corpus bytes — and each chunk carries
     // a content hash, the downstream equi-join key for chunk-level
     // dedup/ANN, so the wide text column never re-materializes.
-    QuerySpec("d48_doc_chunk", by("doc_id", "chunk_idx"),
+    QuerySpec("d48_doc_chunk", by("doc_id", "chunk_idx"), Pins(Scans(documents = 1), 0),
       // chunk starts mirror Spark's inclusive sequence(1, max(len,1),
       // stride) via DuckDB's exclusive-stop range(1, max(len,1)+1,
       // stride); the corpus is ASCII so substr/length agree cross-engine
@@ -893,7 +899,9 @@ object Curation extends QueryModule {
     // body is skipped even under a new id. The anti-join shuffles both
     // sides on the uniformly-distributed fingerprint; at 100 TB
     // neither side broadcasts and neither needs to.
-    QuerySpec("d49_incremental_ingest", by("doc_id"),
+    // Scans: the final plan anti-joins ONE corpus fingerprint scan against the ledger read-back
+    // (the Scratch write, like d45's, is construction-time)
+    QuerySpec("d49_incremental_ingest", by("doc_id"), Pins(Scans(documents = 1), 1),
       // the ledger CTE mirrors the Scratch-materialized previous
       // snapshot (deciles ≠ 3 plus the ≡3 mod 50 "known body, new id"
       // overlap, distinct md5 fingerprints) verbatim
@@ -919,7 +927,7 @@ object Curation extends QueryModule {
     // every partition is bounded by construction (≤500 docs) and the
     // whole pass is embarrassingly parallel at any corpus size — no
     // global sort, no unbounded window partition.
-    QuerySpec("d39_seq_pack", by("shard", "seq_id"),
+    QuerySpec("d39_seq_pack", by("shard", "seq_id"), Pins(Scans(documents = 1), 1),
       Corpus.docsCte +
       """, toks AS (
         |  SELECT doc_id, doc_id // 500 AS shard,
@@ -964,7 +972,9 @@ object Curation extends QueryModule {
     // divides and their ratio, IEEE-identical cross-engine; the
     // planner's output is the config a weighted sampler (d23's shape)
     // consumes at 100 TB.
-    QuerySpec("d51_mix_plan", by("source"),
+    // Scans: one corpus scan reduced to the persisted per-source table (totals agg + join both
+    // read the cached bounded relation)
+    QuerySpec("d51_mix_plan", by("source"), Pins(Scans(documents = 1), 3),
       Corpus.docsCte +
       s""", per AS (
          |  SELECT source, count(1) AS n_docs,
@@ -997,7 +1007,9 @@ object Curation extends QueryModule {
     // PERSISTED external input (Scratch round-trip, like d55's
     // deny-list) broadcast-semi-joined against each artifact — the
     // artifact sides never shuffle. What a purge executor consumes.
-    QuerySpec("d59_forget_plan", by("doc_id", "artifact"),
+    // Scans: ONE corpus pass (corpus + chunk rows via the per-row geometry law, no chunk explode);
+    // docket and ANN postings are artifact read-backs
+    QuerySpec("d59_forget_plan", by("doc_id", "artifact"), Pins(Scans(documents = 1), 2),
       """WITH tex AS (
         |  SELECT doc_id, 'corpus' AS artifact, CAST(1 AS BIGINT) AS n_rows
         |  FROM documents WHERE text IS NOT NULL AND doc_id % 23 = 1
@@ -1038,7 +1050,8 @@ object Curation extends QueryModule {
     // shuffles, reproducible under re-runs and corpus growth (a doc's
     // split never changes when neighbors arrive, unlike rand() or
     // rank-based splits). The same md5-bucket family as d23/d38.
-    QuerySpec("d57_data_split", by("doc_id"),
+    // Scans: pure per-row split assignment over one fingerprint scan
+    QuerySpec("d57_data_split", by("doc_id"), Pins(Scans(documents = 1), 0),
       s"""WITH fps AS (
          |  SELECT doc_id, md5(text) AS fp FROM documents WHERE text IS NOT NULL),
          |b AS (
@@ -1062,7 +1075,10 @@ object Curation extends QueryModule {
     // with the deny-list (next pow2 ≥ 16n → stable FPR at any size);
     // the no-false-negative soundness and the FPR budget are
     // spec-pinned, and the oracle recomputes both stages in SQL.
-    QuerySpec("d55_blocklist_bloom", by("doc_id"),
+    // Scans: ONE corpus scan through the broadcast bloom probe — the deny-list build is a
+    // construction-time Scratch artifact; the verify join reads the artifact back, never the
+    // corpus
+    QuerySpec("d55_blocklist_bloom", by("doc_id"), Pins(Scans(documents = 1), 3),
       {
       def pos(i: Int) =
         s"(${Corpus.hash32Sql(s"'bloom$i#' || fp")} % (SELECT m FROM mm))"
@@ -1103,6 +1119,10 @@ object Curation extends QueryModule {
     // come from a global window over that BOUNDED aggregate, never a
     // second pass over the data.
     QuerySpec("d54_corpus_drift", by("lang", "len_bucket"),
+      // Scans: one corpus scan → bounded stratum agg; totals come from a window over the
+      // aggregate, never a second pass
+      Pins(Scans(documents = 1), 2, globalWindow = Some(
+        "share totals over the (lang × 6 len-bucket) strata")),
       """WITH tagged AS (
         |  SELECT lang, least(n_chars // 100, 5) AS len_bucket,
         |    CASE WHEN doc_id % 10 < 8 THEN 'prev'
@@ -1160,6 +1180,10 @@ object Curation extends QueryModule {
     // totals agg is a second pinned scan (corpus-sized intermediates
     // are not persisted — two cheap scans beat caching 100 TB).
     QuerySpec("d65_shard_plan", by("doc_id"),
+      // Scans: bucket-local window pass + the bucket-totals agg pass (two cheap scans instead of
+      // caching a corpus-sized frame)
+      Pins(Scans(documents = 2), 4, globalWindow = Some(
+        "shard prefix over the 32-row hash-bucket aggregate")),
       // one flat window over the global (bucket, ord, doc_id) order —
       // DuckDB needs no bucket staging, the ORDER is what must match
       Corpus.docsCte + {
@@ -1217,7 +1241,8 @@ object Curation extends QueryModule {
     // exchange on source, windows parallel across sources (a
     // pathological mega-source would take d65's two-stage prefix
     // within the source). Pin documents=1.
-    QuerySpec("d66_quota_select", by("source", "rk"),
+    // Scans: score + rank + prefix-sum all ride one source-keyed exchange over one scan
+    QuerySpec("d66_quota_select", by("source", "rk"), Pins(Scans(documents = 1), 1),
       Corpus.docsCte +
       s""", scored AS (
          |  SELECT source, doc_id,
@@ -1269,9 +1294,9 @@ object Curation extends QueryModule {
     // which is what lets an ARGMAX survive a hash compare). Output is
     // the purge worklist: every clustered doc, its keeper, and the
     // purge flag. Corpus passes: the LSH pipeline's one documents scan
-    // (inside the checkpoint loop, counted with countsDuring as d24)
-    // plus the score join's one — pin documents=2 during.
-    QuerySpec("d67_cluster_keep_best", by("doc_id"),
+    // (inside the checkpoint loop, so its pins set `loop` as d24's do)
+    // plus the score join's one.
+    QuerySpec("d67_cluster_keep_best", by("doc_id"), Pins(Scans(documents = 2), 2, loop = true),
       Dedup.lshPairsCte.replaceFirst("WITH ", "WITH RECURSIVE ") +
       s""", sym AS (
          |  SELECT a_id AS src, b_id AS dst FROM pairs
@@ -1334,7 +1359,9 @@ object Curation extends QueryModule {
     // dataloader consumes (doc_id, replica) as its sample list;
     // replica is in the key so shuffling the manifest never collides
     // copies.
-    QuerySpec("d69_mix_execute", by("doc_id", "replica"),
+    // Scans: the manifest stream's scan + the plan's map-side-reduced scan (d51's persisted
+    // per-source frame)
+    QuerySpec("d69_mix_execute", by("doc_id", "replica"), Pins(Scans(documents = 2), 4),
       Corpus.docsCte +
       s""", per AS (
          |  SELECT source, CAST(sum(len(ws)) AS BIGINT) AS n_tokens,

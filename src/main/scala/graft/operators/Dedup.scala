@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions._
 import graft.model.Corpus
-import graft.operators.QuerySpec.by
+import graft.operators.QuerySpec.{by, persisted}
 
 /** §2.C d01–d05 — deduplication for large text corpora.
   *
@@ -89,14 +89,6 @@ object Dedup extends QueryModule {
     * than the corpus. */
   private[operators] def bandSigsPersisted(s: SparkSession, dir: String): DataFrame =
     persisted(bandSigs(s, dir))
-
-  /** `df`, persisted. Spark's CacheManager keys cached data by plan, so
-    * a fresh build of an already-cached frame reads the cached copy;
-    * `storageLevel` is that plan lookup, and skipping the repeat
-    * `persist()` keeps it from logging "Asked to cache already cached
-    * data". */
-  private def persisted(df: DataFrame): DataFrame =
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) df.persist() else df
 
   /** All ordered pairs (i < j) from a SORTED array column — the
     * combination explode that replaces a key-equality SELF-join. The
@@ -320,6 +312,8 @@ object Dedup extends QueryModule {
     // template); AQE skew handling is pinned for this family in
     // SkewSpec.
     QuerySpec("d85_template_prefix", Seq(col("n_docs").desc, col("prefix")),
+      // Scans: template triage is ONE prefix-keyed shuffle — d01's cost
+      Pins(Scans(documents = 1), 2),
       Corpus.docsCte + prefixKeysCte +
       """SELECT prefix, count(1) AS n_docs,
         |  count(DISTINCT source) AS n_sources,
@@ -350,7 +344,9 @@ object Dedup extends QueryModule {
     // exact integer counts, so the ≥t comparisons are bit-identical
     // cross-engine. This is what turns "0.8 feels right" into a
     // measured pairs/docs trade at each candidate cutoff.
-    QuerySpec("d71_dedup_curve", by("t"),
+    // Scans: ONE gram pass (the pair core); the threshold sweep reads the persisted pair frame,
+    // never the corpus
+    QuerySpec("d71_dedup_curve", by("t"), Pins(Scans(documents = 1), 5),
       Corpus.docsCte +
       """, sizes AS (SELECT doc_id, count(1) AS n FROM grams GROUP BY 1),
         |pj AS (
@@ -371,7 +367,7 @@ object Dedup extends QueryModule {
         |FROM docstream GROUP BY t ORDER BY t""".stripMargin) { (s, dir) =>
       val p = jaccardPairs(gramStreamPersisted(s, dir))
         .select("a_id", "b_id", "jaccard")
-        .persist()
+        .transform(persisted)
       p.select(col("a_id"), col("b_id"), col("jaccard"),
           explode(array(lit(0.5), lit(0.95), lit(0.98))).as("t"))
         .filter(col("jaccard") >= col("t"))
@@ -382,7 +378,7 @@ object Dedup extends QueryModule {
     },
 
     // Exact dedup: md5 over normalized text; min doc_id is the keeper.
-    QuerySpec("d01_dedup_exact", by("content_hash"),
+    QuerySpec("d01_dedup_exact", by("content_hash"), Pins(Scans(documents = 1), 1),
       Corpus.docsCte +
       """SELECT md5(norm) AS content_hash, min(doc_id) AS keep_doc, count(1) AS n_docs
         |FROM docs GROUP BY 1 ORDER BY content_hash""".stripMargin) { (s, dir) =>
@@ -390,7 +386,7 @@ object Dedup extends QueryModule {
     },
 
     // Word-3-gram Jaccard near-dup pairs (|∩|/|∪| ≥ 0.5).
-    QuerySpec("d02_dedup_ngram", by("a_id", "b_id"),
+    QuerySpec("d02_dedup_ngram", by("a_id", "b_id"), Pins(Scans(documents = 1), 3),
       Corpus.docsCte +
       """, sizes AS (SELECT doc_id, count(1) AS n FROM grams GROUP BY 1)
         |SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(1) AS inter,
@@ -407,7 +403,7 @@ object Dedup extends QueryModule {
     },
 
     // MinHash signatures (k=16, md5-derived hash family).
-    QuerySpec("d03_minhash", by("doc_id", "seed"),
+    QuerySpec("d03_minhash", by("doc_id", "seed"), Pins(Scans(documents = 1), 1),
       Corpus.docsCte + ", " + minhashSql +
       "\nSELECT doc_id, seed, minh FROM mh ORDER BY doc_id, seed") { (s, dir) =>
       minhash(s, dir)
@@ -416,7 +412,7 @@ object Dedup extends QueryModule {
     // LSH banding (4 bands × 4 rows): candidate pairs share ≥1 band.
     // Band signatures come straight off the wide per-doc signature row
     // (concat of 4 members) — no second shuffle to regroup by band.
-    QuerySpec("d04_minhash_lsh", by("a_id", "b_id"),
+    QuerySpec("d04_minhash_lsh", by("a_id", "b_id"), Pins(Scans(documents = 1), 3),
       lshPairsCte +
       "\nSELECT a_id, b_id, n_shared_bands FROM pairs ORDER BY a_id, b_id") { (s, dir) =>
       lshPairs(s, dir)
@@ -434,7 +430,8 @@ object Dedup extends QueryModule {
     // partner shares a band). At 100 TB: |shard| ≪ |corpus| makes
     // this the only affordable continuous-dedup shape — cost scales
     // with the shard, not the corpus².
-    QuerySpec("d76_incremental_neardup", by("new_id"),
+    // Scans: both probe sides + the arriving-verdict frame ride the ONE persisted signature pass
+    QuerySpec("d76_incremental_neardup", by("new_id"), Pins(Scans(documents = 1), 5),
       bandSigsCte +
       """, cand AS (
         |  SELECT a.doc_id AS new_id, b.doc_id AS dup_of, count(1) AS nb
@@ -469,7 +466,7 @@ object Dedup extends QueryModule {
     },
 
     // 32-bit SimHash fingerprints + hamming-near pairs (≤ 2 bits apart).
-    QuerySpec("d05_simhash", by("a_id", "b_id"),
+    QuerySpec("d05_simhash", by("a_id", "b_id"), Pins(Scans(documents = 1), 2),
       Corpus.docsCte +
       s""", wd AS (SELECT DISTINCT doc_id, w FROM (SELECT doc_id, unnest(ws) AS w FROM docs) t),
          |sgns AS (
@@ -544,7 +541,9 @@ object Dedup extends QueryModule {
     // point being evaluated). n_match/16 is a power-of-two divide —
     // exact in binary, so every float here is bit-identical
     // cross-engine.
-    QuerySpec("d104_containment_est", by("a_id", "b_id"),
+    // Scans: ONE cached gram pass — wide signatures, band-sig candidates, exact intersections AND
+    // sizes all derive from it
+    QuerySpec("d104_containment_est", by("a_id", "b_id"), Pins(Scans(documents = 1), 16),
       lshPairsCte +
       """, cand AS (SELECT a_id, b_id FROM pairs),
         |mm AS (
@@ -581,9 +580,9 @@ object Dedup extends QueryModule {
       // cached stream for the lookups)
       val dg = gramStreamPersisted(s, dir)
       val aw = minhashWideOver(dg)
-        .persist()
+        .transform(persisted)
       val cand = lshPairsOver(bandSigsOf(aw)).select("a_id", "b_id")
-        .persist()
+        .transform(persisted)
       val a = aw.toDF(("a_id" +: (0 until 16).map(i => s"ma$i")): _*)
       val b = aw.toDF(("b_id" +: (0 until 16).map(i => s"mb$i")): _*)
       val nMatch = (0 until 16)
@@ -642,7 +641,9 @@ object Dedup extends QueryModule {
     // matrix aggregate are bounded by it; the (doc_id, source) lookup
     // is ONE pruned corpus scan persisted for its two join sides
     // (pin documents=4: d02's three-pass gram pipeline + this one).
-    QuerySpec("d103_dup_provenance", by("source_a", "source_b"),
+    // Scans: d02's one-pass gram pair core + ONE pruned (doc_id, source) scan persisted for its
+    // two join sides
+    QuerySpec("d103_dup_provenance", by("source_a", "source_b"), Pins(Scans(documents = 2), 6),
       Corpus.docsCte + ", " + exactPairsCte +
       """SELECT source_a, source_b, count(1) AS n_pairs,
         |  source_a <> source_b AS cross_source
@@ -655,7 +656,7 @@ object Dedup extends QueryModule {
         |GROUP BY 1, 2 ORDER BY source_a, source_b""".stripMargin) { (s, dir) =>
       val pairs = jaccardPairs(gramStreamPersisted(s, dir)).select("a_id", "b_id")
       val src = Corpus.docs(s, dir).select(col("doc_id"), col("source"))
-        .persist()
+        .transform(persisted)
       pairs
         .join(src.toDF("a_id", "src_a"), Seq("a_id"))
         .join(src.toDF("b_id", "src_b"), Seq("b_id"))
@@ -666,7 +667,7 @@ object Dedup extends QueryModule {
         .withColumn("cross_source", col("source_a") =!= col("source_b"))
     },
 
-    QuerySpec("d30_containment", by("a_id", "b_id"),
+    QuerySpec("d30_containment", by("a_id", "b_id"), Pins(Scans(documents = 1), 3),
       Corpus.docsCte +
       """, sizes AS (SELECT doc_id, count(1) AS n FROM grams GROUP BY 1)
         |SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(1) AS inter,
@@ -696,7 +697,9 @@ object Dedup extends QueryModule {
     // the sketch path at full corpus scale. Both inputs are the shared
     // bucketed plans (exact pairs df=1-pruned, candidates band-joined);
     // the comparison itself is one tiny pair-key join.
-    QuerySpec("d34_lsh_recall", Nil,
+    // Scans: candidates derive their band signatures from the SAME cached gram stream the exact
+    // baseline reads — one corpus scan for the whole recall evaluation
+    QuerySpec("d34_lsh_recall", Nil, Pins(Scans(documents = 1), 13),
       lshPairsCte + ", " + exactPairsCte +
       """SELECT
         |  (SELECT count(1) FROM exact) AS n_exact,
@@ -736,7 +739,10 @@ object Dedup extends QueryModule {
     // "which b do I need at my recall target" table that sizes the
     // production d04 config. persist on the pair rollup: the hits
     // join and the cost aggregate both consume it (d72's convention).
-    QuerySpec("d105_lsh_band_curve", by("n_bands"),
+    // Scans: the d34 shape — band signatures ride the same cached gram stream as the exact
+    // baseline; the b=1..4 sweep adds ZERO passes — one first-band pair rollup feeds all four
+    // budgets
+    QuerySpec("d105_lsh_band_curve", by("n_bands"), Pins(Scans(documents = 1), 10),
       bandSigsCte + ", " + exactPairsCte +
       """, fb AS (
         |  SELECT x.doc_id AS a_id, y.doc_id AS b_id, min(x.band) AS first_band
@@ -767,7 +773,7 @@ object Dedup extends QueryModule {
         .select(col("band"), explode(combos(col("ds"))).as("p"))
         .groupBy(col("p.a").as("a_id"), col("p.b").as("b_id"))
         .agg(min(col("band")).as("first_band"))
-        .persist()
+        .transform(persisted)
       val exact = jaccardPairs(dg).select("a_id", "b_id")
       val hits = exact.join(firstBand, Seq("a_id", "b_id"), "left")
         .agg(count(lit(1)).as("n_exact"),
@@ -800,7 +806,9 @@ object Dedup extends QueryModule {
     // d105 monotone-gate collapse); the bucket lookup is one pruned
     // corpus scan PERSISTED for its two join sides (d103's
     // convention; pin documents=2 with the cached signatures).
-    QuerySpec("d110_sample_dedup_bias", by("rate"),
+    // Scans: the cached signature pass + the pruned bucket lookup persisted for its two pair-join
+    // sides (d103's convention); all four rates ride ONE pair rollup
+    QuerySpec("d110_sample_dedup_bias", by("rate"), Pins(Scans(documents = 2), 8),
       lshPairsCte +
       """, bk AS (
         |  SELECT doc_id,
@@ -837,7 +845,7 @@ object Dedup extends QueryModule {
         "CAST(conv(substr(md5(concat('smp2', CAST(doc_id AS STRING))), 1, 2), 16, 10) AS INT)"
       val bk = graft.sources.Tables.documents(s, dir)
         .select(col("doc_id"), expr(bkExpr).as("b"))
-        .persist()
+        .transform(persisted)
       val pb = lshPairs(s, dir).select("a_id", "b_id")
         .join(bk.toDF("a_id", "ba"), Seq("a_id"))
         .join(bk.toDF("b_id", "bb"), Seq("b_id"))
@@ -879,7 +887,7 @@ object Dedup extends QueryModule {
     // tile hash, and the join back probes the same hash-partitioned
     // key — co-partitioned with the agg output, no extra exchange. No
     // broadcast hint: the tile vocabulary grows with the corpus.
-    QuerySpec("d36_tile_dedup", by("doc_id"),
+    QuerySpec("d36_tile_dedup", by("doc_id"), Pins(Scans(documents = 2), 3),
       Corpus.docsCte + Corpus.tilesCte +
       """, dfreq AS (SELECT tile, count(1) AS df FROM tiles GROUP BY tile)
         |SELECT t.doc_id, count(1) AS n_tiles,
@@ -917,7 +925,9 @@ object Dedup extends QueryModule {
     // pass, no df join); the flagged stream persists once and feeds
     // the per-doc rollup AND the island windows (both repartition by
     // doc_id, co-partitioned with each other).
-    QuerySpec("d90_dup_spans", by("doc_id"),
+    // Scans: one corpus scan into the positional tile explode; the persisted flagged stream feeds
+    // the rollup AND the island runs
+    QuerySpec("d90_dup_spans", by("doc_id"), Pins(Scans(documents = 1), 4),
       Corpus.docsCte + Corpus.posTilesCte +
       """, flag AS (
         |  SELECT doc_id, i,
@@ -945,7 +955,7 @@ object Dedup extends QueryModule {
         .posTiles(graft.sources.Tables.documents(s, dir))
         .withColumn("is_dup",
           min(col("doc_id")).over(byTile) =!= max(col("doc_id")).over(byTile))
-        .persist()
+        .transform(persisted)
       val agg = flagged.groupBy("doc_id")
         .agg(count(lit(1)).as("n_tiles"),
           sum(when(col("is_dup"), 1L).otherwise(0L)).as("n_dup_tiles"))
@@ -980,7 +990,10 @@ object Dedup extends QueryModule {
     // selection window BEFORE the fingerprint exchange; the flagged
     // stream persists once and feeds the rollup AND the island windows
     // (both keyed on doc_id, co-partitioned).
-    QuerySpec("d111_winnow_spans", by("doc_id"),
+    // Scans: ONE corpus scan into the stride-1 rolling explode; the winnowing selection reduces
+    // inside the per-doc window BEFORE the fingerprint exchange, and the persisted flagged stream
+    // feeds the rollup AND the island windows (d90's shape)
+    QuerySpec("d111_winnow_spans", by("doc_id"), Pins(Scans(documents = 1), 5),
       Corpus.docsCte + Corpus.winnowTilesCte +
       """, flag AS (
         |  SELECT doc_id, pos,
@@ -1014,7 +1027,7 @@ object Dedup extends QueryModule {
         .winnowTiles(graft.sources.Tables.documents(s, dir))
         .withColumn("is_dup",
           min(col("doc_id")).over(byTile) =!= max(col("doc_id")).over(byTile))
-        .persist()
+        .transform(persisted)
       val agg = flagged.groupBy("doc_id")
         .agg(count(lit(1)).as("n_sel"),
           sum(when(col("is_dup"), 1L).otherwise(0L)).as("n_dup_sel"))
@@ -1039,7 +1052,7 @@ object Dedup extends QueryModule {
     // embedded subset is a projection of the corpus), then the
     // comparison is one pair-key join over two already-bucketed pair
     // sets — nothing quadratic is introduced by the comparison itself.
-    QuerySpec("d41_dedup_consensus", Nil,
+    QuerySpec("d41_dedup_consensus", Nil, Pins(Scans(documents = 1, embeddings = 3), 15),
       lshPairsCte + Similarity.embedDupPairsCte +
       """, tpairs AS (
         |  SELECT p.a_id, p.b_id FROM pairs p

@@ -233,7 +233,7 @@ object Multimodal extends QueryModule {
     // real thing a 100 TB video pipeline needs: a BOUNDED explode
     // (≤ 10 rows/clip) inside codegen, per-row hashing, no shuffle —
     // the decode stub (md5) is where an FFmpeg frame grab would slot.
-    QuerySpec("d18_frame_sample", by("doc_id", "frame_idx"),
+    QuerySpec("d18_frame_sample", by("doc_id", "frame_idx"), Pins(Scans(documents = 1), 0),
       """SELECT doc_id, frame_idx, frame_idx * 40 AS ts_ms,
         |  CAST(concat('0x', substr(md5(concat(CAST(doc_id AS VARCHAR), '#', CAST(frame_idx AS VARCHAR))), 1, 8)) AS BIGINT) AS phash
         |FROM (
@@ -254,7 +254,7 @@ object Multimodal extends QueryModule {
     // exercises the quarantine machinery end to end. Null payloads are
     // excluded at the scan (pushdown-able IS NOT NULL, mirrored in the
     // oracle) — pack() requires a payload to digest.
-    QuerySpec("d14_multimodal", by("doc_id"),
+    QuerySpec("d14_multimodal", by("doc_id"), Pins(Scans(documents = 1), 0),
       """SELECT doc_id,
         |  CAST(strlen(text) AS BIGINT) AS n_bytes,
         |  CAST(concat('0x', substr(md5(text), 1, 8)) AS BIGINT) AS checksum,
@@ -276,7 +276,7 @@ object Multimodal extends QueryModule {
     // corpus scan at any SF. The audit API takes already-packed
     // containers (Dataset[MediaBlob]); the pack+damage stage here is
     // the oracle-predictable FIXTURE composed in front of it.
-    QuerySpec("d44_media_quarantine", by("err_kind"),
+    QuerySpec("d44_media_quarantine", by("err_kind"), Pins(Scans(documents = 1), 1),
       """SELECT CASE WHEN doc_id % 50 = 7 THEN 'bad_version' ELSE 'null_blob' END AS err_kind,
         |  count(1) AS n_quarantined
         |FROM documents
@@ -297,7 +297,9 @@ object Multimodal extends QueryModule {
     // blob is always 'no container bytes'). The build pass is one
     // shuffle-free corpus scan at construction; the measured plan is
     // the tiny worklist read (~2% of docs, pruned to 3 columns).
-    QuerySpec("d45_quarantine_worklist", by("doc_id"),
+    // Scans: empty like b22's: its documents scan happens inside the eager Scratch worklist write
+    // at construction time — the measured plan reads the persisted worklist back
+    QuerySpec("d45_quarantine_worklist", by("doc_id"), Pins(Scans(), 0),
       // the full err detail is predictable too: the version flip writes
       // 1+1=2, and a dropped blob always classifies as null_blob with a
       // constant message (exception text format: "<kind>: <detail>")
@@ -324,7 +326,10 @@ object Multimodal extends QueryModule {
     // denied. Output ≡ d14 restricted to the damaged ids, which is
     // exactly what "the loop closes" means — and the spec pins that the
     // re-drive quarantines nothing.
-    QuerySpec("d46_quarantine_redrive", by("doc_id"),
+    // Scans: the measured plan: ONE corpus scan semi-joined against the broadcast worklist
+    // read-back (the Scratch write, if this JVM hasn't materialized it yet, is construction-time
+    // like d45)
+    QuerySpec("d46_quarantine_redrive", by("doc_id"), Pins(Scans(documents = 1), 1),
       // the closed loop: a re-driven doc decodes to exactly the features
       // the clean ingest (d14) would have produced for it
       """SELECT doc_id,
@@ -351,7 +356,7 @@ object Multimodal extends QueryModule {
     // on every clean container; on the clean corpus every peek is ok,
     // so the ok-filter keeps the oracle exact while exercising the
     // tolerant path.
-    QuerySpec("d47_media_dims", by("doc_id"),
+    QuerySpec("d47_media_dims", by("doc_id"), Pins(Scans(documents = 1), 0),
       // header fields are payload-derived at pack time: dims from the
       // md5 head (like d14), frame count = ceil(bytes / 64)
       """SELECT doc_id,
@@ -374,7 +379,8 @@ object Multimodal extends QueryModule {
     // (tw·h ≤ 128·h, th = ⌊h·128/w⌋ — bit-stable cross-engine);
     // zero-dim containers are planned invalid (ok=false, zeroed
     // targets) instead of dividing by zero.
-    QuerySpec("d93_resize_plan", by("doc_id"),
+    // Scans: d47's header peek + per-row integer thumb math
+    QuerySpec("d93_resize_plan", by("doc_id"), Pins(Scans(documents = 1), 0),
       // the thumb math over the same header-derived dims d47 reads
       """WITH dims AS (
         |  SELECT doc_id,
@@ -432,7 +438,7 @@ object Multimodal extends QueryModule {
     // exactly first (a frame seen in ONE clip cannot contribute to any
     // pair — same argument as d02's gram pruning), so at 100 TB the
     // join input is the duplicated-content fraction of the corpus.
-    QuerySpec("d27_clip_dedup", by("a_id", "b_id"),
+    QuerySpec("d27_clip_dedup", by("a_id", "b_id"), Pins(Scans(documents = 2), 10),
       graft.model.Corpus.docsCte +
       s""", fr AS (
          |  SELECT DISTINCT doc_id, ${graft.model.Corpus.hash32Sql("substr(norm, i, 50)")} AS ph

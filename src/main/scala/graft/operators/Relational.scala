@@ -76,7 +76,7 @@ object Relational extends QueryModule {
       .orderBy("o_orderstatus")
 
   val specs: Seq[QuerySpec] = Seq(
-    QuerySpec("q01_agg", by("l_returnflag", "l_linestatus"),
+    QuerySpec("q01_agg", by("l_returnflag", "l_linestatus"), Pins(Scans(lineitem = 1), 1),
       """SELECT l_returnflag, l_linestatus,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
@@ -97,7 +97,7 @@ object Relational extends QueryModule {
           count(lit(1)).as("count_order"))
     },
 
-    QuerySpec("q02_filter_project", Nil,
+    QuerySpec("q02_filter_project", Nil, Pins(Scans(lineitem = 1), 1),
       """SELECT
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
         |  COUNT(1) AS n_rows
@@ -115,6 +115,7 @@ object Relational extends QueryModule {
     },
 
     QuerySpec("q03_join_agg", by("c_mktsegment"),
+      Pins(Scans(customer = 1, orders = 1, lineitem = 1), 4),
       """SELECT c_mktsegment,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
         |  COUNT(DISTINCT o_orderkey) AS n_orders
@@ -137,7 +138,7 @@ object Relational extends QueryModule {
           count(lit(1)).as("n_orders"))
     },
 
-    QuerySpec("q04_semi_join", by("o_orderpriority"),
+    QuerySpec("q04_semi_join", by("o_orderpriority"), Pins(Scans(orders = 1, lineitem = 1), 2),
       """SELECT o_orderpriority, COUNT(1) AS n FROM orders
         |WHERE EXISTS (SELECT 1 FROM lineitem
         |  WHERE l_orderkey = o_orderkey AND l_quantity >= 45)
@@ -149,7 +150,7 @@ object Relational extends QueryModule {
         .agg(count(lit(1)).as("n"))
     },
 
-    QuerySpec("q05_anti_join", by("c_custkey"),
+    QuerySpec("q05_anti_join", by("c_custkey"), Pins(Scans(customer = 1, orders = 1), 1),
       """SELECT c_custkey, c_name, c_mktsegment FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders
         |  WHERE o_custkey = c_custkey AND o_totalprice > 300000)
@@ -160,7 +161,7 @@ object Relational extends QueryModule {
         .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
     },
 
-    QuerySpec("q06_topk", Nil,
+    QuerySpec("q06_topk", Nil, Pins(Scans(orders = 1), 0),
       """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
         |ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 15""".stripMargin) { (s, dir) =>
       Tables.orders(s, dir)
@@ -169,7 +170,7 @@ object Relational extends QueryModule {
         .limit(15)
     },
 
-    QuerySpec("q07_window_rank", by("o_custkey", "rn"),
+    QuerySpec("q07_window_rank", by("o_custkey", "rn"), Pins(Scans(orders = 1), 1),
       """SELECT o_custkey, o_orderkey, rn FROM (
         |  SELECT o_custkey, o_orderkey,
         |    ROW_NUMBER() OVER (PARTITION BY o_custkey
@@ -185,7 +186,7 @@ object Relational extends QueryModule {
         .select(col("o_custkey"), col("o_orderkey"), col("rn"))
     },
 
-    QuerySpec("q08_distinct", by("o_orderstatus", "o_orderpriority"),
+    QuerySpec("q08_distinct", by("o_orderstatus", "o_orderpriority"), Pins(Scans(orders = 1), 1),
       """SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders
         |ORDER BY o_orderstatus, o_orderpriority""".stripMargin) { (s, dir) =>
       Tables.orders(s, dir)
@@ -193,7 +194,7 @@ object Relational extends QueryModule {
         .distinct()
     },
 
-    QuerySpec("q09_union_all", by("src"),
+    QuerySpec("q09_union_all", by("src"), Pins(Scans(customer = 1, supplier = 1), 1),
       """SELECT src, COUNT(1) AS n,
         |  CAST(SUM(CAST(bal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
         |FROM (
@@ -215,7 +216,7 @@ object Relational extends QueryModule {
     // them cleanly and plans the identical Expand + Aggregate. Tables
     // are referenced as parquet paths directly — no temp views, so two
     // concurrent calls on one session can't race on named state.
-    QuerySpec("q10_rollup", by("region", "nation"),
+    QuerySpec("q10_rollup", by("region", "nation"), Pins(Scans(customer = 1), 3),
       """SELECT coalesce(r_name, 'ALL') AS region, coalesce(n_name, 'ALL') AS nation,
         |  COUNT(1) AS n_cust,
         |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
@@ -236,7 +237,7 @@ object Relational extends QueryModule {
       """)
     },
 
-    QuerySpec("q11_having", by("l_suppkey"),
+    QuerySpec("q11_having", by("l_suppkey"), Pins(Scans(lineitem = 1), 1),
       """SELECT l_suppkey,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price,
         |  COUNT(1) AS n_lines
@@ -250,7 +251,7 @@ object Relational extends QueryModule {
         .filter(col("total_price") > 18000000)
     },
 
-    QuerySpec("q12_case_when", by("bucket"),
+    QuerySpec("q12_case_when", by("bucket"), Pins(Scans(orders = 1), 1),
       """SELECT CASE WHEN o_totalprice < 50000 THEN 'small'
         |            WHEN o_totalprice < 200000 THEN 'medium'
         |            ELSE 'large' END AS bucket,
@@ -266,7 +267,7 @@ object Relational extends QueryModule {
         .agg(count(lit(1)).as("n"), asDouble(sum(dec2(col("o_totalprice")))).as("total"))
     },
 
-    QuerySpec("q13_time_bucket", by("day", "event_type"),
+    QuerySpec("q13_time_bucket", by("day", "event_type"), Pins(Scans(events = 1), 1),
       """SELECT CAST(date_trunc('day', ts) AS DATE) AS day, event_type,
         |  COUNT(1) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
@@ -276,7 +277,7 @@ object Relational extends QueryModule {
         .agg(count(lit(1)).as("n"), asDouble(sum(dec2(col("value")))).as("total_value"))
     },
 
-    QuerySpec("q14_string_funcs", by("p_partkey"),
+    QuerySpec("q14_string_funcs", by("p_partkey"), Pins(Scans(part = 1), 0),
       """SELECT p_partkey, upper(p_name) AS up_name, length(p_name) AS name_len,
         |  string_split(p_name, ' ')[1] AS first_word,
         |  concat(p_brand, '/', p_type) AS brand_type
@@ -291,7 +292,8 @@ object Relational extends QueryModule {
           concat(col("p_brand"), lit("/"), col("p_type")).as("brand_type"))
     },
 
-    QuerySpec("q15_scalar_subquery", by("p_partkey"),
+    // Scans: the scalar-subquery probe + the main pass
+    QuerySpec("q15_scalar_subquery", by("p_partkey"), Pins(Scans(part = 2), 2),
       """SELECT p_partkey, p_retailprice FROM part
         |WHERE p_retailprice > (
         |  SELECT CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(1)
@@ -305,7 +307,7 @@ object Relational extends QueryModule {
         .select(col("p_partkey"), col("p_retailprice"))
     },
 
-    QuerySpec("q16_broadcast_join", by("r_name"),
+    QuerySpec("q16_broadcast_join", by("r_name"), Pins(Scans(customer = 1), 3),
       """SELECT r_name, COUNT(1) AS n_cust,
         |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
         |FROM customer JOIN nation ON c_nationkey = n_nationkey
@@ -321,6 +323,8 @@ object Relational extends QueryModule {
     },
 
     QuerySpec("q17_multi_join", by("n_name"),
+      // Scans: the five-table join reads each table once
+      Pins(Scans(customer = 1, supplier = 1, orders = 1, lineitem = 1), 6),
       """SELECT n_name,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
         |FROM customer
@@ -352,7 +356,7 @@ object Relational extends QueryModule {
     // rewriting (RewritePredicateSubquery) does the decorrelation into
     // a left-semi join, rather than hand-writing the semi-join shape
     // (PlanSpec asserts the planned semi-join survives).
-    QuerySpec("q18_exists_corr", by("c_mktsegment"),
+    QuerySpec("q18_exists_corr", by("c_mktsegment"), Pins(Scans(customer = 1, orders = 1), 2),
       """SELECT c_mktsegment, COUNT(1) AS n_cust FROM customer
         |WHERE EXISTS (SELECT 1 FROM orders
         |  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
@@ -367,7 +371,7 @@ object Relational extends QueryModule {
       """)
     },
 
-    QuerySpec("q19_grouping_sets", by("status", "priority"),
+    QuerySpec("q19_grouping_sets", by("status", "priority"), Pins(Scans(orders = 1), 1),
       """SELECT coalesce(o_orderstatus, 'ALL') AS status,
         |  coalesce(o_orderpriority, 'ALL') AS priority,
         |  COUNT(1) AS n,
@@ -389,7 +393,7 @@ object Relational extends QueryModule {
     // keeps this a single-pass aggregate — the value-less pivot API
     // first runs a distinct-collect job over the pivot column, which at
     // 100 TB is a full extra scan before any real work starts.
-    QuerySpec("q20_pivot", by("o_orderpriority"),
+    QuerySpec("q20_pivot", by("o_orderpriority"), Pins(Scans(orders = 1), 2),
       """SELECT o_orderpriority,
         |  COUNT(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS n_f,
         |  COUNT(CASE WHEN o_orderstatus = 'O' THEN 1 END) AS n_o,
@@ -409,7 +413,7 @@ object Relational extends QueryModule {
     // lag/lead over the per-customer order history: inter-order gap in
     // days and spend delta — the window partitions by a bounded key
     // (customer), so partitions stay small at any total order count.
-    QuerySpec("q21_lead_lag", by("o_custkey", "o_orderkey"),
+    QuerySpec("q21_lead_lag", by("o_custkey", "o_orderkey"), Pins(Scans(orders = 1), 1),
       """SELECT o_custkey, o_orderkey, gap_days, price_delta, next_key FROM (
         |  SELECT o_custkey, o_orderkey,
         |    CAST(date_diff('day',
@@ -441,7 +445,8 @@ object Relational extends QueryModule {
     // left-semi / left-anti joins — no sort, shuffles only the
     // projected key column): the returning-customer partition of two
     // order years.
-    QuerySpec("q22_setops", by("kind", "o_custkey"),
+    // Scans: three-branch set ops, one pass per branch
+    QuerySpec("q22_setops", by("kind", "o_custkey"), Pins(Scans(orders = 3), 4),
       """WITH y95 AS (SELECT o_custkey FROM orders
         |  WHERE o_orderdate >= TIMESTAMP '1995-01-01' AND o_orderdate < TIMESTAMP '1996-01-01'),
         |y96 AS (SELECT o_custkey FROM orders
@@ -467,7 +472,7 @@ object Relational extends QueryModule {
     // Running aggregate over an explicit ROWS frame: cumulative spend
     // per customer in order-date order (exact DECIMAL accumulation,
     // cast once at the end). Bounded partition key, single shuffle.
-    QuerySpec("q23_running_sum", by("o_custkey", "o_orderkey"),
+    QuerySpec("q23_running_sum", by("o_custkey", "o_orderkey"), Pins(Scans(orders = 1), 1),
       """SELECT o_custkey, o_orderkey,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER w AS DOUBLE) AS run_spend,
         |  count(1) OVER w AS run_orders
@@ -493,7 +498,7 @@ object Relational extends QueryModule {
     // hash join) instead of a naive anti — the plan shape is
     // spec-asserted. esop analogue: nodes restorable only from
     // locations NOT on any deny list.
-    QuerySpec("q24_not_in", by("c_nationkey"),
+    QuerySpec("q24_not_in", by("c_nationkey"), Pins(Scans(customer = 1), 2),
       """SELECT c_nationkey, count(1) AS n_cust,
         |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
         |FROM customer
@@ -521,6 +526,7 @@ object Relational extends QueryModule {
     // plan shape (decorrelated + partial group-limit, no nested loop)
     // is spec-asserted.
     QuerySpec("q25_lateral", Seq(col("c_custkey"), col("price").desc, col("o_orderkey")),
+      Pins(Scans(customer = 1, orders = 1), 2),
       """SELECT c.c_custkey, t.o_orderkey, t.price
         |FROM customer c,
         |LATERAL (SELECT o_orderkey,
@@ -545,7 +551,8 @@ object Relational extends QueryModule {
     // (status, priority) combinations through a single Expand over
     // one orders scan — map-side partial aggs per grouping, never
     // four scans.
-    QuerySpec("q26_cube", by("status", "priority"),
+    // Scans: all four CUBE groupings through one Expand over one scan
+    QuerySpec("q26_cube", by("status", "priority"), Pins(Scans(orders = 1), 1),
       """SELECT coalesce(o_orderstatus, 'ALL') AS status,
         |  coalesce(o_orderpriority, 'ALL') AS priority,
         |  COUNT(1) AS n_orders,
@@ -572,6 +579,8 @@ object Relational extends QueryModule {
     // frame; at 100 TB this is the standard sessionless rolling
     // metric shape.
     QuerySpec("q27_range_frame", by("o_custkey", "order_day", "o_orderkey"),
+      // Scans: one shuffle on the partition key, per-partition RANGE frame
+      Pins(Scans(orders = 1), 1),
       """SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS order_day,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER w AS DOUBLE) AS spend_30d,
         |  count(1) OVER w AS n_30d
@@ -610,7 +619,9 @@ object Relational extends QueryModule {
     // the bin level (containment inside the join condition, NOT a
     // post-join WHERE) keeps zero-match orders in the output with
     // n_inflight=0 from the same single pass.
-    QuerySpec("q28_interval_join", by("o_orderkey"),
+    // Scans: the day-dimension distinct + the point stream (q31's two-cheap-scans trade — the
+    // interval join runs against the bounded day dimension, ~60× less join output) + one lineitem
+    QuerySpec("q28_interval_join", by("o_orderkey"), Pins(Scans(orders = 2, lineitem = 1), 3),
       // DuckDB plans the bare containment condition with its native
       // IEJoin — same semantics, no bins needed on the oracle side.
       """SELECT o_orderkey, CAST(o_orderdate AS DATE) AS order_day,
@@ -668,7 +679,8 @@ object Relational extends QueryModule {
     // equality exact. At 100 TB the exact per-group sort is the
     // declared baseline; the scale path is approx_percentile's
     // mergeable sketch (no global sort) when ±ε is acceptable.
-    QuerySpec("q29_quartiles", by("o_orderpriority"),
+    // Scans: rank + count windows + agg all share one exchange
+    QuerySpec("q29_quartiles", by("o_orderpriority"), Pins(Scans(orders = 1), 1),
       // quantile_disc follows the percentile_disc convention: the
       // element at 1-based rank ceil(q·n) of the sorted group — exactly
       // the integer index the Spark side computes.
@@ -701,7 +713,8 @@ object Relational extends QueryModule {
     // Catalyst plans unpivot as an Expand over the aggregated (tiny)
     // frame — the melt itself never touches the table, so the cost is
     // q01's aggregation and nothing else (pin orders=1).
-    QuerySpec("q30_unpivot", by("o_orderstatus", "measure"),
+    // Scans: the melt expands the aggregated frame, not the table
+    QuerySpec("q30_unpivot", by("o_orderstatus", "measure"), Pins(Scans(orders = 1), 1),
       """WITH wide AS (
         |  SELECT o_orderstatus,
         |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price,
@@ -740,6 +753,10 @@ object Relational extends QueryModule {
     // scan of the 2-column pruned relation (d65's trade: two cheap
     // scans beat caching the corpus) — pin orders=2.
     QuerySpec("q31_ntile", by("decile"),
+      // Scans: ranked pass + the bin-totals pass over the 2-column pruned relation (d65's
+      // two-cheap-scans trade)
+      Pins(Scans(orders = 2), 5, globalWindow = Some(
+        "decile offsets over ≤ ~35 price bins (price range / 16384)")),
       """WITH t AS (
         |  SELECT o_totalprice,
         |    CAST(NTILE(10) OVER (ORDER BY o_totalprice, o_orderkey) AS BIGINT) AS decile
@@ -788,7 +805,8 @@ object Relational extends QueryModule {
     // columns (pin orders=1). Scale note: at 100 TB the same panel
     // downgrades to approx_count_distinct (HLL, mergeable, no Expand)
     // when ±2% is acceptable — this is the declared-exact baseline.
-    QuerySpec("q32_multi_distinct", by("o_orderstatus"),
+    // Scans: all three distinct panels ride ONE scan's Expand
+    QuerySpec("q32_multi_distinct", by("o_orderstatus"), Pins(Scans(orders = 1), 2),
       """SELECT o_orderstatus,
         |  COUNT(DISTINCT o_custkey) AS n_customers,
         |  COUNT(DISTINCT o_orderpriority) AS n_priorities,
@@ -817,6 +835,8 @@ object Relational extends QueryModule {
     // single-partition lead window is over the bounded histogram, not
     // the data. Pin orders=1.
     QuerySpec("q33_histogram", by("bin"),
+      // Scans: densification explodes the bounded aggregate, not the table
+      Pins(Scans(orders = 1), 2, globalWindow = Some("bin densification over ≤ 64 histogram bins")),
       """WITH h AS (
         |  SELECT CAST(floor(o_totalprice / 512.0) AS BIGINT) AS bin,
         |    count(1) AS n_orders,
@@ -860,7 +880,8 @@ object Relational extends QueryModule {
     // This is THE pattern for "current state per key" over an event
     // ledger at scale (b07's PIT question, answered shuffle-light).
     // Pin orders=1.
-    QuerySpec("q34_argmax_latest", by("o_custkey"),
+    // Scans: one scan, map-side-partial max_by (no sort window)
+    QuerySpec("q34_argmax_latest", by("o_custkey"), Pins(Scans(orders = 1), 1),
       """WITH keyed AS (
         |  SELECT o_custkey, o_orderkey, o_orderdate, o_totalprice,
         |    CAST(date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS BIGINT)
@@ -893,7 +914,8 @@ object Relational extends QueryModule {
     // column pruning intact (the parser only materializes requested
     // fields). Parsed key rolls up per bucket in the same pass. Pin
     // events=1.
-    QuerySpec("q35_json_extract", by("k_bucket"),
+    // Scans: typed per-row parse + bucket agg in one pass
+    QuerySpec("q35_json_extract", by("k_bucket"), Pins(Scans(events = 1), 2),
       """WITH parsed AS (
         |  SELECT CAST(props->>'k' AS BIGINT) AS k, value FROM events)
         |SELECT k // 10 AS k_bucket, count(1) AS n_events,
@@ -931,7 +953,9 @@ object Relational extends QueryModule {
     // × 100 is a lossless long) — per SURVEY §4, no per-row decimal
     // value ever reaches a hash-compared column, so the result is
     // bit-identical under any engine's decimal rendering.
-    QuerySpec("q36_merge_upsert", by("o_orderkey"),
+    // Scans: base + the synthesized CDC delta (ONE extra scan — both delta branches ride a single
+    // bounded explode)
+    QuerySpec("q36_merge_upsert", by("o_orderkey"), Pins(Scans(orders = 2), 2),
       """WITH base AS (
         |  SELECT o_orderkey, o_orderstatus,
         |    CAST(o_totalprice AS DECIMAL(18,2)) AS o_price FROM orders),
@@ -996,6 +1020,9 @@ object Relational extends QueryModule {
     // (A huge catalog would add q-gram blocking before the distance;
     // the bounded-dictionary case needs none.)
     QuerySpec("q38_fuzzy_match", by("p_partkey"),
+      // Scans: the dirty feed + the bounded catalog distinct
+      Pins(Scans(part = 2), 3, cartesian = Some(Cartesian.BoundedSide(
+        "the dirty feed probes the broadcast distinct name catalog (names ≪ rows)"))),
       """WITH cat AS (SELECT DISTINCT p_name AS cand FROM part),
         |dirty AS (
         |  SELECT p_partkey,
@@ -1057,7 +1084,9 @@ object Relational extends QueryModule {
     // NOT pre-deduped: min is idempotent and the map-side partial agg
     // absorbs them — cheaper than a distinct exchange on wide strings.
     // Reference analogue: impl/SSTableUtils.java name matching.
-    QuerySpec("q39_fuzzy_blocked", by("p_partkey"),
+    // Scans: the same two roles (dirty feed + catalog), each exploded to its deletion keys at the
+    // scan — blocking adds no pass
+    QuerySpec("q39_fuzzy_blocked", by("p_partkey"), Pins(Scans(part = 2), 3),
       // q39 is q38's blocked scale variant with PROVABLY identical
       // output (deletion-gram blocking is exact for dist ≤ 1, and the
       // fixture's best is always ≤ 1) — the oracle is q38's verbatim:
@@ -1115,7 +1144,9 @@ object Relational extends QueryModule {
     // finishes. Beats 7 self-joins or any per-day re-scan; window days
     // are clamped to days present in the data via a broadcast semi
     // join against the bounded day dimension.
-    QuerySpec("q37_sliding_distinct", by("win_day"),
+    // Scans: the (day,user) distinct pass + the day-dimension side (same distinct lineage;
+    // broadcast-semi clamp)
+    QuerySpec("q37_sliding_distinct", by("win_day"), Pins(Scans(events = 2), 5),
       """WITH du AS (
         |  SELECT DISTINCT CAST(date_trunc('day', ts) AS DATE) AS day, user_id
         |  FROM events),

@@ -18,7 +18,7 @@ object Streaming extends QueryModule {
   val specs: Seq[QuerySpec] = Seq(
     // Tumbling 1-hour window aggregation — the exact DataFrame transform
     // the streaming job runs (watermark is a no-op on batch input).
-    QuerySpec("s01_stream_window", by("hour", "event_type"),
+    QuerySpec("s01_stream_window", by("hour", "event_type"), Pins(Scans(events = 1), 1),
       """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour, event_type,
         |  COUNT(1) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
@@ -28,7 +28,7 @@ object Streaming extends QueryModule {
 
     // Deterministic dedup: first event (min event_id) per
     // (user_id, event_type) — batch twin of the streaming dropDuplicates.
-    QuerySpec("s02_stream_dedup", by("user_id", "event_type"),
+    QuerySpec("s02_stream_dedup", by("user_id", "event_type"), Pins(Scans(events = 1), 1),
       """SELECT user_id, event_type, MIN(event_id) AS first_event,
         |  COUNT(1) AS n_events
         |FROM events GROUP BY user_id, event_type
@@ -40,7 +40,7 @@ object Streaming extends QueryModule {
 
     // Stream-static broadcast enrichment, rolled up per dimension row —
     // the join is the exact transform the streaming job runs.
-    QuerySpec("s06_stream_enrich", by("n_name"),
+    QuerySpec("s06_stream_enrich", by("n_name"), Pins(Scans(events = 1), 2),
       """SELECT n.n_name, COUNT(1) AS n_events,
         |  CAST(SUM(CAST(e.value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
         |FROM events e JOIN nation n ON e.user_id % 25 = n.n_nationkey
@@ -54,7 +54,7 @@ object Streaming extends QueryModule {
     // Live backup monitoring: the ledger's per-(day, node) manifest
     // report as the exact transform the streaming job runs (day
     // windows ≡ snapshot days on batch input).
-    QuerySpec("s07_backup_monitor", by("snapshot_day", "node_id"),
+    QuerySpec("s07_backup_monitor", by("snapshot_day", "node_id"), Pins(Scans(events = 1), 1),
       """SELECT CAST(date_trunc('day', ts) AS DATE) AS snapshot_day,
         |  user_id AS node_id, COUNT(1) AS n_uploads,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_bytes
@@ -65,7 +65,7 @@ object Streaming extends QueryModule {
     // Live upload-progress tracking — the b26 tracker report as the
     // exact transform the streaming job runs (no NOT_STARTED class:
     // un-arrived events are not yet units in a live tracker).
-    QuerySpec("s09_stream_progress", by("snapshot_day", "node_id"),
+    QuerySpec("s09_stream_progress", by("snapshot_day", "node_id"), Pins(Scans(events = 1), 1),
       """WITH st AS (
         |  SELECT CAST(date_trunc('day', ts) AS DATE) AS snapshot_day,
         |    user_id AS node_id,
@@ -86,7 +86,7 @@ object Streaming extends QueryModule {
     // Sliding-window aggregation — the same DataFrame transform the
     // streaming job runs; the oracle expands each event into its two
     // overlapping windows explicitly.
-    QuerySpec("s05_sliding_window", by("win_start", "event_type"),
+    QuerySpec("s05_sliding_window", by("win_start", "event_type"), Pins(Scans(events = 1), 1),
       """SELECT win_start, event_type, COUNT(1) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
         |FROM (
@@ -101,7 +101,7 @@ object Streaming extends QueryModule {
     // Streaming corpus curation — the document-feed quality gate as
     // the exact transform the streaming job runs (per-row kernel
     // scoring shared with d09, bounded (lang, source) state).
-    QuerySpec("s08_corpus_curate", by("lang", "source"),
+    QuerySpec("s08_corpus_curate", by("lang", "source"), Pins(Scans(documents = 1), 1),
       s"""WITH d AS (
          |  SELECT lang, source, text, string_split(${graft.model.Corpus.normSql}, ' ') AS ws
          |  FROM documents),
@@ -124,7 +124,7 @@ object Streaming extends QueryModule {
     // Streaming frame sampler — the d18 media transform as clips land:
     // stateless per-row bounded explode, no watermark, no state at
     // all. The batch twin is d18 itself (shared transform + oracle).
-    QuerySpec("s12_stream_frames", by("doc_id", "frame_idx"),
+    QuerySpec("s12_stream_frames", by("doc_id", "frame_idx"), Pins(Scans(documents = 1), 0),
       // the streaming frame sampler is the d18 transform verbatim — the
       // oracle is shared the same way s11 shares b07's
       Multimodal.oracle("d18_frame_sample")) { (s, dir) =>
@@ -135,7 +135,7 @@ object Streaming extends QueryModule {
     // streaming job runs (complete-mode state bounded by node×key),
     // applied to the batch table. Value-equal to b07's window
     // formulation (same oracle; equality also spec-proven).
-    QuerySpec("s11_stream_pit", by("node_id", "k"),
+    QuerySpec("s11_stream_pit", by("node_id", "k"), Pins(Scans(events = 1), 1),
       // identical output contract to b07 — the PIT question asked of the
       // stream must get the batch answer, so it shares the oracle text
       Backup.oracle("b07_pit_state")) { (s, dir) =>
@@ -145,7 +145,8 @@ object Streaming extends QueryModule {
     // Streaming boilerplate gate — the same transform the streaming
     // job runs (stream-static tile-index join, bounded (lang, source)
     // aggregate), applied to the batch table.
-    QuerySpec("s10_stream_boilerplate", by("lang", "source"),
+    // Scans: the doc-frequency pass over the corpus + the probe of it
+    QuerySpec("s10_stream_boilerplate", by("lang", "source"), Pins(Scans(documents = 2), 3),
       graft.model.Corpus.docsCte + graft.model.Corpus.tilesCte +
       """, idx AS (SELECT DISTINCT tile FROM tiles WHERE doc_id % 3 = 0)
         |SELECT lang, source, n_tiles, n_known,
@@ -167,7 +168,8 @@ object Streaming extends QueryModule {
     // (d43's sorted-probe kernel against the broadcast bench array),
     // applied to the batch table. Output contract ≡ d22 (shared
     // oracle); stream ≡ batch proven in EventStreamSpec.
-    QuerySpec("s13_stream_decon", by("doc_id"),
+    // Scans: the corpus probe against the bounded bench slice (d22's roles minus the gram explode)
+    QuerySpec("s13_stream_decon", by("doc_id"), Pins(Scans(documents = 2), 2),
       // the streaming decon gate answers d22's question with d43's
       // kernel — value-identical to the batch join formulation, so it
       // shares d22's oracle text
@@ -185,7 +187,7 @@ object Streaming extends QueryModule {
     // oracle-predictable pack+damage FIXTURE is composed in front, as
     // in d44. Output contract ≡ d44 (shared oracle); stream ≡ batch
     // proven in EventStreamSpec.
-    QuerySpec("s14_stream_quarantine", by("err_kind"),
+    QuerySpec("s14_stream_quarantine", by("err_kind"), Pins(Scans(documents = 1), 1),
       // the streaming quarantine gate is the d44 audit verbatim — the
       // oracle is shared the same way s12 shares d18's
       Multimodal.oracle("d44_media_quarantine")) { (s, dir) =>
@@ -200,7 +202,7 @@ object Streaming extends QueryModule {
     // backfill and the live stream run the SAME transform at scan cost.
     // Output contract ≡ d47 (shared transform + oracle); stream ≡ batch
     // proven in EventStreamSpec.
-    QuerySpec("s15_stream_dims", by("doc_id"),
+    QuerySpec("s15_stream_dims", by("doc_id"), Pins(Scans(documents = 1), 0),
       // the streaming dims sweep is the d47 transform verbatim — the
       // oracle is shared the same way s12 shares d18's
       Multimodal.oracle("d47_media_dims")) { (s, dir) =>
@@ -216,7 +218,7 @@ object Streaming extends QueryModule {
     // store), append mode; backfill and live feed run the SAME
     // transform. Output contract ≡ d49 (shared transform + oracle);
     // stream ≡ batch proven in EventStreamSpec.
-    QuerySpec("s16_stream_ingest", by("doc_id"),
+    QuerySpec("s16_stream_ingest", by("doc_id"), Pins(Scans(documents = 1), 1),
       // the streaming freshen gate is the d49 transform verbatim
       // (stream-static anti-join against the same persisted ledger)
       Curation.oracle("d49_incremental_ingest")) { (s, dir) =>
@@ -231,7 +233,9 @@ object Streaming extends QueryModule {
     // the per-cell search runs shard-side (d50's cell join) — a router
     // only decides WHERE each query goes. Stream ≡ batch proven in
     // VecStreamSpec.
-    QuerySpec("s17_stream_ann_route", by("vec_id"),
+    // Scans: routes ONE embeddings pass against the index-centroid read-back (the index build,
+    // like d45/d50, is construction-time)
+    QuerySpec("s17_stream_ann_route", by("vec_id"), Pins(Scans(embeddings = 1), 2),
       // the routing decision probed against the index centroid table —
       // the SQL rebuilds cents1 exactly (the persisted index is exact
       // state, same sharing rationale as d50 ← d15)
@@ -246,7 +250,9 @@ object Streaming extends QueryModule {
     // stats both load from the index, the corpus is never touched) —
     // a corrupt vector is flagged before it enters the index.
     // Stateless per-row, append mode; stream ≡ batch in AnnIndexSpec.
-    QuerySpec("s34_stream_outliers", by("vec_id"),
+    // Scans: ONE embeddings pass (the arriving feed) against the centroid + cell-stats artifact
+    // read-backs, as s17
+    QuerySpec("s34_stream_outliers", by("vec_id"), Pins(Scans(embeddings = 1), 3),
       // the ingest-side outlier verdict per arriving vector — d87's
       // audit CTEs (assignment + per-cell stats), un-filtered: the SQL
       // rebuilds the cell stats exactly as the persisted artifact holds
@@ -264,7 +270,9 @@ object Streaming extends QueryModule {
     // broadcast) — one cosine per arrival decides rep/drop/keep
     // before the vector ever reaches the corpus. Stateless per-row,
     // append mode; stream ≡ batch proven in AnnIndexSpec.
-    QuerySpec("s35_stream_semdedup", by("vec_id"),
+    // Scans: ONE embeddings pass (the arriving feed) against the centroid + reps artifact
+    // read-backs, as s34
+    QuerySpec("s35_stream_semdedup", by("vec_id"), Pins(Scans(embeddings = 1), 3),
       // the ingest-side semantic-dedup verdict — d35's rep scoring
       // against the refined index cells; the SQL rebuilds assignment +
       // rep election exactly as the persisted reps artifact holds them
@@ -284,7 +292,9 @@ object Streaming extends QueryModule {
     // argmin is a per-row fold — no aggregation, no state store, no
     // shuffle of the feed), append mode; backfill and live feed run
     // the SAME transform. Stream ≡ batch proven in AnnIndexSpec.
-    QuerySpec("s38_stream_communities", by("vec_id"),
+    // Scans: ONE embeddings pass (the arriving feed) folded over the broadcast medoid artifact
+    // read-back, as s17/s34/s35
+    QuerySpec("s38_stream_communities", by("vec_id"), Pins(Scans(embeddings = 1), 2),
       // the ingest-side community routing — the full community + medoid
       // election rebuilt in SQL (the persisted medoid artifact is exact
       // state over the indexed population), then nearest-medoid argmin
@@ -302,7 +312,9 @@ object Streaming extends QueryModule {
     // precedent; AnnIndexSpec pins row-for-row equality). This is the
     // variant a fleet with millions of communities runs; s38 remains
     // the broadcast fast path while the medoid table fits.
-    QuerySpec("s41_stream_communities_sharded", by("vec_id"),
+    // Scans: the sharded s38 — still ONE embeddings pass (the arriving feed fanned over the
+    // bounded cell list); medoid + posting sides are artifact read-backs, never corpus scans
+    QuerySpec("s41_stream_communities_sharded", by("vec_id"), Pins(Scans(embeddings = 1), 8),
       // the sharded scatter/gather gate recomputes s38's answer exactly
       // (same artifact, same argmin, same tie-break — only the memory
       // shape changes), so it stands behind the SAME oracle
@@ -318,7 +330,8 @@ object Streaming extends QueryModule {
     // community level) — spots a community absorbing disproportionate
     // or far-off arrivals with no nightly recompute. Stream ≡ batch
     // EXACT (integer sums are order-invariant); proven in AnnIndexSpec.
-    QuerySpec("s39_stream_community_load", by("cluster_id"),
+    // Scans: the s38 route pass into the bounded per-community tally
+    QuerySpec("s39_stream_community_load", by("cluster_id"), Pins(Scans(embeddings = 1), 3),
       // the per-community arrival tally over the same rebuilt route chain
       Similarity.communityLoadSql) { (s, dir) =>
       val meds = graft.sources.IO.readParquet(s, Similarity.annIndexMedoids(s, dir))
@@ -333,7 +346,8 @@ object Streaming extends QueryModule {
     // the vector domain — the spectrum's input is always current, no
     // nightly recompute). Stream ≡ batch EXACT (integer sums are
     // order-invariant); proven in AnnIndexSpec.
-    QuerySpec("s36_stream_spectrum", by("pos"),
+    // Scans: one corpus pass into the bounded per-dim moment agg
+    QuerySpec("s36_stream_spectrum", by("pos"), Pins(Scans(embeddings = 1), 1),
       // the live moment sketch's batch twin — exact integer per-dim
       // counts/sums over the quantized grid
       Similarity.dimMomentsSql) { (s, dir) =>
@@ -349,7 +363,8 @@ object Streaming extends QueryModule {
     // contract ≡ d100 (shared transform + oracle); stream ≡ batch
     // EXACT (integer sums are order-invariant); proven in
     // EventStreamSpec.
-    QuerySpec("s40_stream_fertility", by("lang"),
+    // Scans: the d100 profile verbatim — one corpus pass into the lang-bounded fertility aggregate
+    QuerySpec("s40_stream_fertility", by("lang"), Pins(Scans(documents = 1), 1),
       // the live fertility table ≡ d100's batch profile
       TextAnalysis.oracle("d100_token_fertility")) { (s, dir) =>
       TextAnalysis.tokenFertility(graft.model.Corpus.docs(s, dir))
@@ -362,7 +377,8 @@ object Streaming extends QueryModule {
     // the cheapest possible "refuse at the door" filter. Output
     // contract ≡ d92 (shared transform + oracle); stream ≡ batch
     // proven in EventStreamSpec.
-    QuerySpec("s37_stream_gopher", by("doc_id"),
+    // Scans: the d92 panel verbatim — pure per-row, one corpus pass
+    QuerySpec("s37_stream_gopher", by("doc_id"), Pins(Scans(documents = 1), 0),
       // the streaming Gopher gate is the d92 panel verbatim (stateless
       // per-row rule verdicts) — shared oracle like s15 ← d47
       TextAnalysis.oracle("d92_gopher_rules")) { (s, dir) =>
@@ -378,7 +394,9 @@ object Streaming extends QueryModule {
     // append mode; backfill and live feed run the SAME transform.
     // Output contract ≡ d52 (shared transform + oracle); stream ≡
     // batch proven in AnnIndexSpec.
-    QuerySpec("s18_stream_index_update", by("vec_id"),
+    // Scans: ONE embeddings pass (the arriving feed) anti-joined against the snapshot-index
+    // read-back, as d52
+    QuerySpec("s18_stream_index_update", by("vec_id"), Pins(Scans(embeddings = 1), 3),
       // the streaming freshen gate is the d52 transform verbatim
       // (stream-static anti-join against the same persisted index)
       Similarity.oracle("d52_ann_index_update")) { (s, dir) =>
@@ -398,7 +416,8 @@ object Streaming extends QueryModule {
     // and 100 TB backfill are ONE code path at scan cost. Output
     // contract ≡ d48 (shared transform + oracle); stream ≡ batch
     // proven in EventStreamSpec.
-    QuerySpec("s19_stream_chunk", by("doc_id", "chunk_idx"),
+    // Scans: the d48 chunker verbatim — one corpus pass, bounded explode
+    QuerySpec("s19_stream_chunk", by("doc_id", "chunk_idx"), Pins(Scans(documents = 1), 0),
       // the streaming chunker is the d48 transform verbatim (stateless
       // bounded explode) — shared oracle like s15 ← d47
       Curation.oracle("d48_doc_chunk")) { (s, dir) =>
@@ -413,7 +432,8 @@ object Streaming extends QueryModule {
     // Stateless per-row append mode; backfill ≡ live. Output contract
     // ≡ d57 (shared transform + oracle); stream ≡ batch proven in
     // EventStreamSpec.
-    QuerySpec("s21_stream_split", by("doc_id"),
+    // Scans: the d57 stamp verbatim — pure per-row, one corpus pass
+    QuerySpec("s21_stream_split", by("doc_id"), Pins(Scans(documents = 1), 0),
       // the streaming split stamp is the d57 transform verbatim
       // (pure per-row content function)
       Curation.oracle("d57_data_split")) { (s, dir) =>
@@ -429,7 +449,9 @@ object Streaming extends QueryModule {
     // store; the filter and the deny artifact are the static state.
     // Output contract ≡ d55 (shared transform + oracle); stream ≡
     // batch proven in EventStreamSpec.
-    QuerySpec("s20_stream_blocklist", by("doc_id"),
+    // Scans: the d55 gate verbatim — one corpus pass through the bloom probe; deny store is an
+    // artifact read-back
+    QuerySpec("s20_stream_blocklist", by("doc_id"), Pins(Scans(documents = 1), 3),
       // the streaming blocklist gate is the d55 transform verbatim
       // (broadcast bloom + stream-static verify against the same
       // persisted deny store)
@@ -445,6 +467,10 @@ object Streaming extends QueryModule {
     // prefix-max) — the oracle keeps the sequential global-window
     // formulation, proving the decomposition exact.
     QuerySpec("s31_stream_lateness", by("node_id"),
+      // Scans: the bucket-local window pass + the bounded bucket-max side of the two-stage prefix
+      // max (d65's two-cheap-scans trade)
+      Pins(Scans(events = 2), 5, globalWindow = Some(
+        "watermark prefix over the per-day bucket aggregate")),
       """WITH ev AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
         |    epoch_us(ts) + CASE WHEN event_id % 17 = 0
@@ -471,7 +497,8 @@ object Streaming extends QueryModule {
     // twin of the exact transform the streaming job runs; verdict over
     // raw arrivals (a live gate prices arrivals, not the deduped
     // manifest b43 sweeps).
-    QuerySpec("s30_stream_completeness", by("node_id", "snapshot_day"),
+    // Scans: one events pass into the bounded (node, day) aggregate
+    QuerySpec("s30_stream_completeness", by("node_id", "snapshot_day"), Pins(Scans(events = 1), 1),
       graft.model.BackupLedger.oracleCte +
       """SELECT node_id, snapshot_day, count(1) AS n_uploads,
         |  count(CASE WHEN ftype = 'MANIFEST_FILE' THEN 1 END) AS n_manifest,
@@ -490,7 +517,8 @@ object Streaming extends QueryModule {
     // watermark and no state at all — the same shape as s21/s37.
     // Shared transform (TextAnalysis.diversityPanel) + shared oracle;
     // stream ≡ batch proven in EventStreamSpec.
-    QuerySpec("s43_stream_diversity", by("doc_id"),
+    // Scans: the d107 panel verbatim — pure per-row, one corpus pass
+    QuerySpec("s43_stream_diversity", by("doc_id"), Pins(Scans(documents = 1), 0),
       // the live diversity gate ≡ d107's batch panel
       TextAnalysis.oracle("d107_lexical_diversity")) { (s, dir) =>
       TextAnalysis.diversityPanel(Tables.documents(s, dir))
@@ -504,7 +532,9 @@ object Streaming extends QueryModule {
     // worst case — spec pins that containment against b46 per
     // (node, day). Batch twin of the exact transform the streaming
     // job runs.
-    QuerySpec("s42_stream_retry", by("snapshot_day", "node_id"),
+    // Scans: ONE events pass — the failed minority rides conditional aggs inside the same (node,
+    // day) groupBy, b46's shape over the raw arrivals
+    QuerySpec("s42_stream_retry", by("snapshot_day", "node_id"), Pins(Scans(events = 1), 1),
       graft.model.BackupLedger.oracleCte +
       """, agg AS (
         |  SELECT snapshot_day, node_id, count(1) AS n_uploads,
@@ -527,7 +557,8 @@ object Streaming extends QueryModule {
     // state (≤k longs per source forever; micro-batches merge through
     // the aggregate's own associative merge). Batch twin of the exact
     // transform the streaming job runs; same oracle as d26.
-    QuerySpec("s29_stream_kmv", by("source"),
+    // Scans: one corpus pass into the bounded per-source sketch agg
+    QuerySpec("s29_stream_kmv", by("source"), Pins(Scans(documents = 1), 1),
       // the streaming sketch is the d26 transform verbatim (order-
       // invariant sorted-distinct k-min state)
       TextAnalysis.oracle("d26_kmv_by_source")) { (s, dir) =>
@@ -541,6 +572,9 @@ object Streaming extends QueryModule {
     // Batch twin of the exact transform the streaming job runs;
     // stream ≡ batch proven in EventStreamSpec.
     QuerySpec("s28_stream_reputation", by("doc_id"),
+      // Scans: the arriving stream + the d72 reputation-index side
+      Pins(Scans(documents = 2), 7, globalWindow = Some(
+        "rank offsets over ≤ ~2.2k quality bands (d72's banded-rank law)")),
       graft.model.Corpus.docsCte + ", " +
       TextAnalysis.rawsCteSql + ",\n" + TextAnalysis.domainRepCteSql +
       s""",
@@ -563,7 +597,8 @@ object Streaming extends QueryModule {
     // Stream-stream interval join — the same transform the streaming
     // job runs (watermarks are no-ops on batch input); in batch Spark
     // plans it as an equi-join on user plus the range predicate.
-    QuerySpec("s04_stream_join", by("error_id", "click_id"),
+    // Scans: the two joined event roles
+    QuerySpec("s04_stream_join", by("error_id", "click_id"), Pins(Scans(events = 2), 1),
       """WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type FROM events)
         |SELECT e.event_id AS error_id, e.user_id AS user_id, e.ts AS e_ts,
         |  c.event_id AS click_id, c.ts AS c_ts
@@ -579,7 +614,7 @@ object Streaming extends QueryModule {
     // flatMapGroupsWithState streaming path (EventStream.sessionize):
     // gap marks via lag + running sum = session numbers, one window
     // pass partitioned by user.
-    QuerySpec("s03_sessionize", by("user_id", "sess_no"),
+    QuerySpec("s03_sessionize", by("user_id", "sess_no"), Pins(Scans(events = 1), 1),
       """WITH ordered AS (
         |  SELECT user_id, ts, event_id, CAST(value AS DECIMAL(18,2)) AS v,
         |    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
@@ -619,6 +654,7 @@ object Streaming extends QueryModule {
     // done at upload time). Identical transform over the batch table;
     // stream ≡ batch proven in EventStreamSpec.
     QuerySpec("s22_stream_verify", by("snapshot_day", "node_id", "keyspace"),
+      Pins(Scans(events = 1), 1),
       // the md5 compare flags exactly the %53 corruption fixture rows
       // (distinct md5 inputs, so the hashes always differ there)
       """WITH lg AS (
@@ -639,7 +675,7 @@ object Streaming extends QueryModule {
     // bounded-state (4096 counters, forever) streaming aggregation;
     // identical transform over the batch table, stream ≡ batch proven
     // in EventStreamSpec.
-    QuerySpec("s23_stream_cms", by("i", "cell"),
+    QuerySpec("s23_stream_cms", by("i", "cell"), Pins(Scans(documents = 1), 1),
       graft.model.Corpus.docsCte + {
       val cell = graft.model.Corpus.hash32Sql(
         "concat('cms', CAST(i AS VARCHAR), '#', w)") + " % 1024"
@@ -657,7 +693,8 @@ object Streaming extends QueryModule {
     // already-ingested index (stream-static broadcast); identical
     // transform over the batch table, stream ≡ batch proven in
     // EventStreamSpec.
-    QuerySpec("s24_stream_url", by("doc_id"),
+    // Scans: the arriving stream + the ingested-index side
+    QuerySpec("s24_stream_url", by("doc_id"), Pins(Scans(documents = 2), 2),
       """WITH urls AS (
         |  SELECT doc_id, concat(
         |    CASE WHEN doc_id % 4 = 2 THEN 'HTTP://'
@@ -694,7 +731,8 @@ object Streaming extends QueryModule {
     // already-ingested template index (stream-static broadcast,
     // stateless per-row, append mode). Identical transform over the
     // batch table; stream ≡ batch proven in EventStreamSpec.
-    QuerySpec("s33_stream_template", by("doc_id"),
+    // Scans: template-index build scan + the arriving-docs scan
+    QuerySpec("s33_stream_template", by("doc_id"), Pins(Scans(documents = 2), 2),
       graft.model.Corpus.docsCte
       + graft.operators.Dedup.prefixKeysCte +
       """, idx AS (SELECT DISTINCT prefix FROM pref WHERE doc_id % 3 = 0)
@@ -711,7 +749,8 @@ object Streaming extends QueryModule {
     // streaming job runs (pre-intervalized dimension, stateless
     // per-row), applied to the batch table; stream ≡ batch in
     // EventStreamSpec.
-    QuerySpec("s27_stream_asof", by("event_id"),
+    // Scans: event probe side + the bounded dimension's build side
+    QuerySpec("s27_stream_asof", by("event_id"), Pins(Scans(events = 2), 3),
       graft.model.BackupLedger.oracleCte +
       """, dim AS (
         |  SELECT node_id AS dim_node, snapshot_day AS valid_from,
@@ -734,7 +773,8 @@ object Streaming extends QueryModule {
     // Live upload-size histogram — the same bounded-bin transform the
     // streaming job runs (complete mode, state = the histogram),
     // applied to the batch table; stream ≡ batch in EventStreamSpec.
-    QuerySpec("s26_stream_sizehist", by("bin"),
+    // Scans: one events scan into the bounded bin aggregate
+    QuerySpec("s26_stream_sizehist", by("bin"), Pins(Scans(events = 1), 1),
       """SELECT CAST(floor(value / 16.0) AS BIGINT) AS bin,
         |  count(1) AS n_uploads,
         |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_bytes
@@ -746,7 +786,8 @@ object Streaming extends QueryModule {
     // twin: the stream's one-long-per-source state IS a prefix sum in
     // arrival (doc_id) order, so the batch formulation is a per-source
     // cumsum window; stream ≡ batch proven in EventStreamSpec.
-    QuerySpec("s25_stream_budget", by("doc_id"),
+    // Scans: one corpus scan through the per-source prefix-sum window
+    QuerySpec("s25_stream_budget", by("doc_id"), Pins(Scans(documents = 1), 1),
       graft.model.Corpus.docsCte +
       """, toks AS (
         |  SELECT doc_id, source,
@@ -783,7 +824,8 @@ object Streaming extends QueryModule {
     // formulation is therefore a per-bucket cumsum window in doc_id
     // order (32 parallel bounded partitions, one corpus scan); stream
     // ≡ batch proven in EventStreamSpec.
-    QuerySpec("s32_stream_shardpack", by("doc_id"),
+    // Scans: one corpus scan through the per-bucket prefix-sum window
+    QuerySpec("s32_stream_shardpack", by("doc_id"), Pins(Scans(documents = 1), 1),
       graft.model.Corpus.docsCte +
       s""", pd AS (
          |  SELECT doc_id,

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions._
 import graft.model.Corpus
-import graft.operators.QuerySpec.by
+import graft.operators.QuerySpec.{by, persisted}
 
 /** §2.C d08–d11 — text analysis over the document corpus.
   *
@@ -318,7 +318,7 @@ object TextAnalysis extends QueryModule {
           .as("q_sum"))
       .withColumn("avg_quality", col("q_sum").cast("double") / col("n_docs"))
       .withColumn("qband", floor(col("avg_quality") * 1024.0).cast("long"))
-      .persist()
+      .transform(persisted)
     val wBand = Window.partitionBy("qband")
       .orderBy(col("avg_quality").asc, col("domain").asc)
     val wPrefix = Window.orderBy("qband")
@@ -407,6 +407,10 @@ object TextAnalysis extends QueryModule {
     // running head-mass is a window over the bounded 100 rows.
     // Shares divide exact longs → bit-identical doubles.
     QuerySpec("d86_zipf_curve", by("rnk"),
+      // Scans: the word-frequency exchange feeds BOTH the top-100 and the total-token scalar
+      // (exchange reuse, no second scan)
+      Pins(Scans(documents = 1), 4, globalWindow = Some(
+        "cumulative share over the top-100 Zipf head")),
       Corpus.docsCte +
       """, cf AS (
         |  SELECT w, count(1) AS cf
@@ -440,7 +444,7 @@ object TextAnalysis extends QueryModule {
     // shuffles: each language's score is size(filter(ws, ...)) against
     // its constant lexicon, the argmax is a greatest + CASE cascade in
     // tie-break order. At 100 TB this is embarrassingly parallel.
-    QuerySpec("d08_langid", by("doc_id"),
+    QuerySpec("d08_langid", by("doc_id"), Pins(Scans(documents = 1), 0),
       Corpus.docsCte + {
       val scExprs = langWords.map { case (lang, ws) =>
         val lst = ws.map(w => s"'$w'").mkString("[", ", ", "]")
@@ -475,7 +479,9 @@ object TextAnalysis extends QueryModule {
     // lang²-bounded aggregate; the row totals ride a window over the
     // 25-cell aggregate output (no second scan, no persist). Share
     // divides identical integers both engines → bit-identical doubles.
-    QuerySpec("d101_langid_confusion", by("lang", "pred_lang"),
+    // Scans: one corpus scan into the lang²-bounded confusion agg (row totals ride a window over
+    // the 25-cell agg output)
+    QuerySpec("d101_langid_confusion", by("lang", "pred_lang"), Pins(Scans(documents = 1), 2),
       Corpus.docsCte + {
       val scExprs = langWords.map { case (lang, ws) =>
         val lst = ws.map(w => s"'$w'").mkString("[", ", ", "]")
@@ -514,7 +520,7 @@ object TextAnalysis extends QueryModule {
     // from the single-pass CharCounts kernel (one byte loop per row)
     // instead of two full regex passes — same values, ~half the text
     // scanning cost of the hottest per-row operator.
-    QuerySpec("d09_quality", by("doc_id"),
+    QuerySpec("d09_quality", by("doc_id"), Pins(Scans(documents = 1), 0),
       Corpus.docsCte +
       s"""SELECT doc_id,
          |  CAST(length(text) AS BIGINT) AS n_chars_raw,
@@ -542,7 +548,8 @@ object TextAnalysis extends QueryModule {
     // rule's verdict attributable per doc, the report a curation run
     // publishes so "why was this dropped?" has an answer. Per-row
     // HOF work over one corpus scan, zero shuffles (see gopherPanel).
-    QuerySpec("d92_gopher_rules", by("doc_id"),
+    // Scans: pure per-row HOF panel — one corpus scan, zero shuffles
+    QuerySpec("d92_gopher_rules", by("doc_id"), Pins(Scans(documents = 1), 0),
       Corpus.docsCte +
       s""", wtab AS (SELECT doc_id, unnest(ws) AS w FROM docs),
          |per AS (
@@ -572,7 +579,7 @@ object TextAnalysis extends QueryModule {
     },
 
     // Token counting: whitespace words, regex tokens, BPE-ish estimate.
-    QuerySpec("d10_tokens", by("doc_id"),
+    QuerySpec("d10_tokens", by("doc_id"), Pins(Scans(documents = 1), 0),
       Corpus.docsCte +
       s"""SELECT doc_id,
          |  CAST(len(ws) AS BIGINT) AS ws_tokens,
@@ -596,7 +603,8 @@ object TextAnalysis extends QueryModule {
     // counters folded per language in ONE corpus scan into a
     // lang-bounded aggregate; the ratios are one-shot divides of
     // identical integers both engines → bit-identical doubles.
-    QuerySpec("d100_token_fertility", by("lang"),
+    // Scans: one corpus scan into the lang-bounded fertility agg
+    QuerySpec("d100_token_fertility", by("lang"), Pins(Scans(documents = 1), 1),
       Corpus.docsCte +
       s"""SELECT lang, count(1) AS n_docs,
          |  CAST(sum(len(ws)) AS BIGINT) AS n_words,
@@ -613,7 +621,7 @@ object TextAnalysis extends QueryModule {
     // Corpus vocabulary: top-20 words by document frequency — the
     // df table a corpus-level quality/stopword pipeline starts from.
     // One distinct + one agg + TakeOrderedAndProject (no global sort).
-    QuerySpec("d16_vocab", Nil,
+    QuerySpec("d16_vocab", Nil, Pins(Scans(documents = 1), 2),
       Corpus.docsCte +
       """SELECT w, COUNT(1) AS doc_freq FROM
         |  (SELECT DISTINCT doc_id, w FROM
@@ -639,7 +647,8 @@ object TextAnalysis extends QueryModule {
     // partial keeps ≤3 rows per doc per partition in bounded heaps, so
     // the rank exchange carries ~3/|terms per doc| of the rows the
     // row_number window formulation would shuffle AND sort.
-    QuerySpec("d19_tfidf", by("doc_id", "rn"),
+    // Scans: the tf pass + the df pass, joined
+    QuerySpec("d19_tfidf", by("doc_id", "rn"), Pins(Scans(documents = 2), 7),
       Corpus.docsCte +
       """, wa AS (SELECT doc_id, unnest(ws) AS w FROM docs),
         |tf AS (SELECT doc_id, w, count(1) AS tf FROM wa GROUP BY 1, 2),
@@ -693,7 +702,9 @@ object TextAnalysis extends QueryModule {
     // ~terms×5×partitions rows however large the corpus. The query
     // catalog is a bounded literal set — at 100 TB the same plan
     // serves any term list that fits a broadcast.
-    QuerySpec("d84_bm25", by("w", "rn"),
+    // Scans: one token pass carrying tf AND dl (df derives from the tf exchange, d19's reuse) +
+    // one column-pruned stats scalar
+    QuerySpec("d84_bm25", by("w", "rn"), Pins(Scans(documents = 2), 7),
       Corpus.docsCte + {
       val termList = bm25Terms.map(t => s"'$t'").mkString("(", ", ", ")")
       s""", toks AS (
@@ -757,7 +768,7 @@ object TextAnalysis extends QueryModule {
     // global sort. The error baseline is the distinct-HASH count
     // (named honestly: ~n²/2³³ birthday collisions below the true
     // distinct-word count at large n).
-    QuerySpec("d20_kmv_sketch", Nil,
+    QuerySpec("d20_kmv_sketch", Nil, Pins(Scans(documents = 1), 4),
       Corpus.docsCte + {
       val h = Corpus.hash32Sql("w")
       s""", hd AS (SELECT DISTINCT $h AS h FROM (SELECT doc_id, unnest(ws) AS w FROM docs) t),
@@ -794,7 +805,7 @@ object TextAnalysis extends QueryModule {
     // double), and the per-doc argmax runs on TopKPerGroup with k=1 —
     // the exchange carries ONE bigram per (doc, partition), not the
     // full bigram frequency table a row_number window would sort.
-    QuerySpec("d29_repetition", by("doc_id"),
+    QuerySpec("d29_repetition", by("doc_id"), Pins(Scans(documents = 2), 3),
       Corpus.docsCte +
       """, bgs AS (
         |  SELECT doc_id, ws[i] || ' ' || ws[i+1] AS bg
@@ -845,7 +856,9 @@ object TextAnalysis extends QueryModule {
     // oracle recomputes the panel through the RELATIONAL histogram
     // (explode → GROUP BY), so the hash compare also proves the
     // sorted-run fold ≡ the group-by histogram. Pin documents=1.
-    QuerySpec("d107_lexical_diversity", by("doc_id"),
+    // Scans: pure per-row sorted-run fold — one corpus pass, zero shuffles (the histogram never
+    // materializes)
+    QuerySpec("d107_lexical_diversity", by("doc_id"), Pins(Scans(documents = 1), 0),
       Corpus.docsCte +
       """, words AS (
         |  SELECT doc_id, ws[i] AS w
@@ -887,6 +900,11 @@ object TextAnalysis extends QueryModule {
     // is integer arithmetic (doc_id·4 div N) — engine-exact; ratios
     // divide exact integers (§4).
     QuerySpec("d109_vocab_growth", by("quarter"),
+      // Scans: the word stream (first-occurrence agg) + the doc stream (per-quarter token mass) —
+      // the d19 tf+df two-pass convention; the cumulation window runs over 4 rows, never the
+      // corpus
+      Pins(Scans(documents = 2), 5, globalWindow = Some(
+        "type/token cumulation over the 4 quarter rows")),
       Corpus.docsCte +
       """, n AS (SELECT count(1) AS n FROM documents),
         |words AS (
@@ -946,7 +964,7 @@ object TextAnalysis extends QueryModule {
     // ((n−1)·q position, linear between neighbors) is the same
     // definition DuckDB's quantile_cont uses, over exact integer
     // inputs — bit-identical doubles.
-    QuerySpec("d28_corpus_stats", by("lang"),
+    QuerySpec("d28_corpus_stats", by("lang"), Pins(Scans(documents = 1), 1),
       """SELECT lang, COUNT(1) AS n_docs,
         |  quantile_cont(n_chars, 0.5) AS p50,
         |  quantile_cont(n_chars, 0.9) AS p90,
@@ -974,7 +992,8 @@ object TextAnalysis extends QueryModule {
     // are the declared baseline; at 100 TB the same report downgrades
     // to approx_count_distinct per column (mergeable HLL, no Expand).
     // Pin documents=1.
-    QuerySpec("d70_profile", by("col_name"),
+    // Scans: all five column panels ride ONE scan's Expand; the melt explodes the 1-row aggregate
+    QuerySpec("d70_profile", by("col_name"), Pins(Scans(documents = 1), 2),
       """WITH a AS (
         |  SELECT count(1) AS n_rows,
         |    count(doc_id) AS nn_doc_id, count(DISTINCT doc_id) AS nd_doc_id,
@@ -1029,7 +1048,7 @@ object TextAnalysis extends QueryModule {
     // partition) through the exchange — the partial/final merge tree
     // IS the sketch union, so the cost per group is O(k) regardless of
     // corpus size.
-    QuerySpec("d26_kmv_by_source", by("source"),
+    QuerySpec("d26_kmv_by_source", by("source"), Pins(Scans(documents = 1), 1),
       Corpus.docsCte + {
       val h = Corpus.hash32Sql("w")
       s""", wh AS (
@@ -1063,7 +1082,7 @@ object TextAnalysis extends QueryModule {
     // (min doc_id per content hash). One scan computes quality per-row;
     // the dedup keeper is a window over the same pass (no groupBy +
     // join-back, which would recompute the normalization lineage).
-    QuerySpec("d21_corpus_select", by("doc_id"),
+    QuerySpec("d21_corpus_select", by("doc_id"), Pins(Scans(documents = 1), 1),
       Corpus.docsCte +
       s""", scored AS (
          |  SELECT doc_id, md5(norm) AS content_hash,
@@ -1116,7 +1135,9 @@ object TextAnalysis extends QueryModule {
     // threshold rows and ONE conditional aggregate emits the whole
     // curve — the sweep never re-scans. Counts exact ints, fractions
     // one-shot divides.
-    QuerySpec("d83_quality_curve", by("t"),
+    // Scans: the d77 shape — quality+token pass + the signature pass; the 4-threshold sweep is a
+    // bounded explode, never a re-scan
+    QuerySpec("d83_quality_curve", by("t"), Pins(Scans(documents = 2), 5),
       Dedup.bandSigsCte +
       s""", dup AS (
          |  SELECT doc_id,
@@ -1166,7 +1187,8 @@ object TextAnalysis extends QueryModule {
           col("dup_kept").cast("double") / greatest(col("docs_kept"), lit(1L)))
     },
 
-    QuerySpec("d77_quality_dup_corr", by("qbin"),
+    // Scans: the signature pass + the quality pass, joined per doc
+    QuerySpec("d77_quality_dup_corr", by("qbin"), Pins(Scans(documents = 2), 5),
       Dedup.bandSigsCte +
       s""", dup AS (
          |  SELECT doc_id,
@@ -1213,7 +1235,9 @@ object TextAnalysis extends QueryModule {
     // (d77's two-pass shape, pin documents=2); the bin aggregate is
     // 20-row bounded; keep_rate divides identical integers both
     // engines.
-    QuerySpec("d102_quality_calibration", by("qbin"),
+    // Scans: two per-row passes joined on doc_id (d77's two-pass shape: quality scalar + gopher
+    // panel), 20-bin bounded agg
+    QuerySpec("d102_quality_calibration", by("qbin"), Pins(Scans(documents = 2), 2),
       Corpus.docsCte +
       s""", wtab AS (SELECT doc_id, unnest(ws) AS w FROM docs),
          |per AS (
@@ -1269,7 +1293,8 @@ object TextAnalysis extends QueryModule {
     // the signature pass prices dup membership, and ONE bounded
     // per-source aggregate emits the panel. Every fraction is a
     // one-shot divide of exact longs.
-    QuerySpec("d79_dataset_card", by("source"),
+    // Scans: the corpus card pass + the signature pass (d77's shape)
+    QuerySpec("d79_dataset_card", by("source"), Pins(Scans(documents = 2), 6),
       Dedup.bandSigsCte +
       s""", $rawsCteSql,
          |dup AS (
@@ -1319,7 +1344,7 @@ object TextAnalysis extends QueryModule {
     // doc out to |windows| ≈ len/4 rows and shuffled them into a
     // per-doc aggregate; at 100 TB that multiplies the dominant
     // exchange by the window count for a value-identical result.
-    QuerySpec("d11_fingerprint", by("doc_id"),
+    QuerySpec("d11_fingerprint", by("doc_id"), Pins(Scans(documents = 1), 0),
       Corpus.docsCte +
       s""", wins AS (
          |  SELECT doc_id, substr(norm, i, 8) AS w8
@@ -1345,7 +1370,7 @@ object TextAnalysis extends QueryModule {
     // extract→explode→per-domain rollup. The countDistinct Expand runs
     // over the extracted URL stream (≤2 rows/doc by construction, and
     // in a real crawl |urls| ≪ |text bytes|), never the corpus scan.
-    QuerySpec("d31_url_extract", by("domain"),
+    QuerySpec("d31_url_extract", by("domain"), Pins(Scans(documents = 1), 2),
       s"""WITH $rawsCteSql,
          |urls AS (
          |  SELECT doc_id, unnest(regexp_extract_all(raw, '$urlRe')) AS url FROM raws)
@@ -1377,6 +1402,10 @@ object TextAnalysis extends QueryModule {
     // cutoffs drift with the mix. s28 consumes this index as the
     // streaming ingest gate.
     QuerySpec("d72_domain_reputation", by("domain"),
+      // Scans: one corpus scan builds the quality-scored link stream; the tier window runs over
+      // the bounded domain table
+      Pins(Scans(documents = 1), 5, globalWindow = Some(
+        "rank offsets over ≤ ~2.2k quality bands (the metric's range / 2⁻¹⁰ grid)")),
       Corpus.docsCte + ", " + rawsCteSql + ",\n" +
       domainRepCteSql +
       """
@@ -1402,6 +1431,10 @@ object TextAnalysis extends QueryModule {
     // sketch never filled); every double derives from one division of
     // exact integers, so the matrix is bit-identical cross-engine.
     QuerySpec("d73_source_overlap", by("a_source", "b_source"),
+      // Scans: ONE corpus pass into per-source bounded sketches; the S² merge is array arithmetic
+      // on 20 rows
+      Pins(Scans(documents = 1), 2, cartesian = Some(Cartesian.BoundedSide(
+        "both sides are the per-source sketch aggregate (≤ |sources| rows)"))),
       Corpus.docsCte + {
       val h = Corpus.hash32Sql("g.gram")
       s""", sg AS (
@@ -1447,7 +1480,7 @@ object TextAnalysis extends QueryModule {
         // exchange reuse is best-effort (the lshPairs lesson) — the
         // frame is ≤k longs per source, so the cache is trivial and
         // the one-corpus-scan pin becomes structural
-        .persist()
+        .transform(persisted)
       val a = sk.select(col("source").as("a_source"), col("hs").as("a_hs"))
       val b = sk.select(col("source").as("b_source"), col("hs").as("b_hs"))
       def est(hs: Column): Column =
@@ -1476,7 +1509,7 @@ object TextAnalysis extends QueryModule {
     // the layout is balanced + range-contiguous. Key computation is
     // the branch-free ZOrder2 codegen kernel — a pure per-row
     // projection at the scan, no shuffle before the 16-group agg.
-    QuerySpec("d33_zorder", by("zrange"),
+    QuerySpec("d33_zorder", by("zrange"), Pins(Scans(documents = 1), 2),
       s"""WITH zt AS (
          |  SELECT doc_id, source,
          |    least(n_chars * 100, 65535) AS x,
@@ -1520,7 +1553,7 @@ object TextAnalysis extends QueryModule {
     // final per-doc aggregate. The unigram denominators come from the
     // c2 TABLE (c1(w1) = Σ c2 over w1's bigrams — |model| rows, not
     // the stream), so the model enrich join never touches the corpus.
-    QuerySpec("d37_lm_novelty", by("doc_id"),
+    QuerySpec("d37_lm_novelty", by("doc_id"), Pins(Scans(documents = 2), 5),
       Corpus.docsCte +
       """, bgs AS (
         |  SELECT doc_id, ws[i] AS w1, ws[i] || ' ' || ws[i+1] AS bg
@@ -1553,7 +1586,7 @@ object TextAnalysis extends QueryModule {
       val c2 = bg.groupBy("bg")
         .agg(count(lit(1)).as("c2"))
         .withColumn("w1", substring_index(col("bg"), " ", 1))
-        .persist()
+        .transform(persisted)
       val c1 = c2.groupBy("w1").agg(sum(col("c2")).as("c1"))
       val model = c2.join(c1, Seq("w1"))
         .select(col("bg"), col("c2"), col("c1"))
@@ -1578,7 +1611,10 @@ object TextAnalysis extends QueryModule {
     // not a partition window (which would stall one task on a hot
     // URL). Pure per-row string kernels (codegen'd regexps) front the
     // two cheap pruned passes.
-    QuerySpec("d60_url_dedup", by("doc_id"),
+    // Scans: per-row canonicalization + the keeper AGGREGATE+JOIN (skew-survivable, never a
+    // hot-key window): two cheap pruned passes — the keeper side partial-aggregates to one row per
+    // distinct page and broadcasts back into the data side
+    QuerySpec("d60_url_dedup", by("doc_id"), Pins(Scans(documents = 2), 2),
       """WITH urls AS (
         |  SELECT doc_id, concat(
         |    CASE WHEN doc_id % 4 = 2 THEN 'HTTP://'
@@ -1617,6 +1653,8 @@ object TextAnalysis extends QueryModule {
     // report carries measured inflation, not hoped-for accuracy; the
     // 4096-row sketch broadcasts to the probe join.
     QuerySpec("d61_cms_heavy", Seq(col("n_exact").desc, col("w").asc),
+      // Scans: sketch pass + exact-baseline pass over the token stream
+      Pins(Scans(documents = 2), 3),
       Corpus.docsCte + {
       val cellSql = (i: String) => Corpus.hash32Sql(
         s"concat('cms', CAST($i AS VARCHAR), '#', w)") + " % 1024"
@@ -1668,7 +1706,9 @@ object TextAnalysis extends QueryModule {
     // round would actually perform, via the replace() length-delta —
     // 'aaa' holds two sliding 'aa's but ONE merge), plus the distinct
     // words carrying the pair. Top-10 by sliding count.
-    QuerySpec("d64_bpe_pairs", Nil,
+    // Scans: both pair counts derive from ONE token-stream agg (the explode runs over the bounded
+    // word table, not the corpus)
+    QuerySpec("d64_bpe_pairs", Nil, Pins(Scans(documents = 1), 5),
       Corpus.docsCte +
       """, words AS (
         |  SELECT w, count(1) AS n
@@ -1695,7 +1735,7 @@ object TextAnalysis extends QueryModule {
         .select(explode(col("ws")).as("w")).filter(col("w") =!= "")
         .groupBy("w").agg(count(lit(1)).as("n"))
         .filter(length(col("w")) >= 2)
-        .persist()
+        .transform(persisted)
       val pairs = words
         .select(col("w"), col("n"), explode(expr(
           "transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))")).as("p"))

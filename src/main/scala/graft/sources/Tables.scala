@@ -20,11 +20,13 @@ object Tables {
   /** The events table with `ts` as a µs ltz TIMESTAMP whatever layout
     * the file shipped in ([[graft.streaming.EventStream.normalize]]
     * decides it). Any new code path reading events.parquet must go
-    * through this loader. */
-  def events(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    * through this loader. The caller's session must come from
+    * [[graft.GraftSession.configure]], which sets
+    * `spark.sql.legacy.parquet.nanosAsLong` so an ns-timestamp file
+    * decodes as raw longs; the loader reads that conf and never sets
+    * it. */
+  def events(s: SparkSession, dir: String): DataFrame =
     graft.streaming.EventStream.normalize(load(s, dir, "events"))
-  }
   def documents(s: SparkSession, dir: String): DataFrame = load(s, dir, "documents")
   def embeddings(s: SparkSession, dir: String): DataFrame = load(s, dir, "embeddings")
 

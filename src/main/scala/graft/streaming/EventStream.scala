@@ -416,7 +416,6 @@ object EventStream {
     * batch footer read (LongType ts = legacy ns file, TimestampType =
     * current µs file) and declare the matching schema. */
   def readEventsStream(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = s.read.parquet(s"$dir/events.parquet").schema("ts").dataType match {
       case LongType => rawSchema
       case _        => usSchema

@@ -8,14 +8,14 @@ class EntrySpec extends SparkSpec {
   }
 
   test("query ids are unique, and a duplicate id is rejected") {
-    // a QuerySpec carries its oracle, so a query without one cannot
-    // compile; what a record cannot rule out is two records sharing an
+    // a QuerySpec carries its oracle and its plan pins, so a query
+    // without either cannot compile; what a record cannot rule out is two records sharing an
     // id, which an id-keyed map would silently collapse to the last
     val ids = SparkEntry.specs.map(_.id)
     assert(ids.distinct.size == ids.size, s"duplicate ids: ${ids.diff(ids.distinct)}")
     assert(SparkEntry.queries.size == ids.size && SparkEntry.oracleSql.size == ids.size)
-    import graft.operators.QuerySpec
-    val q = QuerySpec("q01_agg", Nil, "SELECT 1")((s, _) => s.range(1).toDF())
+    import graft.operators.{Pins, QuerySpec, Scans}
+    val q = QuerySpec("q01_agg", Nil, Pins(Scans(), 0), "SELECT 1")((s, _) => s.range(1).toDF())
     val ex = intercept[IllegalArgumentException](SparkEntry.unique(Seq(q, q.copy()(q.plan))))
     assert(ex.getMessage.contains("duplicate query id(s): q01_agg"), ex.getMessage)
   }

@@ -80,4 +80,15 @@ class EventLayoutSpec extends SparkSpec {
         s"$label layout: streamed rows diverge from canonical batch rows")
     }
   }
+
+  test("the events loaders read the session's nanosAsLong and never set it") {
+    // GraftSession.configure sets the key once; a loader that set it
+    // again would mutate the caller's session under concurrent queries
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val s = spark.newSession()
+    s.conf.set(key, "false")
+    Tables.events(s, ltzDir)
+    EventStream.readEventsStream(s, ltzDir)
+    assert(s.conf.get(key) == "false")
+  }
 }

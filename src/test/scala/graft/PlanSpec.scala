@@ -1,5 +1,7 @@
 package graft
 
+import graft.operators.Cartesian
+
 /** Plan-shape assertions — the 100 TB design contract (SURVEY §5):
   * filters/projections reach the scan, dim joins broadcast, top-k
   * never globally sorts. */
@@ -347,14 +349,14 @@ class PlanSpec extends SparkSpec {
       }.nonEmpty
     val offenders = SparkEntry.queries.keys.toSeq.sorted
       .filter(name => quadratic(SparkEntry.queries(name)(spark, sf)))
-    // d06 is the declared-exact brute-force baseline; d74 is the
-    // leave-one-out eval BUILT on that baseline (the recall/eval side
-    // must be exact — ANN-evaluating-ANN proves nothing); d82 is the
-    // truncation EVAL, which must rank against exact full-dim truth
-    // for the same reason. Everything else must route through
-    // LSH/IVF candidates.
-    assert(offenders == Seq("d06_cosine_topk", "d74_knn_eval", "d82_mrl_truncation"),
-      s"quadratic embeddings pairing in: $offenders")
+    // exactly the records declared exact baselines (d06 and the evals
+    // that must rank against exact truth); everything else must route
+    // through LSH/IVF candidates
+    val baselines = SparkEntry.specs.collect {
+      case q if q.pins.cartesian.exists(_.isInstanceOf[Cartesian.ExactBaseline]) => q.id
+    }.sorted
+    assert(offenders == baselines,
+      s"quadratic embeddings pairing in: $offenders (declared exact baselines: $baselines)")
   }
 
   test("s41 sharded gate: no single-row fold over the medoid artifact (no-broadcast-growth pin)") {
@@ -637,11 +639,9 @@ class PlanSpec extends SparkSpec {
     // cross-joined so a per-row lambda can fold over it: maxRows = 1,
     // cost linear in the big side) or a genuine pairs blow-up. q24/
     // q28's no-BNLJ pins catch two known shapes; this closes the rest
-    // of the suite structurally. Whitelist = the declared exact
-    // brute-force baselines whose QUADRATIC pairing is the contract
-    // (PlanSpec's embeddings-pairing audit pins that exact set) plus
-    // d42, whose bench side is a ≤100-row fixture slice (bounded by
-    // the benchmark suite's size, not the corpus).
+    // of the suite structurally. Exempt = the records that declare a
+    // `cartesian` reason: an exact quadratic baseline (pinned by the
+    // embeddings-pairing audit) or a side bounded by a domain.
     import org.apache.spark.sql.catalyst.expressions.{EqualNullSafe, EqualTo}
     import org.apache.spark.sql.catalyst.plans.logical.Join
     // equality ANYWHERE in the condition tree keys a hash join path:
@@ -649,19 +649,7 @@ class PlanSpec extends SparkSpec {
     // null-aware NOT IN shape Or(EqualTo, IsNull(EqualTo)) all count
     def hasEquality(j: Join): Boolean = j.condition.exists(c =>
       c.collectFirst { case e @ (_: EqualTo | _: EqualNullSafe) => e }.isDefined)
-    // exempt sets, each with its boundedness contract:
-    //  - declared exact brute-force baselines whose quadratic pairing
-    //    IS the contract (pinned by the embeddings-pairing audit);
-    //    d42's bench side is additionally a ≤100-row fixture slice
-    //  - d73: the source-overlap MATRIX pairs per-source KMV sketch
-    //    rows — both sides are the per-source aggregate (≤ |sources|
-    //    rows, a domain bound independent of corpus size)
-    //  - q38: the fuzzy probe scans the dirty feed once against the
-    //    BROADCAST distinct name catalog (names ≪ rows — the bounded-
-    //    dictionary shape; its own spec pins the broadcast)
-    val exempt = Set("d06_cosine_topk", "d74_knn_eval",
-      "d82_mrl_truncation", "d42_semantic_decon",
-      "d73_source_overlap", "q38_fuzzy_match")
+    val exempt = SparkEntry.specs.filter(_.pins.cartesian.isDefined).map(_.id).toSet
     // a side is a broadcastable PARAMETER TABLE when the planner can
     // PROVE its row bound: 1 for the collected-artifact folds
     // (centroids/medoids/fleet head), 15 for the LSH plane table
@@ -693,32 +681,17 @@ class PlanSpec extends SparkSpec {
     // by mistake would be invisible in logs — this ratchet makes the
     // set exact: every query whose optimized plan (subqueries
     // included) contains an empty-partitionSpec Window must be
-    // declared here with its boundedness argument, and a declared one
-    // that stops planning a global window must be removed.
+    // declared in its record with its boundedness argument, and a
+    // declared one that stops planning a global window must drop it.
     import org.apache.spark.sql.catalyst.plans.logical.Window
     val withGlobalWindow = SparkEntry.queries.keys.toSeq.sorted.filter { name =>
       SparkEntry.queries(name)(spark, sf).queryExecution.optimizedPlan
         .collectWithSubqueries { case w: Window if w.partitionSpec.isEmpty => w }
         .nonEmpty
     }
-    // every entry's unpartitioned-window INPUT is bounded by a fixture
-    // constant or a metric's range — never by corpus size:
-    //   b30  — token-ring prefix over the (nodes × vnodes) topology
-    //   d54  — share totals over the (lang × 6 len-bucket) strata
-    //   d65  — shard prefix over the 32-row hash-bucket aggregate
-    //   d72/s28 — rank offsets over ≤ ~2.2k quality bands (the metric's
-    //          range / 2⁻¹⁰ grid, domainReputation's banded-rank law)
-    //   d86  — cumulative share over the top-100 Zipf head
-    //   d89  — spectrum over the 64-dimension moment table
-    //   q31  — decile offsets over ≤ ~35 price bins (price range / 16384)
-    //   q33  — bin densification over ≤ 64 histogram bins
-    //   s31  — watermark prefix over the per-DAY bucket aggregate
-    //   d109 — type/token cumulation over the 4 quarter rows
-    val declared = Seq("b30_topology_remap", "d109_vocab_growth",
-      "d54_corpus_drift",
-      "d65_shard_plan", "d72_domain_reputation", "d86_zipf_curve",
-      "d89_embed_spectrum", "q31_ntile", "q33_histogram",
-      "s28_stream_reputation", "s31_stream_lateness")
+    // each record's `globalWindow` says why its unpartitioned-window
+    // INPUT is bounded by a fixture constant or a metric's range
+    val declared = SparkEntry.specs.filter(_.pins.globalWindow.isDefined).map(_.id).sorted
     assert(withGlobalWindow == declared,
       s"global-window set drifted — new entries need a boundedness argument:\n" +
         s"  got      ${withGlobalWindow.mkString(", ")}\n" +

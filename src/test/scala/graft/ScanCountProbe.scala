@@ -1,79 +1,124 @@
 package graft
 
+import scala.collection.mutable
+
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 
-/** Dev probe: MATERIALIZED big-table scan count per query — the number
-  * of times the executed plan actually reads a testdata table off
-  * storage (reused exchanges and cached relations count once, at their
-  * single materialization). Shared by PlanAuditSpec's scan-count
-  * ratchets (§2.A/§2.B/§2.C). */
+import graft.operators.{Pins, QuerySpec, Scans}
+
+/** Measures a query's plan the way its [[Pins]] declare it: the
+  * MATERIALIZED big-table scans (the number of times the executed plan
+  * reads a testdata table off storage; reused exchanges and cached
+  * relations count once, at their single materialization) and the
+  * exchanges of its pre-execution adaptive plan. Shared by
+  * PlanAuditSpec's plan-pin ratchet and [[ScanCountProbe]]. */
 object ScanCount {
 
-  /** The tables worth ratcheting: everything but the two tiny
-    * broadcast dims (region, nation). */
-  val bigTables: Seq[String] = Seq("customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings")
+  /** The tables worth ratcheting — the fields of [[Scans]]: everything
+    * but the two tiny broadcast dims (region, nation). */
+  val bigTables: Seq[String] = Scans().productElementNames.toSeq
 
-  /** Queries whose corpus work happens inside checkpoint-loop
-    * materializations the FINAL plan no longer references (the CC
-    * loop family) — static [[counts]] understates or blanks them, so
-    * both the PlanAuditSpec ratchet and the SCANCOUNT artifact probe
-    * must measure them with [[countsDuring]]. One list, two
-    * consumers: the r17 artifact drift (d106 recorded from the wrong
-    * mode while its PIN was measured with the listener) cannot recur.
-    * d96/d97 are loop CONSUMERS (artifact read-backs, pinned 0 under
-    * static counting) and deliberately stay out — counting their
-    * construction-time artifact build would mislead the other way. */
-  val loopQueries: Set[String] = Set(
-    "d24_dup_clusters", "d67_cluster_keep_best",
-    "d95_knn_communities", "d106_cluster_size_hist")
+  /** A record's scan pins, by table. */
+  def pinned(s: Scans): Map[String, Int] =
+    bigTables.zip(s.productIterator.map { case n: Int => n }).toMap
 
-  private def walk(p: SparkPlan, tables: Seq[String],
-      seenCaches: scala.collection.mutable.Set[Int],
-      acc: scala.collection.mutable.Map[String, Int]): Unit = {
+  /** A query's measured scans and exchanges. */
+  final case class Live(scans: Map[String, Int], exchanges: Int) {
+    def matches(p: Pins): Boolean = scans == pinned(p.scans) && exchanges == p.exchanges
+
+    /** `p` with the measured counts. */
+    def pins(p: Pins): Pins = {
+      val Seq(c, s, pa, o, l, e, d, v) = bigTables.map(scans)
+      p.copy(scans = Scans(c, s, pa, o, l, e, d, v), exchanges = exchanges)
+    }
+  }
+
+  /** `p` as a record declares it, so that re-pinning is a paste. */
+  def syntax(p: Pins): String = {
+    def str(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    val m = pinned(p.scans)
+    val scans = bigTables.filter(m(_) > 0).map(t => s"$t = ${m(t)}").mkString("Scans(", ", ", ")")
+    val rest = Seq(
+      Option.when(p.loop)("loop = true"),
+      p.globalWindow.map(r => s"globalWindow = Some(${str(r)})"),
+      p.cartesian.map(c => s"cartesian = Some(Cartesian.${c.productPrefix}(${str(c.reason)}))"))
+    (Seq(scans, p.exchanges.toString) ++ rest.flatten).mkString("Pins(", ", ", ")")
+  }
+
+  /** Calls `f` on every node of `p` that materializes: into adaptive
+    * plans, query stages and subqueries, and into each persisted
+    * relation's plan once (`seenCaches`, shared across calls, keeps a
+    * relation probed by several consumers or executions from counting
+    * again). A reused exchange materialized elsewhere is skipped. */
+  private def visit(p: SparkPlan, seenCaches: mutable.Set[Int])(f: SparkPlan => Unit): Unit = {
+    f(p)
     p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan, tables, seenCaches, acc)
-      case q: QueryStageExec => walk(q.plan, tables, seenCaches, acc)
-      case _: ReusedExchangeExec => () // materialized once, counted there
+      case a: AdaptiveSparkPlanExec => visit(a.executedPlan, seenCaches)(f)
+      case q: QueryStageExec => visit(q.plan, seenCaches)(f)
+      case _: ReusedExchangeExec => ()
       case m: InMemoryTableScanExec =>
-        // a persisted subtree materializes ONCE per cached relation,
-        // however many consumers probe it
         if (seenCaches.add(System.identityHashCode(m.relation.cacheBuilder)))
-          walk(m.relation.cachedPlan, tables, seenCaches, acc)
+          visit(m.relation.cachedPlan, seenCaches)(f)
+      case other => other.children.foreach(visit(_, seenCaches)(f))
+    }
+    p.subqueries.foreach(visit(_, seenCaches)(f))
+  }
+
+  private def scans(p: SparkPlan, tables: Seq[String], seenCaches: mutable.Set[Int],
+      acc: mutable.Map[String, Int]): Unit =
+    visit(p, seenCaches) {
       case f: FileSourceScanExec =>
         // exact-basename match: "events.parquet" can't be faked by a
         // scratch fixture or sibling whose name merely starts with a
         // table name (events.parquet.bak, events.parquet2)
         tables.foreach { t =>
-          if (f.relation.location.rootPaths.exists(_.getName == s"$t.parquet"))
-            acc(t) += 1
+          if (f.relation.location.rootPaths.exists(_.getName == s"$t.parquet")) acc(t) += 1
         }
-      case other => other.children.foreach(walk(_, tables, seenCaches, acc))
+      case _ => ()
     }
-    p.subqueries.foreach(walk(_, tables, seenCaches, acc))
+
+  private def exchanges(p: SparkPlan): Int = {
+    var n = 0
+    visit(p, mutable.Set[Int]()) {
+      case _: Exchange => n += 1
+      case _ => ()
+    }
+    n
   }
 
-  /** Scan counts visible in the FINAL executed plan (collect + walk). */
   /** A streaming query left running by an earlier suite (e.g. an
     * awaitTermination that hit its timeout) would keep firing
     * executions into the shared session while we count — stop any
     * stragglers before measuring. */
-  private def quiesce(s: org.apache.spark.sql.SparkSession): Unit =
-    s.streams.active.foreach(_.stop())
+  private def quiesce(s: SparkSession): Unit = s.streams.active.foreach(_.stop())
 
-  def counts(s: org.apache.spark.sql.SparkSession, name: String, sf: String,
-      tables: Seq[String] = Seq("documents", "embeddings")): Map[String, Int] = {
-    quiesce(s)
-    s.catalog.clearCache()
-    val df = SparkEntry.queries(name)(s, sf)
-    df.collect()
-    val seenCaches = scala.collection.mutable.Set[Int]()
-    val acc = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
-    walk(df.queryExecution.executedPlan, tables, seenCaches, acc)
-    acc.toMap
+  /** One cold build and run of `spec` at `sf`, measured as its pins
+    * declare: the exchanges of the plan before `collect()` starts it,
+    * the scans of the final plan after it — or, for a [[Pins.loop]]
+    * query, the scans of every execution the build and the run
+    * trigger ([[countsDuring]]). */
+  def live(s: SparkSession, spec: QuerySpec, sf: String): Live = {
+    var ex = 0
+    def run(df: org.apache.spark.sql.DataFrame): Unit = {
+      ex = exchanges(df.queryExecution.executedPlan)
+      df.collect()
+    }
+    if (spec.pins.loop) {
+      val c = countsDuring(s, spec.id, sf, bigTables, run = run)
+      Live(bigTables.map(t => t -> c.getOrElse(t, 0)).toMap, ex)
+    } else {
+      quiesce(s)
+      s.catalog.clearCache()
+      val df = spec.plan(s, sf)
+      run(df)
+      val acc = mutable.Map[String, Int]().withDefaultValue(0)
+      scans(df.queryExecution.executedPlan, bigTables, mutable.Set[Int](), acc)
+      Live(bigTables.map(t => t -> acc(t)).toMap, ex)
+    }
   }
 
   /** Scan counts across EVERY execution the query triggers, not just
@@ -91,9 +136,9 @@ object ScanCount {
     * is not cleared first, and a cached relation those calls already
     * counted counts 0 here — what a query reads off storage when it
     * runs after them in one cache lifetime. */
-  def countsDuring(s: org.apache.spark.sql.SparkSession, name: String, sf: String,
-      tables: Seq[String] = Seq("documents", "embeddings"),
-      after: Option[scala.collection.mutable.Set[Int]] = None): Map[String, Int] = {
+  def countsDuring(s: SparkSession, name: String, sf: String, tables: Seq[String],
+      after: Option[mutable.Set[Int]] = None,
+      run: org.apache.spark.sql.DataFrame => Unit = _.collect()): Map[String, Int] = {
     quiesce(s)
     if (after.isEmpty) s.catalog.clearCache()
     // drain the async listener bus BEFORE registering: execution
@@ -102,45 +147,36 @@ object ScanCount {
     // full-suite-order "+1 documents" flake — the previous query's one
     // scan arriving late)
     org.apache.spark.GraftTestBus.flush(s.sparkContext)
-    val seenCaches = after.getOrElse(scala.collection.mutable.Set[Int]())
-    val acc = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
+    val seenCaches = after.getOrElse(mutable.Set[Int]())
+    val acc = mutable.Map[String, Int]().withDefaultValue(0)
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        acc.synchronized { walk(qe.executedPlan, tables, seenCaches, acc) }
+        acc.synchronized { scans(qe.executedPlan, tables, seenCaches, acc) }
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     s.listenerManager.register(listener)
     try {
-      SparkEntry.queries(name)(s, sf).collect()
+      run(SparkEntry.queries(name)(s, sf))
       org.apache.spark.GraftTestBus.flush(s.sparkContext)
     } finally s.listenerManager.unregister(listener)
     acc.synchronized(acc.toMap)
   }
 }
 
+/** Re-pinning tool: measures every query (or the ids given as
+  * arguments) at sf0.001 and prints each one whose live scans or
+  * exchanges differ from its record, as the `Pins(...)` to paste into
+  * that record:
+  * `sbt -batch "Test/runMain graft.ScanCountProbe [id ...]"`. */
 object ScanCountProbe {
-  /** Prints live pins. Args: query names (default: every d* query);
-    * `--all` = every oracle-gated query; `--during` = listener-based
-    * counting (the d24 mode). Output lines are `SCANCOUNT <name>
-    * <table>=<n> ...` over [[ScanCount.bigTables]], nonzero only. */
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
-    val during = args.contains("--during")
-    val rest = args.toSeq.filterNot(_.startsWith("--"))
-    val names =
-      if (args.contains("--all")) SparkEntry.queries.keys.toSeq.sorted
-      else if (rest.nonEmpty) rest
-      else SparkEntry.queries.keys.filter(_.startsWith("d")).toSeq.sorted
-    names.foreach { n =>
-      val c =
-        if (during || ScanCount.loopQueries(n))
-          ScanCount.countsDuring(spark, n, sf, ScanCount.bigTables)
-        else ScanCount.counts(spark, n, sf, ScanCount.bigTables)
-      val shown = ScanCount.bigTables.filter(t => c.getOrElse(t, 0) > 0)
-        .map(t => s"$t=${c(t)}").mkString(" ")
-      println(s"SCANCOUNT $n $shown")
+    val specs = SparkEntry.specs.filter(q => args.isEmpty || args.contains(q.id))
+    specs.sortBy(_.id).foreach { q =>
+      val live = ScanCount.live(spark, q, sf)
+      if (!live.matches(q.pins)) println(s"REPIN ${q.id} ${ScanCount.syntax(live.pins(q.pins))}")
     }
     spark.stop()
   }
