@@ -46,22 +46,39 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
-  test("every query's live scans and exchanges equal its record's pins") {
-    // [[ScanCount.live]] counts MATERIALIZED big-table scans (reused
-    // exchanges and persisted relations count once, at their single
-    // materialization) — the structural guard against double-evaluation
-    // regressions (pre-r7 d35 scanned and folded the corpus twice) — and
-    // the exchanges of the pre-execution adaptive plan, so a new stage
-    // fails structurally. Both must equal the record's `Pins`: a count
-    // above its pin is a regression, one below is progress that
-    // tightens the pin. Each failure line is the `Pins(...)` to paste
-    // (`graft.ScanCountProbe` prints the same).
-    val drift = SparkEntry.specs.sortBy(_.id).flatMap { q =>
-      val live = ScanCount.live(spark, q, sf)
-      Option.unless(live.matches(q.pins))(
-        s"${q.id}: live ${ScanCount.syntax(live.pins(q.pins))}, declared ${ScanCount.syntax(q.pins)}")
+  /** The plan-pin ratchet, one test per SURVEY §2 section, keyed by
+    * query-id prefix. */
+  private val sections: Seq[(String, String, Set[Char])] = Seq(
+    ("§2.A/§2.B", "every relational/backup query reads its big tables at most the pinned number of times", Set('q', 'b')),
+    ("§2.C", "every operator reads its big table at most the pinned number of times", Set('d')),
+    ("§2.D", "every streaming batch-equivalent reads its big tables at most the pinned number of times", Set('s')))
+
+  for ((section, claim, prefixes) <- sections) {
+    test(s"$section scan-count ratchet: $claim") {
+      // [[ScanCount.live]] counts MATERIALIZED big-table scans (reused
+      // exchanges and persisted relations count once, at their single
+      // materialization) — the structural guard against double-evaluation
+      // regressions (pre-r7 d35 scanned and folded the corpus twice) — and
+      // the exchanges of the pre-execution adaptive plan, so a new stage
+      // fails structurally. Both must equal the record's `Pins`: a count
+      // above its pin is a regression, one below is progress that
+      // tightens the pin. Each failure line is the `Pins(...)` to paste
+      // (`graft.ScanCountProbe` prints the same).
+      val specs = SparkEntry.specs.filter(q => prefixes(q.id.head)).sortBy(_.id)
+      assert(specs.nonEmpty, s"no $section queries")
+      val drift = specs.flatMap { q =>
+        val live = ScanCount.live(spark, q, sf)
+        Option.unless(live.matches(q.pins))(
+          s"${q.id}: live ${ScanCount.syntax(live.pins(q.pins))}, declared ${ScanCount.syntax(q.pins)}")
+      }
+      assert(drift.isEmpty, s"$section plan pins drifted:\n${drift.mkString("\n")}")
     }
-    assert(drift.isEmpty, s"plan pins drifted:\n${drift.mkString("\n")}")
+  }
+
+  test("every query falls in exactly one scan-count ratchet section") {
+    val stray = SparkEntry.specs.map(_.id)
+      .filter(id => sections.count(_._3(id.head)) != 1)
+    assert(stray.isEmpty, s"queries outside the ratchet sections: ${stray.sorted.mkString(", ")}")
   }
 
   test("b18 incremental plan prunes to an anti-join against the external inventory") {
